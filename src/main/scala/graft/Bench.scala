@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -16,8 +16,51 @@ import org.apache.spark.sql.SparkSession
   * cold start. (A real cluster amortizes those costs across the app's
   * lifetime; folding them into the first few alphabetical queries made
   * the per-query numbers fiction.)
+  *
+  * A query that throws fails the bench: its time is never recorded,
+  * and the run exits non-zero listing every failed query instead of
+  * writing a result.
   */
 object Bench {
+
+  /** One pass over `queries`, each materialized through the noop sink:
+    * the seconds of every query that succeeded, and the names of the
+    * queries that threw — a failed query has no time to record.
+    */
+  private[graft] def runPass(spark: SparkSession,
+                             queries: Seq[(String, (SparkSession, String) => DataFrame)],
+                             dir: String, pass: String): (Seq[(String, Double)], Seq[String]) = {
+    val failed = Seq.newBuilder[String]
+    val times = queries.sortBy(_._1).flatMap { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed ($pass): ${e.getMessage}")
+          failed += name
+          false
+        }
+      val secs = (System.nanoTime() - t0) / 1e9
+      // operators materialize shared subplans (signature tables, band
+      // keys) via cache() or localCheckpoint(); release BOTH kinds of
+      // blocks deterministically so per-query timings stay
+      // order-independent and blocks don't accumulate memory pressure
+      // (clearCache alone leaves checkpointed RDD blocks to the GC)
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      if (ok) Some(name -> secs) else None
+    }
+    (times, failed.result())
+  }
+
+  /** Whether a previous bench.json was taken under this run's
+    * conditions: the same SF and the same core count (a run without a
+    * recorded core count is not comparable).
+    */
+  private[graft] def comparable(prev: String, sfDir: String, cpus: String): Boolean =
+    prev.contains("\"sf\":\"" + sfDir + "\"") &&
+      "\"cpus\":([0-9]+)".r.findFirstMatchIn(prev).map(_.group(1)).contains(cpus)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -26,24 +69,19 @@ object Bench {
         shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def runAll(dir: String, timed: Boolean): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, dir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          val pass = if (timed) "timed" else "warm-up"
-          System.err.println(s"[bench] $name failed ($pass): ${e.getMessage}")
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        // operators materialize shared subplans (signature tables, band
-        // keys) via cache() or localCheckpoint(); release BOTH kinds of
-        // blocks deterministically so per-query timings stay
-        // order-independent and blocks don't accumulate memory pressure
-        // (clearCache alone leaves checkpointed RDD blocks to the GC)
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        name -> secs
-      }
+    // a query that throws in any pass fails the whole bench
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def runAll(dir: String, timed: Boolean): Seq[(String, Double)] = {
+      val (times, bad) = runPass(spark, SparkEntry.queries.toSeq, dir,
+        if (timed) "timed" else "warm-up")
+      failed ++= bad
+      times
+    }
+    def exitIfFailed(): Unit = if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED ${failed.size} queries: ${failed.mkString(", ")}")
+      spark.stop()
+      sys.exit(1)
+    }
 
     // CALIBRATION probe — constant work, timed once per pass, so
     // round-over-round comparisons can be normalized for ambient VM
@@ -83,6 +121,7 @@ object Bench {
     // per-query times are what a long-lived cluster app sees.
     cpuProbe(); scanProbe(sfDir) // warm the probes too (JIT, scan plan)
     runAll(sfDir, timed = false)
+    exitIfFailed()
 
     // Per-query min over N timed passes: this VM shows ~3× CPU-steal
     // spikes on single runs (an 0.3s scan can record 18s), so one pass
@@ -97,6 +136,7 @@ object Bench {
       calibs += ((cpuProbe(), scanProbe(sfDir)))
       runAll(sfDir, timed = true).toMap
     }
+    exitIfFailed()
     val results = passes.head.keys.toSeq.sorted
       .map(name => name -> passes.map(_(name)).min)
     // 3-decimal (millisecond) precision keeps the full line ~1KB under
@@ -126,12 +166,11 @@ object Bench {
     // the cpu/scan probe ratios (this run's min over the prev run's
     // min) removes the machine from the comparison. Read BEFORE the
     // overwrite below; silently omitted when no comparable prev
-    // exists (different SF, first run, unparseable).
+    // exists (different SF or core count, first run, unparseable).
     val vsPrev: String = scala.util.Try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("bench.json")), "UTF-8")
-      require(txt.contains("\"sf\":\"" + sfDir + "\""),
-        "previous bench ran at a different SF")
+      require(comparable(txt, sfDir, cpus), "previous bench ran under other conditions")
       def num(key: String): Double =
         ("\"" + key + "\":([0-9.]+)").r.findFirstMatchIn(txt).get.group(1).toDouble
       val qblock = txt.substring(txt.indexOf("\"queries\":{") + 10)
@@ -154,7 +193,7 @@ object Bench {
         s""""ratio_scan_norm":${rounded(raw / fScan)}},"""
     }.getOrElse("")
     def line(extra: String) =
-      s"""{"metric":"total","value":$total,"unit":"sec",$extra$vsPrev"calibration":$calJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$extra$vsPrev"calibration":$calJson,"queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
     // The full per-query line is ~2.5KB — r5 and r6 both recorded
     // parsed:null because the driver's stdout tail window clips it. So:
     // full line goes FIRST on stdout (and, canonically, to bench.json);

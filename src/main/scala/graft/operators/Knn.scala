@@ -898,12 +898,17 @@ object Knn {
                             queries: Array[(Long, Array[Double])],
                             books: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
+    broadcast(queries.map { case (qid, qv) => (qid, pqQueryTable(qv, books)) }
+      .toSeq.toDF("query_id", "qdt"))
+  }
+
+  /** One query's ADC lookup table: qdt(m)(k) = ||sv_m − books(m)(k)||². */
+  private[graft] def pqQueryTable(qv: Array[Double],
+                                  books: Array[Array[Array[Double]]]): Seq[Seq[Double]] = {
     val dsub = 64 / PqSubspaces
-    broadcast(queries.map { case (qid, qv) =>
-      (qid, (0 until PqSubspaces).map(m =>
-        (0 until PqCodes).map(k =>
-          l2sq(qv.slice(m * dsub, (m + 1) * dsub), books(m)(k))).toSeq).toSeq)
-    }.toSeq.toDF("query_id", "qdt"))
+    (0 until PqSubspaces).map(m =>
+      (0 until PqCodes).map(k =>
+        l2sq(qv.slice(m * dsub, (m + 1) * dsub), books(m)(k))).toSeq).toSeq
   }
 
   /** ADC distance from a codes array + lookup table: Σ_m qdt(m)(codes(m))

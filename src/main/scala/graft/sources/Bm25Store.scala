@@ -135,7 +135,7 @@ object Bm25Store {
     val t = dlTable(path)
     if (!spark.catalog.tableExists(t)) {
       val loc = StoreFs.qualified(path + ".dl").toString
-      val cols = spark.read.parquet(loc).schema.fields
+      val cols = StoreFs.openParquet(spark, loc).schema.fields
         .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
       spark.sql(s"CREATE TABLE `$t` ($cols) USING parquet " +
         s"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $n BUCKETS " +
@@ -153,7 +153,7 @@ object Bm25Store {
   private[graft] def dlFrame(spark: SparkSession, path: String): DataFrame =
     dlBucketsOf(path) match {
       case Some(n) => spark.table(ensureDlTable(spark, path, n))
-      case None => spark.read.parquet(path + ".dl")
+      case None => StoreFs.openParquet(spark, path + ".dl")
     }
 
   private def writeDlBucketed(dl: DataFrame, path: String, n: Int): Unit = {
@@ -455,7 +455,7 @@ object Bm25Store {
                                 qt: DataFrame,
                                 extra: Seq[String] = Nil): DataFrame = {
     val qtbs = qt.select("qtb").distinct().collect().map(_.getLong(0))
-    spark.read.parquet(path)
+    StoreFs.openParquet(spark, path)
       .select((Seq("tok", "doc_id", "tf", "tb") ++ extra).map(col): _*)
       .filter(col("tb").isin(qtbs: _*))
       .join(broadcast(qt.select("qtok", "qtb").distinct()),
@@ -491,7 +491,7 @@ object Bm25Store {
     val cand0 = candidates(spark, path, qt)
       .transform(graft.Materialize.forceCached) // feeds df AND the contrib join
     val dl = dlFrame(spark, path).select("doc_id", "dl")
-    val stats = spark.read.parquet(path + ".stats")
+    val stats = StoreFs.openParquet(spark, path + ".stats")
     rankBm25(cand0, qt, dl, stats, k, excludeSelf)
   }
 
@@ -558,7 +558,7 @@ object Bm25Store {
       val v = explicit.orElse(
         StoreMaintenance.versions(root).sorted.lastOption)
       v.map(StoreMaintenance.readBefore(spark, root, _))
-        .getOrElse(spark.read.parquet(root))
+        .getOrElse(StoreFs.openParquet(spark, root))
     }
     val qt = queries
       .select(col("q_id"), explode(array_distinct(tokensOf(col("text")))).as("qtok"))
@@ -611,7 +611,7 @@ object Bm25Store {
     // included), else derived from dl (pre-gstats stores)
     val stats =
       if (StoreFs.exists(path + ".gstats"))
-        spark.read.parquet(path + ".gstats")
+        StoreFs.openParquet(spark, path + ".gstats")
           .groupBy(matchCols.head, matchCols.tail: _*)
           .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
       else dl.groupBy(matchCols.head, matchCols.tail: _*)
@@ -1038,8 +1038,8 @@ object Bm25StoreQueries {
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     graft.GraftSession.sqlStore(spark, path, "bm25")
-    spark.read.parquet(path + ".dl").createOrReplaceTempView("graft_store_bm25_dl")
-    spark.read.parquet(path + ".stats").createOrReplaceTempView("graft_store_bm25_stats")
+    StoreFs.openParquet(spark, path + ".dl").createOrReplaceTempView("graft_store_bm25_dl")
+    StoreFs.openParquet(spark, path + ".stats").createOrReplaceTempView("graft_store_bm25_stats")
     docs(spark, dir).createOrReplaceTempView("graft_sql_docs_bm25")
     spark.sql(s"""
       WITH qt0 AS (SELECT doc_id AS q_id,

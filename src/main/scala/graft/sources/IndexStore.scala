@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.functions.{HashFns => H, VectorFns => V}
 
 /** Persistent vector index — the Spark-native re-expression of the
@@ -63,7 +64,7 @@ private[graft] object StoreLayout {
     df.hint("REBALANCE", partitionCols.map(col): _*)
 
   /** Daemon pool for overlapping INDEPENDENT store steps (sidecar
-    * writes, paired sidecar reads). Spark's scheduler happily runs
+    * writes, disjoint search legs). Spark's scheduler happily runs
     * several jobs at once inside one application; steps were only
     * sequential because the store code called them sequentially, and
     * each tiny sidecar job pays a full driver round-trip (plan,
@@ -99,8 +100,8 @@ private[graft] object StoreLayout {
       settled.map(_.get)
     }
 
-  /** Two independent typed steps, overlapped — the paired model-
-    * sidecar reads every compressed-store search opens with.
+  /** Two independent typed steps, overlapped — a store write and its
+    * metadata sidecar, or two disjoint search legs.
     */
   def concurrently2[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
@@ -176,10 +177,40 @@ object IndexStore {
     }
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    StoreFs.openParquet(spark, path)
 
   def readMetadata(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path.meta")
+    StoreFs.openParquet(spark, s"$path.meta")
+
+  /** A small query set's probe rows, planned on the driver: one row per
+    * (query, probed partition key), the key last. `queries` counts the
+    * query rows the probe was built from.
+    */
+  private[sources] final case class LocalProbe(frame: DataFrame, rows: Array[Row], queries: Int) {
+    /** The distinct probed keys — the static partition IN list (a null
+      * key, from a null query vector, probes nothing).
+      */
+    def keys: Seq[Int] = rows.toSeq.map(r => r.get(r.length - 1)).collect { case k: Int => k }.distinct
+  }
+
+  /** Collect `probe` once — its last column is each query's array of
+    * probed partition keys — and explode that array on the driver,
+    * returning the rows as a local relation for the broadcast side.
+    * Over a local query frame the whole probe SQL folds into the
+    * collected plan, so this schedules no Spark job, and nothing
+    * upstream of the probe recomputes when the search runs.
+    */
+  private[sources] def localProbe(probe: DataFrame): LocalProbe = {
+    val collected = probe.collect()
+    val n = probe.schema.length - 1
+    val rows = collected.flatMap { r =>
+      val head = r.toSeq.take(n)
+      r.getSeq[Any](n).map(k => Row.fromSeq(head :+ k))
+    }
+    val schema = StructType(probe.schema.take(n)).add(probe.schema(n).name, IntegerType)
+    LocalProbe(probe.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      rows, collected.length)
+  }
 
   /** Shared serving tail for every unfiltered store search: exact
     * round-6 cosine from joined (query_id, qv, qn, id, v, nrm)
@@ -251,20 +282,18 @@ object IndexStore {
     */
   def searchAnnProbed(spark: SparkSession, path: String, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
-    // cached: the probe-bucket collect below and the join both read
-    // this tiny frame — uncached, the collect would recompute the
-    // banding pipeline once and the join a second time
-    val q = graft.Materialize.forceCached(withBands(
+    // collected once: the probe-bucket IN list and the broadcast side
+    // both come from the same driver-side rows
+    val q = localProbe(withBands(
       queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v"))
         .withColumn("nrm", V.norm2(col("v"))), dim)
       .select(col("query_id"), col("v").as("qv"), col("nrm").as("qn"),
         col("band0").as("qb0"))
-      .withColumn("pb", explode(array(
-        col("qb0") +: (0 until BandBits).map(r => col("qb0").bitwiseXOR(lit(1 << r))): _*))))
-    val probedBuckets = q.select("pb").distinct().collect().map(_.getInt(0)).toSeq
-    val index = spark.read.parquet(path)
-      .where(col("band0").isin(probedBuckets: _*)) // static file-level pruning
-    rescoreTopK(index.join(broadcast(q),
+      .withColumn("pb", array(
+        col("qb0") +: (0 until BandBits).map(r => col("qb0").bitwiseXOR(lit(1 << r))): _*)))
+    val index = read(spark, path)
+      .where(col("band0").isin(q.keys: _*)) // static file-level pruning
+    rescoreTopK(index.join(broadcast(q.frame),
       col("band0") === col("pb") && col("id") =!= col("query_id")), k)
   }
 
@@ -407,7 +436,7 @@ object StoreMaintenance {
   def openChecked(spark: SparkSession, path: String): DataFrame = {
     val root = StoreFs.qualified(path)
     withLock(StoreFs.fsOf(root), root) { recover(path) }
-    spark.read.parquet(path)
+    StoreFs.openParquet(spark, path)
   }
 
   private def dataFiles(fs: FileSystem, d: Path): Array[Path] =
@@ -1615,12 +1644,13 @@ object IvfIndexStore {
   }
 
   /** Centroid sidecar — tiny, driver-resident (the in-memory coarse
-    * quantizer of a loaded faiss index).
+    * quantizer of a loaded faiss index). Read on the driver
+    * ([[StoreFs.readRows]]), so opening a store schedules no Spark job.
     */
   def readCentroids(spark: SparkSession, path: String): Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$path.centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    StoreFs.readRows(s"$path.centroids")
+      .map(g => (g.getInteger("cid", 0), StoreFs.doubles(g, "cv")))
+      .toArray.sortBy(_._1)
 
   /** Export a store's coarse-quantizer model as a SAFETENSORS
     * artifact (one F64 `centroids` tensor, [nlist, dim]) — the
@@ -1656,18 +1686,10 @@ object IvfIndexStore {
     Array.tabulate(k)(i => (i, flat.slice(i * dim, (i + 1) * dim)))
   }
 
-  /** Probe frame for a query set: one row per (query, probed list id),
-    * lists ranked per query against the literal centroid set (sorted
-    * (desc sim, asc cid) structs — the ivfProbe formula).
+  /** Each query's nprobe list ids, ranked against the literal centroid
+    * set (sorted (desc sim, asc cid) structs — the ivfProbe formula).
     */
-  /** Probe rows for an already-prepared (vec_id, v, nrm) query frame —
-    * shared with IvfPqIndexStore, which prunes the same way but scores
-    * by ADC.
-    */
-  private[sources] def probeOf(q: DataFrame,
-                               centroids: Array[(Int, Array[Double])],
-                               nprobe: Int,
-                               extraCols: Seq[String] = Nil): DataFrame = {
+  private def probedCids(centroids: Array[(Int, Array[Double])], nprobe: Int): Column = {
     val cands = array_sort(array(centroids.map { case (cid, cv) =>
       val cn = math.sqrt(cv.map(x => x * x).sum)
       struct(
@@ -1675,11 +1697,35 @@ object IvfIndexStore {
           .as("nsim"),
         lit(cid).as("cid"))
     }: _*))
-    q.select(Seq(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-        ++ extraCols.map(col): _*)
-      .withColumn("pcid", explode(transform(
-        slice(cands, 1, nprobe), s => s.getField("cid"))))
+    transform(slice(cands, 1, nprobe), s => s.getField("cid"))
   }
+
+  private def probeInput(q: DataFrame, extraCols: Seq[String]): DataFrame =
+    q.select(Seq(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+      ++ extraCols.map(col): _*)
+
+  /** Probe frame for an already-prepared (vec_id, v, nrm) query frame:
+    * one row per (query, probed list id), left distributed — the batch
+    * searches' probe (IVF-PQ's too, which prunes the same way but
+    * scores by ADC).
+    */
+  private[sources] def probeOf(q: DataFrame,
+                               centroids: Array[(Int, Array[Double])],
+                               nprobe: Int,
+                               extraCols: Seq[String] = Nil): DataFrame =
+    probeInput(q, extraCols).withColumn("pcid", explode(probedCids(centroids, nprobe)))
+
+  /** [[probeOf]] for a small query set, collected once and planned on
+    * the driver ([[IndexStore.localProbe]]): the broadcast probe frame
+    * plus the probed list ids for the static IN filter — shared with
+    * the IVF-PQ and IVF-BQ searches.
+    */
+  private[sources] def localProbeOf(q: DataFrame,
+                                    centroids: Array[(Int, Array[Double])],
+                                    nprobe: Int,
+                                    extraCols: Seq[String] = Nil): IndexStore.LocalProbe =
+    IndexStore.localProbe(
+      probeInput(q, extraCols).withColumn("pcid", probedCids(centroids, nprobe)))
 
   private[sources] def probeFrame(queries: DataFrame, idCol: String, vecCol: String,
                                   centroids: Array[(Int, Array[Double])],
@@ -1697,11 +1743,11 @@ object IvfIndexStore {
   }
 
   /** Above this many query rows, search() hands off to the
-    * distributed-probe DPP path: collecting a big query set's probed
-    * list ids to the driver is both a needless job and a driver-memory
-    * liability, while below it the static IN filter is cheaper than
-    * DPP's runtime subquery. The size check reads at most
-    * threshold + 1 rows (limit-then-count), so it stays O(threshold)
+    * distributed-probe DPP path: collecting a big query set's probe
+    * rows to the driver is a driver-memory liability, while below it
+    * the static IN filter is cheaper than DPP's runtime subquery. The
+    * size check is the row count of the probe collect itself, which
+    * reads at most threshold + 1 query rows, so it stays O(threshold)
     * even when the query set is itself a 100 TB-side table.
     */
   val SearchBatchThreshold = 64
@@ -1717,15 +1763,14 @@ object IvfIndexStore {
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
              nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val small =
-      queries.select(col(idCol)).limit(SearchBatchThreshold + 1).count() <= SearchBatchThreshold
-    if (!small) return searchBatch(spark, path, queries, idCol, vecCol, k, nprobe)
     val centroids = readCentroids(spark, path)
-    val qProbe = probeFrame(queries, idCol, vecCol, centroids, nprobe)
-    val probedCids = qProbe.select("pcid").distinct().collect().map(_.getInt(0)).toSeq
-    val index = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids: _*)) // static file-level pruning
-    rescored(index, qProbe, k)
+    val p = localProbeOf(prepared(queries, idCol, vecCol).limit(SearchBatchThreshold + 1),
+      centroids, nprobe)
+    if (p.queries > SearchBatchThreshold)
+      return batchSearch(spark, path, queries, idCol, vecCol, k, nprobe, centroids)
+    val index = StoreFs.openParquet(spark, path)
+      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
+    rescored(index, p.frame, k)
   }
 
   /** Attribute-filtered search on the persisted IVF index — the
@@ -1748,12 +1793,11 @@ object IvfIndexStore {
         +: col(vecCol).cast("array<double>").as("v")
         +: matchCols.map(c => col(c).as(s"q_$c")): _*)
       .withColumn("nrm", V.norm2(col("v")))
-    val qProbe = probeOf(q, centroids, nprobe, matchCols.map(c => s"q_$c"))
-    val probedCids = qProbe.select("pcid").distinct().collect().map(_.getInt(0)).toSeq
-    val index = spark.read.parquet(path).where(col("cid").isin(probedCids: _*))
+    val p = localProbeOf(q, centroids, nprobe, matchCols.map(c => s"q_$c"))
+    val index = StoreFs.openParquet(spark, path).where(col("cid").isin(p.keys: _*))
     val cond = matchCols.map(c => col(c) === col(s"q_$c"))
       .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
-    val scored = index.join(broadcast(qProbe), cond)
+    val scored = index.join(broadcast(p.frame), cond)
       .select(col("query_id") +: matchCols.map(col)
         :+ col("vec_id").as("neighbor_id")
         :+ round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"): _*)
@@ -1822,7 +1866,7 @@ object IvfIndexStore {
     val pred = vals.map(r => matchCols.indices
         .map(i => col(matchCols(i)) === lit(r.get(i))).reduce(_ && _))
       .reduce(_ || _)
-    val survivors = spark.read.parquet(path).where(pred)
+    val survivors = StoreFs.openParquet(spark, path).where(pred)
     val small = survivors.select(col(matchCols.head))
       .limit(exactThreshold + 1).count() <= exactThreshold
     if (!small)
@@ -1855,11 +1899,14 @@ object IvfIndexStore {
     */
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
-                  nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val centroids = readCentroids(spark, path)
-    val qProbe = probeFrame(queries, idCol, vecCol, centroids, nprobe)
-    rescored(spark.read.parquet(path), qProbe, k)
-  }
+                  nprobe: Int = Knn.IvfNprobe): DataFrame =
+    batchSearch(spark, path, queries, idCol, vecCol, k, nprobe, readCentroids(spark, path))
+
+  private def batchSearch(spark: SparkSession, path: String, queries: DataFrame,
+                          idCol: String, vecCol: String, k: Int, nprobe: Int,
+                          centroids: Array[(Int, Array[Double])]): DataFrame =
+    rescored(StoreFs.openParquet(spark, path),
+      probeFrame(queries, idCol, vecCol, centroids, nprobe), k)
 }
 
 /** Persistent product-quantized index — the compressed counterpart of
@@ -1929,11 +1976,11 @@ object PqIndexStore {
   }
 
   /** Load the codebooks (tiny — driver-resident, like the reference's
-    * in-memory index object).
+    * in-memory index object), read on the driver with no Spark job.
     */
   def readBooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$path.books").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
+    val rows = StoreFs.readRows(s"$path.books")
+      .map(g => ((g.getInteger("m", 0), g.getInteger("k", 0)), StoreFs.doubles(g, "cv"))).toMap
     Array.tabulate(Knn.PqSubspaces)(m => Array.tabulate(Knn.PqCodes)(k => rows((m, k))))
   }
 
@@ -1976,7 +2023,7 @@ object PqIndexStore {
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int): DataFrame = {
     val books = readBooks(spark, path)
-    val coded = spark.read.parquet(s"$path.codes")
+    val coded = StoreFs.openParquet(spark, s"$path.codes")
     val qs = queries
       .select(col(idCol).cast("long").as("query_id"),
         col(vecCol).cast("array<double>").as("v"))
@@ -2143,9 +2190,8 @@ object IvfPqIndexStore {
     */
   def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long = {
     val spark = df.sparkSession
-    val (centroids, books) = StoreLayout.concurrently2(
-      IvfIndexStore.readCentroids(spark, path),
-      PqIndexStore.readBooks(spark, path))
+    val centroids = IvfIndexStore.readCentroids(spark, path)
+    val books = PqIndexStore.readBooks(spark, path)
     val asg = Knn.withCid(StoreLayout.widened(prepared(df, idCol, vecCol)), centroids)
     // the store's brand, not a caller flag: appended codes are taken
     // over the same representation the store was written with
@@ -2168,44 +2214,42 @@ object IvfPqIndexStore {
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
              nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val (centroids, books) = StoreLayout.concurrently2(
-      IvfIndexStore.readCentroids(spark, path),
-      PqIndexStore.readBooks(spark, path))
-    val q = prepared(queries, idCol, vecCol)
-    if (isResidual(path)) {
-      // branded residual store: tables are per (query, probed list) —
-      // the query residual is taken against THAT list's centroid
-      val probeRows = IvfIndexStore.probeOf(q, centroids, nprobe)
-        .select("query_id", "pcid", "qv").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      val qdt = Knn.pqResQueryTables(spark, probeRows, centroids.toMap, books)
-      val probedCids = probeRows.map(_._2).distinct.toSeq
-      val coded = spark.read.parquet(path)
-        .where(col("cid").isin(probedCids: _*)) // static file-level pruning
-      val scored = coded.join(qdt,
-          col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), Knn.adcDistCol.as("adc_dist"))
-      val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-      return scored.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= k)
-        .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-          col("adc_dist"))
-    }
-    val qProbe = IvfIndexStore.probeOf(q, centroids, nprobe)
-      .select("query_id", "pcid")
-    val qs = q.orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qdt = Knn.pqQueryTables(spark, qs, books)
-    val probes = qProbe.join(qdt, "query_id")
-    val probedCids = qProbe.select("pcid").distinct().collect().map(_.getInt(0)).toSeq
-    val coded = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids: _*)) // static file-level pruning
-    val scored = coded.join(broadcast(probes),
+    val centroids = IvfIndexStore.readCentroids(spark, path)
+    val books = PqIndexStore.readBooks(spark, path)
+    // ids cast to long as in PqIndexStore.search: the tables key on them
+    val p = IvfIndexStore.localProbeOf(
+      prepared(queries, idCol, vecCol).withColumn("vec_id", col("vec_id").cast("long")),
+      centroids, nprobe)
+    val coded = StoreFs.openParquet(spark, path)
+      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
+    val probes =
+      if (isResidual(path))
+        // branded residual store: tables are per (query, probed list) —
+        // the query residual is taken against THAT list's centroid
+        Knn.pqResQueryTables(spark,
+          p.rows.map(r => (r.getLong(0), r.getInt(3), r.getSeq[Double](1).toArray)),
+          centroids.toMap, books)
+      else adcProbes(spark, p, books)
+    val scored = coded.join(probes,
         col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), Knn.adcDistCol.as("adc_dist"))
     val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+  }
+
+  /** The broadcast side of a raw-code ADC search: the local probe
+    * rows with each query's lookup table appended as `qdt`, built once
+    * per query on the driver.
+    */
+  private def adcProbes(spark: SparkSession, p: IndexStore.LocalProbe,
+                        books: Array[Array[Array[Double]]]): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val tables = p.rows.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      .map { case (qid, qv) => qid -> Knn.pqQueryTable(qv.toArray, books) }
+    val rows = p.rows.map(r => Row.fromSeq(r.toSeq :+ tables(r.getLong(0))))
+    val schema = p.frame.schema.add("qdt", ArrayType(ArrayType(DoubleType, false), false))
+    broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
   }
 
   /** Batch-serving variant: the probe set AND the per-query ADC lookup
@@ -2238,9 +2282,8 @@ object IvfPqIndexStore {
                                      queries: DataFrame, idCol: String,
                                      vecCol: String, k: Int, nprobe: Int,
                                      literalMax: Int): DataFrame = {
-    val (centroids, books) = StoreLayout.concurrently2(
-      IvfIndexStore.readCentroids(spark, path),
-      PqIndexStore.readBooks(spark, path))
+    val centroids = IvfIndexStore.readCentroids(spark, path)
+    val books = PqIndexStore.readBooks(spark, path)
     val qProbe = IvfIndexStore.probeOf(prepared(queries, idCol, vecCol), centroids, nprobe)
     val dsub = 64 / Knn.PqSubspaces
     // the store's brand decides the query-side encoding, exactly as in
@@ -2274,7 +2317,7 @@ object IvfPqIndexStore {
       }: _*)
     }: _*)
     val probes = enc.select(col("query_id"), col("pcid"), qdtCol.as("qdt"))
-    val scored = spark.read.parquet(path).join(broadcast(probes),
+    val scored = StoreFs.openParquet(spark, path).join(broadcast(probes),
         col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), Knn.adcDistCol.as("adc_dist"))
     val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
@@ -2297,26 +2340,18 @@ object IvfPqIndexStore {
                      nprobe: Int = Knn.IvfNprobe): DataFrame = {
     require(!isResidual(path),
       "filtered search over a residual-branded store is not supported yet")
-    val (centroids, books) = StoreLayout.concurrently2(
-      IvfIndexStore.readCentroids(spark, path),
-      PqIndexStore.readBooks(spark, path))
-    val q = queries.select(col(idCol).as("vec_id")
+    val centroids = IvfIndexStore.readCentroids(spark, path)
+    val books = PqIndexStore.readBooks(spark, path)
+    val q = queries.select(col(idCol).cast("long").as("vec_id")
         +: col(vecCol).cast("array<double>").as("v")
         +: matchCols.map(c => col(c).as(s"q_$c")): _*)
       .withColumn("nrm", V.norm2(col("v")))
-    val qProbe = IvfIndexStore.probeOf(q, centroids, nprobe, matchCols.map(c => s"q_$c"))
-    val probedCids = qProbe.select("pcid").distinct().collect().map(_.getInt(0)).toSeq
-    val qs = q.orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qdt = Knn.pqQueryTables(spark, qs, books)
-    val probes = qProbe
-      .select(col("query_id") +: col("pcid") +: matchCols.map(c => col(s"q_$c")): _*)
-      .join(qdt, "query_id")
-    val coded = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids: _*)) // static file-level pruning
+    val p = IvfIndexStore.localProbeOf(q, centroids, nprobe, matchCols.map(c => s"q_$c"))
+    val coded = StoreFs.openParquet(spark, path)
+      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
     val cond = matchCols.map(c => col(c) === col(s"q_$c"))
       .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
-    val scored = coded.join(broadcast(probes), cond)
+    val scored = coded.join(adcProbes(spark, p, books), cond)
       .select(col("query_id") +: matchCols.map(col)
         :+ col("vec_id") :+ Knn.adcDistCol.as("adc_dist"): _*)
     val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
@@ -2361,7 +2396,7 @@ object BqIndexStore {
         Knn.bqWords(col("v"), 32).as("code_hi"))
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    StoreFs.openParquet(spark, path)
 
   /** Delete-by-key for the flat code table — the binary tier's
     * right-to-be-forgotten path (faiss remove_ids on an IndexBinary).
@@ -2613,16 +2648,12 @@ object IvfBqIndexStore {
              queries: DataFrame, idCol: String, vecCol: String, k: Int,
              nprobe: Int = Knn.IvfNprobe, rerank: Int = 20): DataFrame = {
     val centroids = IvfIndexStore.readCentroids(spark, path)
-    val qProbe = IvfIndexStore.probeFrame(queries, idCol, vecCol, centroids, nprobe)
-    val probedCids = qProbe.select("pcid").distinct().collect().map(_.getInt(0)).toSeq
-    val qCodes = IvfIndexStore.prepared(queries, idCol, vecCol)
-      .select(col("vec_id").as("qcid2"),
-        Knn.bqWords(col("v"), 0).as("qlo"), Knn.bqWords(col("v"), 32).as("qhi"))
-    val probes = qProbe.select(col("query_id"), col("pcid"))
-      .join(qCodes, col("query_id") === col("qcid2"))
-      .select("query_id", "pcid", "qlo", "qhi")
-    val ham = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids: _*)) // static file-level pruning
+    val p = IvfIndexStore.localProbeOf(IvfIndexStore.prepared(queries, idCol, vecCol),
+      centroids, nprobe)
+    val probes = p.frame.select(col("query_id"), col("pcid"),
+      Knn.bqWords(col("qv"), 0).as("qlo"), Knn.bqWords(col("qv"), 32).as("qhi"))
+    val ham = StoreFs.openParquet(spark, path)
+      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
       .join(broadcast(probes),
         col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -2697,12 +2728,12 @@ object MaxsimStore {
              k: Int): DataFrame = {
     val qrows = graft.Materialize.forceCached(rows(queries))
     val probeBkts = qrows.select("hbkt").distinct().collect().map(_.getInt(0)).toSeq
-    val inv = spark.read.parquet(path).where(col("hbkt").isin(probeBkts: _*))
+    val inv = StoreFs.openParquet(spark, path).where(col("hbkt").isin(probeBkts: _*))
     val qs = qrows.select(col("doc_id").as("q_id"), col("h"))
     val cand = Knn.maxsimCand(qs, inv.select("doc_id", "h"))
     val qv = qrows.select(col("doc_id").as("q_id") +: col("h").as("qh")
       +: (1 to Knn.MvDim).map(i => col(s"w$i").as(s"q$i")): _*)
-    val dv = spark.read.parquet(path)
+    val dv = StoreFs.openParquet(spark, path)
       .select(col("doc_id") +: (1 to Knn.MvDim).map(i => col(s"w$i").as(s"d$i")): _*)
     Knn.maxsimTail(cand, dv, qv, k)
   }

@@ -2,6 +2,14 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem seam for the store maintenance layer — every lock,
   * manifest, listing, version dir, tombstone, and sidecar check goes
@@ -39,8 +47,8 @@ private[graft] object StoreFs {
     * when no session exists (pure-path utilities in tests).
     */
   def conf: Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+    SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
@@ -216,5 +224,101 @@ private[graft] object StoreFs {
 
   def copyFile(fs: FileSystem, src: Path, dst: Path): Unit = {
     FileUtil.copy(fs, src, fs, dst, false, true, conf); ()
+  }
+
+  /** Spark's hidden-name rule for file-source listings: `_`- and
+    * `.`-prefixed names are skipped (except `k=v` partition dirs and
+    * the parquet summary files), and so are in-flight `._COPYING_`
+    * uploads.
+    */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** The leaf files of a dataset directory as Spark's file index
+    * lists them (hidden names skipped, partition dirs descended), in
+    * path order — the order parquet schema inference picks its footer
+    * from. A missing directory lists empty.
+    */
+  private def leafFiles(root: Path): Seq[FileStatus] = {
+    val fs = fsOf(root)
+    def walk(d: Path): Seq[FileStatus] =
+      list(fs, d).toSeq.filterNot(s => hiddenName(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    walk(root).sortBy(_.getPath.toString)
+  }
+
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def isSummary(s: FileStatus): Boolean =
+    s.getPath.getName == "_metadata" || s.getPath.getName == "_common_metadata"
+
+  /** A parquet file reader over the session's Hadoop configuration
+    * (parquet's own defaults would load a fresh Configuration from its
+    * XML resources on every open).
+    */
+  private def parquetFile(f: FileStatus): ParquetFileReader = {
+    val c = conf
+    new ParquetFileReader(HadoopInputFile.fromStatus(f, c),
+      HadoopReadOptions.builder(c, f.getPath).build())
+  }
+
+  /** Open a parquet dataset with the row schema taken from the first
+    * data file's footer — the footer `spark.read.parquet` would infer
+    * from, read here on the driver instead of in a one-task schema
+    * job. Falls back to `spark.read.parquet` wherever inference would
+    * do more than read that one footer: schema merging on, summary
+    * files present, no data file, or a footer without Spark's row
+    * schema (parquet from another writer). The partition columns are
+    * still discovered from the directory names, exactly as before.
+    */
+  def openParquet(spark: SparkSession, path: String): DataFrame = {
+    val files = if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) Nil
+      else leafFiles(qualified(path))
+    val schema =
+      if (files.exists(isSummary)) None
+      else files.headOption.flatMap { f =>
+        scala.util.Try {
+          val r = parquetFile(f)
+          try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadataKey))
+          finally r.close()
+        }.toOption.flatten
+          .flatMap(json => scala.util.Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
+      }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** Every row of a small parquet dataset, read on the driver with
+    * parquet-hadoop's example record reader — no Spark job. For the
+    * kilobyte model sidecars a search loads before it plans its scan;
+    * the listing goes through [[leafFiles]], so any Hadoop scheme works.
+    */
+  def readRows(path: String): Seq[Group] = {
+    val files = leafFiles(qualified(path)).filterNot(isSummary)
+    if (files.isEmpty)
+      throw new java.io.FileNotFoundException(s"no parquet data files under $path")
+    files.flatMap { f =>
+      val r = parquetFile(f)
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
+          val rows = io.getRecordReader(rg, new GroupRecordConverter(schema))
+          Iterator.fill(rg.getRowCount.toInt)(rows.read())
+        }.toList
+      } finally r.close()
+    }
+  }
+
+  /** An `array<double>` field of a [[readRows]] row, in either list
+    * encoding Spark writes (three-level `list.element`, or the legacy
+    * two-level repeated primitive).
+    */
+  def doubles(g: Group, field: String): Array[Double] = {
+    val l = g.getGroup(field, 0)
+    val n = l.getFieldRepetitionCount(0)
+    if (l.getType.getType(0).isPrimitive) Array.tabulate(n)(l.getDouble(0, _))
+    else Array.tabulate(n)(l.getGroup(0, _).getDouble(0, 0))
   }
 }

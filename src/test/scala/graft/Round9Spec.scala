@@ -14,23 +14,6 @@ class Round9Spec extends SparkSpec {
   private def hashRows(df: org.apache.spark.sql.DataFrame): String =
     df.collect().map(_.toString).sorted.mkString("\n")
 
-  /** Spark jobs scheduled while running `body`, via a job group +
-    * status tracker (listener-bus timing smoothed by a short retry).
-    */
-  private def countJobs(body: => Unit): Int = {
-    val group = s"r9-count-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, "job count", interruptOnCancel = false)
-    try body finally spark.sparkContext.clearJobGroup()
-    var n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    var tries = 0
-    while (tries < 20) {
-      Thread.sleep(50)
-      val m = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      if (m == n) tries = 20 else { n = m; tries += 1 }
-    }
-    n
-  }
-
   test("purge discovery is O(1) jobs regardless of partition count") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("purge_jobs").toString

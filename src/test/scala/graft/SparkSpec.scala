@@ -17,6 +17,25 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sf: String = TestSession.sf
 
+  /** Spark jobs scheduled while running `body`, via a job group +
+    * status tracker (listener-bus timing smoothed by a short retry).
+    * The group is a thread-local property: jobs `body` submits from
+    * this thread, or from the broadcast threads that inherit it, count.
+    */
+  def countJobs(body: => Unit): Int = {
+    val group = s"count-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "job count", interruptOnCancel = false)
+    try body finally spark.sparkContext.clearJobGroup()
+    var n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    var tries = 0
+    while (tries < 20) {
+      Thread.sleep(50)
+      val m = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+      if (m == n) tries = 20 else { n = m; tries += 1 }
+    }
+    n
+  }
+
   /** Assert the query's EXECUTED plan carries a live
     * DynamicPruningExpression — not Spark's literal-true fallback,
     * which AQE substitutes when it declines to prune (e.g. when

@@ -1,0 +1,131 @@
+package graft
+
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.col
+import graft.sources.{BqIndexStore, Bm25Store, IndexStore, IvfBqIndexStore, IvfIndexStore,
+  IvfPqIndexStore, MaxsimStore, PqIndexStore, StoreFs}
+
+/** The driver-side store opens read exactly what Spark reads: the
+  * footer-schema open returns `spark.read.parquet`'s schema and rows
+  * for every store dataset, falls back where inference would do more
+  * than read one footer, and the driver-read model sidecars are
+  * bit-equal to a Spark read of the same files.
+  */
+class StoreOpenParitySpec extends SparkSpec {
+
+  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def bits(v: Array[Double]): Seq[Long] = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
+
+  private def sparkCentroids(path: String): Seq[(Int, Seq[Long])] =
+    spark.read.parquet(s"$path.centroids").collect()
+      .map(r => (r.getInt(0), bits(r.getSeq[Double](1).toArray))).toSeq.sortBy(_._1)
+
+  private def sparkBooks(path: String): Map[(Int, Int), Seq[Long]] =
+    spark.read.parquet(s"$path.books").collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> bits(r.getSeq[Double](2).toArray)).toMap
+
+  private def driverBooks(path: String): Map[(Int, Int), Seq[Long]] =
+    PqIndexStore.readBooks(spark, path).zipWithIndex.flatMap { case (perM, m) =>
+      perM.zipWithIndex.map { case (cv, k) => (m, k) -> bits(cv) }
+    }.toMap
+
+  test("footer-schema open equals spark.read.parquet on every store dataset") {
+    val base = tmp("open_parity")
+    val emb = Tables.embeddings(spark, sf)
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    IndexStore.write(emb, "vec_id", "embedding", s"$base/flat", dim = 64, metaCols = Seq("label"))
+    IndexStore.writeMetadata(emb.select("vec_id", "label"), s"$base/flat")
+    IvfIndexStore.write(emb, "vec_id", "embedding", s"$base/ivf")
+    PqIndexStore.write(emb, "vec_id", "embedding", s"$base/pq")
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", s"$base/ivfpq", metaCols = Seq("label"))
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", s"$base/ivfpq_res", byResidual = true)
+    IvfBqIndexStore.write(emb, "vec_id", "embedding", s"$base/ivfbq")
+    BqIndexStore.write(emb, "vec_id", "embedding", s"$base/bq")
+    BqIndexStore.writeMih(emb, "vec_id", "embedding", s"$base/mih")
+    MaxsimStore.write(docs, s"$base/maxsim")
+    Bm25Store.write(docs, s"$base/bm25")
+    // one append, so band0 and cid directories hold more than one file
+    IndexStore.append(emb.where(col("vec_id") < 20).withColumn("vec_id", col("vec_id") + 100000),
+      "vec_id", "embedding", s"$base/flat", dim = 64)
+    IvfIndexStore.append(emb.where(col("vec_id") < 20).withColumn("vec_id", col("vec_id") + 100000),
+      "vec_id", "embedding", s"$base/ivf")
+    val datasets = new java.io.File(base).listFiles().filter(_.isDirectory)
+      .map(_.getPath).filterNot(p => new java.io.File(p).getName.startsWith(".")).sorted
+    assert(datasets.length >= 20, s"expected every store and sidecar, got ${datasets.toSeq}")
+    for (p <- datasets) {
+      val opened = StoreFs.openParquet(spark, p)
+      val read = spark.read.parquet(p)
+      assert(opened.schema == read.schema, s"$p: ${opened.schema} != ${read.schema}")
+      assert(rows(opened) == rows(read), s"$p: rows differ")
+    }
+  }
+
+  test("footer-schema open falls back on non-Spark parquet, empty dirs and schema merging") {
+    for (t <- Seq("embeddings", "documents")) {
+      val p = s"$sf/$t.parquet"
+      assert(StoreFs.openParquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    val empty = tmp("open_empty")
+    val e1 = intercept[AnalysisException](spark.read.parquet(empty))
+    val e2 = intercept[AnalysisException](StoreFs.openParquet(spark, empty))
+    assert(e1.getMessage == e2.getMessage)
+    // two files with different columns: one footer without merging,
+    // the merged schema with it — both exactly as Spark infers them
+    import spark.implicits._
+    val mixed = tmp("open_mixed")
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$mixed/d/p=1")
+    Seq((2L, 2.0)).toDF("id", "x").write.parquet(s"$mixed/d/p=2")
+    val d = s"$mixed/d"
+    assert(StoreFs.openParquet(spark, d).schema == spark.read.parquet(d).schema)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val merged = spark.read.parquet(d).schema
+      assert(merged.fieldNames.toSet == Set("id", "s", "x", "p"))
+      assert(StoreFs.openParquet(spark, d).schema == merged)
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("driver-read centroids and codebooks are bit-equal to the Spark read") {
+    import spark.implicits._
+    val base = tmp("model_parity")
+    val emb = Tables.embeddings(spark, sf)
+    val store = s"$base/ivfpq"
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", store)
+    // multi-part sidecars: the same rows spread over three part files
+    val multi = s"$base/multi"
+    IvfIndexStore.readCentroids(spark, store).toSeq.map { case (c, v) => (c, v.toSeq) }
+      .toDF("cid", "cv").repartition(3).write.parquet(s"$multi.centroids")
+    PqIndexStore.readBooks(spark, store).zipWithIndex.flatMap { case (perM, m) =>
+      perM.zipWithIndex.map { case (cv, k) => (m, k, cv.toSeq) }
+    }.toSeq.toDF("m", "k", "cv").repartition(3).write.parquet(s"$multi.books")
+    assert(new java.io.File(s"$multi.books").listFiles().count(_.getName.endsWith(".parquet")) == 3)
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFs].getName)
+    for (p <- Seq(store, multi, s"faulty://$store", s"faulty://$multi")) {
+      val cents = IvfIndexStore.readCentroids(spark, p).toSeq.map { case (c, v) => (c, bits(v)) }
+      assert(cents == sparkCentroids(p), s"$p: centroids differ")
+      assert(driverBooks(p) == sparkBooks(p), s"$p: codebooks differ")
+    }
+  }
+
+  test("IVF-PQ search accepts int query ids (raw, residual and filtered)") {
+    val base = tmp("ivfpq_int_ids")
+    val emb = Tables.embeddings(spark, sf)
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", s"$base/raw", metaCols = Seq("label"))
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", s"$base/res", byResidual = true)
+    val q = emb.where(col("vec_id") < 4).select(col("vec_id"), col("embedding"), col("label"))
+    val qInt = q.withColumn("vec_id", col("vec_id").cast("int"))
+    for (s <- Seq("raw", "res")) {
+      val want = rows(IvfPqIndexStore.search(spark, s"$base/$s", q, "vec_id", "embedding", 5))
+      assert(want.nonEmpty)
+      assert(rows(IvfPqIndexStore.search(spark, s"$base/$s", qInt, "vec_id", "embedding", 5)) == want, s)
+    }
+    val want = rows(IvfPqIndexStore.searchFiltered(spark, s"$base/raw", q, "vec_id", "embedding",
+      5, Seq("label")))
+    assert(want.nonEmpty)
+    assert(rows(IvfPqIndexStore.searchFiltered(spark, s"$base/raw", qInt, "vec_id", "embedding",
+      5, Seq("label"))) == want)
+  }
+}
