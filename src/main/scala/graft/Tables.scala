@@ -13,8 +13,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** A table as a lazy parquet scan. The row schema comes from the
+    * first data file's footer, read on the driver
+    * ([[graft.sources.StoreFs.openParquet]]), so opening a table
+    * schedules no Spark job; where inference would read more than that
+    * one footer it falls back to `spark.read.parquet`.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.StoreFs.openParquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -83,10 +89,11 @@ object GraftSession {
     * can run the reference's load-then-search flow (app.py:52-58,
     * 138-146) as a single SELECT (v_sql_store drives exactly that).
     * The view is a plain scan, so partition pruning / filter pushdown
-    * on the store layout still applies to SQL queries against it.
+    * on the store layout still applies to SQL queries against it. The
+    * schema comes from a footer read on the driver, as in `Tables.load`.
     */
   def sqlStore(spark: SparkSession, path: String, name: String): Unit = {
     GraftFunctions.register(spark)
-    spark.read.parquet(path).createOrReplaceTempView(s"graft_store_$name")
+    graft.sources.StoreFs.openParquet(spark, path).createOrReplaceTempView(s"graft_store_$name")
   }
 }

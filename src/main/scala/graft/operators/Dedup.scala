@@ -152,12 +152,16 @@ object Dedup {
         col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"), col("sig1"), col("sig2"))
       .distinct()
-    pairs.select(col("doc1"), col("doc2"),
-        (aggregate(zip_with(col("sig1"), col("sig2"),
-          (a, b) => when(a === b, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-          / lit(16.0)).as("jacc_est"))
+    pairs.select(col("doc1"), col("doc2"), jaccEst(col("sig1"), col("sig2")).as("jacc_est"))
       .orderBy("doc1", "doc2")
   }
+
+  /** Estimated Jaccard: the fraction of the 16 permutations on which two
+    * signatures agree.
+    */
+  private def jaccEst(sig1: Column, sig2: Column): Column =
+    aggregate(zip_with(sig1, sig2, (a, b) => when(a === b, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x) / lit(16.0)
 
   /** d_simhash: 32-bit SimHash per document from distinct-token md5
     * bits; one map-side projection (token hashes materialized once,
@@ -460,32 +464,48 @@ object Dedup {
     labels
   }
 
-  /** d_pipeline: the end-to-end dedup pipeline as ONE declarative
-    * plan — exact-dedup keeper selection ∘ pairwise near-dup pruning
-    * among the keepers (a keeper is dropped when a smaller-id keeper
-    * is MinHash-near it), reported per language. The transitive
-    * cluster flavor is d_components; the pairwise rule here is the
-    * non-iterative composition a single pass executes, so Catalyst
-    * pipelines all three stages off shared scans — the dedup twin of
-    * t_pipeline.
+  /** d_pipeline: the end-to-end dedup pipeline — exact-dedup keeper
+    * selection ∘ pairwise near-dup pruning among the keepers (a keeper
+    * is dropped when a smaller-id keeper is MinHash-near it, jacc_est
+    * >= 0.25), reported per language. The transitive cluster flavor is
+    * d_components; the pairwise rule here is the non-iterative
+    * composition a single pass executes — the dedup twin of t_pipeline.
+    *
+    * Every document is read once: one spread projection gives
+    * (doc_id, lang, fp, sig), a window over fp flags each exact group's
+    * keeper (min doc_id), and the frame is materialized. Only keepers
+    * are band-joined — a loser needs both ends of its pair to be
+    * keepers, so filtering before the join is exact — and one left join
+    * of the losers plus one group-by on lang finish the report.
+    * Assumes doc_id is a key.
     */
   def dPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-    val keep1 = dExact(spark, dir).select(col("keep_doc_id").as("doc_id"))
-    val est = dMinhashPairs(spark, dir).filter(col("jacc_est") >= 0.25)
-      .select(col("doc1"), col("doc2"))
-    val losers = est
-      .join(keep1.select(col("doc_id").as("ka")), col("doc1") === col("ka"))
-      .join(keep1.select(col("doc_id").as("kb")), col("doc2") === col("kb"))
-      .select(col("doc2").as("doc_id")).distinct()
-    val finalKeep = keep1.except(losers)
-    docs
-      .join(keep1.withColumn("ex", lit(1)), Seq("doc_id"), "left")
-      .join(finalKeep.withColumn("fi", lit(1)), Seq("doc_id"), "left")
+    val text = col("text")
+    val perDoc = forceCached(spread(Tables.documents(spark, dir).select("doc_id", "lang", "text"))
+      .select(col("doc_id"), col("lang"), md5(normText(text)).as("fp"),
+        when(length(text) >= ShingleK,
+          graft.expressions.TextHashExprs.minhashSig(text, ShingleK)).as("sig"))
+      .withColumn("ex", col("doc_id") ===
+        min(col("doc_id")).over(org.apache.spark.sql.expressions.Window.partitionBy("fp")))
+      .select("doc_id", "lang", "ex", "sig"))
+    val bands = perDoc.filter(col("ex") && col("sig").isNotNull)
+      .select(col("doc_id"), col("sig"),
+        posexplode(array((0 until Bands).map(b => bandKey(col("sig"), b)): _*))
+          .as(Seq("band_id", "band_key")))
+    val l = bands.select(col("doc_id").as("doc1"), col("sig").as("sig1"),
+      col("band_id"), col("band_key"))
+    val r = bands.select(col("doc_id").as("doc2"), col("sig").as("sig2"),
+      col("band_id").as("band_id2"), col("band_key").as("band_key2"))
+    val losers = l.join(r,
+        col("band_id") === col("band_id2") && col("band_key") === col("band_key2") &&
+        col("doc1") < col("doc2"))
+      .filter(jaccEst(col("sig1"), col("sig2")) >= 0.25)
+      .select(col("doc2").as("loser")).distinct()
+    perDoc.join(losers, col("doc_id") === col("loser"), "left")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
-        count(col("ex")).as("n_exact_keep"),
-        count(col("fi")).as("n_final_keep"))
+        count(when(col("ex"), 1)).as("n_exact_keep"),
+        count(when(col("ex") && col("loser").isNull, 1)).as("n_final_keep"))
       .withColumn("keep_ratio",
         round(col("n_final_keep") / col("n_docs").cast("double"), 4))
       .orderBy("lang")
@@ -777,12 +797,15 @@ object Dedup {
     * (sequence/slice/md5 — no explode before the hash), the corpus-wide
     * occurrence count is a group-by on the span hash, and the
     * join-back reuses that same hash partitioning — two shuffles of
-    * (doc_id, h) pairs total, never text. A suffix array would find
-    * variable-length repeats but cannot be expressed as a distributed
-    * dataflow; fixed-k spans are the standard scalable surrogate.
+    * (doc_id, h) pairs. The only shuffle of text is the round-robin
+    * [[spread]] that puts the hashing on every core; it sits behind
+    * spanReport's lineage cut, so the report's plan is unchanged. A
+    * suffix array would find variable-length repeats but cannot be
+    * expressed as a distributed dataflow; fixed-k spans are the
+    * standard scalable surrogate.
     */
   def dSpanDedup(spark: SparkSession, dir: String): DataFrame =
-    spanReport(spanHashes(Tables.documents(spark, dir)))
+    spanReport(spanHashes(spread(Tables.documents(spark, dir).select("doc_id", "text"))))
 
   /** The distinct (doc_id, span-hash) table — one map-side projection,
     * the ONLY pass that ever touches text. Shared by the batch

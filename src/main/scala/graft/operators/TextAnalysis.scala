@@ -612,54 +612,35 @@ object TextAnalysis {
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
       .orderBy("doc_id", "pos")
 
-  /** t_gopher_quality: the Gopher rule set (Rae et al. 2021, §A1.1) as
-    * one map-side projection — the document-level quality gate a
-    * pretraining pipeline runs on every crawl shard. Per document:
-    * word count bounds, mean word length bounds, stop-word floor, and
-    * alphabetic-word floor, each as an explicit flag plus the combined
-    * keep decision. (The repetition rule lives in t_rep_ngrams; the
-    * symbol-ratio rules collapse to alpha_frac on this corpus.)
-    *
-    * Scale shape: zero joins, zero shuffles before the output sort —
-    * every feature is a higher-order expression over the token array
-    * computed once per row inside whole-stage codegen. All arithmetic
-    * is integer sums + one double division, written identically in the
-    * DuckDB oracle so flags and fractions hash-match exactly.
-    */
   /** t_curation_pipeline: the r7 curation stages composed into ONE
     * declarative plan — the per-source funnel report a training-data
     * run produces: raw docs → Gopher quality gate → span-dedup drop →
-    * per-source cap. Quality flags are computed inline in the base
-    * scan (map-side, no join); the only joins are the span-dup
-    * flag (equi-join on doc_id against d_span_dedup's output) and the
-    * capping window over survivors. Catalyst pipelines all stages off
-    * shared scans — the curation twin of t_pipeline / d_pipeline /
-    * m_pipeline.
+    * per-source cap. The Gopher features are one map-side projection
+    * over the spread scan (no join); the only join is the span-dup
+    * flag (equi-join on doc_id against d_span_dedup's output). One
+    * window per source ranks survivors first (survives desc, then the
+    * cap order), so a survivor's row number is its rank among the
+    * source's survivors, and one aggregate per source yields every
+    * funnel count. Assumes doc_id is a key.
     */
   def tCurationPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val quality = tGopherQuality(spark, dir).select(col("doc_id"), col("keep"))
     val spanDrop = Dedup.dSpanDedup(spark, dir)
       .select(col("doc_id").as("sd_id"), col("drop_flag"))
     val ord = graft.functions.HashFns
       .md5Long(concat(lit("cap_"), col("doc_id").cast("string")), 15)
-    val staged = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), ord.as("ord"))
-      .join(quality, "doc_id")
+    val docs = Dedup.spread(Tables.documents(spark, dir).select("doc_id", "source", "text"))
+    val w = Window.partitionBy("source")
+      .orderBy(col("survives").desc, col("ord"), col("doc_id"))
+    gopherFeatures(docs)
+      .select(col("doc_id"), col("source"), col("keep"), ord.as("ord"))
       .join(spanDrop, col("doc_id") === col("sd_id"), "left")
       .withColumn("survives", col("keep") && !coalesce(col("drop_flag"), lit(false)))
-    val w = Window.partitionBy("source").orderBy(col("ord"), col("doc_id"))
-    val capped = staged.filter(col("survives"))
       .withColumn("rn", row_number().over(w))
       .groupBy("source")
-      .agg(count(lit(1)).as("n_survive"),
-        sum(when(col("rn") <= Dedup.SourceCap, 1L).otherwise(0L)).as("n_kept"))
-    staged.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_quality"))
-      .join(capped, Seq("source"), "left")
-      .select(col("source"), col("n_docs"), col("n_quality"),
-        coalesce(col("n_survive"), lit(0L)).as("n_survive"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"))
+        sum(when(col("keep"), 1L).otherwise(0L)).as("n_quality"),
+        count(when(col("survives"), 1)).as("n_survive"),
+        count(when(col("survives") && col("rn") <= Dedup.SourceCap, 1)).as("n_kept"))
       .orderBy("source")
   }
 
@@ -922,20 +903,44 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  def tGopherQuality(spark: SparkSession, dir: String): DataFrame = {
+  /** t_gopher_quality: the Gopher rule set (Rae et al. 2021, §A1.1) as
+    * one map-side projection — the document-level quality gate a
+    * pretraining pipeline runs on every crawl shard. Per document:
+    * word count bounds, mean word length bounds, stop-word floor, and
+    * alphabetic-word floor, each as an explicit flag plus the combined
+    * keep decision. (The repetition rule lives in t_rep_ngrams; the
+    * symbol-ratio rules collapse to alpha_frac on this corpus.)
+    *
+    * Scale shape: zero joins, zero shuffles before the output sort —
+    * every feature is a higher-order expression over the token array
+    * computed once per row inside whole-stage codegen. All arithmetic
+    * is integer sums + one double division, written identically in the
+    * DuckDB oracle so flags and fractions hash-match exactly. A
+    * document without tokens gets NULL per-word features (as DuckDB's
+    * x / 0) and keep = false.
+    */
+  def tGopherQuality(spark: SparkSession, dir: String): DataFrame =
+    gopherFeatures(Tables.documents(spark, dir).select("doc_id", "text")).orderBy("doc_id")
+
+  /** The t_gopher_quality feature projection over any frame with a
+    * `text` column: every other input column passes through, followed
+    * by the features, flags and keep decision.
+    */
+  def gopherFeatures(docs: DataFrame): DataFrame = {
     val en = stopwords("en")
     val wlenSum = aggregate(transform(col("w"), t => length(t)),
       lit(0), (acc, x) => acc + x)
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("w"))
+    // NULL for a document without tokens instead of DIVIDE_BY_ZERO
+    def perWord(c: Column): Column =
+      round(c.cast("double") / nullif(col("n_words"), lit(0L)), 6)
+    val passThrough = docs.columns.filter(_ != "text").map(col).toSeq
+    docs.select(passThrough :+ toks(col("text")).as("w"): _*)
       .withColumn("n_words", size(col("w")).cast("long"))
-      .withColumn("mean_wlen",
-        round(wlenSum.cast("double") / col("n_words"), 6))
+      .withColumn("mean_wlen", perWord(wlenSum))
       .withColumn("stop_count",
         size(filter(col("w"), t => t.isin(en: _*))).cast("long"))
       .withColumn("alpha_frac",
-        round(size(filter(col("w"), t => t.rlike("^[a-z]+$"))).cast("double")
-          / col("n_words"), 6))
+        perWord(size(filter(col("w"), t => t.rlike("^[a-z]+$")))))
       .withColumn("flag_words",
         col("n_words") >= 30 && col("n_words") <= 5000)
       .withColumn("flag_wlen", col("mean_wlen") >= 3.0 && col("mean_wlen") <= 10.0)
@@ -943,8 +948,7 @@ object TextAnalysis {
       .withColumn("flag_alpha", col("alpha_frac") >= 0.8)
       .withColumn("keep",
         col("flag_words") && col("flag_wlen") && col("flag_stop") && col("flag_alpha"))
-      .select("doc_id", "n_words", "mean_wlen", "stop_count", "alpha_frac",
-        "flag_words", "flag_wlen", "flag_stop", "flag_alpha", "keep")
-      .orderBy("doc_id")
+      .select(passThrough ++ Seq("n_words", "mean_wlen", "stop_count", "alpha_frac",
+        "flag_words", "flag_wlen", "flag_stop", "flag_alpha", "keep").map(col): _*)
   }
 }

@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem seam for the store maintenance layer — every lock,
@@ -264,28 +265,49 @@ private[graft] object StoreFs {
       HadoopReadOptions.builder(c, f.getPath).build())
   }
 
+  /** The row schema Spark infers from one footer — Spark's own row
+    * schema when the writer stored it, otherwise the parquet schema
+    * converted under the session's read confs, the same conversion
+    * `ParquetFileFormat.readSchemaFromFooter` makes. None when the
+    * footer cannot be read or converted (inference then reports it).
+    */
+  private def footerSchema(spark: SparkSession, f: FileStatus): Option[StructType] =
+    scala.util.Try {
+      val r = parquetFile(f)
+      val meta = try r.getFooter.getFileMetaData finally r.close()
+      Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey)) match {
+        case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
+        case None => schemaConverter(spark).convert(meta.getSchema)
+      }
+    }.toOption
+
+  private def schemaConverter(spark: SparkSession): ParquetToSparkSchemaConverter = {
+    val c = spark.sessionState.conf
+    new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = c.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+      nanosAsLong = c.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+  }
+
   /** Open a parquet dataset with the row schema taken from the first
     * data file's footer — the footer `spark.read.parquet` would infer
     * from, read here on the driver instead of in a one-task schema
-    * job. Falls back to `spark.read.parquet` wherever inference would
-    * do more than read that one footer: schema merging on, summary
-    * files present, no data file, or a footer without Spark's row
-    * schema (parquet from another writer). The partition columns are
-    * still discovered from the directory names, exactly as before.
+    * job. Footers from other writers (no Spark row schema) are
+    * converted as Spark's inference converts them. Falls back to
+    * `spark.read.parquet` wherever inference would do more than read
+    * that one footer: schema merging on, summary files present, no
+    * data file, or a footer that cannot be read or converted. The
+    * partition columns are still discovered from the directory names,
+    * exactly as before.
     */
   def openParquet(spark: SparkSession, path: String): DataFrame = {
     val files = if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) Nil
       else leafFiles(qualified(path))
     val schema =
       if (files.exists(isSummary)) None
-      else files.headOption.flatMap { f =>
-        scala.util.Try {
-          val r = parquetFile(f)
-          try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadataKey))
-          finally r.close()
-        }.toOption.flatten
-          .flatMap(json => scala.util.Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
-      }
+      else files.headOption.flatMap(footerSchema(spark, _))
     schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 

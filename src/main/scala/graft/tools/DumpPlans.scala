@@ -1,14 +1,21 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import graft.{GraftSession, SparkEntry}
 
-/** Writes PLANS.md: the FINAL (post-AQE) physical plan of one
-  * representative query per family, captured after a noop-write
-  * execution so AdaptiveSparkPlan shows what actually ran. The
-  * shuffle-budget spec (Round7Spec) pins these shapes numerically;
-  * this artifact keeps the full trees reviewable without re-running.
+/** Final (post-AQE) physical plans, captured after a collect() on the
+  * query's own DataFrame so AdaptiveSparkPlan shows what actually ran
+  * (AQE join rewrites, coalesced reads).
   *
-  * Usage: runMain graft.tools.DumpPlans <sfDir>
+  * Usage: runMain graft.tools.DumpPlans <sfDir> [query...]
+  *
+  *  - without queries: writes PLANS.md, the plan of one representative
+  *    query per family. The shuffle-budget spec (Round7Spec) pins these
+  *    shapes numerically; this artifact keeps the full trees reviewable
+  *    without re-running.
+  *  - with queries: prints each query's formatted plan to stdout, e.g.
+  *    `runMain graft.tools.DumpPlans <sfDir> d_pipeline >
+  *    plans/<tag>/d_pipeline_before.txt` for a before/after record.
   */
 object DumpPlans {
 
@@ -69,23 +76,34 @@ object DumpPlans {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val out = new StringBuilder
-    out ++= "# Final physical plans (post-AQE) of family headliners\n\n"
-    out ++= s"Generated by `runMain graft.tools.DumpPlans $sfDir` — regenerate\n"
-    out ++= "after any plan-affecting change; Round7Spec's shuffle budgets\n"
-    out ++= "gate the same queries numerically.\n"
-    Headliners.foreach { name =>
+    /** Run the query, then hand its finalized DataFrame to `show`. */
+    def finalPlan(name: String)(show: DataFrame => Unit): Unit = {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE on THIS DataFrame (isFinalPlan=true)
+      show(df)
       spark.sharedState.cacheManager.clearCache()
-      out ++= s"\n## $name\n\n```\n"
-      out ++= df.queryExecution.executedPlan.toString.linesIterator
-        .take(80).mkString("\n")
-      out ++= "\n```\n"
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
-      out.toString.getBytes("UTF-8"))
+    val queries = args.drop(1).toSeq
+    if (queries.nonEmpty) queries.foreach(name => finalPlan(name) { df =>
+      println(s"== $name ($sfDir, post-execution final plan) ==")
+      println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+    })
+    else {
+      val out = new StringBuilder
+      out ++= "# Final physical plans (post-AQE) of family headliners\n\n"
+      out ++= s"Generated by `runMain graft.tools.DumpPlans $sfDir` — regenerate\n"
+      out ++= "after any plan-affecting change; Round7Spec's shuffle budgets\n"
+      out ++= "gate the same queries numerically.\n"
+      Headliners.foreach(name => finalPlan(name) { df =>
+        out ++= s"\n## $name\n\n```\n"
+        out ++= df.queryExecution.executedPlan.toString.linesIterator
+          .take(80).mkString("\n")
+        out ++= "\n```\n"
+      })
+      java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
+        out.toString.getBytes("UTF-8"))
+    }
     spark.stop()
   }
 }

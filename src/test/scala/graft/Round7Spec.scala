@@ -272,7 +272,13 @@ class Round7Spec extends SparkSpec {
       "s_rate_ingest" -> 3, "s_kmv_ingest" -> 9,
       "s_hll_ingest" -> 4, "s_bloom_ingest" -> 5,
       "v_ivfpq_filtered" -> 2, "s_knn_serve" -> 1,
-      "s_phash_ingest" -> 9)
+      "s_phash_ingest" -> 9,
+      // the one-frame dedup pipeline: the per-document frame (spread +
+      // keeper window) materializes behind a lineage cut, and the keeper
+      // band join broadcasts, so the plan holds the left join's
+      // per-document exchange, the losers' distinct, the per-language
+      // aggregate and its sort
+      "d_pipeline" -> 4)
     val over = budgets.toSeq.sortBy(_._1).flatMap { case (name, budget) =>
       val df = SparkEntry.queries(name)(spark, sf)
       df.write.format("noop").mode("overwrite").save() // finalize AQE

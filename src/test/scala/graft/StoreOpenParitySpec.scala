@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.col
 import graft.sources.{BqIndexStore, Bm25Store, IndexStore, IvfBqIndexStore, IvfIndexStore,
@@ -64,6 +71,8 @@ class StoreOpenParitySpec extends SparkSpec {
   }
 
   test("footer-schema open falls back on non-Spark parquet, empty dirs and schema merging") {
+    // non-Spark footers are converted rather than refused since the
+    // converter landed; the parity asserted here is unchanged
     for (t <- Seq("embeddings", "documents")) {
       val p = s"$sf/$t.parquet"
       assert(StoreFs.openParquet(spark, p).schema == spark.read.parquet(p).schema, p)
@@ -86,6 +95,58 @@ class StoreOpenParitySpec extends SparkSpec {
       assert(merged.fieldNames.toSet == Set("id", "s", "x", "p"))
       assert(StoreFs.openParquet(spark, d).schema == merged)
     } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  /** One-row parquet file written by parquet-hadoop's example writer,
+    * so its footer carries no Spark row schema.
+    */
+  private def writeForeign(file: String, schema: String)(fill: Group => Unit): Unit = {
+    val t = MessageTypeParser.parseMessageType(schema)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(file),
+      spark.sparkContext.hadoopConfiguration)).withType(t).build()
+    try { val g = new SimpleGroupFactory(t).newGroup(); fill(g); w.write(g) }
+    finally w.close()
+  }
+
+  test("footers without Spark's row schema convert as Spark's inference does, under every read conf") {
+    val base = tmp("open_foreign")
+    writeForeign(s"$base/mixed/part-0.parquet", """message m {
+        required int64 id; optional binary raw; optional int96 t96;
+        optional int64 tu (TIMESTAMP(MICROS,false)); optional int64 ta (TIMESTAMP(MICROS,true));
+        optional binary s (STRING); optional group xs (LIST) { repeated group list {
+          optional double element; } } }""") { g =>
+      g.add("id", 7L); g.add("raw", Binary.fromString("ab"))
+      g.add("t96", Binary.fromConstantByteArray(new Array[Byte](12)))
+      g.add("tu", 1000L); g.add("ta", 2000L); g.add("s", "x")
+      g.addGroup("xs").addGroup("list").add("element", 1.5)
+    }
+    writeForeign(s"$base/nanos/part-0.parquet",
+      "message m { required int64 ts (TIMESTAMP(NANOS,false)); }")(_.add("ts", 123456789L))
+    def values(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSeq
+    val confs = Seq("spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+      "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.legacy.parquet.nanosAsLong")
+    val saved = confs.map(k => k -> spark.conf.get(k))
+    try {
+      for (bits <- 0 until 16) {
+        confs.zipWithIndex.foreach { case (k, i) => spark.conf.set(k, ((bits >> i) & 1) == 1) }
+        for (d <- Seq("mixed", "nanos")) {
+          val p = s"$base/$d"
+          val label = s"$d under ${confs.map(spark.conf.get).mkString(",")}"
+          scala.util.Try(spark.read.parquet(p)) match {
+            case scala.util.Success(read) =>
+              val opened = StoreFs.openParquet(spark, p)
+              assert(opened.schema == read.schema, s"$label: ${opened.schema} != ${read.schema}")
+              assert(values(opened) == values(read), s"$label: rows differ")
+            case scala.util.Failure(e) =>
+              // TIMESTAMP(NANOS) without nanosAsLong: refused the same way
+              assert(intercept[Exception](StoreFs.openParquet(spark, p)).getMessage == e.getMessage, label)
+          }
+        }
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("driver-read centroids and codebooks are bit-equal to the Spark read") {
