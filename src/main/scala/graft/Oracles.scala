@@ -3668,7 +3668,7 @@ object Oracles {
     // serve time — store search ≡ in-session search, oracle shared
     "v_opq_learned_store" -> vector("v_opq_learned"),
     "v_ivf_pq_store" -> vector("v_ivf_pq"),
-    // the residual brand travels with the store (_by_residual marker):
+    // the residual brand travels with the store (its model file):
     // persisted residual route ≡ in-session residual route
     "v_ivf_pq_res_store" -> vector("v_ivf_pq_res"),
     "v_ivf_bq_store" -> vector("v_ivf_bq"),

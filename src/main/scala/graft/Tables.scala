@@ -96,4 +96,28 @@ object GraftSession {
     GraftFunctions.register(spark)
     graft.sources.StoreFs.openParquet(spark, path).createOrReplaceTempView(s"graft_store_$name")
   }
+
+  /** SQL-only access to a store's model file: bind each requested
+    * one-row packed view — `cents` (array<struct<cid,cv>> in cid
+    * order), `books` (books[m+1][k+1] = codebook subvector) or
+    * `by_residual` (the IVF-PQ brand) — under its view name. Built on
+    * the driver, so binding schedules no Spark job; a statement
+    * cross-joins them as single broadcast rows (exchange-free probe
+    * CTEs keep DPP broadcast reuse alive).
+    */
+  def sqlModel(spark: SparkSession, path: String, views: (String, String)*): Unit = {
+    import spark.implicits._
+    val m = graft.sources.ModelFile.read(path)
+    views.foreach {
+      case ("cents", view) =>
+        Seq(Tuple1(m.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })).toDF("cents")
+          .selectExpr("CAST(cents AS array<struct<cid:int,cv:array<double>>>) AS cents")
+          .createOrReplaceTempView(view)
+      case ("books", view) =>
+        Seq(Tuple1(m.codebooks.map(_.map(_.toSeq).toSeq).toSeq)).toDF("books")
+          .createOrReplaceTempView(view)
+      case ("by_residual", view) =>
+        Seq(Tuple1(m.residual)).toDF("by_residual").createOrReplaceTempView(view)
+    }
+  }
 }

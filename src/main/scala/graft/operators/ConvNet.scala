@@ -133,10 +133,10 @@ object ConvNet {
     * generator.
     */
   def saveParamsSafetensors(p: Params, path: String): Unit =
-    Safetensors.writeI32(path, Seq(
-      StShapes(0)._1 -> (StShapes(0)._2, p.conv),
-      StShapes(1)._1 -> (StShapes(1)._2, p.fc),
-      StShapes(2)._1 -> (StShapes(2)._2, p.bias)))
+    Safetensors.write(path, Seq(
+      StShapes(0)._1 -> (StShapes(0)._2, Safetensors.I32(p.conv)),
+      StShapes(1)._1 -> (StShapes(1)._2, Safetensors.I32(p.fc)),
+      StShapes(2)._1 -> (StShapes(2)._2, Safetensors.I32(p.bias))))
 
   /** Payload wire format: "w,h:p0,p1,…" (UTF-8), pixels row-major.
     * The declarative side packs it with pure SQL string functions, so

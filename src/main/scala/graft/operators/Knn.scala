@@ -638,8 +638,8 @@ object Knn {
     * deterministic (seeded init, sorted 0-seeded folds), so a cached
     * model is bit-identical to a retrain — oracle hashes are
     * unaffected. The cached values are tiny (k×dim doubles / M×K×dsub
-    * codebooks), the cluster-scale analog being the persisted
-    * IndexStore/PqIndexStore sidecars.
+    * codebooks), the cluster-scale analog being the persisted stores'
+    * model files.
     *
     * ASSUMPTION: a corpus dir is immutable for the lifetime of the
     * session that trained on it (true for this engine's read-only
@@ -1687,8 +1687,8 @@ object Knn {
   /** v_ivf_pq_res_store: the residual tier PERSISTED — what
     * faiss.write_index actually saves for a default IndexIVFPQ. The
     * store write reuses the session registry's centroids and residual
-    * codebooks (train once, persist many) and brands the layout with a
-    * `_by_residual` marker, so a fresh session's search knows to take
+    * codebooks (train once, persist many) and brands its model file
+    * (`by_residual`), so a fresh session's search knows to take
     * query residuals per probed list without the caller remembering.
     * Hash-shares v_ivf_pq_res's oracle: persisted route ≡ in-session
     * residual route to the bit.
@@ -1724,7 +1724,7 @@ object Knn {
       "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
     val path = graft.sources.StoreFs.workPath(s"target/ivfpqres_batch_$tag/idx")
     val emb = Tables.embeddings(spark, dir)
-    if (!graft.sources.StoreFs.exists(s"$path.books"))
+    if (!graft.sources.ModelFile.exists(path))
       graft.sources.IvfPqIndexStore.write(emb, "vec_id", "embedding", path,
         ivfModel = Some(ivfCentroids(spark, dir)),
         pqModel = Some(pqResBooksFor(spark, dir)), byResidual = true)
@@ -3125,7 +3125,8 @@ object Knn {
     * user — the whole IVF serving path (rank centroids per query →
     * keep nprobe lists → exact-rescore inside them → top-5) as ONE
     * SQL statement over two bound views: the cid-partitioned store
-    * and its PACKED centroid sidecar (one row, array<struct<cid,cv>>).
+    * and its PACKED centroids (one row, array<struct<cid,cv>>, built
+    * from the model file).
     * The per-query probe list is derived with pure array ops
     * (transform → array_sort → slice → explode — the ivfProbe formula,
     * ranked by (round(cos,6) DESC, cid ASC)), deliberately NOT with a
@@ -3150,8 +3151,7 @@ object Knn {
     graft.sources.IvfIndexStore.write(Tables.embeddings(spark, dir),
       "vec_id", "embedding", path, model = Some(ivfCentroids(spark, dir)))
     graft.GraftSession.sqlStore(spark, path, "ivf")
-    spark.read.parquet(s"$path.centpack")
-      .createOrReplaceTempView("graft_store_ivf_cents")
+    graft.GraftSession.sqlModel(spark, path, "cents" -> "graft_store_ivf_cents")
     spark.sql(s"""
       WITH q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn
                  FROM graft_store_ivf WHERE vec_id < $NumQueries),
@@ -3175,9 +3175,9 @@ object Knn {
   /** v_sql_store_pq: the COMPRESSED persisted tier for a SQL-only
     * user — the third leg of the SQL serving story (exact:
     * v_sql_store, pruned: v_sql_store_ivf, compressed: this). The
-    * code table and codebook sidecar bind as views and one SQL
-    * statement runs the full ADC search MAP-SIDE: the PACKED codebook
-    * sidecar (one row, books[m+1][k+1] = subvector) cross-joins in as
+    * code table and the codebooks bind as views and one SQL
+    * statement runs the full ADC search MAP-SIDE: the PACKED codebooks
+    * (one row, books[m+1][k+1] = subvector) cross-join in as
     * a single broadcast row and the distance folds per (query, vector)
     * as a nested ascending-m aggregate — outer fold over m seeded 0.0,
     * inner zip_with fold over the 8 positions seeded 0.0, the exact
@@ -3196,7 +3196,7 @@ object Knn {
     graft.sources.PqIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(pqBooksFor(spark, dir)))
     graft.GraftSession.sqlStore(spark, s"$path.codes", "pq_codes")
-    graft.GraftSession.sqlStore(spark, s"$path.bookpack", "pq_bookpack")
+    graft.GraftSession.sqlModel(spark, path, "books" -> "graft_store_pq_bookpack")
     emb.createOrReplaceTempView("graft_sql_emb")
     val dsub = 64 / PqSubspaces
     spark.sql(s"""
@@ -3228,11 +3228,12 @@ object Knn {
     * flavors: the live-DPP probe CTE proven in v_sql_store_ivf
     * composed with the map-side ADC fold proven in v_sql_store_pq,
     * over the cid-partitioned code table plus three single-row packed
-    * sidecars (centroids, codebooks, brand). The brand is consulted IN
-    * the statement: `IF(bv.by_residual, …)` switches the query-side
-    * encoding to the residual against each probed list's centroid
-    * (carried through the probe sort struct), so a SQL-only user
-    * serves a residual-branded store without knowing it is one.
+    * views of the model file (centroids, codebooks, brand). The brand
+    * is consulted IN the statement: `IF(bv.by_residual, …)` switches
+    * the query-side encoding to the residual against each probed
+    * list's centroid (carried through the probe sort struct), so a
+    * SQL-only user serves a residual-branded store without knowing it
+    * is one.
     * The probe CTE stays exchange-free (array ops, no window — the
     * r10 lesson: any exchange in the DPP build plan breaks AQE
     * broadcast reuse and degrades the scan to literal-true), so the
@@ -3245,12 +3246,8 @@ object Knn {
   private def sqlStoreIvfPqServe(spark: SparkSession, dir: String,
                                  path: String, sfx: String): DataFrame = {
     graft.GraftSession.sqlStore(spark, path, sfx)
-    spark.read.parquet(s"$path.centpack")
-      .createOrReplaceTempView(s"graft_store_${sfx}_cents")
-    spark.read.parquet(s"$path.bookpack")
-      .createOrReplaceTempView(s"graft_store_${sfx}_books")
-    spark.read.parquet(s"$path.brand")
-      .createOrReplaceTempView(s"graft_store_${sfx}_brand")
+    graft.GraftSession.sqlModel(spark, path, "cents" -> s"graft_store_${sfx}_cents",
+      "books" -> s"graft_store_${sfx}_books", "by_residual" -> s"graft_store_${sfx}_brand")
     Tables.embeddings(spark, dir).createOrReplaceTempView(s"graft_sql_emb_$sfx")
     val dsub = 64 / PqSubspaces
     spark.sql(s"""
@@ -3304,7 +3301,7 @@ object Knn {
   }
 
   /** v_sql_store_ivfpq_res: the SAME statement over a RESIDUAL-branded
-    * store — the brand sidecar flips the query-side encoding inside
+    * store — the model file's brand flips the query-side encoding inside
     * the SQL, nothing else changes (the faiss by_residual default,
     * served to a SQL-only user). Hash-shares v_ivf_pq_res's oracle.
     */
@@ -3335,8 +3332,7 @@ object Knn {
     graft.sources.IvfBqIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(ivfCentroids(spark, dir)))
     graft.GraftSession.sqlStore(spark, path, "ivfbq")
-    spark.read.parquet(s"$path.centpack")
-      .createOrReplaceTempView("graft_store_ivfbq_cents")
+    graft.GraftSession.sqlModel(spark, path, "cents" -> "graft_store_ivfbq_cents")
     emb.createOrReplaceTempView("graft_sql_emb_ivfbq")
     spark.sql(s"""
       WITH q AS (SELECT CAST(vec_id AS BIGINT) AS query_id,
@@ -3619,7 +3615,7 @@ object Knn {
         .coalesce(1).write.mode("overwrite").parquet(s"$path/_perm")
     }
     graft.GraftSession.sqlStore(spark, s"$path.codes", "opql_codes")
-    graft.GraftSession.sqlStore(spark, s"$path.bookpack", "opql_bookpack")
+    graft.GraftSession.sqlModel(spark, path, "books" -> "graft_store_opql_bookpack")
     graft.GraftSession.sqlStore(spark, s"$path/_perm", "opql_perm")
     Tables.embeddings(spark, dir).createOrReplaceTempView("graft_sql_emb")
     val dsub = 64 / PqSubspaces
@@ -3916,13 +3912,13 @@ object Knn {
   }
 
   /** v_pq_store: the persisted PQ path inside the correctness gate —
-    * codes + codebook sidecar written to disk, ADC search over the
+    * codes + codebook model file written to disk, ADC search over the
     * loaded index, hash-matched against v_pq's oracle.
     */
   /** v_ivf_pq_store: lifecycle gate for the persisted IVF-PQ index —
     * write (both models from the session registry, never retrained)
     * then search; shares v_ivf_pq's oracle, so a hash match proves
-    * the list-partitioned code layout + dual sidecars reproduce the
+    * the list-partitioned code layout + model file reproduce the
     * in-session combined tier exactly.
     */
   def vIvfPqStore(spark: SparkSession, dir: String): DataFrame = {
@@ -4380,8 +4376,8 @@ object Knn {
     * 1.0 (both numbers oracle-pinned, and the restored one is THE
     * STORE'S, not a simulation's). The pre-retrain layout stays
     * auditable: readBefore(retrain version) replays it, the frozen
-    * centroids sit in `.retired/v<v>/_sidecar_centroids/`
-    * (Round14Spec pins both).
+    * model file sits at `.retired/v<v>/_model` (Round14Spec pins
+    * both).
     */
   def vIvfRetrainStore(spark: SparkSession, dir: String): DataFrame = {
     val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +

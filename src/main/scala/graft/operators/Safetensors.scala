@@ -58,7 +58,7 @@ object Safetensors {
       out
     }
 
-    /** Elements as Doubles — the ANN model sidecars' currency
+    /** Elements as Doubles — the ANN model files' currency
       * (centroids, PQ codebooks). Lossless for F64/F32/I32; an I64
       * beyond 2^53 would silently round, so it is rejected.
       */
@@ -82,7 +82,7 @@ object Safetensors {
     }
   }
 
-  /** The serializers interpolate tensor names into the JSON header
+  /** The serializer interpolates tensor names into the JSON header
     * verbatim; a quote, backslash, or control char would corrupt the
     * header (the parse would then fail or misread offsets). Current
     * callers use fixed names, so a loud require is the right guard.
@@ -194,20 +194,34 @@ object Safetensors {
     } finally in.close()
   }
 
-  /** Serialize I32 tensors (name → (shape, values)) to a safetensors
-    * byte image — the export half (a JVM-side trainer, a fixture
-    * generator, a format round-trip). Offsets are packed in map
-    * order with no padding, matching the reference implementation.
+  /** A tensor's values for [[serialize]], tagged with their dtype. */
+  sealed abstract class Values(val dtype: String, val length: Int) {
+    private[Safetensors] def putAll(b: ByteBuffer): Unit
+  }
+
+  final case class I32(values: Array[Int]) extends Values("I32", values.length) {
+    private[Safetensors] def putAll(b: ByteBuffer): Unit = values.foreach(b.putInt)
+  }
+
+  final case class F64(values: Array[Double]) extends Values("F64", values.length) {
+    private[Safetensors] def putAll(b: ByteBuffer): Unit = values.foreach(b.putDouble)
+  }
+
+  /** Serialize tensors (name → (shape, values)) to a safetensors byte
+    * image — the export half (a JVM-side trainer, a fixture generator,
+    * a store's model file, a format round-trip). Dtypes may mix within
+    * one image. Offsets are packed in sequence order with no padding,
+    * matching the reference implementation.
     */
-  def serializeI32(tensors: Seq[(String, (Seq[Long], Array[Int]))]): Array[Byte] = {
+  def serialize(tensors: Seq[(String, (Seq[Long], Values))]): Array[Byte] = {
     var off = 0L
     val entries = tensors.map { case (name, (shape, vals)) =>
       requireHeaderSafe(name)
       require(shape.product == vals.length,
         s"tensor $name: shape ${shape.mkString("x")} != ${vals.length} values")
       val b0 = off
-      off += vals.length * 4L
-      s""""$name":{"dtype":"I32","shape":[${shape.mkString(",")}],""" +
+      off += vals.length.toLong * byteWidth(vals.dtype)
+      s""""$name":{"dtype":"${vals.dtype}","shape":[${shape.mkString(",")}],""" +
         s""""data_offsets":[$b0,$off]}"""
     }
     val header = entries.mkString("{", ",", "}").getBytes("UTF-8")
@@ -215,50 +229,28 @@ object Safetensors {
       .order(ByteOrder.LITTLE_ENDIAN)
     buf.putLong(header.length.toLong)
     buf.put(header)
-    tensors.foreach { case (_, (_, vals)) =>
-      vals.foreach(buf.putInt)
-    }
+    tensors.foreach { case (_, (_, vals)) => vals.putAll(buf) }
     buf.array()
   }
 
-  /** Write a safetensors file of I32 tensors through the FS seam. */
-  def writeI32(path: String,
-               tensors: Seq[(String, (Seq[Long], Array[Int]))]): Unit =
-    writeBytes(path, serializeI32(tensors))
-
-  /** F64 twin of [[serializeI32]] — the ANN model sidecars' dtype
-    * (centroids, PQ codebooks are double matrices on both sides of
-    * the interop seam).
+  /** Write a safetensors file through the FS seam. The image lands in a
+    * hidden temp sibling first and is then renamed over `path`, so a
+    * crash mid-write leaves the previous file whole (the temp is the
+    * only torn artifact), never a truncated one.
     */
-  def serializeF64(tensors: Seq[(String, (Seq[Long], Array[Double]))]): Array[Byte] = {
-    var off = 0L
-    val entries = tensors.map { case (name, (shape, vals)) =>
-      requireHeaderSafe(name)
-      require(shape.product == vals.length,
-        s"tensor $name: shape ${shape.mkString("x")} != ${vals.length} values")
-      val b0 = off
-      off += vals.length * 8L
-      s""""$name":{"dtype":"F64","shape":[${shape.mkString(",")}],""" +
-        s""""data_offsets":[$b0,$off]}"""
-    }
-    val header = entries.mkString("{", ",", "}").getBytes("UTF-8")
-    val buf = ByteBuffer.allocate(8 + header.length + off.toInt)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    buf.putLong(header.length.toLong)
-    buf.put(header)
-    tensors.foreach { case (_, (_, vals)) => vals.foreach(buf.putDouble) }
-    buf.array()
-  }
-
-  def writeF64(path: String,
-               tensors: Seq[(String, (Seq[Long], Array[Double]))]): Unit =
-    writeBytes(path, serializeF64(tensors))
-
-  private def writeBytes(path: String, bytes: Array[Byte]): Unit = {
+  def write(path: String, tensors: Seq[(String, (Seq[Long], Values))]): Unit = {
     val p = graft.sources.StoreFs.qualified(path)
     val fs = graft.sources.StoreFs.fsOf(p)
-    val out = fs.create(p, true)
-    try out.write(bytes)
-    finally out.close()
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
+      s".${p.getName}.${java.util.UUID.randomUUID}.tmp")
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(serialize(tensors))
+      finally out.close()
+      // one atomic rename where the scheme replaces in place (local
+      // POSIX); schemes that refuse to rename onto a file (HDFS) take
+      // delete-then-rename, whose window leaves the complete temp
+      if (!fs.rename(tmp, p)) graft.sources.StoreFs.moveReplace(fs, tmp, p)
+    } finally graft.sources.StoreFs.delete(fs, tmp)
   }
 }

@@ -63,12 +63,12 @@ private[graft] object StoreLayout {
   def clustered(df: DataFrame, partitionCols: String*): DataFrame =
     df.hint("REBALANCE", partitionCols.map(col): _*)
 
-  /** Daemon pool for overlapping INDEPENDENT store steps (sidecar
-    * writes, disjoint search legs). Spark's scheduler happily runs
+  /** Daemon pool for overlapping INDEPENDENT store steps (per-dir
+    * rewrites, disjoint search legs). Spark's scheduler happily runs
     * several jobs at once inside one application; steps were only
     * sequential because the store code called them sequentially, and
-    * each tiny sidecar job pays a full driver round-trip (plan,
-    * submit, commit) that the others can hide.
+    * each tiny job pays a full driver round-trip (plan, submit,
+    * commit) that the others can hide.
     */
   private lazy val pool: scala.concurrent.ExecutionContextExecutorService =
     scala.concurrent.ExecutionContext.fromExecutorService(
@@ -82,8 +82,8 @@ private[graft] object StoreLayout {
     * in order; exceptions propagate to the caller. The steps must not
     * depend on each other or on submission order — every call site's
     * steps write/read DISJOINT datasets, so the store's crash contract
-    * (which orders data commit vs. the sidecar GROUP, never sidecars
-    * among themselves) is untouched.
+    * (which orders commits between datasets, never steps within one)
+    * is untouched.
     */
   def concurrently[T](steps: Seq[() => T]): Seq[T] =
     if (steps.lengthCompare(2) < 0) steps.map(_())
@@ -141,13 +141,18 @@ object IndexStore {
     */
   def write(df: DataFrame, idCol: String, vecCol: String, path: String, dim: Int,
             metaCols: Seq[String] = Nil): Unit =
+    banded(df, idCol, vecCol, dim, metaCols)
+      .write.mode("overwrite").partitionBy("band0").parquet(path)
+
+  /** Widened, banded (id, v, meta…, nrm, band0, band1) rows, clustered by band0. */
+  private def banded(df: DataFrame, idCol: String, vecCol: String, dim: Int,
+                     metaCols: Seq[String]): DataFrame =
     StoreLayout.clustered(
       withBands(
         StoreLayout.widened(
           df.select(col(idCol).as("id") +: col(vecCol).cast("array<double>").as("v")
               +: metaCols.map(col): _*))
           .withColumn("nrm", V.norm2(col("v"))), dim), "band0")
-      .write.mode("overwrite").partitionBy("band0").parquet(path)
 
   /** Metadata sidecar (the metadata.pkl analog) — a sibling dataset:
     * nesting it under the index path would collide with parquet
@@ -168,11 +173,7 @@ object IndexStore {
   def append(df: DataFrame, idCol: String, vecCol: String, path: String, dim: Int): Long =
     StoreMaintenance.versionedAppend(path,
       (0 until (1 << BandBits)).map(b => s"band0=$b")) {
-      StoreLayout.clustered(
-        withBands(
-          StoreLayout.widened(
-            df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")))
-            .withColumn("nrm", V.norm2(col("v"))), dim), "band0")
+      banded(df, idCol, vecCol, dim, Nil)
         .write.mode("append").partitionBy("band0").parquet(path)
     }
 
@@ -212,30 +213,30 @@ object IndexStore {
       rows, collected.length)
   }
 
-  /** Shared serving tail for every unfiltered store search: exact
-    * round-6 cosine from joined (query_id, qv, qn, id, v, nrm)
-    * candidate rows, then the k-bounded window — the ranking contract
-    * (round-6 sim, neighbor_id ASC tiebreak) lives in exactly one
-    * place so search / searchAnn / searchAnnProbed cannot drift.
+  /** Shared serving tail for every exact-rescoring store search (the
+    * flat and IVF stores): exact round-6 cosine from joined (query_id,
+    * qv, qn, <idCol>, v, nrm) candidate rows, then the k-bounded window
+    * — the ranking contract (round-6 sim, neighbor_id ASC tiebreak)
+    * lives in exactly one place so the searches cannot drift. A
+    * filtered search's `matchCols` ride through to the output.
     */
-  private def rescoreTopK(cands: DataFrame, k: Int): DataFrame = {
-    val sims = cands.select(col("query_id"), col("id").as("neighbor_id"),
-      round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
+  private[sources] def rescoreTopK(cands: DataFrame, k: Int, idCol: String = "id",
+                                   matchCols: Seq[String] = Nil): DataFrame = {
+    val sims = cands.select(col("query_id") +: matchCols.map(col)
+      :+ col(idCol).as("neighbor_id")
+      :+ round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"): _*)
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
     sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "sim")
+      .select(col("query_id") +: matchCols.map(col)
+        :+ col("rnk") :+ col("neighbor_id") :+ col("sim"): _*)
   }
 
   /** Exact top-k against a loaded index: broadcast queries, windowed
     * rank — IndexFlatIP.search over the persisted corpus.
     */
   def search(index: DataFrame, queries: DataFrame, idCol: String,
-             vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-        .withColumn("qn", V.norm2(col("qv"))))
-    rescoreTopK(index.join(q, col("id") =!= col("query_id")), k)
-  }
+             vecCol: String, k: Int): DataFrame =
+    searchFiltered(index, queries, idCol, vecCol, k, Nil)
 
   /** Attribute-filtered exact search: neighbors must agree with the
     * query row on every column in `matchCols` (the vector-DB "search
@@ -256,14 +257,7 @@ object IndexStore {
         .withColumn("qn", V.norm2(col("qv"))))
     val cond = matchCols.map(c => col(c) === col(s"q_$c"))
       .foldLeft(col("id") =!= col("query_id"))(_ && _)
-    val sims = index.join(q, cond)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("id").as("neighbor_id")
-        :+ round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"): _*)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("rnk") :+ col("neighbor_id") :+ col("sim"): _*)
+    rescoreTopK(index.join(q, cond), k, matchCols = matchCols)
   }
 
   /** Multiprobe ANN top-k over the persisted banded layout: each query
@@ -284,11 +278,7 @@ object IndexStore {
                       idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
     // collected once: the probe-bucket IN list and the broadcast side
     // both come from the same driver-side rows
-    val q = localProbe(withBands(
-      queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("nrm", V.norm2(col("v"))), dim)
-      .select(col("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        col("band0").as("qb0"))
+    val q = localProbe(bandedQueries(queries, idCol, vecCol, dim)
       .withColumn("pb", array(
         col("qb0") +: (0 until BandBits).map(r => col("qb0").bitwiseXOR(lit(1 << r))): _*)))
     val index = read(spark, path)
@@ -304,15 +294,18 @@ object IndexStore {
     */
   def searchAnn(index: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, dim: Int): DataFrame = {
-    val q = broadcast(
-      withBands(
-        queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v"))
-          .withColumn("nrm", V.norm2(col("v"))), dim)
-        .select(col("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-          col("band0").as("qb0")))
+    val q = broadcast(bandedQueries(queries, idCol, vecCol, dim))
     rescoreTopK(
       index.join(q, col("band0") === col("qb0") && col("id") =!= col("query_id")), k)
   }
+
+  /** (query_id, qv, qn, qb0) query rows banded with the store's hyperplanes. */
+  private def bandedQueries(queries: DataFrame, idCol: String, vecCol: String,
+                            dim: Int): DataFrame =
+    withBands(
+      queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v"))
+        .withColumn("nrm", V.norm2(col("v"))), dim)
+      .select(col("query_id"), col("v").as("qv"), col("nrm").as("qn"), col("band0").as("qb0"))
 }
 
 /** Operational maintenance for the partitioned stores (IndexStore's
@@ -371,7 +364,7 @@ final class ConcurrentMaintenanceException(msg: String)
 object StoreMaintenance {
   import org.apache.hadoop.fs.{FileSystem, Path}
   import StoreFs.{list, isFile, isDir, mkdirs, delete, mtime,
-    readLines, writeLines, moveReplace, renameOrThrow, createExclusive}
+    readLines, writeLines, moveReplace, renameOrThrow}
 
   /** Lock file name for the single-maintainer lease on a store. */
   val LockName = ".maintenance_lock"
@@ -964,8 +957,7 @@ object StoreMaintenance {
     versionsOf(fs, root).filter(_ >= version).sorted.reverse.foreach { w =>
       val vdir = new Path(root, s"$RetiredDirName/v$w")
       list(fs, vdir)
-        // _-prefixed dirs are non-data lineage artifacts (retired
-        // model sidecars, e.g. _sidecar_centroids), not partition
+        // _-prefixed dirs are non-data lineage artifacts, not partition
         // dirs — EXCEPT the flat-layout key itself (`_root_`), whose
         // snapshots retire the store root's own files (r15 fix: the
         // old filter silently skipped every flat-store version, so
@@ -1159,11 +1151,16 @@ object StoreMaintenance {
     // zone maps, and restoring tight per-file stats is the point
     rewritePartitions(spark, path,
       n => n > targetFiles || (recluster.isDefined && n > 0),
-      rows => recluster match {
-        case Some(c) => rows.repartitionByRange(targetFiles, col(c))
-          .sortWithinPartitions(c)
-        case None => rows.coalesce(targetFiles)
-      })
+      reshaped(_, targetFiles, recluster))
+
+  /** `rows` as `n` files: range-partitioned and sorted on the recluster
+    * column (tight per-file zone maps), else coalesced.
+    */
+  private def reshaped(rows: DataFrame, n: Int, recluster: Option[String]): DataFrame =
+    recluster match {
+      case Some(c) => rows.repartitionByRange(n, col(c)).sortWithinPartitions(c)
+      case None => rows.coalesce(n)
+    }
 
   /** Opportunistic maintenance for streaming maintainers: compact only
     * when some leaf partition dir holds more than `maxFiles` data
@@ -1206,11 +1203,7 @@ object StoreMaintenance {
       recover(path)
       val version = allocateVersion(fs, root)
       val files = dataFiles(fs, root)
-      val shaped = recluster match {
-        case Some(c) => spark.read.parquet(root.toString)
-          .repartitionByRange(targetFiles, col(c)).sortWithinPartitions(c)
-        case None => spark.read.parquet(root.toString).coalesce(targetFiles)
-      }
+      val shaped = reshaped(spark.read.parquet(root.toString), targetFiles, recluster)
       // same crash-consistent root swap as purgeFiles (`.compact_.`)
       val tmp = new Path(root, swapTmpName("."))
       shaped.write.mode("overwrite").parquet(tmp.toString)
@@ -1219,11 +1212,7 @@ object StoreMaintenance {
       (files.length, dataFiles(fs, root).length)
     })
     else Some(rewritePartitions(spark, path, n => n > maxFiles,
-      rows => recluster match {
-        case Some(c) => rows.repartitionByRange(targetFiles, col(c))
-          .sortWithinPartitions(c)
-        case None => rows.coalesce(targetFiles)
-      }))
+      reshaped(_, targetFiles, recluster)))
   }
 
   /** Targeted delete-by-key for the partitioned stores — the
@@ -1282,13 +1271,8 @@ object StoreMaintenance {
       val rel = relPath(root, pdir)
       if (hitRows.contains(rel)) {
         val files = dataFiles(fs, pdir)
-        val keep = spark.read.parquet(pdir.toString)
-          .where(!col(idCol).isin(ids: _*))
-        val shaped = recluster match {
-          case Some(c) => keep.repartitionByRange(files.length, col(c))
-            .sortWithinPartitions(c)
-          case None => keep.coalesce(files.length)
-        }
+        val shaped = reshaped(spark.read.parquet(pdir.toString)
+          .where(!col(idCol).isin(ids: _*)), files.length, recluster)
         val tmp = new Path(root, swapTmpName(rel))
         shaped.write.mode("overwrite").parquet(tmp.toString)
         commitManifest(fs, tmp, files, version)
@@ -1404,10 +1388,10 @@ object StoreMaintenance {
     * `col=val` partition dirs (re-assignment under a retrained model),
     * which the per-dir [[rewritePartitions]] swap cannot express.
     *
-    * `reshape` maps the store's current rows (partition column
-    * attached) to the full new row set, which must carry
-    * `partitionCol`; it may ignore its input entirely (the IVF-PQ
-    * retrain re-encodes from the source corpus).
+    * `rows` is the full new row set, which must carry
+    * `partitionCol`. It is evaluated under the lock after recovery
+    * settled the store, so a reshape of the store's own rows (the IVF
+    * retrain re-assigns its stored vectors) reads the settled layout.
     *
     * Crash contract — ATOMIC, unlike a multi-dir rewritePartitions
     * pass: the new layout writes in ONE Spark job to a dot-prefixed
@@ -1421,7 +1405,7 @@ object StoreMaintenance {
     * Returns (partition dirs swapped, version).
     */
   private[sources] def rewriteLayout(spark: SparkSession, path: String,
-      partitionCol: String)(reshape: DataFrame => DataFrame): (Int, Long) = {
+      partitionCol: String)(rows: => DataFrame): (Int, Long) = {
     val root = StoreFs.qualified(path)
     val fs = StoreFs.fsOf(root)
     withLock(fs, root) {
@@ -1433,7 +1417,7 @@ object StoreMaintenance {
       "rewriteLayout supports single-level col=val layouts only")
     require(dataFiles(fs, root).isEmpty,
       "rewriteLayout requires a partitioned layout (no root-level data files)")
-    StoreLayout.clustered(reshape(spark.read.parquet(root.toString)), partitionCol)
+    StoreLayout.clustered(rows, partitionCol)
       .write.mode("overwrite").partitionBy(partitionCol)
       .parquet(stage.toString)
     val newDirs = list(fs, stage)
@@ -1462,27 +1446,6 @@ object StoreMaintenance {
     delete(fs, marker)
     delete(fs, stage)
     (rels.length, version)
-    }
-  }
-
-  /** File a pre-op copy of a model SIDECAR (a sibling `<path>.<name>`
-    * parquet dir, outside the store root and therefore outside the
-    * data-file lineage) under the store's retired snapshot for
-    * `version` — the audit trail a retrain leaves so the pre-retrain
-    * model stays readable beside the pre-retrain rows readBefore
-    * replays. Plain parquet under
-    * `.retired/v<version>/_sidecar_<name>/`.
-    */
-  private[sources] def retireSidecar(storePath: String, version: Long,
-                                     name: String, sidecarDir: String): Unit = {
-    val src = StoreFs.qualified(sidecarDir)
-    val fs = StoreFs.fsOf(src)
-    if (!isDir(fs, src)) return
-    val root = StoreFs.qualified(storePath)
-    val dst = new Path(root, s"$RetiredDirName/v$version/_sidecar_$name")
-    mkdirs(fs, dst)
-    dataFiles(fs, src).foreach { f =>
-      StoreFs.copyFile(fs, f, new Path(dst, f.getName))
     }
   }
 
@@ -1528,20 +1491,82 @@ object StoreMaintenance {
   }
 }
 
+/** The write / append / retrain path the three coarse-quantized
+  * stores (IVF, IVF-PQ, IVF-BQ) share: assign prepared (vec_id, v,
+  * nrm, …) vectors to their nearest list under the model's centroids,
+  * apply the tier's encode (raw rows, PQ codes, or sign words — a
+  * function of the assigned frame that keeps `cid`), cluster by
+  * `cid`, land the rows, then write the model file. The searches stay
+  * per tier.
+  */
+private[sources] object CoarseStore {
+  import graft.operators.Knn
+
+  /** Where the rows land. */
+  sealed trait Sink
+  /** A fresh store: overwrite the list layout, then write the model. */
+  case object Overwrite extends Sink
+  /** faiss add(): a versioned dynamic-partition append under the
+    * frozen model, whose file is left as it is.
+    */
+  case object Append extends Sink
+  /** Retrain: [[StoreMaintenance.rewriteLayout]]'s group-committed
+    * swap of the whole layout; the pre-retrain model file retires
+    * under the swap's version before the retrained model lands.
+    */
+  final case class Relayout(spark: SparkSession) extends Sink
+
+  /** Land `vectors` under `model` into `sink`; returns the version the
+    * op filed under (an append's or a relayout's; 0 for an overwrite).
+    * `vectors` is evaluated where the rows are built — under the
+    * maintenance lock for a relayout. The model file lands after the
+    * data commit: a crash between the two leaves a store that serves
+    * the old model until the op is re-run (training is deterministic,
+    * so a re-run converges).
+    */
+  def persist(path: String, sink: Sink, model: ModelFile.Model,
+              encode: DataFrame => DataFrame)(vectors: => DataFrame): Long = {
+    val centroids = model.coarse
+    def rows = encode(Knn.withCid(vectors, centroids))
+    sink match {
+      case Overwrite =>
+        StoreLayout.clustered(rows, "cid")
+          .write.mode("overwrite").partitionBy("cid").parquet(path)
+        ModelFile.write(path, model)
+        0L
+      case Append =>
+        StoreMaintenance.versionedAppend(path,
+            centroids.map { case (cid, _) => s"cid=$cid" }.toSeq) {
+          StoreLayout.clustered(rows, "cid")
+            .write.mode("append").partitionBy("cid").parquet(path)
+        }
+      case Relayout(spark) =>
+        // rewriteLayout clusters by the partition column itself
+        val (_, version) = StoreMaintenance.rewriteLayout(spark, path, "cid")(rows)
+        ModelFile.retire(path, version)
+        ModelFile.write(path, model)
+        StoreMaintenance.invalidateDriftBaseline(path)
+        version
+    }
+  }
+}
+
 /** Persistent IVF index — the faiss write_index(IndexIVFFlat) analog,
   * completing the store trio (IndexStore = LSH-banded flat,
   * PqIndexStore = compressed codes, IvfIndexStore = coarse-quantized
   * lists): the corpus persists PARTITIONED BY its nearest-centroid
-  * list id (cid=NN directories) with a tiny centroid sidecar. A
-  * search reads ONLY the nprobe list directories its queries probe —
-  * file-level partition pruning, so at 100 TB a probe scans
-  * corpus·nprobe/nlist bytes, never the corpus. Training is the same
-  * deterministic Lloyd as v_ivf; append assigns new vectors with the
-  * FROZEN persisted centroids (faiss add()) so they land in the right
-  * list directories with no retrain and no rewrite of existing rows.
+  * list id (cid=NN directories) with the centroids in the store's
+  * model file (`$path.model`, [[ModelFile]]). A search reads ONLY the
+  * nprobe list directories its queries probe — file-level partition
+  * pruning, so at 100 TB a probe scans corpus·nprobe/nlist bytes,
+  * never the corpus. Training is the same deterministic Lloyd as
+  * v_ivf; append assigns new vectors with the FROZEN persisted
+  * centroids (faiss add()) so they land in the right list directories
+  * with no retrain and no rewrite of existing rows.
   */
 object IvfIndexStore {
   import graft.operators.Knn
+  import CoarseStore.{Append, Overwrite, Relayout}
 
   private[sources] def prepared(df: DataFrame, idCol: String, vecCol: String,
                                 metaCols: Seq[String] = Nil): DataFrame =
@@ -1550,46 +1575,21 @@ object IvfIndexStore {
         +: metaCols.map(col): _*)
       .withColumn("nrm", V.norm2(col("v")))
 
-  /** Persist the list-partitioned corpus + centroid sidecar. Pass
-    * `model` when a trained centroid set already exists (the session
-    * registry, a previous store's sidecar): training is the expensive
-    * half of an index build, and a write must never repeat a pass the
-    * session already paid for — the faiss contract is train once,
-    * serve (and persist) many. Without `model` the centroids train
-    * here on the frame's bounded sample.
+  /** Persist the list-partitioned corpus, then the model file
+    * (`$path.model`: `cids` + `centroids`). Pass `model` when a
+    * trained centroid set already exists (the session registry, a
+    * previous store's model): training is the expensive half of an
+    * index build, and a write must never repeat a pass the session
+    * already paid for — the faiss contract is train once, serve (and
+    * persist) many. Without `model` the centroids train here on the
+    * frame's bounded sample.
     */
   def write(df: DataFrame, idCol: String, vecCol: String, path: String,
             model: Option[Array[(Int, Array[Double])]] = None,
             metaCols: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
     val e = StoreLayout.widened(prepared(df, idCol, vecCol, metaCols))
     val centroids = model.getOrElse(Knn.trainIvf(e))
-    StoreLayout.clustered(Knn.withCid(e, centroids), "cid")
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeModelSidecars(spark, centroids, path)
-  }
-
-  /** Centroid sidecar + its packed twin. The packed form is ONE row
-    * holding the whole centroid set as array<struct<cid,cv>>: a
-    * SQL-only consumer derives per-query probe lists with pure array
-    * ops (sort/slice/explode) and no window → the probe subplan is
-    * exchange-free, which is exactly what AQE's dynamic-partition-
-    * pruning broadcast reuse needs to keep the store scan pruned at
-    * runtime (v_sql_store_ivf rides this).
-    */
-  private def writeModelSidecars(spark: SparkSession,
-                                 centroids: Array[(Int, Array[Double])],
-                                 path: String): Unit = {
-    import spark.implicits._
-    // two disjoint kilobyte datasets — overlapped (StoreLayout.concurrently)
-    StoreLayout.concurrently(Seq(
-      () => centroids.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-        .toDF("cid", "cv")
-        .write.mode("overwrite").parquet(s"$path.centroids"),
-      () => Seq(Tuple1(centroids.toSeq.sortBy(_._1).map { case (cid, cv) => (cid, cv.toSeq) }))
-        .toDF("cents")
-        .select(col("cents").cast("array<struct<cid:int,cv:array<double>>>").as("cents"))
-        .write.mode("overwrite").parquet(s"$path.centpack")))
+    CoarseStore.persist(path, Overwrite, ModelFile.Model(Some(centroids)), identity)(e)
     ()
   }
 
@@ -1607,84 +1607,58 @@ object IvfIndexStore {
     * group-committed swap (atomic: a crash either keeps the old layout
     * whole or completes the new one on recover), every pre-retrain
     * file retires under ONE version so readBefore(v) audits the
-    * pre-retrain index, and the pre-retrain centroid sidecar is filed
-    * beside it (`.retired/v<v>/_sidecar_centroids/`). The new model
-    * sidecars land AFTER the data commit: a crash between the two
-    * leaves a store that searches stale until retrain is re-run —
-    * re-running with the same `train` frame converges (training is
-    * deterministic). Returns the maintenance version the old layout
-    * retired under.
+    * pre-retrain index, and the pre-retrain model file is filed
+    * beside it (`.retired/v<v>/_model`). The new model file lands
+    * AFTER the data commit: a crash between the two leaves a store
+    * that searches stale until retrain is re-run — re-running with the
+    * same `train` frame converges (training is deterministic). Returns
+    * the maintenance version the old layout retired under.
     */
   def retrain(spark: SparkSession, path: String, train: DataFrame): Long = {
     val newCents = Knn.trainIvf(
       train.select(col("vec_id"), col("v"), col("nrm")))
-    val (_, version) = StoreMaintenance.rewriteLayout(spark, path, "cid") {
-      cur => Knn.withCid(StoreLayout.widened(cur.drop("cid")), newCents)
-    }
-    StoreMaintenance.retireSidecar(path, version, "centroids", s"$path.centroids")
-    writeModelSidecars(spark, newCents, path)
-    StoreMaintenance.invalidateDriftBaseline(path)
-    version
+    CoarseStore.persist(path, Relayout(spark), ModelFile.Model(Some(newCents)), identity)(
+      StoreLayout.widened(StoreFs.openParquet(spark, path).drop("cid")))
   }
 
   /** Assign NEW vectors with the frozen persisted centroids and append
     * into their list directories (dynamic partition append): existing
-    * rows and the sidecar are untouched, probes immediately cover the
-    * union.
+    * rows and the model file are untouched, probes immediately cover
+    * the union.
     */
-  def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long = {
-    val centroids = readCentroids(df.sparkSession, path)
-    StoreMaintenance.versionedAppend(path,
-        centroids.map { case (cid, _) => s"cid=$cid" }.toSeq) {
-      StoreLayout.clustered(
-          Knn.withCid(StoreLayout.widened(prepared(df, idCol, vecCol)), centroids),
-          "cid")
-        .write.mode("append").partitionBy("cid").parquet(path)
-    }
-  }
+  def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long =
+    CoarseStore.persist(path, Append, ModelFile.read(path), identity)(
+      StoreLayout.widened(prepared(df, idCol, vecCol)))
 
-  /** Centroid sidecar — tiny, driver-resident (the in-memory coarse
-    * quantizer of a loaded faiss index). Read on the driver
-    * ([[StoreFs.readRows]]), so opening a store schedules no Spark job.
+  /** The coarse quantizer from the store's model file, sorted by cid —
+    * tiny, driver-resident (the in-memory coarse quantizer of a loaded
+    * faiss index), read on the driver with no Spark job.
     */
   def readCentroids(spark: SparkSession, path: String): Array[(Int, Array[Double])] =
-    StoreFs.readRows(s"$path.centroids")
-      .map(g => (g.getInteger("cid", 0), StoreFs.doubles(g, "cv")))
-      .toArray.sortBy(_._1)
+    ModelFile.read(path).coarse
 
   /** Export a store's coarse-quantizer model as a SAFETENSORS
-    * artifact (one F64 `centroids` tensor, [nlist, dim]) — the
-    * interop seam with the Python training ecosystem: a faiss/sklearn
-    * k-means trained offline exports the same shape, and either side
-    * reads the other's file. cids are row indices (contiguous 0..k−1
-    * by the Lloyd contract — enforced, since an exported matrix
-    * carries no id column).
+    * artifact (F64 `centroids` [nlist, dim] plus their I32 `cids`) —
+    * the interop seam with the Python training ecosystem: a
+    * faiss/sklearn k-means trained offline exports the same matrix,
+    * and either side reads the other's file.
     */
   def exportModelSafetensors(spark: SparkSession, path: String,
-                             out: String): Unit = {
-    val cents = readCentroids(spark, path)
-    require(cents.zipWithIndex.forall { case ((cid, _), i) => cid == i },
-      "centroid ids must be contiguous 0..k-1 to export as a matrix")
-    val dim = cents.head._2.length.toLong
-    graft.operators.Safetensors.writeF64(out, Seq(
-      "centroids" -> (Seq(cents.length.toLong, dim), cents.flatMap(_._2).toArray)))
-  }
+                             out: String): Unit =
+    graft.operators.Safetensors.write(out,
+      ModelFile.tensors(ModelFile.Model(Some(readCentroids(spark, path)))))
 
   /** Import an externally-trained coarse quantizer from a safetensors
-    * file — pass the result as [[write]]'s `model` so the store is
-    * built under offline-trained centroids with no in-session
-    * training pass (the faiss-trains / Spark-serves deployment
-    * split). Accepts F64/F32 (a float32 faiss export upcasts
-    * losslessly).
+    * file (a store's model file imports directly) — pass the result as
+    * [[write]]'s `model` so the store is built under offline-trained
+    * centroids with no in-session training pass (the faiss-trains /
+    * Spark-serves deployment split). Accepts F64/F32 (a float32 faiss
+    * export upcasts losslessly); without a `cids` tensor the rows are
+    * cids 0..k−1.
     */
-  def importModelSafetensors(path: String): Array[(Int, Array[Double])] = {
-    val t = graft.operators.Safetensors.read(path).getOrElse("centroids",
+  def importModelSafetensors(path: String): Array[(Int, Array[Double])] =
+    ModelFile.decode(graft.operators.Safetensors.read(path)).centroids.getOrElse(
       throw new IllegalArgumentException(s"$path: missing tensor 'centroids'"))
-    require(t.shape.length == 2, s"'centroids' must be 2-D, got ${t.shape}")
-    val Seq(k, dim) = t.shape.map(_.toInt)
-    val flat = t.toDoubleArray
-    Array.tabulate(k)(i => (i, flat.slice(i * dim, (i + 1) * dim)))
-  }
 
   /** Each query's nprobe list ids, ranked against the literal centroid
     * set (sorted (desc sim, asc cid) structs — the ivfProbe formula).
@@ -1709,11 +1683,9 @@ object IvfIndexStore {
     * searches' probe (IVF-PQ's too, which prunes the same way but
     * scores by ADC).
     */
-  private[sources] def probeOf(q: DataFrame,
-                               centroids: Array[(Int, Array[Double])],
-                               nprobe: Int,
-                               extraCols: Seq[String] = Nil): DataFrame =
-    probeInput(q, extraCols).withColumn("pcid", explode(probedCids(centroids, nprobe)))
+  private[sources] def probeOf(q: DataFrame, centroids: Array[(Int, Array[Double])],
+                               nprobe: Int): DataFrame =
+    probeInput(q, Nil).withColumn("pcid", explode(probedCids(centroids, nprobe)))
 
   /** [[probeOf]] for a small query set, collected once and planned on
     * the driver ([[IndexStore.localProbe]]): the broadcast probe frame
@@ -1727,20 +1699,23 @@ object IvfIndexStore {
     IndexStore.localProbe(
       probeInput(q, extraCols).withColumn("pcid", probedCids(centroids, nprobe)))
 
-  private[sources] def probeFrame(queries: DataFrame, idCol: String, vecCol: String,
-                                  centroids: Array[(Int, Array[Double])],
-                                  nprobe: Int): DataFrame =
-    probeOf(prepared(queries, idCol, vecCol), centroids, nprobe)
+  /** The probe join: the candidate's list is a probed one, it is not
+    * the query itself, and every match column equals the query's.
+    */
+  private[sources] def probeJoin(matchCols: Seq[String]): Column =
+    matchCols.map(c => col(c) === col(s"q_$c"))
+      .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
 
-  private def rescored(index: DataFrame, qProbe: DataFrame, k: Int): DataFrame = {
-    val scored = index.join(broadcast(qProbe),
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "sim")
-  }
+  /** Filtered-search query rows: (vec_id, v, q_<match>…, nrm). */
+  private[sources] def matchQueries(queries: DataFrame, idCol: Column, vecCol: String,
+                                    matchCols: Seq[String]): DataFrame =
+    queries.select(idCol.as("vec_id")
+        +: col(vecCol).cast("array<double>").as("v")
+        +: matchCols.map(c => col(c).as(s"q_$c")): _*)
+      .withColumn("nrm", V.norm2(col("v")))
+
+  private def rescored(index: DataFrame, qProbe: DataFrame, k: Int): DataFrame =
+    IndexStore.rescoreTopK(index.join(broadcast(qProbe), probeJoin(Nil)), k, "vec_id")
 
   /** Above this many query rows, search() hands off to the
     * distributed-probe DPP path: collecting a big query set's probe
@@ -1763,11 +1738,10 @@ object IvfIndexStore {
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
              nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val centroids = readCentroids(spark, path)
     val p = localProbeOf(prepared(queries, idCol, vecCol).limit(SearchBatchThreshold + 1),
-      centroids, nprobe)
+      readCentroids(spark, path), nprobe)
     if (p.queries > SearchBatchThreshold)
-      return batchSearch(spark, path, queries, idCol, vecCol, k, nprobe, centroids)
+      return searchBatch(spark, path, queries, idCol, vecCol, k, nprobe)
     val index = StoreFs.openParquet(spark, path)
       .where(col("cid").isin(p.keys: _*)) // static file-level pruning
     rescored(index, p.frame, k)
@@ -1788,23 +1762,11 @@ object IvfIndexStore {
                      idCol: String, vecCol: String, k: Int,
                      matchCols: Seq[String],
                      nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val centroids = readCentroids(spark, path)
-    val q = queries.select(col(idCol).as("vec_id")
-        +: col(vecCol).cast("array<double>").as("v")
-        +: matchCols.map(c => col(c).as(s"q_$c")): _*)
-      .withColumn("nrm", V.norm2(col("v")))
-    val p = localProbeOf(q, centroids, nprobe, matchCols.map(c => s"q_$c"))
+    val p = localProbeOf(matchQueries(queries, col(idCol), vecCol, matchCols),
+      readCentroids(spark, path), nprobe, matchCols.map(c => s"q_$c"))
     val index = StoreFs.openParquet(spark, path).where(col("cid").isin(p.keys: _*))
-    val cond = matchCols.map(c => col(c) === col(s"q_$c"))
-      .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
-    val scored = index.join(broadcast(p.frame), cond)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("vec_id").as("neighbor_id")
-        :+ round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"): _*)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("rnk") :+ col("neighbor_id") :+ col("sim"): _*)
+    IndexStore.rescoreTopK(index.join(broadcast(p.frame), probeJoin(matchCols)), k,
+      "vec_id", matchCols)
   }
 
   /** Survivor ceiling for [[searchFilteredRouted]]'s exact route: at
@@ -1847,10 +1809,7 @@ object IvfIndexStore {
                                     idCol: String, vecCol: String, k: Int,
                                     matchCols: Seq[String], nprobe: Int,
                                     exactThreshold: Int): (String, DataFrame) = {
-    val q = queries.select(col(idCol).as("vec_id")
-        +: col(vecCol).cast("array<double>").as("v")
-        +: matchCols.map(c => col(c).as(s"q_$c")): _*)
-      .withColumn("nrm", V.norm2(col("v")))
+    val q = matchQueries(queries, col(idCol), vecCol, matchCols)
     // query sets are small by the search() contract (the uploaded-
     // image flow) — their distinct filter values collect for the
     // pushed-down survivor probe and the scan predicate
@@ -1877,15 +1836,7 @@ object IvfIndexStore {
         +: matchCols.map(c => col(s"q_$c")): _*))
     val cond = matchCols.map(c => col(c) === col(s"q_$c"))
       .foldLeft(col("vec_id") =!= col("query_id"))(_ && _)
-    val scored = survivors.join(qb, cond)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("vec_id").as("neighbor_id")
-        :+ round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"): _*)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    ("exact",
-      scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-        .select(col("query_id") +: matchCols.map(col)
-          :+ col("rnk") :+ col("neighbor_id") :+ col("sim"): _*))
+    ("exact", IndexStore.rescoreTopK(survivors.join(qb, cond), k, "vec_id", matchCols))
   }
 
   /** Batch-serving variant: the probe set stays DISTRIBUTED — no
@@ -1900,89 +1851,68 @@ object IvfIndexStore {
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
                   nprobe: Int = Knn.IvfNprobe): DataFrame =
-    batchSearch(spark, path, queries, idCol, vecCol, k, nprobe, readCentroids(spark, path))
-
-  private def batchSearch(spark: SparkSession, path: String, queries: DataFrame,
-                          idCol: String, vecCol: String, k: Int, nprobe: Int,
-                          centroids: Array[(Int, Array[Double])]): DataFrame =
     rescored(StoreFs.openParquet(spark, path),
-      probeFrame(queries, idCol, vecCol, centroids, nprobe), k)
+      probeOf(prepared(queries, idCol, vecCol), readCentroids(spark, path), nprobe), k)
 }
 
 /** Persistent product-quantized index — the compressed counterpart of
   * IndexStore (faiss write_index for an IndexPQ): the corpus persists
-  * as 8 one-byte codes per vector plus a tiny codebook sidecar, 32×
-  * smaller than the raw embeddings. Search decodes nothing: the ADC
-  * distance table is built driver-side from the loaded codebooks and
-  * joined to the code table.
+  * as 8 one-byte codes per vector plus the codebooks in the store's
+  * model file (`$path.model`, [[ModelFile]]), 32× smaller than the
+  * raw embeddings. Search decodes nothing: the ADC distance table is
+  * built driver-side from the loaded codebooks and joined to the code
+  * table.
   */
 object PqIndexStore {
   import graft.operators.Knn
 
-  /** Persist codes + codebooks. The code table holds ONE row per
-    * vector with all M codes as an array — the faiss code-blob layout:
-    * an 8-element tinyint array per vector instead of 8 exploded rows,
-    * so the search scan reads n rows, not 8n. Pass `model` when
-    * trained codebooks already exist (the session registry): encoding
-    * is then the write's only pass over the corpus — a store build
-    * never repeats a training pass the session already paid for.
-    * Without `model` the codebooks sample-train here.
+  /** Persist the code table, then the model file (`$path.model`:
+    * `codebooks`). The code table holds ONE row per vector with all M
+    * codes as an array — the faiss code-blob layout: an 8-element
+    * tinyint array per vector instead of 8 exploded rows, so the
+    * search scan reads n rows, not 8n. Pass `model` when trained
+    * codebooks already exist (the session registry): encoding is then
+    * the write's only pass over the corpus — a store build never
+    * repeats a training pass the session already paid for. Without
+    * `model` the codebooks sample-train here.
     */
   def write(df: DataFrame, idCol: String, vecCol: String, path: String,
             model: Option[Array[Array[Array[Double]]]] = None): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val e = StoreLayout.widened(
-      df.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v")))
+    val e = vectors(df, idCol, vecCol)
     val books = model.getOrElse(Knn.trainPqBooks(e))
-    // the code table and the two kilobyte codebook sidecars are
-    // disjoint datasets — overlapped (StoreLayout.concurrently).
-    // packed form: ONE row, books[m+1][k+1] = codebook subvector — a
-    // SQL consumer cross-joins this single broadcast row and folds the
-    // ADC distance entirely map-side (element_at lookups inside an
-    // aggregate), with no per-m explode and no corpus-wide re-merge
-    // group-by (v_sql_store_pq rides this).
-    StoreLayout.concurrently(Seq(
-      () => StoreLayout.clustered(
-          e.select(col("vec_id"), Knn.pqCodesCol(books).as("codes")))
-        .write.mode("overwrite").parquet(s"$path.codes"),
-      () => books.zipWithIndex.flatMap { case (perM, m) =>
-        perM.zipWithIndex.map { case (cv, k) => (m, k, cv.toSeq) }
-      }.toSeq.toDF("m", "k", "cv")
-        .write.mode("overwrite").parquet(s"$path.books"),
-      () => Seq(Tuple1(books.map(_.map(_.toSeq).toSeq).toSeq)).toDF("books")
-        .write.mode("overwrite").parquet(s"$path.bookpack")))
-    ()
+    StoreLayout.clustered(e.select(col("vec_id"), Knn.pqCodesCol(books).as("codes")))
+      .write.mode("overwrite").parquet(s"$path.codes")
+    ModelFile.write(path, ModelFile.Model(books = Some(books)))
   }
 
   /** Incremental maintenance — the faiss add() analog for the
     * compressed store: encode NEW vectors with the FROZEN persisted
     * codebooks (no retrain) and append their code rows. Existing rows
-    * are untouched, the codebook sidecar is unchanged, and searches
+    * are untouched, the model file is unchanged, and searches
     * immediately cover the union. Periodic retraining (when the data
     * distribution drifts) is a full write() — the same trade faiss
     * makes between add() and retraining an IndexPQ.
     */
   def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long = {
-    val spark = df.sparkSession
-    val books = readBooks(spark, path)
+    val books = readBooks(df.sparkSession, path)
     StoreMaintenance.versionedAppend(s"$path.codes", Seq(".")) {
       StoreLayout.clustered(
-          StoreLayout.widened(
-            df.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v")))
-            .select(col("vec_id"), Knn.pqCodesCol(books).as("codes")))
+          vectors(df, idCol, vecCol).select(col("vec_id"), Knn.pqCodesCol(books).as("codes")))
         .write.mode("append").parquet(s"$path.codes")
     }
   }
 
-  /** Load the codebooks (tiny — driver-resident, like the reference's
-    * in-memory index object), read on the driver with no Spark job.
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    StoreLayout.widened(
+      df.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v")))
+
+  /** Load the codebooks from the store's model file (tiny —
+    * driver-resident, like the reference's in-memory index object),
+    * read on the driver with no Spark job. Works on any store that
+    * trains codebooks (PQ or IVF-PQ).
     */
-  def readBooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
-    val rows = StoreFs.readRows(s"$path.books")
-      .map(g => ((g.getInteger("m", 0), g.getInteger("k", 0)), StoreFs.doubles(g, "cv"))).toMap
-    Array.tabulate(Knn.PqSubspaces)(m => Array.tabulate(Knn.PqCodes)(k => rows((m, k))))
-  }
+  def readBooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] =
+    ModelFile.read(path).codebooks
 
   /** Export a store's PQ codebooks as a safetensors artifact (one F64
     * `codebooks` tensor, [m, ksub, dsub] — faiss's
@@ -1991,27 +1921,17 @@ object PqIndexStore {
     * is the coarse half).
     */
   def exportBooksSafetensors(spark: SparkSession, path: String,
-                             out: String): Unit = {
-    val books = readBooks(spark, path)
-    val (m, ksub, dsub) = (books.length, books(0).length, books(0)(0).length)
-    graft.operators.Safetensors.writeF64(out, Seq(
-      "codebooks" -> (Seq(m.toLong, ksub.toLong, dsub.toLong),
-        books.flatten.flatten)))
-  }
+                             out: String): Unit =
+    graft.operators.Safetensors.write(out,
+      ModelFile.tensors(ModelFile.Model(books = Some(readBooks(spark, path)))))
 
   /** Import externally-trained PQ codebooks (F64/F32 `codebooks`,
-    * [m, ksub, dsub]) — pass as [[write]]'s `model` (or
-    * IvfPqIndexStore.write's `pqModel`).
+    * [m, ksub, dsub]; a store's model file imports directly) — pass as
+    * [[write]]'s `model` (or IvfPqIndexStore.write's `pqModel`).
     */
-  def importBooksSafetensors(path: String): Array[Array[Array[Double]]] = {
-    val t = graft.operators.Safetensors.read(path).getOrElse("codebooks",
+  def importBooksSafetensors(path: String): Array[Array[Array[Double]]] =
+    ModelFile.decode(graft.operators.Safetensors.read(path)).books.getOrElse(
       throw new IllegalArgumentException(s"$path: missing tensor 'codebooks'"))
-    require(t.shape.length == 3, s"'codebooks' must be 3-D, got ${t.shape}")
-    val Seq(m, ksub, dsub) = t.shape.map(_.toInt)
-    val flat = t.toDoubleArray
-    Array.tabulate(m)(i => Array.tabulate(ksub)(k =>
-      flat.slice((i * ksub + k) * dsub, (i * ksub + k + 1) * dsub)))
-  }
 
   /** ADC top-k against the persisted codes: queries are collected
     * (driver-resident by contract — the uploaded-image flow), their
@@ -2029,53 +1949,77 @@ object PqIndexStore {
         col(vecCol).cast("array<double>").as("v"))
       .orderBy("query_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qdt = Knn.pqQueryTables(spark, qs, books)
-    val scored = coded.join(qdt, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), Knn.adcDistCol.as("adc_dist"))
+    adcTopK(coded.join(Knn.pqQueryTables(spark, qs, books), col("vec_id") =!= col("query_id")), k)
+  }
+
+  /** Shared serving tail of the ADC searches (PQ and IVF-PQ): the ADC
+    * distance of joined (query_id, qdt, vec_id, codes) candidates, then
+    * the k-bounded window (adc_dist ASC, vec_id ASC); a filtered
+    * search's `matchCols` ride through to the output.
+    */
+  private[sources] def adcTopK(cands: DataFrame, k: Int,
+                               matchCols: Seq[String] = Nil): DataFrame = {
+    val scored = cands.select(col("query_id") +: matchCols.map(col)
+      :+ col("vec_id") :+ Knn.adcDistCol.as("adc_dist"): _*)
     val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+      .select(col("query_id") +: matchCols.map(col)
+        :+ col("rnk") :+ col("vec_id").as("neighbor_id") :+ col("adc_dist"): _*)
   }
 }
 
 /** Persistent IVF-PQ index — the production faiss shape (IndexIVFPQ):
   * coarse lists for PRUNING and compressed codes for SCAN ECONOMY in
-  * one layout. Rows are (vec_id, codes) PARTITIONED BY cid; two tiny
-  * sidecars hold the coarse quantizer ($path.centroids — the
-  * IvfIndexStore format) and the ADC codebooks ($path.books — the
-  * PqIndexStore format). A probe therefore reads only its nprobe
-  * list directories AND those reads are 8-byte code blobs, not
-  * 512-byte floats: corpus · nprobe/nlist · (8B/512B) bytes per
+  * one layout. Rows are (vec_id, codes) PARTITIONED BY cid; the model
+  * file (`$path.model`, [[ModelFile]]) holds the coarse quantizer, the
+  * ADC codebooks and the residual brand. A probe therefore reads only
+  * its nprobe list directories AND those reads are 8-byte code blobs,
+  * not 512-byte floats: corpus · nprobe/nlist · (8B/512B) bytes per
   * query batch — the two orthogonal savings faiss composes, composed
-  * the same way. Codes quantize the RAW vectors (not residuals),
-  * mirroring Knn.vIvfPq exactly, so the persisted path shares
-  * v_ivf_pq's oracle.
+  * the same way. By default codes quantize the RAW vectors (not
+  * residuals), mirroring Knn.vIvfPq exactly, so the persisted path
+  * shares v_ivf_pq's oracle.
   */
 object IvfPqIndexStore {
   import graft.operators.Knn
+  import CoarseStore.{Append, Overwrite, Relayout}
+  import IvfIndexStore.prepared
 
-  private def prepared(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", V.norm2(col("v")))
-
-  /** The faiss by_residual brand: its presence tells every later
-    * open (append from another session, a fresh session's search) that
-    * codes were taken over v − centroid(cid), so queries must derive
-    * per-probed-list residual tables — the knob travels WITH the data,
-    * not in somebody's head. Underscore prefix: invisible to the
-    * parquet reader.
+  /** The faiss by_residual brand, read from the model file: it tells
+    * every later open (append from another session, a fresh session's
+    * search) that codes were taken over v − centroid(cid), so queries
+    * must derive per-probed-list residual tables — the knob travels
+    * WITH the data, not in somebody's head. False for a store with no
+    * model file yet.
     */
-  private val ResidualMarker = "_by_residual"
-
   def isResidual(path: String): Boolean =
-    StoreFs.exists(s"$path/$ResidualMarker")
+    ModelFile.exists(path) && ModelFile.read(path).residual
 
-  /** Persist list-partitioned codes + both sidecars. Pass the models
-    * from the session registry when they exist — a write never repeats
-    * a training pass the session already paid for (train once, serve
-    * and persist many). `byResidual = true` encodes v − centroid(cid)
-    * instead of raw vectors (faiss IndexIVFPQ's default) and brands
-    * the store so append/search stay consistent forever after.
+  /** The frame PQ encodes (and its codebooks train on): the assigned
+    * vectors, or on a residual store v − centroid(cid), materialized
+    * once when `cached` (write and retrain).
+    */
+  private def pqInput(asg: DataFrame, centroids: Array[(Int, Array[Double])],
+                      byResidual: Boolean, cached: Boolean): DataFrame =
+    if (!byResidual) asg
+    else if (cached) graft.Materialize.forceCached(Knn.residualFrame(asg, centroids))
+    else Knn.residualFrame(asg, centroids)
+
+  /** IVF-PQ's encode: PQ codes over [[pqInput]], inline meta kept. */
+  private def codes(m: ModelFile.Model, metaCols: Seq[String], cached: Boolean)
+                   (asg: DataFrame): DataFrame =
+    pqInput(asg, m.coarse, m.residual, cached)
+      .select(col("vec_id") +: col("cid") +: metaCols.map(col)
+        :+ Knn.pqCodesCol(m.codebooks).as("codes"): _*)
+
+  /** Persist list-partitioned codes, then the model file
+    * (`$path.model`: `cids`, `centroids`, `codebooks`, `by_residual`).
+    * Pass the models from the session registry when they exist — a
+    * write never repeats a training pass the session already paid for
+    * (train once, serve and persist many). `byResidual = true` encodes
+    * v − centroid(cid) instead of raw vectors (faiss IndexIVFPQ's
+    * default) and brands the store so append/search stay consistent
+    * forever after.
     */
   def write(df: DataFrame, idCol: String, vecCol: String, path: String,
             ivfModel: Option[Array[(Int, Array[Double])]] = None,
@@ -2084,60 +2028,13 @@ object IvfPqIndexStore {
             metaCols: Seq[String] = Nil): Unit = {
     require(metaCols.isEmpty || !byResidual,
       "inline metadata on a residual-branded store is not supported yet")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val e = StoreLayout.widened(IvfIndexStore.prepared(df, idCol, vecCol, metaCols))
+    val e = StoreLayout.widened(prepared(df, idCol, vecCol, metaCols))
     val centroids = ivfModel.getOrElse(Knn.trainIvf(e))
-    val asg = Knn.withCid(e, centroids)
-    val enc =
-      if (byResidual)
-        graft.Materialize.forceCached(Knn.residualFrame(asg, centroids))
-      else asg
-    val books = pqModel.getOrElse(Knn.trainPqBooks(enc.select(col("vec_id"), col("v"))))
-    StoreLayout.clustered(
-        enc.select(col("vec_id") +: col("cid") +: metaCols.map(col)
-          :+ Knn.pqCodesCol(books).as("codes"): _*), "cid")
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    if (byResidual) {
-      val p = StoreFs.qualified(s"$path/$ResidualMarker")
-      StoreFs.createExclusive(StoreFs.fsOf(p), p, Nil)
-    }
-    writeModelSidecars(spark, centroids, books, byResidual, path)
-  }
-
-  /** Both model sidecars + their packed twins + the brand row. The
-    * packed forms are ONE row each, for the SQL-only serving leg
-    * (v_sql_store_ivfpq): a statement cross-joins them as single
-    * broadcast rows — the probe CTE derives nprobe lists with
-    * exchange-free array ops (keeping DPP broadcast reuse alive) and
-    * the ADC distance folds map-side via element_at. The brand as
-    * DATA: one boolean row a SQL-only user can bind and consult inside
-    * the statement (the marker file serves the Scala API; parquet
-    * serves SQL — written together, they cannot diverge).
-    */
-  private def writeModelSidecars(spark: SparkSession,
-                                 centroids: Array[(Int, Array[Double])],
-                                 books: Array[Array[Array[Double]]],
-                                 byResidual: Boolean, path: String): Unit = {
-    import spark.implicits._
-    // five disjoint kilobyte datasets — overlapped, not serial: each
-    // tiny write is a full driver round-trip (StoreLayout.concurrently)
-    StoreLayout.concurrently(Seq(
-      () => centroids.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-        .toDF("cid", "cv")
-        .write.mode("overwrite").parquet(s"$path.centroids"),
-      () => books.zipWithIndex.flatMap { case (perM, m) =>
-        perM.zipWithIndex.map { case (cv, k) => (m, k, cv.toSeq) }
-      }.toSeq.toDF("m", "k", "cv")
-        .write.mode("overwrite").parquet(s"$path.books"),
-      () => Seq(Tuple1(centroids.toSeq.sortBy(_._1).map { case (cid, cv) => (cid, cv.toSeq) }))
-        .toDF("cents")
-        .select(col("cents").cast("array<struct<cid:int,cv:array<double>>>").as("cents"))
-        .write.mode("overwrite").parquet(s"$path.centpack"),
-      () => Seq(Tuple1(books.map(_.map(_.toSeq).toSeq).toSeq)).toDF("books")
-        .write.mode("overwrite").parquet(s"$path.bookpack"),
-      () => Seq(Tuple1(byResidual)).toDF("by_residual")
-        .write.mode("overwrite").parquet(s"$path.brand")))
+    val books = pqModel.getOrElse(Knn.trainPqBooks(
+      pqInput(Knn.withCid(e, centroids), centroids, byResidual, cached = false)
+        .select(col("vec_id"), col("v"))))
+    val m = ModelFile.Model(Some(centroids), Some(books), Some(byResidual))
+    CoarseStore.persist(path, Overwrite, m, codes(m, metaCols, cached = true))(e)
     ()
   }
 
@@ -2152,10 +2049,10 @@ object IvfPqIndexStore {
     * raw-vector IVF store a re-encode must go back to the source
     * vectors. The rewrite is [[StoreMaintenance.rewriteLayout]]'s
     * group-committed atomic swap; pre-retrain codes stay replayable
-    * via readBefore(version) and both pre-retrain model sidecars are
-    * filed under `.retired/v<version>/_sidecar_{centroids,books}/`.
-    * New sidecars land after the data commit — a crash between the two
-    * searches stale until a (deterministic, converging) re-run.
+    * via readBefore(version) and the pre-retrain model file (both
+    * models and the brand) is filed as `.retired/v<version>/_model`.
+    * The new model file lands after the data commit — a crash between
+    * the two searches stale until a (deterministic, converging) re-run.
     * `corpus` must hold exactly the store's current row universe.
     */
   def retrain(spark: SparkSession, path: String, corpus: DataFrame,
@@ -2163,46 +2060,23 @@ object IvfPqIndexStore {
     val tr = train.select(col("vec_id"), col("v"), col("nrm"))
     val newCents = Knn.trainIvf(tr)
     val resid = isResidual(path)
-    val trAsg = Knn.withCid(tr, newCents)
-    val trEnc =
-      if (resid) graft.Materialize.forceCached(Knn.residualFrame(trAsg, newCents))
-      else trAsg
-    val newBooks = Knn.trainPqBooks(trEnc.select(col("vec_id"), col("v")))
-    val e = StoreLayout.widened(prepared(corpus, idCol, vecCol))
-    val asg = Knn.withCid(e, newCents)
-    val enc =
-      if (resid) graft.Materialize.forceCached(Knn.residualFrame(asg, newCents))
-      else asg
-    val coded = enc.select(col("vec_id"), col("cid"),
-      Knn.pqCodesCol(newBooks).as("codes"))
-    val (_, version) =
-      StoreMaintenance.rewriteLayout(spark, path, "cid")(_ => coded)
-    StoreMaintenance.retireSidecar(path, version, "centroids", s"$path.centroids")
-    StoreMaintenance.retireSidecar(path, version, "books", s"$path.books")
-    writeModelSidecars(spark, newCents, newBooks, resid, path)
-    StoreMaintenance.invalidateDriftBaseline(path)
-    version
+    val newBooks = Knn.trainPqBooks(
+      pqInput(Knn.withCid(tr, newCents), newCents, resid, cached = true)
+        .select(col("vec_id"), col("v")))
+    val m = ModelFile.Model(Some(newCents), Some(newBooks), Some(resid))
+    CoarseStore.persist(path, Relayout(spark), m, codes(m, Nil, cached = true))(
+      StoreLayout.widened(prepared(corpus, idCol, vecCol)))
   }
 
   /** faiss add(): assign new vectors with the FROZEN coarse quantizer,
     * encode with the FROZEN codebooks, dynamic-append into the list
     * directories — no retrain, no rewrite, probes cover the union.
+    * The store's brand, not a caller flag, decides the encoding.
     */
   def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long = {
-    val spark = df.sparkSession
-    val centroids = IvfIndexStore.readCentroids(spark, path)
-    val books = PqIndexStore.readBooks(spark, path)
-    val asg = Knn.withCid(StoreLayout.widened(prepared(df, idCol, vecCol)), centroids)
-    // the store's brand, not a caller flag: appended codes are taken
-    // over the same representation the store was written with
-    val enc = if (isResidual(path)) Knn.residualFrame(asg, centroids) else asg
-    StoreMaintenance.versionedAppend(path,
-        centroids.map { case (cid, _) => s"cid=$cid" }.toSeq) {
-      StoreLayout.clustered(
-          enc.select(col("vec_id"), col("cid"), Knn.pqCodesCol(books).as("codes")),
-          "cid")
-        .write.mode("append").partitionBy("cid").parquet(path)
-    }
+    val m = ModelFile.read(path)
+    CoarseStore.persist(path, Append, m, codes(m, Nil, cached = false))(
+      StoreLayout.widened(prepared(df, idCol, vecCol)))
   }
 
   /** nprobe-pruned ADC top-k: probed list ids apply to the scan as a
@@ -2213,29 +2087,33 @@ object IvfPqIndexStore {
     */
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
-             nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val centroids = IvfIndexStore.readCentroids(spark, path)
-    val books = PqIndexStore.readBooks(spark, path)
+             nprobe: Int = Knn.IvfNprobe): DataFrame =
+    probedSearch(spark, path, ModelFile.read(path), queries, idCol, vecCol, k, Nil, nprobe)
+
+  /** The small-query search behind [[search]] and [[searchFiltered]],
+    * over a model read once: the probed lists' static IN scan, the
+    * per-query tables on the broadcast side, `matchCols` in the probe
+    * join.
+    */
+  private def probedSearch(spark: SparkSession, path: String, m: ModelFile.Model,
+                           queries: DataFrame, idCol: String, vecCol: String, k: Int,
+                           matchCols: Seq[String], nprobe: Int): DataFrame = {
     // ids cast to long as in PqIndexStore.search: the tables key on them
     val p = IvfIndexStore.localProbeOf(
-      prepared(queries, idCol, vecCol).withColumn("vec_id", col("vec_id").cast("long")),
-      centroids, nprobe)
+      IvfIndexStore.matchQueries(queries, col(idCol).cast("long"), vecCol, matchCols),
+      m.coarse, nprobe, matchCols.map(c => s"q_$c"))
     val coded = StoreFs.openParquet(spark, path)
       .where(col("cid").isin(p.keys: _*)) // static file-level pruning
     val probes =
-      if (isResidual(path))
-        // branded residual store: tables are per (query, probed list) —
-        // the query residual is taken against THAT list's centroid
+      if (m.residual)
+        // branded residual store (never filtered): tables are per
+        // (query, probed list) — the query residual is taken against
+        // THAT list's centroid
         Knn.pqResQueryTables(spark,
           p.rows.map(r => (r.getLong(0), r.getInt(3), r.getSeq[Double](1).toArray)),
-          centroids.toMap, books)
-      else adcProbes(spark, p, books)
-    val scored = coded.join(probes,
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), Knn.adcDistCol.as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+          m.coarse.toMap, m.codebooks)
+      else adcProbes(spark, p, m.codebooks)
+    PqIndexStore.adcTopK(coded.join(probes, IvfIndexStore.probeJoin(matchCols)), k, matchCols)
   }
 
   /** The broadcast side of a raw-code ADC search: the local probe
@@ -2282,8 +2160,8 @@ object IvfPqIndexStore {
                                      queries: DataFrame, idCol: String,
                                      vecCol: String, k: Int, nprobe: Int,
                                      literalMax: Int): DataFrame = {
-    val centroids = IvfIndexStore.readCentroids(spark, path)
-    val books = PqIndexStore.readBooks(spark, path)
+    val model = ModelFile.read(path)
+    val (centroids, books) = (model.coarse, model.codebooks)
     val qProbe = IvfIndexStore.probeOf(prepared(queries, idCol, vecCol), centroids, nprobe)
     val dsub = 64 / Knn.PqSubspaces
     // the store's brand decides the query-side encoding, exactly as in
@@ -2295,7 +2173,7 @@ object IvfPqIndexStore {
     // way the batch path stays collect-free. Raw tables against
     // residual codes would return silently wrong neighbors.
     val enc =
-      if (!isResidual(path)) qProbe.withColumn("eqv", col("qv"))
+      if (!model.residual) qProbe.withColumn("eqv", col("qv"))
       else if (centroids.length <= literalMax) {
         val centMap = typedLit(centroids.map { case (c, v) => c -> v.toSeq }.toMap)
         qProbe.withColumn("eqv",
@@ -2317,12 +2195,8 @@ object IvfPqIndexStore {
       }: _*)
     }: _*)
     val probes = enc.select(col("query_id"), col("pcid"), qdtCol.as("qdt"))
-    val scored = StoreFs.openParquet(spark, path).join(broadcast(probes),
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), Knn.adcDistCol.as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+    PqIndexStore.adcTopK(StoreFs.openParquet(spark, path).join(broadcast(probes),
+      IvfIndexStore.probeJoin(Nil)), k)
   }
 
   /** Attribute-filtered search on the COMPRESSED persisted tier (the
@@ -2338,26 +2212,10 @@ object IvfPqIndexStore {
                      idCol: String, vecCol: String, k: Int,
                      matchCols: Seq[String],
                      nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    require(!isResidual(path),
+    val m = ModelFile.read(path)
+    require(!m.residual,
       "filtered search over a residual-branded store is not supported yet")
-    val centroids = IvfIndexStore.readCentroids(spark, path)
-    val books = PqIndexStore.readBooks(spark, path)
-    val q = queries.select(col(idCol).cast("long").as("vec_id")
-        +: col(vecCol).cast("array<double>").as("v")
-        +: matchCols.map(c => col(c).as(s"q_$c")): _*)
-      .withColumn("nrm", V.norm2(col("v")))
-    val p = IvfIndexStore.localProbeOf(q, centroids, nprobe, matchCols.map(c => s"q_$c"))
-    val coded = StoreFs.openParquet(spark, path)
-      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
-    val cond = matchCols.map(c => col(c) === col(s"q_$c"))
-      .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
-    val scored = coded.join(adcProbes(spark, p, books), cond)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("vec_id") :+ Knn.adcDistCol.as("adc_dist"): _*)
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("rnk") :+ col("vec_id").as("neighbor_id") :+ col("adc_dist"): _*)
+    probedSearch(spark, path, m, queries, idCol, vecCol, k, matchCols, nprobe)
   }
 }
 
@@ -2433,7 +2291,7 @@ object BqIndexStore {
     * read-amplification-for-write trade every MIH deployment makes.
     */
   def writeMih(df: DataFrame, idCol: String, vecCol: String, path: String): Unit =
-    mihRows(df, idCol, vecCol)
+    mihRowsFromCodes(codesOf(df, idCol, vecCol))
       .repartitionByRange(64, col("blk"), col("bval"))
       .sortWithinPartitions("blk", "bval")
       .write.partitionBy("blk").mode("overwrite").parquet(path)
@@ -2445,15 +2303,7 @@ object BqIndexStore {
     * banded store.
     */
   def appendMih(df: DataFrame, idCol: String, vecCol: String, path: String): Long =
-    StoreMaintenance.versionedAppend(path, (0 until 8).map(b => s"blk=$b")) {
-      mihRows(df, idCol, vecCol)
-        .repartitionByRange(16, col("blk"), col("bval"))
-        .sortWithinPartitions("blk", "bval")
-        .write.partitionBy("blk").mode("append").parquet(path)
-    }
-
-  private def mihRows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    mihRowsFromCodes(codesOf(df, idCol, vecCol))
+    appendMihCodes(codesOf(df, idCol, vecCol), path)
 
   private def mihRowsFromCodes(codes: DataFrame): DataFrame =
     codes.select(col("id"), col("code_lo"), col("code_hi"),
@@ -2530,6 +2380,19 @@ object BqIndexStore {
       .select(col("query_id"), col("id").as("neighbor_id"),
         (bit_count(col("code_lo").bitwiseXOR(col("qlo"))) +
           bit_count(col("code_hi").bitwiseXOR(col("qhi")))).cast("long").as("hamming"))
+    rerankTopK(ham, source, idCol, vecCol,
+      q.select(col("query_id").as("rq"), col("qv"), col("qn")), k, rerank)
+  }
+
+  /** Shared two-phase tail of the binary tiers (BQ and IVF-BQ): keep
+    * each query's `rerank` best (query_id, neighbor_id, hamming)
+    * candidates, rescore them with exact round-6 cosine against
+    * `source` via broadcast point lookups (query vectors from `qv`:
+    * rq, qv, qn), then the k-bounded (sim DESC, neighbor_id ASC) window.
+    */
+  private[sources] def rerankTopK(ham: DataFrame, source: DataFrame, idCol: String,
+                                  vecCol: String, qv: DataFrame, k: Int,
+                                  rerank: Int): DataFrame = {
     val wH = Window.partitionBy("query_id")
       .orderBy(col("hamming").asc, col("neighbor_id").asc)
     val cand = ham.withColumn("hrnk", row_number().over(wH))
@@ -2538,7 +2401,6 @@ object BqIndexStore {
     val src = source
       .select(col(idCol).as("sid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", V.norm2(col("v")))
-    val qv = q.select(col("query_id").as("rq"), col("qv"), col("qn"))
     val rr = src.join(broadcast(cand), col("sid") === col("neighbor_id"))
       .join(broadcast(qv), col("query_id") === col("rq"))
       .select(col("query_id"), col("neighbor_id"), col("hamming"),
@@ -2552,7 +2414,7 @@ object BqIndexStore {
 
 /** Persisted coarse × binary index — faiss IndexBinaryIVF on disk:
   * (vec_id, code_lo, code_hi) rows PARTITIONED BY list id with the
-  * centroid sidecar, composing the two savings the way IvfPqIndexStore
+  * centroids in the model file, composing the two savings the way IvfPqIndexStore
   * does for ADC — a probe reads only its nprobe list directories AND
   * those reads are 16-byte sign codes, not 512-byte floats. Search
   * mirrors Knn.vIvfBq (Hamming inside the probed lists, exact rerank
@@ -2562,40 +2424,24 @@ object BqIndexStore {
   */
 object IvfBqIndexStore {
   import graft.operators.Knn
+  import CoarseStore.{Append, Overwrite, Relayout}
+  import IvfIndexStore.prepared
 
-  private def codesWithCid(df: DataFrame, idCol: String, vecCol: String,
-                           centroids: Array[(Int, Array[Double])]): DataFrame =
-    Knn.withCid(StoreLayout.widened(IvfIndexStore.prepared(df, idCol, vecCol)),
-        centroids)
-      .select(col("vec_id"), col("cid"),
-        Knn.bqWords(col("v"), 0).as("code_lo"),
-        Knn.bqWords(col("v"), 32).as("code_hi"))
+  /** IVF-BQ's encode: the two sign words of each assigned vector. */
+  private def signWords(asg: DataFrame): DataFrame =
+    asg.select(col("vec_id"), col("cid"),
+      Knn.bqWords(col("v"), 0).as("code_lo"),
+      Knn.bqWords(col("v"), 32).as("code_hi"))
 
+  /** Persist the list-partitioned sign codes, then the model file
+    * (`$path.model`: `cids` + `centroids`). Pass the session model
+    * when one exists; without it the centroids train here.
+    */
   def write(df: DataFrame, idCol: String, vecCol: String, path: String,
             model: Option[Array[(Int, Array[Double])]] = None): Unit = {
-    val spark = df.sparkSession
-    val e = IvfIndexStore.prepared(df, idCol, vecCol)
-    val centroids = model.getOrElse(Knn.trainIvf(e))
-    StoreLayout.clustered(codesWithCid(df, idCol, vecCol, centroids), "cid")
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeModelSidecars(spark, centroids, path)
-  }
-
-  private def writeModelSidecars(spark: SparkSession,
-                                 centroids: Array[(Int, Array[Double])],
-                                 path: String): Unit = {
-    import spark.implicits._
-    // packed one-row twin for the SQL serving leg (v_sql_store_ivfbq):
-    // exchange-free probe derivation keeps DPP broadcast reuse alive.
-    // Disjoint kilobyte datasets — overlapped (StoreLayout.concurrently)
-    StoreLayout.concurrently(Seq(
-      () => centroids.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-        .toDF("cid", "cv")
-        .write.mode("overwrite").parquet(s"$path.centroids"),
-      () => Seq(Tuple1(centroids.toSeq.sortBy(_._1).map { case (cid, cv) => (cid, cv.toSeq) }))
-        .toDF("cents")
-        .select(col("cents").cast("array<struct<cid:int,cv:array<double>>>").as("cents"))
-        .write.mode("overwrite").parquet(s"$path.centpack")))
+    val centroids = model.getOrElse(Knn.trainIvf(prepared(df, idCol, vecCol)))
+    CoarseStore.persist(path, Overwrite, ModelFile.Model(Some(centroids)), signWords)(
+      StoreLayout.widened(prepared(df, idCol, vecCol)))
     ()
   }
 
@@ -2608,35 +2454,24 @@ object IvfBqIndexStore {
     * like the IVF-PQ twin this takes the source corpus and re-derives
     * the code rows under the new assignment. The list layout rebuilds
     * atomically (rewriteLayout's group commit), the pre-retrain files
-    * retire under one version, and BOTH model sidecars (centroids +
-    * the SQL leg's centpack) are filed in the lineage before the new
-    * models land.
+    * retire under one version, and the pre-retrain model file is filed
+    * beside them (`.retired/v<version>/_model`) before the new model
+    * lands.
     */
   def retrain(spark: SparkSession, path: String, corpus: DataFrame,
               idCol: String, vecCol: String, train: DataFrame): Long = {
     val newCents = Knn.trainIvf(train.select(col("vec_id"), col("v"), col("nrm")))
-    val coded = codesWithCid(corpus, idCol, vecCol, newCents)
-    val (_, version) =
-      StoreMaintenance.rewriteLayout(spark, path, "cid")(_ => coded)
-    StoreMaintenance.retireSidecar(path, version, "centroids", s"$path.centroids")
-    StoreMaintenance.retireSidecar(path, version, "centpack", s"$path.centpack")
-    writeModelSidecars(spark, newCents, path)
-    StoreMaintenance.invalidateDriftBaseline(path)
-    version
+    CoarseStore.persist(path, Relayout(spark), ModelFile.Model(Some(newCents)), signWords)(
+      StoreLayout.widened(prepared(corpus, idCol, vecCol)))
   }
 
   /** Frozen-centroid append: new vectors assign against the persisted
-    * sidecar and land in their list directories — no retraining, no
+    * model and land in their list directories — no retraining, no
     * re-encode of existing rows.
     */
-  def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long = {
-    val centroids = IvfIndexStore.readCentroids(df.sparkSession, path)
-    StoreMaintenance.versionedAppend(path,
-        centroids.map { case (cid, _) => s"cid=$cid" }.toSeq) {
-      StoreLayout.clustered(codesWithCid(df, idCol, vecCol, centroids), "cid")
-        .write.mode("append").partitionBy("cid").parquet(path)
-    }
-  }
+  def append(df: DataFrame, idCol: String, vecCol: String, path: String): Long =
+    CoarseStore.persist(path, Append, ModelFile.read(path), signWords)(
+      StoreLayout.widened(prepared(df, idCol, vecCol)))
 
   /** Probe the persisted lists, rank by Hamming INSIDE them, rerank
     * the top-`rerank` survivors with exact cosine against `source`
@@ -2647,9 +2482,8 @@ object IvfBqIndexStore {
   def search(spark: SparkSession, path: String, source: DataFrame,
              queries: DataFrame, idCol: String, vecCol: String, k: Int,
              nprobe: Int = Knn.IvfNprobe, rerank: Int = 20): DataFrame = {
-    val centroids = IvfIndexStore.readCentroids(spark, path)
-    val p = IvfIndexStore.localProbeOf(IvfIndexStore.prepared(queries, idCol, vecCol),
-      centroids, nprobe)
+    val p = IvfIndexStore.localProbeOf(prepared(queries, idCol, vecCol),
+      IvfIndexStore.readCentroids(spark, path), nprobe)
     val probes = p.frame.select(col("query_id"), col("pcid"),
       Knn.bqWords(col("qv"), 0).as("qlo"), Knn.bqWords(col("qv"), 32).as("qhi"))
     val ham = StoreFs.openParquet(spark, path)
@@ -2659,24 +2493,9 @@ object IvfBqIndexStore {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (bit_count(col("code_lo").bitwiseXOR(col("qlo"))) +
           bit_count(col("code_hi").bitwiseXOR(col("qhi")))).cast("long").as("hamming"))
-    val wH = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = ham.withColumn("hrnk", row_number().over(wH))
-      .filter(col("hrnk") <= rerank)
-      .select("query_id", "neighbor_id", "hamming")
-    val src = source
-      .select(col(idCol).as("sid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", V.norm2(col("v")))
-    val qv = IvfIndexStore.prepared(queries, idCol, vecCol)
-      .select(col("vec_id").as("rq"), col("v").as("qv"), col("nrm").as("qn"))
-    val rr = src.join(broadcast(cand), col("sid") === col("neighbor_id"))
-      .join(broadcast(qv), col("query_id") === col("rq"))
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wS = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    rr.withColumn("rnk", row_number().over(wS).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "hamming", "sim")
+    BqIndexStore.rerankTopK(ham, source, idCol, vecCol,
+      prepared(queries, idCol, vecCol)
+        .select(col("vec_id").as("rq"), col("v").as("qv"), col("nrm").as("qn")), k, rerank)
   }
 }
 

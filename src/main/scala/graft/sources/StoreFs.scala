@@ -3,11 +3,8 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -109,8 +106,8 @@ private[graft] object StoreFs {
   def exists(fs: FileSystem, p: Path): Boolean = fs.exists(p)
 
   /** Existence check for a store artifact by path string — the
-    * sidecar-presence probe (`.books`, `.codes`, `.driftstats`,
-    * `.dlbuckets`) every build-once gate and maintainer runs.
+    * presence probe (`.model`, `.codes`, `.driftstats`, `.dlbuckets`)
+    * every build-once gate and maintainer runs.
     */
   def exists(path: String): Boolean = {
     val p = qualified(path)
@@ -255,16 +252,6 @@ private[graft] object StoreFs {
   private def isSummary(s: FileStatus): Boolean =
     s.getPath.getName == "_metadata" || s.getPath.getName == "_common_metadata"
 
-  /** A parquet file reader over the session's Hadoop configuration
-    * (parquet's own defaults would load a fresh Configuration from its
-    * XML resources on every open).
-    */
-  private def parquetFile(f: FileStatus): ParquetFileReader = {
-    val c = conf
-    new ParquetFileReader(HadoopInputFile.fromStatus(f, c),
-      HadoopReadOptions.builder(c, f.getPath).build())
-  }
-
   /** The row schema Spark infers from one footer — Spark's own row
     * schema when the writer stored it, otherwise the parquet schema
     * converted under the session's read confs, the same conversion
@@ -273,7 +260,11 @@ private[graft] object StoreFs {
     */
   private def footerSchema(spark: SparkSession, f: FileStatus): Option[StructType] =
     scala.util.Try {
-      val r = parquetFile(f)
+      // over the session's Hadoop conf (parquet's own defaults would
+      // load a fresh Configuration from its XML resources on every open)
+      val c = conf
+      val r = new ParquetFileReader(HadoopInputFile.fromStatus(f, c),
+        HadoopReadOptions.builder(c, f.getPath).build())
       val meta = try r.getFooter.getFileMetaData finally r.close()
       Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey)) match {
         case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
@@ -309,38 +300,5 @@ private[graft] object StoreFs {
       if (files.exists(isSummary)) None
       else files.headOption.flatMap(footerSchema(spark, _))
     schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-  }
-
-  /** Every row of a small parquet dataset, read on the driver with
-    * parquet-hadoop's example record reader — no Spark job. For the
-    * kilobyte model sidecars a search loads before it plans its scan;
-    * the listing goes through [[leafFiles]], so any Hadoop scheme works.
-    */
-  def readRows(path: String): Seq[Group] = {
-    val files = leafFiles(qualified(path)).filterNot(isSummary)
-    if (files.isEmpty)
-      throw new java.io.FileNotFoundException(s"no parquet data files under $path")
-    files.flatMap { f =>
-      val r = parquetFile(f)
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        val io = new ColumnIOFactory().getColumnIO(schema)
-        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { rg =>
-          val rows = io.getRecordReader(rg, new GroupRecordConverter(schema))
-          Iterator.fill(rg.getRowCount.toInt)(rows.read())
-        }.toList
-      } finally r.close()
-    }
-  }
-
-  /** An `array<double>` field of a [[readRows]] row, in either list
-    * encoding Spark writes (three-level `list.element`, or the legacy
-    * two-level repeated primitive).
-    */
-  def doubles(g: Group, field: String): Array[Double] = {
-    val l = g.getGroup(field, 0)
-    val n = l.getFieldRepetitionCount(0)
-    if (l.getType.getType(0).isPrimitive) Array.tabulate(n)(l.getDouble(0, _))
-    else Array.tabulate(n)(l.getGroup(0, _).getDouble(0, 0))
   }
 }

@@ -536,7 +536,7 @@ object EventStreams {
         val embedded = graft.operators.BatchInference
           .embedStage(batch.toDF(), "payload", loader, batchSize)
         val store = graft.sources.PqIndexStore
-        val trained = graft.sources.StoreFs.exists(s"$indexPath.books")
+        val trained = graft.sources.ModelFile.exists(indexPath)
         if (trained) store.append(embedded, "doc_id", "embedding", indexPath)
         else store.write(embedded, "doc_id", "embedding", indexPath)
         ()
@@ -738,8 +738,8 @@ object EventStreams {
   private val PsiFloor = 1e-3
 
   /** Per-list assignment shares of a bounded deterministic sample of
-    * `rows` under the store's FROZEN centroid sidecar. The sample is
-    * the `sample` lowest vec_ids (stable under batch replay); the
+    * `rows` under the store's FROZEN centroids (its model file). The
+    * sample is the `sample` lowest vec_ids (stable under batch replay); the
     * collect is list-count-bounded, the histogram sample-bounded —
     * the same contracts as training.
     */
@@ -953,7 +953,7 @@ object EventStreams {
                      driftMonitor: Boolean = false): StreamingQuery = {
     val store = graft.sources.IvfPqIndexStore
     val stage = s"$storePath.trainstage"
-    def trained = graft.sources.StoreFs.exists(s"$storePath.books")
+    def trained = graft.sources.ModelFile.exists(storePath)
     // auto-compaction runs AFTER the deferred first-wave training below,
     // not inside the scaffold — compacting a store that does not exist
     // yet is at best a wasted listing
@@ -1075,7 +1075,7 @@ object EventStreams {
                      ArrayType(FloatType)): StreamingQuery = {
     val store = graft.sources.IvfIndexStore
     val stage = s"$storePath.trainstage"
-    def trained = graft.sources.StoreFs.exists(s"$storePath.centroids")
+    def trained = graft.sources.ModelFile.exists(storePath)
     val monitor = driftMonitor || autoRetrain.isDefined
     val q = runVecIngest(spark, srcDir, checkpoint, storePath,
         autoCompactMaxFiles = None, recluster = None,
@@ -1475,7 +1475,7 @@ object EventStreams {
     val root = graft.sources.StoreFs.workPath(s"target/sivfpq_store_$tag")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val emb = Tables.embeddings(spark, dir)
-    if (!graft.sources.StoreFs.exists(s"$store.books")) {
+    if (!graft.sources.ModelFile.exists(store)) {
       graft.sources.IvfPqIndexStore.write(
         emb.filter(col("vec_id") < 0), "vec_id", "embedding", store,
         ivfModel = Some(Knn.ivfCentroids(spark, dir)),
@@ -1844,7 +1844,7 @@ object EventStreams {
     val root = graft.sources.StoreFs.workPath(s"target/sdrift_store_$tag")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val emb = Tables.embeddings(spark, dir)
-    if (!graft.sources.StoreFs.exists(s"$store.books")) {
+    if (!graft.sources.ModelFile.exists(store)) {
       graft.sources.IvfPqIndexStore.write(
         emb.filter(col("vec_id") < 0), "vec_id", "embedding", store,
         ivfModel = Some(Knn.ivfCentroids(spark, dir)),
@@ -1885,7 +1885,7 @@ object EventStreams {
     val tag = gateTag(spark, dir)
     val root = graft.sources.StoreFs.workPath(s"target/sretrain_store_$tag")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
-    if (!graft.sources.StoreFs.exists(s"$store.centroids")) {
+    if (!graft.sources.ModelFile.exists(store)) {
       graft.sources.IvfIndexStore.write(
         Knn.corpus(spark, dir).filter(col("vec_id") < 0)
           .select(col("vec_id"), col("v").as("embedding")),

@@ -23,6 +23,7 @@ import org.apache.hadoop.util.Progressable
   *    documented as advisory there).
   *  - `delete` can crash before removing a matched path (the vacuum
   *    tombstone-vs-reclaim window).
+  *  - `create` can crash after truncating a file, before writing it.
   *
   * Registered under scheme `faulty`; every path delegates to a
   * RawLocalFileSystem with the scheme translated, so Spark jobs,
@@ -53,14 +54,25 @@ class FaultFs extends FileSystem {
     local.open(toLocal(f), bufferSize)
 
   /** S3A-style best-effort exclusivity: `overwrite = false` is NOT
-    * honored — the create succeeds even when the file exists.
+    * honored — the create succeeds even when the file exists. An armed
+    * crash fires before the file exists, or (mid / after) once the
+    * create has truncated it but before any byte lands — the torn-write
+    * window of an in-place overwrite.
     */
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
     FaultFs.maybePause(f.toString, f.toString, FaultFs.CreateOp)
-    local.create(toLocal(f), permission, true, bufferSize, replication,
+    val fire = FaultFs.fires(f.toString, f.toString, FaultFs.CreateOp)
+    if (fire == FaultFs.CrashBefore)
+      throw new FaultFs.InjectedCrash(s"create $f: before create")
+    val out = local.create(toLocal(f), permission, true, bufferSize, replication,
       blockSize, progress)
+    if (fire != FaultFs.NoCrash) {
+      out.close()
+      throw new FaultFs.InjectedCrash(s"create $f: before any byte was written")
+    }
+    out
   }
 
   override def append(f: Path, bufferSize: Int,

@@ -285,20 +285,24 @@ class Round11Spec extends SparkSpec {
       s"clustered IVF recall must be 1.0 per query, got ${ivfClu.mkString(",")}")
   }
 
-  test("IvfPqIndexStore: the .brand parquet sidecar and the marker file agree") {
-    // the marker serves the Scala API, the parquet sidecar serves SQL;
-    // they are written together and must never diverge
-    import graft.sources.IvfPqIndexStore
+  test("IvfPqIndexStore: the residual brand round-trips through the model file") {
+    // one brand representation: the model file's by_residual tensor
+    // serves the Scala API (isResidual) and the SQL leg's brand view
+    import graft.sources.{IvfPqIndexStore, ModelFile}
     val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .filter(col("vec_id") < 100)
     val base = java.nio.file.Files.createTempDirectory("brand_agree").toString
     for ((flavor, res) <- Seq("raw" -> false, "res" -> true)) {
       val p = s"$base/$flavor"
       IvfPqIndexStore.write(emb, "vec_id", "embedding", p, byResidual = res)
-      assert(IvfPqIndexStore.isResidual(p) == res, s"$flavor: marker mismatch")
-      val sidecar = spark.read.parquet(s"$p.brand").collect()
-      assert(sidecar.length == 1 && sidecar(0).getBoolean(0) == res,
-        s"$flavor: .brand sidecar must hold by_residual=$res")
+      assert(IvfPqIndexStore.isResidual(p) == res, s"$flavor: isResidual mismatch")
+      val brand = graft.operators.Safetensors.read(ModelFile.pathOf(p))("by_residual")
+      assert(brand.shape == Seq(1L) && brand.toIntArray.toSeq == Seq(if (res) 1 else 0),
+        s"$flavor: the model file must hold by_residual=$res")
+      GraftSession.sqlModel(spark, p, "by_residual" -> "graft_brand_probe")
+      val view = spark.table("graft_brand_probe").collect()
+      assert(view.length == 1 && view(0).getBoolean(0) == res,
+        s"$flavor: the SQL brand view must read by_residual=$res")
     }
   }
 

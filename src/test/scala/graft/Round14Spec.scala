@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 class Round14Spec extends SparkSpec {
 
   import graft.operators.Knn
-  import graft.sources.{IvfIndexStore, IvfPqIndexStore, StoreMaintenance => SM}
+  import graft.operators.Safetensors
+  import graft.sources.{IvfIndexStore, IvfPqIndexStore, ModelFile, StoreMaintenance => SM}
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -33,6 +34,20 @@ class Round14Spec extends SparkSpec {
 
   private def ids(df: DataFrame): Seq[Long] =
     df.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  /** A model as comparable values: (cid, centroid) pairs, flattened
+    * codebooks and the brand.
+    */
+  private def modelValues(m: ModelFile.Model) =
+    (m.centroids.map(_.toSeq.map { case (c, v) => (c, v.toSeq) }),
+      m.books.map(_.flatten.flatten.toSeq), m.byResidual)
+
+  /** The model file a retrain filed under `version`, decoded. */
+  private def retiredModel(path: String, version: Long): ModelFile.Model = {
+    val f = new java.io.File(ModelFile.retiredPath(path, version))
+    assert(f.isFile, s"pre-retrain model file must be filed at $f")
+    ModelFile.decode(Safetensors.read(f.getPath))
+  }
 
   test("IVF retrain: store search ≡ fresh build trained on the same mixture") {
     val base = tmpDir("ivf_retrain")
@@ -62,23 +77,15 @@ class Round14Spec extends SparkSpec {
       "retrained store must serve exactly what a fresh build under the same model serves")
 
     // lineage: the pre-retrain layout replays whole, the pre-retrain
-    // model is filed beside it
+    // model file is filed beside it
     assert(SM.versions(pathA).contains(version))
     assert(ids(SM.readBefore(spark, pathA, version)) == preIds,
       "readBefore(retrain version) must replay the complete pre-retrain row set")
-    val sidecar = new java.io.File(pathA,
-      s"${SM.RetiredDirName}/v$version/_sidecar_centroids")
-    assert(sidecar.isDirectory && sidecar.listFiles().nonEmpty,
-      "pre-retrain centroid sidecar must be filed in the retire lineage")
-    val retired = spark.read.parquet(sidecar.getAbsolutePath).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    val frozen = Knn.ivfCentroids(spark, sf)
-      .map { case (cid, cv) => (cid, cv.toSeq) }.sortBy(_._1)
-    assert(retired.toSeq == frozen.toSeq,
-      "the retired sidecar must hold the FROZEN (pre-retrain) centroids")
+    val frozen = ModelFile.Model(Some(Knn.ivfCentroids(spark, sf).sortBy(_._1)))
+    assert(modelValues(retiredModel(pathA, version)) == modelValues(frozen),
+      "the retired model file must hold the FROZEN (pre-retrain) centroids")
 
-    // the new sidecar is the retrained model, and append keeps working
+    // the live model is the retrained one, and append keeps working
     // against it (assigns under the new geometry, results still equal
     // the fresh build's after the same append)
     val live = IvfIndexStore.readCentroids(spark, pathA)
@@ -99,6 +106,7 @@ class Round14Spec extends SparkSpec {
 
     IvfPqIndexStore.write(emb, "vec_id", "embedding", pathA)
     IvfPqIndexStore.append(drift, "vec_id", "v", pathA)
+    val pre = ModelFile.read(pathA)
     val version = IvfPqIndexStore.retrain(spark, pathA, union, "vec_id", "v", train)
 
     val cents = Knn.trainIvf(train)
@@ -112,12 +120,10 @@ class Round14Spec extends SparkSpec {
     assert(top(pathA) == top(pathB),
       "retrained IVF-PQ store must equal a fresh dual-model build over the union")
 
-    // both pre-retrain model sidecars are filed in the lineage
-    for (name <- Seq("centroids", "books")) {
-      val d = new java.io.File(pathA,
-        s"${SM.RetiredDirName}/v$version/_sidecar_$name")
-      assert(d.isDirectory && d.listFiles().nonEmpty, s"missing retired $name")
-    }
+    // the whole pre-retrain model (both models and the brand) is
+    // filed in the lineage as one file
+    assert(modelValues(retiredModel(pathA, version)) == modelValues(pre),
+      "the retired model file must hold the pre-retrain centroids, codebooks and brand")
   }
 
   test("group commit: prepared-but-unmarked swaps discard; marked swaps complete") {
@@ -455,13 +461,10 @@ class Round14Spec extends SparkSpec {
         "vec_id", "v", Knn.DefaultK).collect().map(_.toString).sorted.toSeq
     assert(top(pathA) == top(pathB),
       "retrained IVF-BQ store must serve exactly what a fresh build under the same model serves")
-    // both model sidecars filed in the lineage (centroids + the SQL
-    // leg's packed twin)
-    for (name <- Seq("centroids", "centpack")) {
-      val d = new java.io.File(pathA,
-        s"${SM.RetiredDirName}/v$version/_sidecar_$name")
-      assert(d.isDirectory && d.listFiles().nonEmpty, s"missing retired $name")
-    }
+    // the pre-retrain model file is filed in the lineage
+    val frozen = ModelFile.Model(Some(Knn.ivfCentroids(spark, sf).sortBy(_._1)))
+    assert(modelValues(retiredModel(pathA, version)) == modelValues(frozen),
+      "the retired model file must hold the FROZEN (pre-retrain) centroids")
   }
 
   test("retrain gate: appended-cohort recall restored vs the frozen store") {

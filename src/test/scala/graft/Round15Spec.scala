@@ -22,10 +22,10 @@ class Round15Spec extends SparkSpec {
 
   test("safetensors: serialize/parse round-trip preserves every tensor") {
     val p = ConvNet.defaultParams
-    val bytes = Safetensors.serializeI32(Seq(
-      "conv.weight" -> (Seq(4L, 3L, 3L), p.conv),
-      "fc.weight" -> (Seq(8L, 4L, 3L, 3L), p.fc),
-      "fc.bias" -> (Seq(8L), p.bias)))
+    val bytes = Safetensors.serialize(Seq(
+      "conv.weight" -> (Seq(4L, 3L, 3L), Safetensors.I32(p.conv)),
+      "fc.weight" -> (Seq(8L, 4L, 3L, 3L), Safetensors.I32(p.fc)),
+      "fc.bias" -> (Seq(8L), Safetensors.I32(p.bias))))
     val ts = Safetensors.parse(bytes)
     assert(ts.keySet == Set("conv.weight", "fc.weight", "fc.bias"))
     assert(ts("conv.weight").shape == Seq(4L, 3L, 3L))

@@ -291,15 +291,15 @@ class Round16Spec extends SparkSpec {
   }
 
   test("safetensors serialize: JSON-unsafe tensor names are rejected") {
-    val vals = (Seq(1L), Array(7))
+    val vals = (Seq(1L), Safetensors.I32(Array(7)))
     intercept[IllegalArgumentException] {
-      Safetensors.serializeI32(Seq("bad\"name" -> vals))
+      Safetensors.serialize(Seq("bad\"name" -> vals))
     }
     intercept[IllegalArgumentException] {
-      Safetensors.serializeF64(Seq("bad\\name" -> (Seq(1L), Array(1.0))))
+      Safetensors.serialize(Seq("bad\\name" -> (Seq(1L), Safetensors.F64(Array(1.0)))))
     }
     // a safe name still serializes and round-trips
-    val ok = Safetensors.parse(Safetensors.serializeI32(Seq("fine.name" -> vals)))
+    val ok = Safetensors.parse(Safetensors.serialize(Seq("fine.name" -> vals)))
     assert(ok("fine.name").toIntArray.toSeq == Seq(7))
   }
 }

@@ -9,14 +9,15 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.col
+import graft.operators.Knn
 import graft.sources.{BqIndexStore, Bm25Store, IndexStore, IvfBqIndexStore, IvfIndexStore,
   IvfPqIndexStore, MaxsimStore, PqIndexStore, StoreFs}
 
 /** The driver-side store opens read exactly what Spark reads: the
   * footer-schema open returns `spark.read.parquet`'s schema and rows
   * for every store dataset, falls back where inference would do more
-  * than read one footer, and the driver-read model sidecars are
-  * bit-equal to a Spark read of the same files.
+  * than read one footer, and the driver-read models are bit-equal to
+  * the models the store was written with.
   */
 class StoreOpenParitySpec extends SparkSpec {
 
@@ -26,16 +27,11 @@ class StoreOpenParitySpec extends SparkSpec {
 
   private def bits(v: Array[Double]): Seq[Long] = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
 
-  private def sparkCentroids(path: String): Seq[(Int, Seq[Long])] =
-    spark.read.parquet(s"$path.centroids").collect()
-      .map(r => (r.getInt(0), bits(r.getSeq[Double](1).toArray))).toSeq.sortBy(_._1)
+  private def centroidBits(cents: Array[(Int, Array[Double])]): Seq[(Int, Seq[Long])] =
+    cents.toSeq.map { case (c, v) => (c, bits(v)) }.sortBy(_._1)
 
-  private def sparkBooks(path: String): Map[(Int, Int), Seq[Long]] =
-    spark.read.parquet(s"$path.books").collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> bits(r.getSeq[Double](2).toArray)).toMap
-
-  private def driverBooks(path: String): Map[(Int, Int), Seq[Long]] =
-    PqIndexStore.readBooks(spark, path).zipWithIndex.flatMap { case (perM, m) =>
+  private def bookBits(books: Array[Array[Array[Double]]]): Map[(Int, Int), Seq[Long]] =
+    books.zipWithIndex.flatMap { case (perM, m) =>
       perM.zipWithIndex.map { case (cv, k) => (m, k) -> bits(cv) }
     }.toMap
 
@@ -61,7 +57,11 @@ class StoreOpenParitySpec extends SparkSpec {
       "vec_id", "embedding", s"$base/ivf")
     val datasets = new java.io.File(base).listFiles().filter(_.isDirectory)
       .map(_.getPath).filterNot(p => new java.io.File(p).getName.startsWith(".")).sorted
-    assert(datasets.length >= 20, s"expected every store and sidecar, got ${datasets.toSeq}")
+    // every store's data and parquet sidecars (the models live in
+    // `.model` files, which are not parquet)
+    assert(datasets.map(new java.io.File(_).getName).toSet == Set("bm25", "bm25.dl", "bm25.stats",
+      "bq", "flat", "flat.meta", "ivf", "ivfbq", "ivfpq", "ivfpq_res", "maxsim", "mih", "pq.codes"),
+      s"expected every store dataset, got ${datasets.toSeq}")
     for (p <- datasets) {
       val opened = StoreFs.openParquet(spark, p)
       val read = spark.read.parquet(p)
@@ -149,25 +149,22 @@ class StoreOpenParitySpec extends SparkSpec {
     } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("driver-read centroids and codebooks are bit-equal to the Spark read") {
-    import spark.implicits._
+  test("driver-read centroids and codebooks are bit-equal to the models written") {
     val base = tmp("model_parity")
     val emb = Tables.embeddings(spark, sf)
     val store = s"$base/ivfpq"
-    IvfPqIndexStore.write(emb, "vec_id", "embedding", store)
-    // multi-part sidecars: the same rows spread over three part files
-    val multi = s"$base/multi"
-    IvfIndexStore.readCentroids(spark, store).toSeq.map { case (c, v) => (c, v.toSeq) }
-      .toDF("cid", "cv").repartition(3).write.parquet(s"$multi.centroids")
-    PqIndexStore.readBooks(spark, store).zipWithIndex.flatMap { case (perM, m) =>
-      perM.zipWithIndex.map { case (cv, k) => (m, k, cv.toSeq) }
-    }.toSeq.toDF("m", "k", "cv").repartition(3).write.parquet(s"$multi.books")
-    assert(new java.io.File(s"$multi.books").listFiles().count(_.getName.endsWith(".parquet")) == 3)
+    val (cents, books) = (Knn.ivfCentroids(spark, sf), Knn.pqBooksFor(spark, sf))
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", store,
+      ivfModel = Some(cents), pqModel = Some(books))
     spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFs].getName)
-    for (p <- Seq(store, multi, s"faulty://$store", s"faulty://$multi")) {
-      val cents = IvfIndexStore.readCentroids(spark, p).toSeq.map { case (c, v) => (c, bits(v)) }
-      assert(cents == sparkCentroids(p), s"$p: centroids differ")
-      assert(driverBooks(p) == sparkBooks(p), s"$p: codebooks differ")
+    for (p <- Seq(store, s"faulty://$store")) {
+      assert(centroidBits(IvfIndexStore.readCentroids(spark, p)) == centroidBits(cents),
+        s"$p: centroids differ")
+      assert(bookBits(PqIndexStore.readBooks(spark, p)) == bookBits(books), s"$p: codebooks differ")
+      // the model file imports directly through the interop readers
+      val file = graft.sources.ModelFile.pathOf(p)
+      assert(centroidBits(IvfIndexStore.importModelSafetensors(file)) == centroidBits(cents), p)
+      assert(bookBits(PqIndexStore.importBooksSafetensors(file)) == bookBits(books), p)
     }
   }
 
