@@ -15,7 +15,9 @@ import graft.operators.Dedup
   *
   * Two registration paths with identical function sets:
   *  - `spark.sql.extensions=graft.GraftExtensions` (cluster config /
-  *    builder.withExtensions) — the SparkSessionExtensions route;
+  *    builder.withExtensions, which `GraftSession.builder` does) — the
+  *    SparkSessionExtensions route, which also installs the CosineTopK
+  *    planner strategy;
   *  - `GraftFunctions.register(spark)` — imperative, for an already
   *    running session.
   *

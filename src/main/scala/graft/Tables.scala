@@ -56,6 +56,8 @@ object GraftSession {
     SparkSession.builder()
       .master(master)
       .appName("graft")
+      // graft_* SQL functions and the CosineTopK planner strategy
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -362,17 +362,15 @@ object Knn {
     * oracle as v_knn_exact — hash equality IS the correctness proof.
     */
   def vKnnCustom(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.{GraftShim => Shim}
-    if (!spark.experimental.extraStrategies.contains(graft.plans.CosineTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.CosineTopKStrategy
+    import graft.plans.{CosineTopK, TopKProbe, TopKScore}
     val e = corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
     // the query set is tiny and user-supplied in the reference flow
     // (an uploaded image's embedding) — driver-resident by contract
-    val qs = e.filter(col("vec_id") < NumQueries).orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))).toSeq
-    Shim.ofRows(spark,
-        graft.plans.CosineTopK(qs, DefaultK, Shim.logicalPlan(e)))
+    val qs = e.filter(col("vec_id") < NumQueries).collect()
+      .map(r => TopKProbe(r.get(0), vec = r.getSeq[Double](1).toArray,
+        norm = r.getAs[java.lang.Double](2)))
+    CosineTopK.search(qs.toSeq, DefaultK, TopKScore.cosine, keyed = false,
+        e.schema("vec_id").copy(name = "query_id"), e)
       .orderBy("query_id", "rnk")
   }
 
@@ -898,17 +896,16 @@ object Knn {
                             queries: Array[(Long, Array[Double])],
                             books: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
-    broadcast(queries.map { case (qid, qv) => (qid, pqQueryTable(qv, books)) }
+    broadcast(queries.map { case (qid, qv) => (qid, pqQueryTable(qv, books).map(_.toSeq).toSeq) }
       .toSeq.toDF("query_id", "qdt"))
   }
 
   /** One query's ADC lookup table: qdt(m)(k) = ||sv_m − books(m)(k)||². */
   private[graft] def pqQueryTable(qv: Array[Double],
-                                  books: Array[Array[Array[Double]]]): Seq[Seq[Double]] = {
+                                  books: Array[Array[Array[Double]]]): Array[Array[Double]] = {
     val dsub = 64 / PqSubspaces
-    (0 until PqSubspaces).map(m =>
-      (0 until PqCodes).map(k =>
-        l2sq(qv.slice(m * dsub, (m + 1) * dsub), books(m)(k))).toSeq).toSeq
+    Array.tabulate(PqSubspaces, PqCodes)((m, k) =>
+      l2sq(qv.slice(m * dsub, (m + 1) * dsub), books(m)(k)))
   }
 
   /** ADC distance from a codes array + lookup table: Σ_m qdt(m)(codes(m))
@@ -1645,15 +1642,17 @@ object Knn {
       centroids: Map[Int, Array[Double]],
       books: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
-    val dsub = 64 / PqSubspaces
     broadcast(probes.map { case (qid, pcid, qv) =>
-      val cv = centroids(pcid)
-      val qres = Array.tabulate(qv.length)(i => qv(i) - cv(i))
-      (qid, pcid, (0 until PqSubspaces).map(m =>
-        (0 until PqCodes).map(k =>
-          l2sq(qres.slice(m * dsub, (m + 1) * dsub), books(m)(k))).toSeq).toSeq)
+      (qid, pcid, pqResQueryTable(qv, centroids(pcid), books).map(_.toSeq).toSeq)
     }.toSeq.toDF("query_id", "pcid", "qdt"))
   }
+
+  /** One (query, list) residual lookup table: qdt(m)(k) =
+    * ||(q − c)_m − books(m)(k)||² for the list's centroid `cv`.
+    */
+  private[graft] def pqResQueryTable(qv: Array[Double], cv: Array[Double],
+                                     books: Array[Array[Array[Double]]]): Array[Array[Double]] =
+    pqQueryTable(Array.tabulate(qv.length)(i => qv(i) - cv(i)), books)
 
   def vIvfPqRes(spark: SparkSession, dir: String): DataFrame =
     vIvfPqResOn(spark, dir, Dedup.spread(

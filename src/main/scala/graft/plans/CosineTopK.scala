@@ -1,160 +1,410 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import scala.collection.mutable.ArrayBuffer
 
-/** Whole-operator k-NN: exact cosine top-k as ONE custom physical
-  * operator instead of nested-loop-join → WindowGroupLimit → Window.
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession, GraftShim => Shim}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{
+  Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+
+/** The engine's one top-k operator for driver-resident query sets: a
+  * scan scored against a handful of queries (or their probe rows) and
+  * cut to k per query, as ONE custom physical operator instead of a
+  * broadcast nested-loop join → window → `row_number` filter.
   *
-  * The composed plan materializes |corpus|×|queries| similarity rows
-  * before group-limiting them; this operator never materializes the
-  * pair space — each corpus partition folds its rows into per-query
-  * bounded heaps (k entries each), emits k×|queries| rows per
-  * partition, and a single tiny merge pass ranks the final top-k.
-  * Map-side output is k×q rows per partition regardless of corpus
-  * size, which is the property that holds at 100 TB.
+  * The composed plan materializes |scan|×|probes| score rows before
+  * group-limiting them, and costs a broadcast job, the scan job and a
+  * result job for the window. This operator never materializes the
+  * pair space: each scan partition folds its rows into per-query
+  * bounded heaps (k entries each) and emits at most k×|queries| rows;
+  * one internal RDD shuffle merges them into a single partition that
+  * ranks the final top-k. The whole search is one Spark job — no
+  * broadcast exchange, no AQE stage boundary, no window — and its
+  * map-side output is k×q rows per partition regardless of scan size,
+  * which is the property that holds at 100 TB.
   *
-  * Semantics identical to the reference's IndexFlatIP.search over
-  * L2-normalized vectors (/root/reference/app.py:138-144) and to the
-  * engine's composed v_knn_exact (same oracle hash): similarity
-  * rounded to 6 dp, ties broken by ascending neighbor id.
+  * Probe rows can carry a partition key (band0, cid): a scanned row is
+  * then scored only against the probes of its own key, which is the
+  * probe join's `key = pkey` condition. They can carry `q_<match>`
+  * values: a scanned row must equal them on the match columns (SQL
+  * equality, so a NULL on either side never matches). A row is never
+  * scored against its own query (`id != query_id`), and a row with a
+  * NULL id is never a candidate.
+  *
+  * Scores and ranks are exactly the window formulation's:
+  *  - [[TopKScore.Cosine]]: round(dot(qv, v) / (qn·nrm), 6), ranked
+  *    sim DESC NULLS LAST, neighbor id ASC — IndexFlatIP.search over
+  *    L2-normalized vectors (/root/reference/app.py:138-144);
+  *  - [[TopKScore.Adc]]: round(sqrt(Σ_m qdt(m)(codes(m))), 6), ranked
+  *    adc_dist ASC NULLS FIRST, neighbor id ASC — the PQ searches'
+  *    asymmetric distance, with per-query or per-(query, list) tables.
+  * Arithmetic follows Spark's: a NULL vector or norm scores NULL; a
+  * zero divisor throws DIVIDE_BY_ZERO under ANSI mode and scores NULL
+  * without it; `round` passes NaN and ±Inf through; NaN ranks above
+  * every number and -0.0 ties 0.0.
   */
 case class CosineTopK(
-    queries: Seq[(Long, Array[Double], Double)], // (id, vector, norm)
+    probes: Seq[TopKProbe],
     k: Int,
+    score: TopKScore,
+    keyed: Boolean,
     child: LogicalPlan,
     // in the constructor, NOT a val: tree transforms re-copy the node
     // and a regenerated output would orphan the exprIds the analyzer
     // already bound upstream
-    output: Seq[Attribute] = CosineTopK.freshOutput()) extends UnaryNode {
+    output: Seq[Attribute]) extends UnaryNode {
+  override protected def stringArgs: Iterator[Any] = CosineTopK.args(probes, k, score, keyed)
   // the outputs are generated by this operator, not drawn from the
   // child — without this, CheckAnalysis reports them as missing inputs
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
+  override def producedAttributes: AttributeSet = AttributeSet(output)
   // the exec reads every child column positionally; without declaring
   // them referenced, ColumnPruning hands the exec zero-field rows for
   // aggregates that need none of OUR columns (count(*)) — the Unsafe
   // field reads then walk off the row buffer
-  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    child.outputSet
+  override def references: AttributeSet = child.outputSet
   override protected def withNewChildInternal(c: LogicalPlan): LogicalPlan =
     copy(child = c)
 }
 
-object CosineTopK {
-  def freshOutput(): Seq[Attribute] = Seq(
-    AttributeReference("query_id", LongType, nullable = false)(),
-    AttributeReference("rnk", LongType, nullable = false)(),
-    AttributeReference("neighbor_id", LongType, nullable = false)(),
-    AttributeReference("sim", DoubleType, nullable = false)())
+/** How a scanned row scores against a probe, and which end ranks first. */
+sealed trait TopKScore extends Serializable {
+  /** The score column's name. */
+  def name: String
+  /** Scan columns the score reads after the id. */
+  def width: Int
 }
 
-/** Planner strategy mapping the logical node to its physical operator
-  * (injected via SparkSessionExtensions or experimental.extraStrategies).
+object TopKScore {
+  /** The cosine score under the session's current ANSI setting. */
+  def cosine: Cosine = Cosine(SQLConf.get.ansiEnabled)
+
+  /** Round-6 cosine over scan rows (id, v, nrm, …), ranked sim DESC.
+    * `ansi` is Divide's failOnError when the search was built.
+    */
+  final case class Cosine(ansi: Boolean) extends TopKScore {
+    def name: String = "sim"
+    def width: Int = 2
+  }
+
+  /** Round-6 ADC distance over scan rows (id, codes, …), ranked
+    * adc_dist ASC.
+    */
+  case object Adc extends TopKScore {
+    def name: String = "adc_dist"
+    def width: Int = 1
+  }
+}
+
+/** One driver-resident probe row, in external (Row) values: the query
+  * it ranks for, the partition key it probes (keyed searches), the
+  * values its `q_<match>` columns carry, and the score's query side —
+  * the query vector and its norm (cosine) or the lookup table (ADC).
+  * A NULL query id, key or match value matches no scanned row.
+  */
+final case class TopKProbe(
+    queryId: Any,
+    key: Any = null,
+    matches: Seq[Any] = Nil,
+    vec: Array[Double] = null,
+    norm: java.lang.Double = null,
+    table: Array[Array[Double]] = null)
+
+object CosineTopK {
+  /** The plan-string arguments of the node and its exec. */
+  private[plans] def args(probes: Seq[TopKProbe], k: Int, score: TopKScore,
+                          keyed: Boolean): Iterator[Any] =
+    Iterator(s"k=$k", score.name, s"${probes.length} probes", if (keyed) "keyed" else "all rows")
+
+  /** The top-k rows of `scan` per query of `probes`, as one Spark job.
+    *
+    * `scan` columns, in order: the id (integral), then `v, nrm`
+    * (cosine) or `codes` (ADC), then the partition key when `keyed`,
+    * then the match columns, whose values each probe's `matches`
+    * carries in the same order. Output: `queryId` (the query id
+    * column's field), the match columns as scanned, `rnk` (long, 1..k),
+    * `neighbor_id` (the scan id's type) and the score column; one
+    * partition, so a caller's `orderBy` adds no exchange.
+    */
+  def search(probes: Seq[TopKProbe], k: Int, score: TopKScore, keyed: Boolean,
+             queryId: StructField, scan: DataFrame): DataFrame = {
+    val spark = scan.sparkSession
+    CosineTopKStrategy.setup(spark)
+    val child = Shim.logicalPlan(scan)
+    val in = child.output
+    def integral(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    require(integral(queryId.dataType) && integral(in.head.dataType),
+      s"top-k ids must be integral: query ${queryId.dataType}, scan ${in.head.dataType}")
+    require(!keyed || in(1 + score.width).dataType == IntegerType,
+      s"top-k partition keys must be int, got ${in(1 + score.width).dataType}")
+    val matches = in.drop(1 + score.width + (if (keyed) 1 else 0))
+    def fresh(a: Attribute) = AttributeReference(a.name, a.dataType, a.nullable)()
+    val output = AttributeReference(queryId.name, queryId.dataType, queryId.nullable)() +:
+      matches.map(fresh) :+
+      AttributeReference("rnk", LongType, nullable = false)() :+
+      AttributeReference("neighbor_id", in.head.dataType, in.head.nullable)() :+
+      AttributeReference(score.name, DoubleType, nullable = true)()
+    Shim.ofRows(spark, CosineTopK(probes, k, score, keyed, child, output))
+  }
+}
+
+/** Planner strategy mapping the logical node to its physical operator.
+  * `GraftSession.builder` installs it through [[graft.GraftExtensions]];
+  * [[setup]] installs it into a session built any other way.
   */
 object CosineTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: CosineTopK =>
-      CosineTopKExec(p.queries, p.k, p.output, planLater(p.child)) :: Nil
+      CosineTopKExec(p.probes, p.k, p.score, p.keyed, p.output, planLater(p.child)) :: Nil
     case _ => Nil
   }
+
+  /** Adds this strategy to `spark`'s planner unless it already plans it
+    * (through the extensions or an earlier call). Idempotent.
+    */
+  def setup(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(this))
+      spark.experimental.extraStrategies = this +: spark.experimental.extraStrategies
 }
 
 object CosineTopKExec {
-  /** Spark's ROUND(x, 6) exactly (HALF_UP over the decimal repr). */
+  /** Spark's ROUND(x, 6) on a double: NaN and ±Inf pass through, the
+    * rest rounds HALF_UP over the decimal representation.
+    */
   def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
       .doubleValue()
-
-  /** (sim desc, neighbor asc) — better entries first. */
-  def better(s1: Double, n1: Long, s2: Double, n2: Long): Boolean =
-    s1 > s2 || (s1 == s2 && n1 < n2)
 }
 
-/** Physical operator. Child contract: rows are (id: long,
-  * v: array<double>, nrm: double). Output: (query_id, rnk,
-  * neighbor_id, sim) for rnk ≤ k.
-  */
+/** Physical operator; see [[CosineTopK]] for the scan and output layout. */
 case class CosineTopKExec(
-    queries: Seq[(Long, Array[Double], Double)],
+    probes: Seq[TopKProbe],
     k: Int,
+    score: TopKScore,
+    keyed: Boolean,
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
-  import CosineTopKExec._
+
+  override def outputPartitioning: Partitioning = SinglePartition
+  override protected def stringArgs: Iterator[Any] = CosineTopK.args(probes, k, score, keyed)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val qs = queries.toArray
-    val kk = k
-    val schema = output // capture (serializable attrs)
-
-    def newHeaps(): Array[scala.collection.mutable.ArrayBuffer[(Long, Double)]] =
-      Array.fill(qs.length)(new scala.collection.mutable.ArrayBuffer[(Long, Double)](kk + 1))
-
-    def insert(heap: scala.collection.mutable.ArrayBuffer[(Long, Double)],
-               nid: Long, sim: Double): Unit = {
-      // heap is kept sorted best-first; binary-search-free since k≈5
-      var i = heap.length
-      while (i > 0 && better(sim, nid, heap(i - 1)._2, heap(i - 1)._1)) i -= 1
-      if (i < kk) {
-        heap.insert(i, (nid, sim))
-        if (heap.length > kk) heap.remove(kk)
-      }
-    }
-
-    // partial pass: each corpus partition folds into per-query heaps
-    // and ships k×q plain tuples (not InternalRows) across a REAL
-    // shuffle boundary — a narrow coalesce would pull every corpus
-    // partition into the single merge task, serializing the scan
-    val partial: RDD[(Int, Long, Double)] = child.execute().mapPartitions { iter =>
-      val heaps = newHeaps()
-      iter.foreach { r =>
-        // fail loud if an optimizer change ever prunes the child again
-        // (Unsafe positional reads on a narrower row would segfault)
-        require(r.numFields >= 3,
-          s"CosineTopKExec expects (id, v, nrm) rows, got ${r.numFields} fields")
-        val nid = r.getLong(0)
-        val v = r.getArray(1).toDoubleArray()
-        val nrm = r.getDouble(2)
-        var qi = 0
-        while (qi < qs.length) {
-          val (qid, qv, qn) = qs(qi)
-          if (nid != qid) {
-            var s = 0.0
-            val n = math.min(qv.length, v.length)
-            var j = 0
-            while (j < n) { s += qv(j) * v(j); j += 1 }
-            insert(heaps(qi), nid, round6(s / (qn * nrm)))
-          }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (heap, qi) =>
-        heap.iterator.map { case (nid, sim) => (qi, nid, sim) }
-      }
-    }
-
-    // merge: k×q tuples per partition — tiny, one reducer ranks them
-    partial.repartition(1).mapPartitions { iter =>
-      val heaps = newHeaps()
-      iter.foreach { case (qi, nid, sim) => insert(heaps(qi), nid, sim) }
-      val proj = UnsafeProjection.create(schema.map(_.dataType).toArray)
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-      heaps.iterator.zipWithIndex.flatMap { case (heap, qi) =>
-        heap.iterator.zipWithIndex.map { case ((nid, sim), i) =>
-          row.update(0, qs(qi)._1)
-          row.update(1, (i + 1).toLong)
-          row.update(2, nid)
-          row.update(3, sim)
-          proj(row).copy(): InternalRow
-        }
-      }
-    }
+    val fold = new TopKFold(probes.toArray, k, score, keyed, child.output, output)
+    val scanned = child.execute()
+    // the partial heaps cross a REAL shuffle boundary: a narrow
+    // coalesce would pull every scan partition into the single merge
+    // task, serializing the scan
+    val partial = scanned.mapPartitions(fold.partial(_))
+    val merged = if (scanned.getNumPartitions == 1) partial else partial.repartition(1)
+    merged.mapPartitions(fold.merge(_))
   }
 
   override protected def withNewChildInternal(c: SparkPlan): SparkPlan =
     copy(child = c)
+}
+
+/** A candidate in a query's heap: its score (or NULL), its id as a
+  * long for the tie-break, and the (neighbor id, match columns…) it
+  * outputs, copied out of the scan row.
+  */
+private[plans] final case class TopKHit(slot: Int, score: Double, none: Boolean, nid: Long,
+                                        row: UnsafeRow)
+
+/** The per-partition fold and the final merge of [[CosineTopKExec]],
+  * shipped to the tasks. One heap per distinct query id, so probe rows
+  * of one query — and duplicate query rows — rank together, as the
+  * window's PARTITION BY query_id does.
+  */
+private[plans] final class TopKFold(
+    probes: Array[TopKProbe], k: Int, score: TopKScore, keyed: Boolean,
+    in: Seq[Attribute], out: Seq[Attribute]) extends Serializable {
+
+  private val nMatch = out.length - 4
+  private val keyAt = 1 + score.width
+  private val matchAt = keyAt + (if (keyed) 1 else 0)
+  private val idType = in.head.dataType
+  private val matchTypes = in.slice(matchAt, matchAt + nMatch).map(_.dataType).toArray
+  private val desc = score.isInstanceOf[TopKScore.Cosine]
+  private val codeType = in(1).dataType match {
+    case ArrayType(t, _) => t
+    case t => t
+  }
+  private val ansi = score match {
+    case TopKScore.Cosine(a) => a
+    case TopKScore.Adc => false
+  }
+
+  // query id → heap slot; probe → its id as a long and its catalyst
+  // match values
+  private val (queryIds, slotOf, qlong, matchVals) = {
+    val qidOf = CatalystTypeConverters.createToCatalystConverter(out.head.dataType)
+    val matchOf = matchTypes.map(CatalystTypeConverters.createToCatalystConverter)
+    val ids = ArrayBuffer[Any]()
+    val slots = probes.map { p =>
+      if (p.queryId == null || p.matches.contains(null) || (keyed && p.key == null)) -1
+      else {
+        val q = qidOf(p.queryId)
+        val s = ids.indexOf(q)
+        if (s >= 0) s else { ids += q; ids.length - 1 }
+      }
+    }
+    (ids.toArray, slots, probes.map(p => if (p.queryId == null) 0L else longOf(p.queryId)),
+      probes.map(p => p.matches.zipWithIndex.map { case (v, j) => matchOf(j)(v) }.toArray))
+  }
+  private val live = probes.indices.filter(slotOf(_) >= 0).toArray
+  private val byKey: Map[Int, Array[Int]] =
+    if (!keyed) Map.empty
+    else live.groupBy(i => probes(i).key.asInstanceOf[Int])
+
+  private def longOf(v: Any): Long = v match {
+    case b: java.lang.Byte => b.longValue
+    case s: java.lang.Short => s.longValue
+    case i: java.lang.Integer => i.longValue
+    case l: java.lang.Long => l.longValue
+  }
+
+  private def idAt(r: InternalRow): Long = idType match {
+    case ByteType => r.getByte(0).toLong
+    case ShortType => r.getShort(0).toLong
+    case IntegerType => r.getInt(0).toLong
+    case _ => r.getLong(0)
+  }
+
+  /** Whether (s1, n1, id1) ranks before (s2, n2, id2): DESC NULLS LAST
+    * for cosine, ASC NULLS FIRST for ADC, then id ASC.
+    */
+  private def before(s1: Double, n1: Boolean, id1: Long,
+                     s2: Double, n2: Boolean, id2: Long): Boolean = {
+    val c =
+      if (n1 || n2) { if (n1 == n2) 0 else if (n1 == desc) 1 else -1 }
+      else if (desc) SQLOrderingUtil.compareDoubles(s2, s1)
+      else SQLOrderingUtil.compareDoubles(s1, s2)
+    c < 0 || (c == 0 && id1 < id2)
+  }
+
+  private def enters(heap: ArrayBuffer[TopKHit], s: Double, n: Boolean, id: Long): Boolean =
+    heap.length < k || before(s, n, id, heap.last.score, heap.last.none, heap.last.nid)
+
+  private def insert(heap: ArrayBuffer[TopKHit], h: TopKHit): Unit = {
+    // kept sorted best-first; a linear walk, since k is small
+    var i = heap.length
+    while (i > 0 && before(h.score, h.none, h.nid, heap(i - 1).score, heap(i - 1).none,
+        heap(i - 1).nid)) i -= 1
+    if (i < k) {
+      heap.insert(i, h)
+      if (heap.length > k) heap.remove(k)
+    }
+  }
+
+  private def heaps(): Array[ArrayBuffer[TopKHit]] =
+    Array.fill(queryIds.length)(new ArrayBuffer[TopKHit](k + 1))
+
+  /** Spark's Divide over doubles: a NULL or (without ANSI) zero divisor
+    * is NULL, a NULL dividend is NULL, and a zero divisor throws.
+    */
+  private def cosine(p: TopKProbe, v: Array[Double], r: InternalRow): java.lang.Double = {
+    if (p.norm == null || r.isNullAt(2)) return null
+    val den = p.norm.doubleValue * r.getDouble(2)
+    if (den == 0 && !ansi) return null
+    if (p.vec == null || v == null) return null
+    if (den == 0) throw Shim.divideByZero()
+    var s = 0.0
+    val n = math.min(p.vec.length, v.length)
+    var j = 0
+    while (j < n) { s += p.vec(j) * v(j); j += 1 }
+    CosineTopKExec.round6(s / den)
+  }
+
+  /** Σ_m qdt(m)(codes(m)) folded from 0.0 in ascending m, then sqrt. */
+  private def adc(p: TopKProbe, codes: ArrayData): java.lang.Double = {
+    if (codes == null) return null
+    val t = p.table
+    var s = 0.0
+    var m = 0
+    while (m < t.length) {
+      if (codes.isNullAt(m)) return null
+      s += t(m)(codeType match {
+        case ByteType => codes.getByte(m).toInt
+        case ShortType => codes.getShort(m).toInt
+        case LongType => codes.getLong(m).toInt
+        case _ => codes.getInt(m)
+      })
+      m += 1
+    }
+    CosineTopKExec.round6(math.sqrt(s))
+  }
+
+  def partial(rows: Iterator[InternalRow]): Iterator[TopKHit] = {
+    val hs = heaps()
+    val payload = UnsafeProjection.create(
+      (0 +: (matchAt until matchAt + nMatch)).map(i => BoundReference(i, in(i).dataType, true)))
+    val matchOrd = matchTypes.map(TypeUtils.getInterpretedOrdering)
+    rows.foreach { r =>
+      require(r.numFields == in.length,
+        s"CosineTopKExec expects ${in.length}-field scan rows, got ${r.numFields}")
+      val ps =
+        if (r.isNullAt(0)) Array.emptyIntArray
+        else if (!keyed) live
+        else if (r.isNullAt(keyAt)) Array.emptyIntArray
+        else byKey.getOrElse(r.getInt(keyAt), Array.emptyIntArray)
+      if (ps.nonEmpty) {
+        val nid = idAt(r)
+        var v: Array[Double] = null
+        var codes: ArrayData = null
+        if (desc) { if (!r.isNullAt(1)) v = r.getArray(1).toDoubleArray() }
+        else if (!r.isNullAt(1)) codes = r.getArray(1)
+        var i = 0
+        while (i < ps.length) {
+          val pi = ps(i)
+          val p = probes(pi)
+          var ok = qlong(pi) != nid
+          var j = 0
+          while (ok && j < nMatch) {
+            val o = matchAt + j
+            ok = !r.isNullAt(o) && matchOrd(j).equiv(r.get(o, matchTypes(j)), matchVals(pi)(j))
+            j += 1
+          }
+          if (ok) {
+            val s = if (desc) cosine(p, v, r) else adc(p, codes)
+            val none = s == null
+            val sv = if (none) 0.0 else s.doubleValue
+            val heap = hs(slotOf(pi))
+            if (enters(heap, sv, none, nid))
+              insert(heap, TopKHit(slotOf(pi), sv, none, nid, payload(r).copy()))
+          }
+          i += 1
+        }
+      }
+    }
+    hs.iterator.flatMap(_.iterator)
+  }
+
+  def merge(hits: Iterator[TopKHit]): Iterator[InternalRow] = {
+    val hs = heaps()
+    hits.foreach(h => insert(hs(h.slot), h))
+    val proj = UnsafeProjection.create(out.map(_.dataType).toArray)
+    val row = new GenericInternalRow(out.length)
+    hs.iterator.zipWithIndex.flatMap { case (heap, slot) =>
+      heap.iterator.zipWithIndex.map { case (h, i) =>
+        row.update(0, queryIds(slot))
+        var j = 0
+        while (j < nMatch) { row.update(1 + j, h.row.get(1 + j, matchTypes(j))); j += 1 }
+        row.update(1 + nMatch, (i + 1).toLong)
+        row.update(2 + nMatch, h.row.get(0, idType))
+        if (h.none) row.setNullAt(3 + nMatch) else row.update(3 + nMatch, h.score)
+        proj(row).copy(): InternalRow
+      }
+    }
+  }
 }

@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.{HashFns => H, VectorFns => V}
+import graft.plans.{CosineTopK, TopKProbe, TopKScore}
 
 /** Persistent vector index — the Spark-native re-expression of the
   * reference's index lifecycle (faiss.write_index / read_index +
@@ -183,20 +184,50 @@ object IndexStore {
   def readMetadata(spark: SparkSession, path: String): DataFrame =
     StoreFs.openParquet(spark, s"$path.meta")
 
-  /** A small query set's probe rows, planned on the driver: one row per
-    * (query, probed partition key), the key last. `queries` counts the
-    * query rows the probe was built from.
+  /** Above this many query rows, a store search hands its query set to
+    * the distributed route (broadcast join + windowed rank, or DPP for
+    * the IVF family): collecting a big query set to the driver is a
+    * driver-memory liability, while below it the driver-resident
+    * top-k ([[graft.plans.CosineTopK]]) is one Spark job. The size
+    * check reads at most threshold + 1 query rows, so it stays
+    * O(threshold) even when the query set is itself a 100 TB-side
+    * table.
     */
-  private[sources] final case class LocalProbe(frame: DataFrame, rows: Array[Row], queries: Int) {
+  val SearchBatchThreshold = 64
+
+  /** A small query set's probe rows, planned on the driver: one row per
+    * (query, probed partition key), laid out (query_id, qv, qn,
+    * q_<match>…, key). `queries` counts the query rows the probe was
+    * built from.
+    */
+  private[sources] final case class LocalProbe(spark: SparkSession, schema: StructType,
+                                               rows: Array[Row], queries: Int) {
     /** The distinct probed keys — the static partition IN list (a null
       * key, from a null query vector, probes nothing).
       */
     def keys: Seq[Int] = rows.toSeq.map(r => r.get(r.length - 1)).collect { case k: Int => k }.distinct
+
+    /** The probe rows as a local relation, for a broadcast side. */
+    lazy val frame: DataFrame = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+    def queryId: StructField = schema("query_id")
+
+    /** The rows as keyed top-k probes: cosine ones, or ADC ones whose
+      * lookup table is `table(row)`.
+      */
+    def probes(table: Row => Array[Array[Double]] = null): Seq[TopKProbe] = rows.toSeq.map { r =>
+      val (qid, key, matches) = (r.get(0), r.get(r.length - 1), (3 until r.length - 1).map(r.get))
+      if (table == null) TopKProbe(qid, key, matches, vecOf(r, 1), r.getAs[java.lang.Double](2))
+      else TopKProbe(qid, key, matches, table = table(r))
+    }
   }
 
+  /** Column `i` of a collected row as a vector (NULL stays null). */
+  private[sources] def vecOf(r: Row, i: Int): Array[Double] =
+    if (r.isNullAt(i)) null else r.getSeq[Double](i).toArray
+
   /** Collect `probe` once — its last column is each query's array of
-    * probed partition keys — and explode that array on the driver,
-    * returning the rows as a local relation for the broadcast side.
+    * probed partition keys — and explode that array on the driver.
     * Over a local query frame the whole probe SQL folds into the
     * collected plan, so this schedules no Spark job, and nothing
     * upstream of the probe recomputes when the search runs.
@@ -209,16 +240,16 @@ object IndexStore {
       r.getSeq[Any](n).map(k => Row.fromSeq(head :+ k))
     }
     val schema = StructType(probe.schema.take(n)).add(probe.schema(n).name, IntegerType)
-    LocalProbe(probe.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
-      rows, collected.length)
+    LocalProbe(probe.sparkSession, schema, rows, collected.length)
   }
 
-  /** Shared serving tail for every exact-rescoring store search (the
-    * flat and IVF stores): exact round-6 cosine from joined (query_id,
-    * qv, qn, <idCol>, v, nrm) candidate rows, then the k-bounded window
-    * — the ranking contract (round-6 sim, neighbor_id ASC tiebreak)
-    * lives in exactly one place so the searches cannot drift. A
-    * filtered search's `matchCols` ride through to the output.
+  /** Shared serving tail of the distributed exact-rescoring routes (the
+    * flat and IVF stores' large query sets, the filtered exact route):
+    * exact round-6 cosine from joined (query_id, qv, qn, <idCol>, v,
+    * nrm) candidate rows, then the k-bounded window — the same ranking
+    * contract (round-6 sim, neighbor_id ASC tiebreak) as the
+    * driver-resident [[graft.plans.CosineTopK]]. A filtered search's
+    * `matchCols` ride through to the output.
     */
   private[sources] def rescoreTopK(cands: DataFrame, k: Int, idCol: String = "id",
                                    matchCols: Seq[String] = Nil): DataFrame = {
@@ -231,8 +262,8 @@ object IndexStore {
         :+ col("rnk") :+ col("neighbor_id") :+ col("sim"): _*)
   }
 
-  /** Exact top-k against a loaded index: broadcast queries, windowed
-    * rank — IndexFlatIP.search over the persisted corpus.
+  /** Exact top-k against a loaded index — IndexFlatIP.search over the
+    * persisted corpus; see [[searchFiltered]].
     */
   def search(index: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int): DataFrame =
@@ -240,24 +271,34 @@ object IndexStore {
 
   /** Attribute-filtered exact search: neighbors must agree with the
     * query row on every column in `matchCols` (the vector-DB "search
-    * with filter" — per-tenant / per-class lookups). The equality is
-    * part of the broadcast-join condition, so out-of-filter rows are
-    * discarded at probe time and the top-k heap never sees them. For
-    * a STATIC predicate, pre-filter the index frame instead
-    * (`search(read(spark, path).filter(p), …)`) — simple comparisons
-    * on inline meta columns push into the parquet scan
+    * with filter" — per-tenant / per-class lookups; each match column
+    * has the same type in `index` and `queries`). Out-of-filter rows
+    * never reach the top-k heap. Up to SearchBatchThreshold query rows
+    * are collected and the scan is ranked by the driver-resident top-k
+    * in one Spark job; a larger query set is broadcast and ranked by a
+    * window. For a STATIC predicate, pre-filter the index frame
+    * instead (`search(read(spark, path).filter(p), …)`) — simple
+    * comparisons on inline meta columns push into the parquet scan
     * (PushedFilters, spec-asserted).
     */
   def searchFiltered(index: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, matchCols: Seq[String]): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("query_id")
-          +: col(vecCol).cast("array<double>").as("qv")
-          +: matchCols.map(c => col(c).as(s"q_$c")): _*)
-        .withColumn("qn", V.norm2(col("qv"))))
-    val cond = matchCols.map(c => col(c) === col(s"q_$c"))
-      .foldLeft(col("id") =!= col("query_id"))(_ && _)
-    rescoreTopK(index.join(q, cond), k, matchCols = matchCols)
+    val q = queries.select(col(idCol).as("query_id")
+        +: col(vecCol).cast("array<double>").as("qv")
+        +: matchCols.map(c => col(c).as(s"q_$c")): _*)
+      .withColumn("qn", V.norm2(col("qv")))
+    val rows = q.limit(SearchBatchThreshold + 1).collect()
+    if (rows.length > SearchBatchThreshold) {
+      val cond = matchCols.map(c => col(c) === col(s"q_$c"))
+        .foldLeft(col("id") =!= col("query_id"))(_ && _)
+      return rescoreTopK(index.join(broadcast(q), cond), k, matchCols = matchCols)
+    }
+    val probes = rows.toSeq.map(r => TopKProbe(r.get(0),
+      matches = matchCols.indices.map(j => r.get(2 + j)),
+      vec = vecOf(r, 1), norm = r.getAs[java.lang.Double](2 + matchCols.length)))
+    CosineTopK.search(probes, k, TopKScore.cosine, keyed = false, q.schema("query_id"),
+      index.select(col("id") +: col("v").cast("array<double>") +: col("nrm")
+        +: matchCols.map(col): _*))
   }
 
   /** Multiprobe ANN top-k over the persisted banded layout: each query
@@ -269,22 +310,24 @@ object IndexStore {
     * STATIC `band0 IN (...)` partition filter (the searchRadius / IVF
     * search pattern — the probe set is tiny by the uploaded-query
     * contract), so the scan reads at most (BandBits+1)/2^BandBits of
-    * the store's files; candidates still meet the broadcast probe
-    * frame on an equi-join of the probe key (each Hamming-≤1 pair on
-    * exactly one probe — no dedup needed), and exact cosine rescoring
-    * + the k-bounded window run inside the probed buckets only.
+    * the store's files; candidates still meet the driver-resident
+    * probe rows on the probe key (each Hamming-≤1 pair on exactly one
+    * probe — no dedup needed), and exact cosine rescoring + the
+    * k-bounded heaps run inside the probed buckets only, in one Spark
+    * job ([[graft.plans.CosineTopK]]).
     */
   def searchAnnProbed(spark: SparkSession, path: String, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
-    // collected once: the probe-bucket IN list and the broadcast side
-    // both come from the same driver-side rows
+    // collected once: the probe-bucket IN list and the probe rows both
+    // come from the same driver-side rows
     val q = localProbe(bandedQueries(queries, idCol, vecCol, dim)
-      .withColumn("pb", array(
-        col("qb0") +: (0 until BandBits).map(r => col("qb0").bitwiseXOR(lit(1 << r))): _*)))
+      .select(col("query_id"), col("qv"), col("qn"), array(
+        col("qb0") +: (0 until BandBits).map(r => col("qb0").bitwiseXOR(lit(1 << r))): _*)
+        .as("pb")))
     val index = read(spark, path)
       .where(col("band0").isin(q.keys: _*)) // static file-level pruning
-    rescoreTopK(index.join(broadcast(q.frame),
-      col("band0") === col("pb") && col("id") =!= col("query_id")), k)
+    CosineTopK.search(q.probes(), k, TopKScore.cosine, keyed = true, q.queryId,
+      index.select("id", "v", "nrm", "band0"))
   }
 
   /** ANN top-k: queries are banded with the same hyperplanes, then the
@@ -300,8 +343,8 @@ object IndexStore {
   }
 
   /** (query_id, qv, qn, qb0) query rows banded with the store's hyperplanes. */
-  private def bandedQueries(queries: DataFrame, idCol: String, vecCol: String,
-                            dim: Int): DataFrame =
+  private[sources] def bandedQueries(queries: DataFrame, idCol: String, vecCol: String,
+                                     dim: Int): DataFrame =
     withBands(
       queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v"))
         .withColumn("nrm", V.norm2(col("v"))), dim)
@@ -1566,6 +1609,7 @@ private[sources] object CoarseStore {
   */
 object IvfIndexStore {
   import graft.operators.Knn
+  import IndexStore.SearchBatchThreshold
   import CoarseStore.{Append, Overwrite, Relayout}
 
   private[sources] def prepared(df: DataFrame, idCol: String, vecCol: String,
@@ -1688,9 +1732,9 @@ object IvfIndexStore {
     probeInput(q, Nil).withColumn("pcid", explode(probedCids(centroids, nprobe)))
 
   /** [[probeOf]] for a small query set, collected once and planned on
-    * the driver ([[IndexStore.localProbe]]): the broadcast probe frame
-    * plus the probed list ids for the static IN filter — shared with
-    * the IVF-PQ and IVF-BQ searches.
+    * the driver ([[IndexStore.localProbe]]): the probe rows plus the
+    * probed list ids for the static IN filter — shared with the IVF-PQ
+    * and IVF-BQ searches.
     */
   private[sources] def localProbeOf(q: DataFrame,
                                     centroids: Array[(Int, Array[Double])],
@@ -1714,26 +1758,24 @@ object IvfIndexStore {
         +: matchCols.map(c => col(c).as(s"q_$c")): _*)
       .withColumn("nrm", V.norm2(col("v")))
 
-  private def rescored(index: DataFrame, qProbe: DataFrame, k: Int): DataFrame =
-    IndexStore.rescoreTopK(index.join(broadcast(qProbe), probeJoin(Nil)), k, "vec_id")
-
-  /** Above this many query rows, search() hands off to the
-    * distributed-probe DPP path: collecting a big query set's probe
-    * rows to the driver is a driver-memory liability, while below it
-    * the static IN filter is cheaper than DPP's runtime subquery. The
-    * size check is the row count of the probe collect itself, which
-    * reads at most threshold + 1 query rows, so it stays O(threshold)
-    * even when the query set is itself a 100 TB-side table.
+  /** The probed lists' rows, pruned at file level by the static IN
+    * filter: (vec_id, `payload`…, cid, match…), the scan layout of
+    * [[graft.plans.CosineTopK]].
     */
-  val SearchBatchThreshold = 64
+  private[sources] def probedScan(spark: SparkSession, path: String, p: IndexStore.LocalProbe,
+                                  payload: Seq[String], matchCols: Seq[String]): DataFrame =
+    StoreFs.openParquet(spark, path)
+      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
+      .select((("vec_id" +: payload :+ "cid") ++ matchCols).map(col): _*)
 
   /** nprobe-pruned exact-cosine top-k against the persisted lists.
-    * Small query sets (the uploaded-image flow) are broadcast and
-    * their probed list ids applied to the scan as a static IN filter,
-    * so the parquet source prunes to the probed cid=NN directories at
-    * file level before any row is read. Query sets above
-    * SearchBatchThreshold rows route through searchBatch automatically
-    * (same results — the paths differ only in how the scan prunes).
+    * Small query sets (the uploaded-image flow) are collected with
+    * their probed list ids; the ids prune the scan as a static IN
+    * filter, so the parquet source reads only the probed cid=NN
+    * directories, and the driver-resident top-k ranks each query's
+    * lists in one Spark job. Query sets above SearchBatchThreshold
+    * rows route through searchBatch automatically (same results — the
+    * paths differ only in how the scan prunes and ranks).
     */
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
@@ -1742,18 +1784,17 @@ object IvfIndexStore {
       readCentroids(spark, path), nprobe)
     if (p.queries > SearchBatchThreshold)
       return searchBatch(spark, path, queries, idCol, vecCol, k, nprobe)
-    val index = StoreFs.openParquet(spark, path)
-      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
-    rescored(index, p.frame, k)
+    CosineTopK.search(p.probes(), k, TopKScore.cosine, keyed = true, p.queryId,
+      probedScan(spark, path, p, Seq("v", "nrm"), Nil))
   }
 
   /** Attribute-filtered search on the persisted IVF index — the
     * "search with filter" contract composed with coarse pruning: the
     * scan still reads only the probed cid=NN list directories (static
     * IN filter), and INSIDE those lists the per-query metadata
-    * equality rides the probe join, so out-of-filter rows never reach
-    * the top-k heap. Requires the store to have been written with the
-    * match columns inline (`write(..., metaCols)`) — a sidecar join on
+    * equality is checked before scoring, so out-of-filter rows never
+    * reach the top-k heap. Requires the store to have been written with
+    * the match columns inline (`write(..., metaCols)`) — a sidecar join on
     * the corpus side would shuffle the big side, the exact thing the
     * inline layout avoids (v_filtered_store's argument, applied to
     * the IVF layout).
@@ -1764,9 +1805,8 @@ object IvfIndexStore {
                      nprobe: Int = Knn.IvfNprobe): DataFrame = {
     val p = localProbeOf(matchQueries(queries, col(idCol), vecCol, matchCols),
       readCentroids(spark, path), nprobe, matchCols.map(c => s"q_$c"))
-    val index = StoreFs.openParquet(spark, path).where(col("cid").isin(p.keys: _*))
-    IndexStore.rescoreTopK(index.join(broadcast(p.frame), probeJoin(matchCols)), k,
-      "vec_id", matchCols)
+    CosineTopK.search(p.probes(), k, TopKScore.cosine, keyed = true, p.queryId,
+      probedScan(spark, path, p, Seq("v", "nrm"), matchCols))
   }
 
   /** Survivor ceiling for [[searchFilteredRouted]]'s exact route: at
@@ -1850,9 +1890,11 @@ object IvfIndexStore {
     */
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
-                  nprobe: Int = Knn.IvfNprobe): DataFrame =
-    rescored(StoreFs.openParquet(spark, path),
-      probeOf(prepared(queries, idCol, vecCol), readCentroids(spark, path), nprobe), k)
+                  nprobe: Int = Knn.IvfNprobe): DataFrame = {
+    val probe = probeOf(prepared(queries, idCol, vecCol), readCentroids(spark, path), nprobe)
+    IndexStore.rescoreTopK(StoreFs.openParquet(spark, path).join(broadcast(probe),
+      probeJoin(Nil)), k, "vec_id")
+  }
 }
 
 /** Persistent product-quantized index — the compressed counterpart of
@@ -1860,8 +1902,8 @@ object IvfIndexStore {
   * as 8 one-byte codes per vector plus the codebooks in the store's
   * model file (`$path.model`, [[ModelFile]]), 32× smaller than the
   * raw embeddings. Search decodes nothing: the ADC distance table is
-  * built driver-side from the loaded codebooks and joined to the code
-  * table.
+  * built driver-side from the loaded codebooks and folded over each
+  * code row inside the scan ([[graft.plans.CosineTopK]]).
   */
 object PqIndexStore {
   import graft.operators.Knn
@@ -1935,27 +1977,28 @@ object PqIndexStore {
 
   /** ADC top-k against the persisted codes: queries are collected
     * (driver-resident by contract — the uploaded-image flow), their
-    * per-query lookup tables ride the broadcast side, and the distance
-    * is a pure per-row fold over the codes array — no exploded rows,
-    * no re-merge; the top-k window is the only shuffle (the same
-    * map-side shape as the in-session v_pq).
+    * per-query lookup tables are built on the driver, and the distance
+    * is a pure per-row fold over the codes array inside the
+    * driver-resident top-k — one Spark job, no exploded rows.
     */
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int): DataFrame = {
     val books = readBooks(spark, path)
-    val coded = StoreFs.openParquet(spark, s"$path.codes")
-    val qs = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .orderBy("query_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    adcTopK(coded.join(Knn.pqQueryTables(spark, qs, books), col("vec_id") =!= col("query_id")), k)
+    val probes = queries
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .collect().toSeq
+      .map(r => TopKProbe(r.getLong(0),
+        table = Knn.pqQueryTable(r.getSeq[Double](1).toArray, books)))
+    CosineTopK.search(probes, k, TopKScore.Adc, keyed = false,
+      StructField("query_id", LongType, nullable = false),
+      StoreFs.openParquet(spark, s"$path.codes").select("vec_id", "codes"))
   }
 
-  /** Shared serving tail of the ADC searches (PQ and IVF-PQ): the ADC
-    * distance of joined (query_id, qdt, vec_id, codes) candidates, then
-    * the k-bounded window (adc_dist ASC, vec_id ASC); a filtered
-    * search's `matchCols` ride through to the output.
+  /** Serving tail of the distributed ADC route (IVF-PQ searchBatch):
+    * the ADC distance of joined (query_id, qdt, vec_id, codes)
+    * candidates, then the k-bounded window (adc_dist ASC, vec_id ASC)
+    * — the driver-resident top-k's ADC ranking; a filtered search's
+    * `matchCols` ride through to the output.
     */
   private[sources] def adcTopK(cands: DataFrame, k: Int,
                                matchCols: Seq[String] = Nil): DataFrame = {
@@ -2081,9 +2124,9 @@ object IvfPqIndexStore {
 
   /** nprobe-pruned ADC top-k: probed list ids apply to the scan as a
     * static IN filter (file-level pruning — the small-query contract,
-    * like IvfIndexStore.search), per-query ADC lookup tables ride the
-    * broadcast, distance is a per-row fold over the codes array, and
-    * the top-k window is the only shuffle.
+    * like IvfIndexStore.search), per-query ADC lookup tables are built
+    * on the driver, and the distance is a per-row fold over the codes
+    * array inside the driver-resident top-k — one Spark job.
     */
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
@@ -2091,9 +2134,9 @@ object IvfPqIndexStore {
     probedSearch(spark, path, ModelFile.read(path), queries, idCol, vecCol, k, Nil, nprobe)
 
   /** The small-query search behind [[search]] and [[searchFiltered]],
-    * over a model read once: the probed lists' static IN scan, the
-    * per-query tables on the broadcast side, `matchCols` in the probe
-    * join.
+    * over a model read once: the probed lists' static IN scan, one
+    * probe row per (query, probed list) carrying the query's lookup
+    * table, `matchCols` checked before scoring.
     */
   private def probedSearch(spark: SparkSession, path: String, m: ModelFile.Model,
                            queries: DataFrame, idCol: String, vecCol: String, k: Int,
@@ -2102,33 +2145,33 @@ object IvfPqIndexStore {
     val p = IvfIndexStore.localProbeOf(
       IvfIndexStore.matchQueries(queries, col(idCol).cast("long"), vecCol, matchCols),
       m.coarse, nprobe, matchCols.map(c => s"q_$c"))
-    val coded = StoreFs.openParquet(spark, path)
-      .where(col("cid").isin(p.keys: _*)) // static file-level pruning
-    val probes =
-      if (m.residual)
+    val (probes, queryId) =
+      if (m.residual) {
         // branded residual store (never filtered): tables are per
         // (query, probed list) — the query residual is taken against
         // THAT list's centroid
-        Knn.pqResQueryTables(spark,
-          p.rows.map(r => (r.getLong(0), r.getInt(3), r.getSeq[Double](1).toArray)),
-          m.coarse.toMap, m.codebooks)
-      else adcProbes(spark, p, m.codebooks)
-    PqIndexStore.adcTopK(coded.join(probes, IvfIndexStore.probeJoin(matchCols)), k, matchCols)
+        val cents = m.coarse.toMap
+        (p.probes(r => Knn.pqResQueryTable(r.getSeq[Double](1).toArray,
+          cents(r.getInt(r.length - 1)), m.codebooks)),
+          StructField("query_id", LongType, nullable = false))
+      } else {
+        val tables = p.rows.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+          .map { case (qid, qv) => qid -> Knn.pqQueryTable(qv.toArray, m.codebooks) }
+        (p.probes(r => tables(r.getLong(0))), p.queryId)
+      }
+    CosineTopK.search(probes, k, TopKScore.Adc, keyed = true, queryId,
+      IvfIndexStore.probedScan(spark, path, p, Seq("codes"), matchCols))
   }
 
-  /** The broadcast side of a raw-code ADC search: the local probe
-    * rows with each query's lookup table appended as `qdt`, built once
-    * per query on the driver.
+  /** Past this list count, the residual encoding derives from a
+    * broadcast centroid JOIN instead of a literal map: a production
+    * nlist (4k–64k × 64 dims) as a typedLit would put a multi-MB
+    * literal in the plan tree — slow analysis/codegen and a bloated
+    * task binary shipped with EVERY stage. At gate-scale nlist the
+    * literal is cheaper (no extra join node); Round12Spec pins the two
+    * forms rank-identical on a residual store.
     */
-  private def adcProbes(spark: SparkSession, p: IndexStore.LocalProbe,
-                        books: Array[Array[Array[Double]]]): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val tables = p.rows.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      .map { case (qid, qv) => qid -> Knn.pqQueryTable(qv.toArray, books) }
-    val rows = p.rows.map(r => Row.fromSeq(r.toSeq :+ tables(r.getLong(0))))
-    val schema = p.frame.schema.add("qdt", ArrayType(ArrayType(DoubleType, false), false))
-    broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
-  }
+  private[graft] val ResidualLiteralMaxLists = 256
 
   /** Batch-serving variant: the probe set AND the per-query ADC lookup
     * tables stay DISTRIBUTED — no driver collect anywhere. The scan
@@ -2140,16 +2183,6 @@ object IvfPqIndexStore {
     * identical to search()'s). Use when the query set is itself a
     * table, not a handful of uploads.
     */
-  /** Past this list count, the residual encoding derives from a
-    * broadcast centroid JOIN instead of a literal map: a production
-    * nlist (4k–64k × 64 dims) as a typedLit would put a multi-MB
-    * literal in the plan tree — slow analysis/codegen and a bloated
-    * task binary shipped with EVERY stage. At gate-scale nlist the
-    * literal is cheaper (no extra join node); Round12Spec pins the two
-    * forms rank-identical on a residual store.
-    */
-  private[graft] val ResidualLiteralMaxLists = 256
-
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
                   nprobe: Int = Knn.IvfNprobe): DataFrame =

@@ -568,7 +568,7 @@ object EventStreams {
   /** Streaming ANN serving — the query-side twin of runEmbedIngest
     * (that one maintains the index from a stream; this one ANSWERS a
     * stream of queries against a persisted index): each micro-batch
-    * of query vectors broadcasts against the loaded flat store and
+    * of query vectors is searched against the loaded flat store and
     * appends its exact top-k to the result sink. The index is read
     * once per batch from its persisted layout (no driver-resident
     * state beyond the path), so the serving job restarts from its

@@ -1,13 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.sources.{IndexStore, IvfIndexStore, IvfPqIndexStore, PqIndexStore}
 
 /** Spark jobs of the similar-case lookup against already-built stores
   * (query → top-k → metadata): opening a store and loading its model
-  * sidecars happen on the driver, so a one-query search schedules jobs
-  * only for its scan and its top-k.
+  * happen on the driver, and a small query set is ranked inside the
+  * scan (CosineTopK), so a one-query search is one Spark job.
   */
 class StoreOpenJobsSpec extends SparkSpec {
 
@@ -15,6 +16,10 @@ class StoreOpenJobsSpec extends SparkSpec {
   private lazy val flat = s"$base/flat"
   private lazy val ivf = s"$base/ivf"
   private lazy val ivfpq = s"$base/ivfpq"
+  private lazy val pq = s"$base/pq"
+  private lazy val flatMeta = s"$base/flat_meta"
+  private lazy val ivfMeta = s"$base/ivf_meta"
+  private lazy val ivfpqMeta = s"$base/ivfpq_meta"
 
   private lazy val built: Unit = {
     val emb = Tables.embeddings(spark, sf)
@@ -23,14 +28,22 @@ class StoreOpenJobsSpec extends SparkSpec {
     IvfIndexStore.write(emb, "vec_id", "embedding", ivf)
     IvfPqIndexStore.write(emb, "vec_id", "embedding", ivfpq,
       ivfModel = Some(IvfIndexStore.readCentroids(spark, ivf)))
+    PqIndexStore.write(emb, "vec_id", "embedding", pq,
+      model = Some(PqIndexStore.readBooks(spark, ivfpq)))
+    IndexStore.write(emb, "vec_id", "embedding", flatMeta, dim = 64, metaCols = Seq("label"))
+    IvfIndexStore.write(emb, "vec_id", "embedding", ivfMeta,
+      model = Some(IvfIndexStore.readCentroids(spark, ivf)), metaCols = Seq("label"))
+    IvfPqIndexStore.write(emb, "vec_id", "embedding", ivfpqMeta,
+      ivfModel = Some(IvfIndexStore.readCentroids(spark, ivf)),
+      pqModel = Some(PqIndexStore.readBooks(spark, ivfpq)), metaCols = Seq("label"))
   }
 
   /** One uploaded query: a local frame, as a serving client builds it. */
   private def query: DataFrame = {
     import spark.implicits._
-    val v = Tables.embeddings(spark, sf).where(col("vec_id") === 7)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    Seq((900000007L, v)).toDF("id", "v")
+    val r = Tables.embeddings(spark, sf).where(col("vec_id") === 7)
+      .select(col("embedding").cast("array<double>"), col("label")).head()
+    Seq((900000007L, r.getSeq[Double](0), r.getInt(1))).toDF("id", "v", "label")
   }
 
   test("model sidecars load on the driver: zero Spark jobs") {
@@ -57,14 +70,48 @@ class StoreOpenJobsSpec extends SparkSpec {
   test("one-query searches schedule only their scan and top-k") {
     built
     val q = query
+    val label = Seq("label")
     val searches = Seq[(String, () => DataFrame)](
       "flat" -> (() => IndexStore.search(IndexStore.read(spark, flat), q, "id", "v", 5)),
       "lsh" -> (() => IndexStore.searchAnnProbed(spark, flat, q, "id", "v", 5, 64)),
       "ivf" -> (() => IvfIndexStore.search(spark, ivf, q, "id", "v", 5)),
       "ivfpq" -> (() => IvfPqIndexStore.search(spark, ivfpq, q, "id", "v", 5)),
+      "pq" -> (() => PqIndexStore.search(spark, pq, q, "id", "v", 5)),
+      "flat_filtered" -> (() =>
+        IndexStore.searchFiltered(IndexStore.read(spark, flatMeta), q, "id", "v", 5, label)),
+      "ivf_filtered" -> (() =>
+        IvfIndexStore.searchFiltered(spark, ivfMeta, q, "id", "v", 5, label)),
+      "ivfpq_filtered" -> (() =>
+        IvfPqIndexStore.searchFiltered(spark, ivfpqMeta, q, "id", "v", 5, label)),
       "meta" -> (() => IndexStore.readMetadata(spark, flat).where(col("vec_id").isin(1L, 2L, 3L))))
-    val jobs = searches.map { case (tier, search) => tier -> countJobs(search().collect()) }.toMap
-    assert(jobs == Map("flat" -> 3, "lsh" -> 3, "ivf" -> 3, "ivfpq" -> 3, "meta" -> 1),
-      s"jobs per one-query search: $jobs")
+    val jobs = searches.map { case (tier, search) =>
+      var n = 0
+      val j = countJobs { n = search().collect().length }
+      assert(n > 0, s"$tier returned no rows")
+      tier -> j
+    }.toMap
+    assert(jobs == searches.map(_._1 -> 1).toMap, s"jobs per one-query search: $jobs")
+  }
+
+  test("a session built without GraftSession.builder plans a store search") {
+    built
+    val want = IndexStore.search(IndexStore.read(spark, flat), query, "id", "v", 5)
+      .orderBy("rnk").collect()
+    // a new session on the running context, without GraftExtensions
+    val plain = org.apache.spark.sql.SparkSession.builder().create()
+    try {
+      def installed = plain.sessionState.planner.strategies.count(_ == plans.CosineTopKStrategy)
+      assert(installed == 0)
+      val q = plain.createDataFrame(query.collect().toSeq.asJava, query.schema)
+      val got = IndexStore.search(IndexStore.read(plain, flat), q, "id", "v", 5)
+        .orderBy("rnk").collect()
+      assert(got.length == 5 && got.toSeq == want.toSeq)
+      assert(installed == 1)
+      IndexStore.search(IndexStore.read(plain, flat), q, "id", "v", 5).collect()
+      assert(installed == 1, "setup must be idempotent")
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
   }
 }
