@@ -42,7 +42,7 @@ import org.apache.spark.sql.types._
   * Scores and ranks are exactly the window formulation's:
   *  - [[TopKScore.Cosine]]: round(dot(qv, v) / (qn·nrm), 6), ranked
   *    sim DESC NULLS LAST, neighbor id ASC — IndexFlatIP.search over
-  *    L2-normalized vectors (/root/reference/app.py:138-144);
+  *    L2-normalized vectors (the reference app.py:138-144);
   *  - [[TopKScore.Adc]]: round(sqrt(Σ_m qdt(m)(codes(m))), 6), ranked
   *    adc_dist ASC NULLS FIRST, neighbor id ASC — the PQ searches'
   *    asymmetric distance, with per-query or per-(query, list) tables.

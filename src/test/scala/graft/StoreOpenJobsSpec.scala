@@ -91,6 +91,12 @@ class StoreOpenJobsSpec extends SparkSpec {
       tier -> j
     }.toMap
     assert(jobs == searches.map(_._1 -> 1).toMap, s"jobs per one-query search: $jobs")
+    // the top-k output is one partition: a caller's ordering adds no
+    // exchange, so no job either
+    val ordered = searches.filter(_._1 != "meta").map { case (tier, search) =>
+      tier -> countJobs(search().orderBy("query_id", "rnk").collect())
+    }.toMap
+    assert(ordered.values.forall(_ == 1), s"jobs per ordered one-query search: $ordered")
   }
 
   test("a session built without GraftSession.builder plans a store search") {
