@@ -363,14 +363,15 @@ object Knn {
     */
   def vKnnCustom(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.{CosineTopK, TopKProbe, TopKScore}
+    import org.apache.spark.sql.types.StructType
     val e = corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
     // the query set is tiny and user-supplied in the reference flow
     // (an uploaded image's embedding) — driver-resident by contract
     val qs = e.filter(col("vec_id") < NumQueries).collect()
       .map(r => TopKProbe(r.get(0), vec = r.getSeq[Double](1).toArray,
         norm = r.getAs[java.lang.Double](2)))
-    CosineTopK.search(qs.toSeq, DefaultK, TopKScore.cosine, keyed = false,
-        e.schema("vec_id").copy(name = "query_id"), e)
+    CosineTopK.search(qs.toSeq, DefaultK, TopKScore.Cosine, keyed = false,
+        StructType(Seq(e.schema("vec_id").copy(name = "query_id"))), e)
       .orderBy("query_id", "rnk")
   }
 

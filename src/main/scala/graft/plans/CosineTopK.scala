@@ -1,18 +1,17 @@
 package graft.plans
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession, GraftShim => Shim}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
-  Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow,
-  UnsafeProjection, UnsafeRow}
+  Attribute, AttributeReference, AttributeSet, BoundReference, Cast, EvalMode,
+  GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** The engine's one top-k operator for driver-resident query sets: a
@@ -37,7 +36,12 @@ import org.apache.spark.sql.types._
   * values: a scanned row must equal them on the match columns (SQL
   * equality, so a NULL on either side never matches). A row is never
   * scored against its own query (`id != query_id`), and a row with a
-  * NULL id is never a candidate.
+  * NULL id is never a candidate. Ids and match values may have any
+  * orderable type; a probe-side value of another type than the scan
+  * column equals the scan values it equals after a TRY cast to the
+  * scan type that casts back to itself — none when it does not (a
+  * long 2^32 + 1 equals no int, 1.5 no long), as Spark's widening
+  * comparison has it for numbers.
   *
   * Scores and ranks are exactly the window formulation's:
   *  - [[TopKScore.Cosine]]: round(dot(qv, v) / (qn·nrm), 6), ranked
@@ -47,14 +51,15 @@ import org.apache.spark.sql.types._
   *    adc_dist ASC NULLS FIRST, neighbor id ASC — the PQ searches'
   *    asymmetric distance, with per-query or per-(query, list) tables.
   * Arithmetic follows Spark's: a NULL vector or norm scores NULL; a
-  * zero divisor throws DIVIDE_BY_ZERO under ANSI mode and scores NULL
-  * without it; `round` passes NaN and ±Inf through; NaN ranks above
-  * every number and -0.0 ties 0.0.
+  * zero divisor throws DIVIDE_BY_ZERO when the scan's session has ANSI
+  * mode on and scores NULL without it; `round` passes NaN and ±Inf
+  * through; NaN ranks above every number and -0.0 ties 0.0.
   */
 case class CosineTopK(
-    probes: Seq[TopKProbe],
+    probes: Seq[ScanProbe],
     k: Int,
     score: TopKScore,
+    ansi: Boolean,
     keyed: Boolean,
     child: LogicalPlan,
     // in the constructor, NOT a val: tree transforms re-copy the node
@@ -83,13 +88,8 @@ sealed trait TopKScore extends Serializable {
 }
 
 object TopKScore {
-  /** The cosine score under the session's current ANSI setting. */
-  def cosine: Cosine = Cosine(SQLConf.get.ansiEnabled)
-
-  /** Round-6 cosine over scan rows (id, v, nrm, …), ranked sim DESC.
-    * `ansi` is Divide's failOnError when the search was built.
-    */
-  final case class Cosine(ansi: Boolean) extends TopKScore {
+  /** Round-6 cosine over scan rows (id, v, nrm, …), ranked sim DESC. */
+  case object Cosine extends TopKScore {
     def name: String = "sim"
     def width: Int = 2
   }
@@ -117,45 +117,89 @@ final case class TopKProbe(
     norm: java.lang.Double = null,
     table: Array[Array[Double]] = null)
 
+/** A [[TopKProbe]] resolved against the scan on the driver, in catalyst
+  * values: `qid` in the query id's type (the heap key and the output),
+  * `self` in the scan id's type (null when it equals no scan id), and
+  * the match values in the scan columns' types. `live` is false when
+  * the probe can match no scanned row.
+  */
+final case class ScanProbe(qid: Any, self: Any, key: Any, matches: Array[Any], live: Boolean,
+                           vec: Array[Double], norm: java.lang.Double,
+                           table: Array[Array[Double]])
+
 object CosineTopK {
   /** The plan-string arguments of the node and its exec. */
-  private[plans] def args(probes: Seq[TopKProbe], k: Int, score: TopKScore,
+  private[plans] def args(probes: Seq[ScanProbe], k: Int, score: TopKScore,
                           keyed: Boolean): Iterator[Any] =
     Iterator(s"k=$k", score.name, s"${probes.length} probes", if (keyed) "keyed" else "all rows")
 
   /** The top-k rows of `scan` per query of `probes`, as one Spark job.
     *
-    * `scan` columns, in order: the id (integral), then `v, nrm`
-    * (cosine) or `codes` (ADC), then the partition key when `keyed`,
-    * then the match columns, whose values each probe's `matches`
-    * carries in the same order. Output: `queryId` (the query id
-    * column's field), the match columns as scanned, `rnk` (long, 1..k),
-    * `neighbor_id` (the scan id's type) and the score column; one
-    * partition, so a caller's `orderBy` adds no exchange.
+    * `scan` columns, in order: the id, then `v, nrm` (cosine) or
+    * `codes` (ADC), then the partition key (int) when `keyed`, then
+    * the match columns. `query` types the probes' values: the query
+    * id's field, then one field per match column, in scan order.
+    * Output: the query id (`query`'s first field), the match columns
+    * as scanned, `rnk` (long, 1..k), `neighbor_id` (the scan id's type)
+    * and the score column; one partition, so a caller's `orderBy` adds
+    * no exchange. Division follows the ANSI mode of `scan`'s session.
     */
   def search(probes: Seq[TopKProbe], k: Int, score: TopKScore, keyed: Boolean,
-             queryId: StructField, scan: DataFrame): DataFrame = {
+             query: StructType, scan: DataFrame): DataFrame = {
     val spark = scan.sparkSession
     CosineTopKStrategy.setup(spark)
+    val conf = spark.sessionState.conf
     val child = Shim.logicalPlan(scan)
     val in = child.output
-    def integral(t: DataType) = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    require(integral(queryId.dataType) && integral(in.head.dataType),
-      s"top-k ids must be integral: query ${queryId.dataType}, scan ${in.head.dataType}")
     require(!keyed || in(1 + score.width).dataType == IntegerType,
       s"top-k partition keys must be int, got ${in(1 + score.width).dataType}")
     val matches = in.drop(1 + score.width + (if (keyed) 1 else 0))
+    require(query.length == 1 + matches.length,
+      s"top-k query fields ${query.fieldNames.mkString(", ")} do not pair with the scan's " +
+        s"id and match columns ${(in.head +: matches).map(_.name).mkString(", ")}")
+    val pairs = (query.map(_.dataType) zip (in.head +: matches).map(_.dataType)).toArray
+    pairs.zip(query.fieldNames).foreach { case ((from, to), name) =>
+      require(from == to || (Cast.canTryCast(from, to) && Cast.canTryCast(to, from)),
+        s"top-k column $name: $from does not compare with the scan's $to")
+    }
+    val zone = conf.sessionLocalTimeZone
+    val resolved = probes.map { p =>
+      require(p.matches.length == matches.length,
+        s"a top-k probe carries ${p.matches.length} match values for ${matches.length} columns")
+      val vals = (p.queryId +: p.matches).zipWithIndex.map { case (v, i) =>
+        val (from, to) = pairs(i)
+        // the Literal refuses a value that is not one of `from`'s
+        val l = Literal(CatalystTypeConverters.createToCatalystConverter(from)(v), from)
+        (l.value, asScan(l, to, zone))
+      }
+      val qid = vals.head._1
+      val ms = vals.tail.map(_._2).toArray
+      ScanProbe(qid, vals.head._2, p.key, ms,
+        live = qid != null && !ms.contains(null) && !(keyed && p.key == null),
+        p.vec, p.norm, p.table)
+    }
     def fresh(a: Attribute) = AttributeReference(a.name, a.dataType, a.nullable)()
-    val output = AttributeReference(queryId.name, queryId.dataType, queryId.nullable)() +:
+    val output = AttributeReference(query.head.name, query.head.dataType, query.head.nullable)() +:
       matches.map(fresh) :+
       AttributeReference("rnk", LongType, nullable = false)() :+
       AttributeReference("neighbor_id", in.head.dataType, in.head.nullable)() :+
       AttributeReference(score.name, DoubleType, nullable = true)()
-    Shim.ofRows(spark, CosineTopK(probes, k, score, keyed, child, output))
+    Shim.ofRows(spark, CosineTopK(resolved, k, score, conf.ansiEnabled, keyed, child, output))
   }
+
+  /** `l`'s value as the `to` value that equals it: its TRY cast, when
+    * that casts back to the value; else null, since no `to` value
+    * equals it.
+    */
+  private def asScan(l: Literal, to: DataType, zone: String): Any =
+    if (l.value == null || l.dataType == to) l.value
+    else {
+      val there = Cast(l, to, Some(zone), EvalMode.TRY).eval()
+      val back = if (there == null) null
+        else Cast(Literal(there, to), l.dataType, Some(zone), EvalMode.TRY).eval()
+      if (back != null && TypeUtils.getInterpretedOrdering(l.dataType).equiv(back, l.value)) there
+      else null
+    }
 }
 
 /** Planner strategy mapping the logical node to its physical operator.
@@ -165,7 +209,8 @@ object CosineTopK {
 object CosineTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: CosineTopK =>
-      CosineTopKExec(p.probes, p.k, p.score, p.keyed, p.output, planLater(p.child)) :: Nil
+      CosineTopKExec(p.probes, p.k, p.score, p.ansi, p.keyed, p.output,
+        planLater(p.child)) :: Nil
     case _ => Nil
   }
 
@@ -189,9 +234,10 @@ object CosineTopKExec {
 
 /** Physical operator; see [[CosineTopK]] for the scan and output layout. */
 case class CosineTopKExec(
-    probes: Seq[TopKProbe],
+    probes: Seq[ScanProbe],
     k: Int,
     score: TopKScore,
+    ansi: Boolean,
     keyed: Boolean,
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
@@ -200,7 +246,7 @@ case class CosineTopKExec(
   override protected def stringArgs: Iterator[Any] = CosineTopK.args(probes, k, score, keyed)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val fold = new TopKFold(probes.toArray, k, score, keyed, child.output, output)
+    val fold = new TopKFold(probes.toArray, k, score, ansi, keyed, child.output, output)
     val scanned = child.execute()
     // the partial heaps cross a REAL shuffle boundary: a narrow
     // coalesce would pull every scan partition into the single merge
@@ -214,11 +260,11 @@ case class CosineTopKExec(
     copy(child = c)
 }
 
-/** A candidate in a query's heap: its score (or NULL), its id as a
-  * long for the tie-break, and the (neighbor id, match columns…) it
-  * outputs, copied out of the scan row.
+/** A candidate in a query's heap: its score (or NULL), its id for the
+  * tie-break, and the (neighbor id, match columns…) it outputs, copied
+  * out of the scan row.
   */
-private[plans] final case class TopKHit(slot: Int, score: Double, none: Boolean, nid: Long,
+private[plans] final case class TopKHit(slot: Int, score: Double, none: Boolean, nid: Any,
                                         row: UnsafeRow)
 
 /** The per-partition fold and the final merge of [[CosineTopKExec]],
@@ -227,7 +273,7 @@ private[plans] final case class TopKHit(slot: Int, score: Double, none: Boolean,
   * window's PARTITION BY query_id does.
   */
 private[plans] final class TopKFold(
-    probes: Array[TopKProbe], k: Int, score: TopKScore, keyed: Boolean,
+    probes: Array[ScanProbe], k: Int, score: TopKScore, ansi: Boolean, keyed: Boolean,
     in: Seq[Attribute], out: Seq[Attribute]) extends Serializable {
 
   private val nMatch = out.length - 4
@@ -235,71 +281,40 @@ private[plans] final class TopKFold(
   private val matchAt = keyAt + (if (keyed) 1 else 0)
   private val idType = in.head.dataType
   private val matchTypes = in.slice(matchAt, matchAt + nMatch).map(_.dataType).toArray
-  private val desc = score.isInstanceOf[TopKScore.Cosine]
+  private val desc = score == TopKScore.Cosine
   private val codeType = in(1).dataType match {
     case ArrayType(t, _) => t
     case t => t
   }
-  private val ansi = score match {
-    case TopKScore.Cosine(a) => a
-    case TopKScore.Adc => false
-  }
 
-  // query id → heap slot; probe → its id as a long and its catalyst
-  // match values
-  private val (queryIds, slotOf, qlong, matchVals) = {
-    val qidOf = CatalystTypeConverters.createToCatalystConverter(out.head.dataType)
-    val matchOf = matchTypes.map(CatalystTypeConverters.createToCatalystConverter)
-    val ids = ArrayBuffer[Any]()
-    val slots = probes.map { p =>
-      if (p.queryId == null || p.matches.contains(null) || (keyed && p.key == null)) -1
-      else {
-        val q = qidOf(p.queryId)
-        val s = ids.indexOf(q)
-        if (s >= 0) s else { ids += q; ids.length - 1 }
-      }
-    }
-    (ids.toArray, slots, probes.map(p => if (p.queryId == null) 0L else longOf(p.queryId)),
-      probes.map(p => p.matches.zipWithIndex.map { case (v, j) => matchOf(j)(v) }.toArray))
+  // query id → heap slot (probes that match nothing get none)
+  private val (queryIds, slotOf) = {
+    val ids = mutable.LinkedHashMap[Any, Int]()
+    val slots = probes.map(p => if (p.live) ids.getOrElseUpdate(p.qid, ids.size) else -1)
+    (ids.keys.toArray, slots)
   }
   private val live = probes.indices.filter(slotOf(_) >= 0).toArray
   private val byKey: Map[Int, Array[Int]] =
     if (!keyed) Map.empty
     else live.groupBy(i => probes(i).key.asInstanceOf[Int])
 
-  private def longOf(v: Any): Long = v match {
-    case b: java.lang.Byte => b.longValue
-    case s: java.lang.Short => s.longValue
-    case i: java.lang.Integer => i.longValue
-    case l: java.lang.Long => l.longValue
-  }
-
-  private def idAt(r: InternalRow): Long = idType match {
-    case ByteType => r.getByte(0).toLong
-    case ShortType => r.getShort(0).toLong
-    case IntegerType => r.getInt(0).toLong
-    case _ => r.getLong(0)
-  }
-
   /** Whether (s1, n1, id1) ranks before (s2, n2, id2): DESC NULLS LAST
     * for cosine, ASC NULLS FIRST for ADC, then id ASC.
     */
-  private def before(s1: Double, n1: Boolean, id1: Long,
-                     s2: Double, n2: Boolean, id2: Long): Boolean = {
+  private def before(idOrd: Ordering[Any], s1: Double, n1: Boolean, id1: Any,
+                     s2: Double, n2: Boolean, id2: Any): Boolean = {
     val c =
       if (n1 || n2) { if (n1 == n2) 0 else if (n1 == desc) 1 else -1 }
       else if (desc) SQLOrderingUtil.compareDoubles(s2, s1)
       else SQLOrderingUtil.compareDoubles(s1, s2)
-    c < 0 || (c == 0 && id1 < id2)
+    c < 0 || (c == 0 && idOrd.lt(id1, id2))
   }
 
-  private def enters(heap: ArrayBuffer[TopKHit], s: Double, n: Boolean, id: Long): Boolean =
-    heap.length < k || before(s, n, id, heap.last.score, heap.last.none, heap.last.nid)
-
-  private def insert(heap: ArrayBuffer[TopKHit], h: TopKHit): Unit = {
+  private def insert(idOrd: Ordering[Any], heap: mutable.ArrayBuffer[TopKHit],
+                     h: TopKHit): Unit = {
     // kept sorted best-first; a linear walk, since k is small
     var i = heap.length
-    while (i > 0 && before(h.score, h.none, h.nid, heap(i - 1).score, heap(i - 1).none,
+    while (i > 0 && before(idOrd, h.score, h.none, h.nid, heap(i - 1).score, heap(i - 1).none,
         heap(i - 1).nid)) i -= 1
     if (i < k) {
       heap.insert(i, h)
@@ -307,13 +322,13 @@ private[plans] final class TopKFold(
     }
   }
 
-  private def heaps(): Array[ArrayBuffer[TopKHit]] =
-    Array.fill(queryIds.length)(new ArrayBuffer[TopKHit](k + 1))
+  private def heaps(): Array[mutable.ArrayBuffer[TopKHit]] =
+    Array.fill(queryIds.length)(new mutable.ArrayBuffer[TopKHit](k + 1))
 
   /** Spark's Divide over doubles: a NULL or (without ANSI) zero divisor
     * is NULL, a NULL dividend is NULL, and a zero divisor throws.
     */
-  private def cosine(p: TopKProbe, v: Array[Double], r: InternalRow): java.lang.Double = {
+  private def cosine(p: ScanProbe, v: Array[Double], r: InternalRow): java.lang.Double = {
     if (p.norm == null || r.isNullAt(2)) return null
     val den = p.norm.doubleValue * r.getDouble(2)
     if (den == 0 && !ansi) return null
@@ -327,7 +342,7 @@ private[plans] final class TopKFold(
   }
 
   /** Σ_m qdt(m)(codes(m)) folded from 0.0 in ascending m, then sqrt. */
-  private def adc(p: TopKProbe, codes: ArrayData): java.lang.Double = {
+  private def adc(p: ScanProbe, codes: ArrayData): java.lang.Double = {
     if (codes == null) return null
     val t = p.table
     var s = 0.0
@@ -349,6 +364,7 @@ private[plans] final class TopKFold(
     val hs = heaps()
     val payload = UnsafeProjection.create(
       (0 +: (matchAt until matchAt + nMatch)).map(i => BoundReference(i, in(i).dataType, true)))
+    val idOrd = TypeUtils.getInterpretedOrdering(idType)
     val matchOrd = matchTypes.map(TypeUtils.getInterpretedOrdering)
     rows.foreach { r =>
       require(r.numFields == in.length,
@@ -359,29 +375,34 @@ private[plans] final class TopKFold(
         else if (r.isNullAt(keyAt)) Array.emptyIntArray
         else byKey.getOrElse(r.getInt(keyAt), Array.emptyIntArray)
       if (ps.nonEmpty) {
-        val nid = idAt(r)
+        val nid = r.get(0, idType)
         var v: Array[Double] = null
         var codes: ArrayData = null
         if (desc) { if (!r.isNullAt(1)) v = r.getArray(1).toDoubleArray() }
         else if (!r.isNullAt(1)) codes = r.getArray(1)
         var i = 0
         while (i < ps.length) {
-          val pi = ps(i)
-          val p = probes(pi)
-          var ok = qlong(pi) != nid
+          val p = probes(ps(i))
+          var ok = p.self == null || !idOrd.equiv(nid, p.self)
           var j = 0
           while (ok && j < nMatch) {
             val o = matchAt + j
-            ok = !r.isNullAt(o) && matchOrd(j).equiv(r.get(o, matchTypes(j)), matchVals(pi)(j))
+            ok = !r.isNullAt(o) && matchOrd(j).equiv(r.get(o, matchTypes(j)), p.matches(j))
             j += 1
           }
           if (ok) {
             val s = if (desc) cosine(p, v, r) else adc(p, codes)
             val none = s == null
             val sv = if (none) 0.0 else s.doubleValue
-            val heap = hs(slotOf(pi))
-            if (enters(heap, sv, none, nid))
-              insert(heap, TopKHit(slotOf(pi), sv, none, nid, payload(r).copy()))
+            val slot = slotOf(ps(i))
+            val heap = hs(slot)
+            if (heap.length < k ||
+                before(idOrd, sv, none, nid, heap.last.score, heap.last.none, heap.last.nid)) {
+              // the id is taken from the copy: a string id read off the
+              // scan row points into a buffer the scan reuses
+              val row = payload(r).copy()
+              insert(idOrd, heap, TopKHit(slot, sv, none, row.get(0, idType), row))
+            }
           }
           i += 1
         }
@@ -392,7 +413,8 @@ private[plans] final class TopKFold(
 
   def merge(hits: Iterator[TopKHit]): Iterator[InternalRow] = {
     val hs = heaps()
-    hits.foreach(h => insert(hs(h.slot), h))
+    val idOrd = TypeUtils.getInterpretedOrdering(idType)
+    hits.foreach(h => insert(idOrd, hs(h.slot), h))
     val proj = UnsafeProjection.create(out.map(_.dataType).toArray)
     val row = new GenericInternalRow(out.length)
     hs.iterator.zipWithIndex.flatMap { case (heap, slot) =>

@@ -184,17 +184,6 @@ object IndexStore {
   def readMetadata(spark: SparkSession, path: String): DataFrame =
     StoreFs.openParquet(spark, s"$path.meta")
 
-  /** Above this many query rows, a store search hands its query set to
-    * the distributed route (broadcast join + windowed rank, or DPP for
-    * the IVF family): collecting a big query set to the driver is a
-    * driver-memory liability, while below it the driver-resident
-    * top-k ([[graft.plans.CosineTopK]]) is one Spark job. The size
-    * check reads at most threshold + 1 query rows, so it stays
-    * O(threshold) even when the query set is itself a 100 TB-side
-    * table.
-    */
-  val SearchBatchThreshold = 64
-
   /** A small query set's probe rows, planned on the driver: one row per
     * (query, probed partition key), laid out (query_id, qv, qn,
     * q_<match>…, key). `queries` counts the query rows the probe was
@@ -210,7 +199,10 @@ object IndexStore {
     /** The probe rows as a local relation, for a broadcast side. */
     lazy val frame: DataFrame = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-    def queryId: StructField = schema("query_id")
+    /** The probes' query-side fields: the query id, then the q_<match>
+      * columns.
+      */
+    def query: StructType = StructType(schema.head +: schema.fields.slice(3, schema.length - 1))
 
     /** The rows as keyed top-k probes: cosine ones, or ADC ones whose
       * lookup table is `table(row)`.
@@ -244,7 +236,7 @@ object IndexStore {
   }
 
   /** Shared serving tail of the distributed exact-rescoring routes (the
-    * flat and IVF stores' large query sets, the filtered exact route):
+    * IVF store's large query sets, the filtered exact route, searchAnn):
     * exact round-6 cosine from joined (query_id, qv, qn, <idCol>, v,
     * nrm) candidate rows, then the k-bounded window — the same ranking
     * contract (round-6 sim, neighbor_id ASC tiebreak) as the
@@ -271,15 +263,13 @@ object IndexStore {
 
   /** Attribute-filtered exact search: neighbors must agree with the
     * query row on every column in `matchCols` (the vector-DB "search
-    * with filter" — per-tenant / per-class lookups; each match column
-    * has the same type in `index` and `queries`). Out-of-filter rows
-    * never reach the top-k heap. Up to SearchBatchThreshold query rows
-    * are collected and the scan is ranked by the driver-resident top-k
-    * in one Spark job; a larger query set is broadcast and ranked by a
-    * window. For a STATIC predicate, pre-filter the index frame
-    * instead (`search(read(spark, path).filter(p), …)`) — simple
-    * comparisons on inline meta columns push into the parquet scan
-    * (PushedFilters, spec-asserted).
+    * with filter" — per-tenant / per-class lookups). Out-of-filter rows
+    * never reach the top-k heap. The query rows are collected, as the
+    * broadcast side of a join would be, and the scan is ranked by the
+    * driver-resident top-k in one Spark job. For a STATIC predicate,
+    * pre-filter the index frame instead (`search(read(spark, path)
+    * .filter(p), …)`) — simple comparisons on inline meta columns push
+    * into the parquet scan (PushedFilters, spec-asserted).
     */
   def searchFiltered(index: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, matchCols: Seq[String]): DataFrame = {
@@ -287,16 +277,11 @@ object IndexStore {
         +: col(vecCol).cast("array<double>").as("qv")
         +: matchCols.map(c => col(c).as(s"q_$c")): _*)
       .withColumn("qn", V.norm2(col("qv")))
-    val rows = q.limit(SearchBatchThreshold + 1).collect()
-    if (rows.length > SearchBatchThreshold) {
-      val cond = matchCols.map(c => col(c) === col(s"q_$c"))
-        .foldLeft(col("id") =!= col("query_id"))(_ && _)
-      return rescoreTopK(index.join(broadcast(q), cond), k, matchCols = matchCols)
-    }
-    val probes = rows.toSeq.map(r => TopKProbe(r.get(0),
+    val probes = q.collect().toSeq.map(r => TopKProbe(r.get(0),
       matches = matchCols.indices.map(j => r.get(2 + j)),
       vec = vecOf(r, 1), norm = r.getAs[java.lang.Double](2 + matchCols.length)))
-    CosineTopK.search(probes, k, TopKScore.cosine, keyed = false, q.schema("query_id"),
+    CosineTopK.search(probes, k, TopKScore.Cosine, keyed = false,
+      StructType(q.schema.head +: q.schema.fields.slice(2, 2 + matchCols.length)),
       index.select(col("id") +: col("v").cast("array<double>") +: col("nrm")
         +: matchCols.map(col): _*))
   }
@@ -326,7 +311,7 @@ object IndexStore {
         .as("pb")))
     val index = read(spark, path)
       .where(col("band0").isin(q.keys: _*)) // static file-level pruning
-    CosineTopK.search(q.probes(), k, TopKScore.cosine, keyed = true, q.queryId,
+    CosineTopK.search(q.probes(), k, TopKScore.Cosine, keyed = true, q.query,
       index.select("id", "v", "nrm", "band0"))
   }
 
@@ -1609,7 +1594,6 @@ private[sources] object CoarseStore {
   */
 object IvfIndexStore {
   import graft.operators.Knn
-  import IndexStore.SearchBatchThreshold
   import CoarseStore.{Append, Overwrite, Relayout}
 
   private[sources] def prepared(df: DataFrame, idCol: String, vecCol: String,
@@ -1768,6 +1752,17 @@ object IvfIndexStore {
       .where(col("cid").isin(p.keys: _*)) // static file-level pruning
       .select((("vec_id" +: payload :+ "cid") ++ matchCols).map(col): _*)
 
+  /** Above this many query rows, search() hands off to the
+    * distributed-probe DPP path: collecting a big query set's probe
+    * rows to the driver is a driver-memory liability, while below it
+    * the driver-resident top-k ([[graft.plans.CosineTopK]]) over the
+    * static IN scan is one Spark job. The size check is the row count
+    * of the probe collect itself, which reads at most threshold + 1
+    * query rows, so it stays O(threshold) even when the query set is
+    * itself a 100 TB-side table.
+    */
+  val SearchBatchThreshold = 64
+
   /** nprobe-pruned exact-cosine top-k against the persisted lists.
     * Small query sets (the uploaded-image flow) are collected with
     * their probed list ids; the ids prune the scan as a static IN
@@ -1784,7 +1779,7 @@ object IvfIndexStore {
       readCentroids(spark, path), nprobe)
     if (p.queries > SearchBatchThreshold)
       return searchBatch(spark, path, queries, idCol, vecCol, k, nprobe)
-    CosineTopK.search(p.probes(), k, TopKScore.cosine, keyed = true, p.queryId,
+    CosineTopK.search(p.probes(), k, TopKScore.Cosine, keyed = true, p.query,
       probedScan(spark, path, p, Seq("v", "nrm"), Nil))
   }
 
@@ -1805,7 +1800,7 @@ object IvfIndexStore {
                      nprobe: Int = Knn.IvfNprobe): DataFrame = {
     val p = localProbeOf(matchQueries(queries, col(idCol), vecCol, matchCols),
       readCentroids(spark, path), nprobe, matchCols.map(c => s"q_$c"))
-    CosineTopK.search(p.probes(), k, TopKScore.cosine, keyed = true, p.queryId,
+    CosineTopK.search(p.probes(), k, TopKScore.Cosine, keyed = true, p.query,
       probedScan(spark, path, p, Seq("v", "nrm"), matchCols))
   }
 
@@ -1990,7 +1985,7 @@ object PqIndexStore {
       .map(r => TopKProbe(r.getLong(0),
         table = Knn.pqQueryTable(r.getSeq[Double](1).toArray, books)))
     CosineTopK.search(probes, k, TopKScore.Adc, keyed = false,
-      StructField("query_id", LongType, nullable = false),
+      StructType(Seq(StructField("query_id", LongType, nullable = false))),
       StoreFs.openParquet(spark, s"$path.codes").select("vec_id", "codes"))
   }
 
@@ -2145,7 +2140,7 @@ object IvfPqIndexStore {
     val p = IvfIndexStore.localProbeOf(
       IvfIndexStore.matchQueries(queries, col(idCol).cast("long"), vecCol, matchCols),
       m.coarse, nprobe, matchCols.map(c => s"q_$c"))
-    val (probes, queryId) =
+    val (probes, query) =
       if (m.residual) {
         // branded residual store (never filtered): tables are per
         // (query, probed list) — the query residual is taken against
@@ -2153,13 +2148,13 @@ object IvfPqIndexStore {
         val cents = m.coarse.toMap
         (p.probes(r => Knn.pqResQueryTable(r.getSeq[Double](1).toArray,
           cents(r.getInt(r.length - 1)), m.codebooks)),
-          StructField("query_id", LongType, nullable = false))
+          StructType(Seq(StructField("query_id", LongType, nullable = false))))
       } else {
         val tables = p.rows.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
           .map { case (qid, qv) => qid -> Knn.pqQueryTable(qv.toArray, m.codebooks) }
-        (p.probes(r => tables(r.getLong(0))), p.queryId)
+        (p.probes(r => tables(r.getLong(0))), p.query)
       }
-    CosineTopK.search(probes, k, TopKScore.Adc, keyed = true, queryId,
+    CosineTopK.search(probes, k, TopKScore.Adc, keyed = true, query,
       IvfIndexStore.probedScan(spark, path, p, Seq("codes"), matchCols))
   }
 

@@ -158,24 +158,41 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
   }
 
   /** A local query frame (id, v, label), typed like the corpus. */
-  private def queries(intIds: Boolean, qs: Seq[(Long, Seq[Double], Int)]): DataFrame = {
-    val rows = qs.map { case (id, v, l) => Row(if (intIds) id.toInt else id, v, l) }
+  private def queries(intIds: Boolean, qs: Seq[(Long, Seq[Double], Int)]): DataFrame =
+    typedQueries(if (intIds) IntegerType else LongType, IntegerType,
+      qs.map { case (id, v, l) => (if (intIds) id.toInt else id, v, l) })
+
+  /** A local query frame (id, v, label) with the given id and label
+    * types.
+    */
+  private def typedQueries(idType: DataType, labelType: DataType,
+                           qs: Seq[(Any, Seq[Double], Any)]): DataFrame = {
+    val rows = qs.map { case (id, v, l) => Row(id, v, l) }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
-      StructField("id", if (intIds) IntegerType else LongType),
+      StructField("id", idType),
       StructField("v", ArrayType(DoubleType, containsNull = false)),
-      StructField("label", IntegerType))))
+      StructField("label", labelType))))
   }
 
   private final case class Stores(flat: String, ivf: String, pq: String, ivfpq: String,
                                   ivfpqRes: String, src: DataFrame)
 
-  private def build(tag: String, df: DataFrame, idCol: String, vecCol: String): Stores = {
+  /** The stores of `df`; without `quantized`, the flat and IVF ones
+    * only (the PQ family casts ids to long), the IVF one over
+    * `ivfModel` when given (training samples by a numeric id).
+    */
+  private def build(tag: String, df: DataFrame, idCol: String, vecCol: String,
+                    quantized: Boolean = true,
+                    ivfModel: Option[Array[(Int, Array[Double])]] = None): Stores = {
     val base = java.nio.file.Files.createTempDirectory(s"search_eq_$tag").toString
-    val st = Stores(s"$base/flat", s"$base/ivf", s"$base/pq", s"$base/ivfpq",
-      s"$base/ivfpq_res", df)
+    val st =
+      if (quantized) Stores(s"$base/flat", s"$base/ivf", s"$base/pq", s"$base/ivfpq",
+        s"$base/ivfpq_res", df)
+      else Stores(s"$base/flat", s"$base/ivf", null, null, null, df)
     val label = Seq("label")
     IndexStore.write(df, idCol, vecCol, st.flat, dim = Dim, metaCols = label)
-    IvfIndexStore.write(df, idCol, vecCol, st.ivf, metaCols = label)
+    IvfIndexStore.write(df, idCol, vecCol, st.ivf, model = ivfModel, metaCols = label)
+    if (!quantized) return st
     val cents = IvfIndexStore.readCentroids(spark, st.ivf)
     PqIndexStore.write(df, idCol, vecCol, st.pq)
     val books = PqIndexStore.readBooks(spark, st.pq)
@@ -235,7 +252,7 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
   private def assertAllSearches(label: String, st: Stores, q: DataFrame,
                                 k: Int = 5): Map[String, Either[String, Seq[Row]]] = {
     val lab = Seq("label")
-    Map("flat" -> assertSame(s"$label flat")(
+    val exact = Map("flat" -> assertSame(s"$label flat")(
       IndexStore.search(IndexStore.read(spark, st.flat), q, "id", "v", k),
       refFlat(IndexStore.read(spark, st.flat), q, "id", "v", k, Nil)),
     "flat filtered" -> assertSame(s"$label flat filtered")(
@@ -249,8 +266,9 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
       refIvf(spark, st.ivf, q, "id", "v", k)),
     "ivf filtered" -> assertSame(s"$label ivf filtered")(
       IvfIndexStore.searchFiltered(spark, st.ivf, q, "id", "v", k, lab),
-      refIvfFiltered(spark, st.ivf, q, "id", "v", k, lab)),
-    "pq" -> assertSame(s"$label pq")(
+      refIvfFiltered(spark, st.ivf, q, "id", "v", k, lab)))
+    if (st.pq == null) return exact
+    exact ++ Map("pq" -> assertSame(s"$label pq")(
       PqIndexStore.search(spark, st.pq, q, "id", "v", k),
       refPq(spark, st.pq, q, "id", "v", k)),
     "ivfpq" -> assertSame(s"$label ivfpq")(
@@ -357,6 +375,53 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
       assert(rows.head.getLong(2) == 601L && rows.head.getDouble(3).isNaN)
       assert(rows.last.getLong(2) == 600L && rows.last.isNullAt(3))
     }
+    // the ANSI mode is the scan's session's, not the active one's
+    val other = spark.newSession()
+    other.conf.set("spark.sql.ansi.enabled", "false")
+    withAnsi(true) {
+      SparkSession.setActiveSession(spark)
+      val oq = other.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
+      val got = assertSame("ansi off in the scan's session")(
+        IndexStore.search(IndexStore.read(other, st.flat), oq, "id", "v", 400),
+        refFlat(IndexStore.read(other, st.flat), oq, "id", "v", 400, Nil))
+      assert(got.toOption.exists(_.last.isNullAt(3)), s"the zero row scores NULL: $got")
+    }
+    SparkSession.setActiveSession(spark)
+  }
+
+  test("string ids and mixed-type ids and match columns equal their window formulations") {
+    // string ids, kept by the flat (LSH) and IVF stores: "v20" < "v520"
+    // < "v521" share one vector
+    val str = build("str", corpus(intIds = false, degenerate = false)
+      .withColumn("vid", concat(lit("v"), col("vid"))), "vid", "vec", quantized = false,
+      ivfModel = Some(IvfIndexStore.readCentroids(spark, edge.ivf)))
+    val sv = str.src.select("vid", "vec").collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    def strQs(xs: Seq[(String, Seq[Double], Int)]) = typedQueries(StringType, IntegerType, xs)
+    val ties = assertAllSearches("string ids", str,
+      strQs(Seq(("v20", sv("v20"), 0), ("q5000", sv("v20"), 0), ("v521", sv("v521"), 1),
+        ("q5001", sv("v10"), 7))))
+    assertRows("string ids", ties)
+    val top = ties("flat").toOption.get.filter(_.getString(0) == "q5000").take(3)
+    assert(top.map(_.getString(2)) == Seq("v20", "v520", "v521"), s"tied neighbors: $top")
+    assert(!ties("flat").toOption.get.exists(r => r.getString(0) == "v20" && r.getString(2) == "v20"))
+    for (n <- Seq(64, 65))
+      assertRows(s"string ids $n queries", assertAllSearches(s"string ids $n queries", str,
+        strQs((0 until n).map(i => (s"q$i", sv(s"v${i * 4}"), i % 5)))))
+    // long query ids and labels against int store columns: 20 is a
+    // corpus id, 2^32 + 20 and the label 2^32 + 1 equal no int (a
+    // wrapping cast would read them as 20 and 1)
+    val st = edgeInt
+    val v = vecs(st.src, "vid", "vec")
+    val wide = 1L << 32
+    val mixed = assertAllSearches("long queries, int store", st,
+      typedQueries(LongType, LongType, Seq((20L, v(20L), 0L), (wide + 20, v(20L), 0L),
+        (5007L, v(11L), 7L), (5008L, v(30L), wide + 1))))
+    assertRows("long queries, int store", mixed)
+    val flat = mixed("flat").toOption.get
+    assert(!flat.exists(r => r.getLong(0) == 20L && r.getInt(2) == 20))
+    assert(flat.exists(r => r.getLong(0) == wide + 20 && r.getInt(2) == 20))
+    assert(!mixed("flat filtered").toOption.get.exists(_.getLong(0) == wide + 1))
   }
 
   test("v_knn_custom matches v_knn_exact over a zero and a NaN vector") {
