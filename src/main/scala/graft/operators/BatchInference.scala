@@ -342,8 +342,7 @@ object BatchInference {
       .transform(graft.Materialize.forceCached)
     // stage 4: persist index + metadata sidecar (faiss.write_index +
     // metadata.pkl, build_faiss_db.py:218-226)
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/${tag}_$app/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, tag) + "/idx"
     // disjoint index + metadata writes off the same cached frame —
     // overlapped (guide §2.6)
     graft.sources.StoreLayout.concurrently2(
@@ -523,8 +522,7 @@ object BatchInference {
         ImagePipeline.fakeEmbedding(col("sig"), dim).as("embedding"))
       .transform(graft.Materialize.forceCached)
     // stages 4-6: persist, best-crop query, exact top-5, label vote
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/m_pipeline_decode_$app/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "m_pipeline_decode") + "/idx"
     // the index and its metadata sidecar are DISJOINT datasets off the
     // same cached frame — overlap the two writes (guide §2.6; the
     // store-build pattern §5 applied everywhere else)
@@ -588,8 +586,8 @@ object BatchInference {
     // gate proves the loaded-weights path end to end, and a real
     // trained model is just a different sidecar (the state_dict
     // contract; build_faiss_db.py:111's pretrained load, minus torch)
-    val app0 = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val wpath = graft.sources.StoreFs.workPath(s"target/m_pipeline_real_$app0/weights")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "m_pipeline_real")
+    val wpath = s"$root/weights"
     ConvNet.saveParams(spark, ConvNet.defaultParams, wpath)
     val params = ConvNet.loadParams(spark, wpath)
     val embedded = embedStageArrow(crops, "payload",
@@ -597,8 +595,7 @@ object BatchInference {
       .select(col("crop_id"), col("doc_id"), col("label"), col("score"), col("embedding"))
       .transform(graft.Materialize.forceCached)
     // stages 5-7: persist, best-crop query, exact top-5, label vote
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/m_pipeline_real_$app/idx")
+    val path = s"$root/idx"
     // disjoint index + metadata writes off the same cached frame —
     // overlapped, same as m_pipeline_decode
     graft.sources.StoreLayout.concurrently2(

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.NumericType
 import graft.Tables
 import graft.functions.{HashFns, VectorFns => V}
 
@@ -699,9 +700,7 @@ object Knn {
   private[graft] def trainIvf(e: DataFrame): Array[(Int, Array[Double])] = {
     val sample = e.filter(col("vec_id") < IvfTrainSample)
     var centroids: Array[(Int, Array[Double])] =
-      sample.filter(col("vec_id") < IvfClusters)
-        .orderBy("vec_id")
-        .collect()
+      trainingSeed(sample, IvfClusters, 1, "IVF")
         .zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
 
@@ -722,6 +721,25 @@ object Knn {
       if (means.nonEmpty) centroids = means
     }
     centroids
+  }
+
+  /** The seed rows of a training pass: the vec_id < `n` prefix in id
+    * order. Training seeds and samples by id VALUE, so an id column
+    * that is not numeric, or a prefix shorter than `need` rows (ids that
+    * do not start near 0), cannot train: both throw on the driver,
+    * asking for a trained model instead. The seed collect is the
+    * training pass's own first job; the checks add none.
+    */
+  private def trainingSeed(e: DataFrame, n: Int, need: Int, what: String): Array[Row] = {
+    val idType = e.schema("vec_id").dataType
+    require(idType.isInstanceOf[NumericType],
+      s"$what training samples by numeric id (vec_id < $n); ids of type ${idType.simpleString} " +
+        "cannot train: pass a trained model to the write (model =, ivfModel = or pqModel =)")
+    val seed = e.filter(col("vec_id") < n).orderBy("vec_id").collect()
+    require(seed.length >= need,
+      s"$what training seeds from ids vec_id < $n and found ${seed.length} of the $need rows " +
+        "it needs: pass a trained model to the write (model =, ivfModel = or pqModel =)")
+    seed
   }
 
   /** IVF model for a corpus dir: centroids from the session cache
@@ -932,7 +950,7 @@ object Knn {
 
     // codebooks(m)(k) — trained driver-side over the tiny exploded agg
     var books: Array[Array[Array[Double]]] =
-      e.filter(col("vec_id") < PqCodes).orderBy("vec_id").collect()
+      trainingSeed(e, PqCodes, PqCodes, "PQ")
         .map(_.getSeq[Double](1).toArray)
         .map(v => Array.tabulate(PqSubspaces)(m => v.slice(m * dsub, (m + 1) * dsub)))
         .transpose // (K vectors × M) → (M × K)
@@ -1422,8 +1440,7 @@ object Knn {
     * oracle-gated persisted twin.
     */
   def vIvfBqStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivf_bq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivf_bq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfBqIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(ivfCentroids(spark, dir)))
@@ -1444,8 +1461,7 @@ object Knn {
     * Lloyd + probe + PQ training + the label filter.
     */
   def vIvfPqFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivfpqfil_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivfpqfil_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfPqIndexStore.write(emb, "vec_id", "embedding", path,
       ivfModel = Some(ivfCentroids(spark, dir)),
@@ -1694,8 +1710,7 @@ object Knn {
     * residual route to the bit.
     */
   def vIvfPqResStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivfpqres_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivfpqres_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfPqIndexStore.write(emb, "vec_id", "embedding", path,
       ivfModel = Some(ivfCentroids(spark, dir)),
@@ -1720,9 +1735,7 @@ object Knn {
     * second identical build.
     */
   def vIvfPqResBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/ivfpqres_batch_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivfpqres_batch") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.ModelFile.exists(path))
       graft.sources.IvfPqIndexStore.write(emb, "vec_id", "embedding", path,
@@ -2152,8 +2165,7 @@ object Knn {
     * lossless for the candidate equi-join).
     */
   def vMaxsimStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/maxsim_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "maxsim_store") + "/idx"
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     graft.sources.MaxsimStore.write(docs, path)
     graft.sources.MaxsimStore
@@ -2210,9 +2222,7 @@ object Knn {
     * weighted fusion serving gates — one cache dir, both legs.
     */
   private def hybridStorePaths(spark: SparkSession, dir: String): (String, String) = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val root = graft.sources.StoreFs.workPath(s"target/hybrid_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "hybrid_store")
     val (vecPath, lexPath) = (s"$root/vec", s"$root/lex")
     // gate on a LAST-WRITTEN completion marker (r17, the
     // hybridEvalLegs fix applied here too): the old all-artifacts
@@ -2254,9 +2264,7 @@ object Knn {
   private def hybridEvalLegs(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val (nq, legK) = (3, 10)
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val root = graft.sources.StoreFs.workPath(s"target/hybrid_eval_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "hybrid_eval")
     val (vp, lp, ep) = (s"$root/vec", s"$root/lex", s"$root/exact")
     // gate on a LAST-WRITTEN completion marker, not dir existence
     // (ADVICE r16): a crash mid-write of the third leg leaves two
@@ -2654,9 +2662,7 @@ object Knn {
     * (vc_hybrid_recall: fused 0.4 vs the vector leg's 1.0).
     */
   private def vcHybridStorePaths(spark: SparkSession, dir: String): (String, String) = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val root = graft.sources.StoreFs.workPath(s"target/vchybrid_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "vchybrid_store")
     val (vecPath, lexPath) = (s"$root/vec", s"$root/lex")
     val done = s"$root/_built" // last-written completion marker (r17)
     if (!graft.sources.StoreFs.exists(done)) {
@@ -2998,8 +3004,7 @@ object Knn {
     * replays blocking, candidate ranking, AND every greedy round.
     */
   def vMmrStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/mmr_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "mmr_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IndexStore.write(emb, "vec_id", "embedding", path, dim = 64)
     val queries = emb.filter(col("vec_id") < NumQueries)
@@ -3023,8 +3028,7 @@ object Knn {
     * search reads only probed list directories.
     */
   def vIvfStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivf_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivf_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     // model from the session registry (v_ivf's training pass, or
     // trained here on first use) — the write itself never retrains
@@ -3047,8 +3051,7 @@ object Knn {
     * so a hash match proves the persisted filtered tier end to end.
     */
   def vIvfFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivff_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivff_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(ivfCentroids(spark, dir)), metaCols = Seq("label"))
@@ -3076,8 +3079,7 @@ object Knn {
     * Round9Spec drives both routes and the routing condition.
     */
   def vFilteredRoute(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/route_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "route_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
       .withColumn("grp", (col("vec_id") % 50).cast("long"))
     graft.sources.IvfIndexStore.write(emb, "vec_id", "embedding", path,
@@ -3102,8 +3104,7 @@ object Knn {
     * produces.
     */
   def vSqlStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sql_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sql_store") + "/idx"
     graft.sources.IndexStore.write(Tables.embeddings(spark, dir),
       "vec_id", "embedding", path, dim = 64)
     graft.GraftSession.sqlStore(spark, path, "flat")
@@ -3146,8 +3147,7 @@ object Knn {
     * IVF, all three to the bit.
     */
   def vSqlStoreIvf(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlivf_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlivf_store") + "/idx"
     graft.sources.IvfIndexStore.write(Tables.embeddings(spark, dir),
       "vec_id", "embedding", path, model = Some(ivfCentroids(spark, dir)))
     graft.GraftSession.sqlStore(spark, path, "ivf")
@@ -3190,8 +3190,7 @@ object Knn {
     * route, so the SQL convenience costs nothing at 100 TB.
     */
   def vSqlStorePq(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlpq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlpq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.PqIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(pqBooksFor(spark, dir)))
@@ -3291,8 +3290,7 @@ object Knn {
     * SQL route ≡ Scala store route ≡ in-session route, all to the bit.
     */
   def vSqlStoreIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlivfpq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlivfpq_store") + "/idx"
     graft.sources.IvfPqIndexStore.write(Tables.embeddings(spark, dir),
       "vec_id", "embedding", path,
       ivfModel = Some(ivfCentroids(spark, dir)),
@@ -3306,8 +3304,7 @@ object Knn {
     * served to a SQL-only user). Hash-shares v_ivf_pq_res's oracle.
     */
   def vSqlStoreIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlivfpqres_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlivfpqres_store") + "/idx"
     graft.sources.IvfPqIndexStore.write(Tables.embeddings(spark, dir),
       "vec_id", "embedding", path,
       ivfModel = Some(ivfCentroids(spark, dir)),
@@ -3326,8 +3323,7 @@ object Knn {
     * Hash-shares v_ivf_bq's oracle: SQL ≡ Scala store ≡ in-session.
     */
   def vSqlStoreIvfBq(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlivfbq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlivfbq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfBqIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(ivfCentroids(spark, dir)))
@@ -3395,8 +3391,7 @@ object Knn {
     * proven lossless from pure SQL.
     */
   def vSqlStoreMih(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlmih_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlmih_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.BqIndexStore.writeMih(emb, "vec_id", "embedding", path)
     graft.GraftSession.sqlStore(spark, path, "mih")
@@ -3447,8 +3442,7 @@ object Knn {
     * v_ann_store_mp's oracle (the Hamming-≤1 blocking semantics).
     */
   def vSqlStoreAnnMp(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlannmp_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlannmp_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IndexStore.write(emb, "vec_id", "embedding", path, dim = 64)
     graft.GraftSession.sqlStore(spark, path, "annmp")
@@ -3493,8 +3487,7 @@ object Knn {
     * SQL. Hash-shares v_bq's oracle.
     */
   def vSqlStoreBq(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlbq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlbq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.BqIndexStore.write(emb, "vec_id", "embedding", path)
     graft.GraftSession.sqlStore(spark, path, "bq")
@@ -3540,8 +3533,7 @@ object Knn {
     * oracle.
     */
   def vSqlStoreMaxsim(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlms_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlms_store") + "/idx"
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     graft.sources.MaxsimStore.write(docs, path)
     graft.GraftFunctions.register(spark)
@@ -3591,8 +3583,7 @@ object Knn {
     * from the store alone. Hash-shares v_opq_learned's oracle.
     */
   def vSqlStoreOpql(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlopql_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlopql_store") + "/idx"
     val perm = opqLearnedPerm(spark, dir)
     // spread before the permute materialization (the §10 fix applied
     // to the standalone encodes it missed): the single-file scan is
@@ -3660,8 +3651,7 @@ object Knn {
     * v_matryoshka's oracle: SQL route ≡ in-session MRL to the bit.
     */
   def vSqlStoreMrl(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/sqlmrl_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlmrl_store") + "/idx"
     graft.sources.IndexStore.write(Tables.embeddings(spark, dir),
       "vec_id", "embedding", path, dim = 64)
     graft.GraftSession.sqlStore(spark, path, "mrl")
@@ -3699,8 +3689,7 @@ object Knn {
     * carries precomputed norms; exact search ignores the bands).
     */
   def vFlatStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/flat_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "flat_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IndexStore.write(emb, "vec_id", "embedding", path, dim = 64)
     val queries = emb.filter(col("vec_id") < NumQueries)
@@ -3713,16 +3702,15 @@ object Knn {
   }
 
   /** v_ivf_batch: the DPP-pruned batch-serving path of the IVF store
-    * IN the driver gate — IvfIndexStore.searchBatch (the route search()
-    * auto-takes above SearchBatchThreshold query rows) invoked
-    * directly on the gate's query set, so the runtime-subquery pruning
+    * IN the driver gate — IvfIndexStore.searchBatch (the search for
+    * query sets that are themselves tables) invoked directly on the
+    * gate's query set, so the runtime-subquery pruning
     * path is hash-proven equal to v_ivf's oracle, not just to the
     * static-IN path by spec. Both scan shapes must rank identically;
     * they differ only in HOW the cid= directories prune.
     */
   def vIvfBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivfbatch_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivfbatch_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(ivfCentroids(spark, dir)))
@@ -3742,9 +3730,7 @@ object Knn {
     * table-minus-victims oracle.
     */
   def qPurgeMih(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/purge_mih_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "purge_mih") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.StoreFs.exists(path)) {
       graft.sources.BqIndexStore.writeMih(emb, "vec_id", "embedding", path)
@@ -3768,9 +3754,7 @@ object Knn {
     * compactIfNeeded flavor the same way; this gates the full rewrite.)
     */
   def qCompactStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/compact_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "compact_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.StoreFs.exists(path)) {
       graft.sources.IndexStore.write(
@@ -3801,11 +3785,7 @@ object Knn {
     * faiss remove_ids, minus the full-index rewrite.
     */
   def qPurgeStore(spark: SparkSession, dir: String): DataFrame = {
-    // dir-keyed like the streaming gates: the existence guard must not
-    // serve one scale factor's store to another in a multi-SF session
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode)
-    val path = graft.sources.StoreFs.workPath(s"target/purge_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "purge_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     // k-bounded collect: 3 victim ids (the gate's deletion request)
     val victims = vKnnExact(spark, dir)
@@ -3837,9 +3817,7 @@ object Knn {
     * INSIDE the retention horizon survives.
     */
   def qVacuumStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/vacuum_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "vacuum_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     // k-bounded collect: 3 victim ids (the gate's deletion request)
     val victims = vKnnExact(spark, dir)
@@ -3881,9 +3859,7 @@ object Knn {
     * the retired-snapshot lineage end to end by hash, not spec.
     */
   def qSnapshotStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/snap_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "snap_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     // k-bounded collect: 3 victim ids (the gate's deletion request)
     val victims = vKnnExact(spark, dir)
@@ -3922,8 +3898,7 @@ object Knn {
     * in-session combined tier exactly.
     */
   def vIvfPqStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/ivfpq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "ivfpq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IvfPqIndexStore.write(emb, "vec_id", "embedding", path,
       ivfModel = Some(ivfCentroids(spark, dir)),
@@ -3936,8 +3911,7 @@ object Knn {
   }
 
   def vPqStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/pq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "pq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     // codebooks from the session registry (v_pq's training pass, or
     // trained here on first use) — the write itself never retrains
@@ -3957,8 +3931,7 @@ object Knn {
     * flat (exact), IVF (pruned), PQ (compressed), BQ (scan-tier).
     */
   def vBqStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/bq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "bq_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.BqIndexStore.write(emb, "vec_id", "embedding", path)
     val queries = emb.filter(col("vec_id") < NumQueries)
@@ -3978,8 +3951,7 @@ object Knn {
     * bucket pruning both lossless.
     */
   def vBqRangeStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/mih_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "mih_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.BqIndexStore.writeMih(emb, "vec_id", "embedding", path)
     val codes = corpus(spark, dir).select(col("vec_id"),
@@ -4000,14 +3972,12 @@ object Knn {
     * left-side probe fan-out reaches through pure equi-joins.
     */
   def vAnnStoreMp(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
     // corpus-aware (the #clustered routing): the store write sources
     // the same double frame corpus() serves — identical values to the
     // former raw-float write (float→double widening is exact), and the
-    // clustered twin lands in its own store directory
-    val flavor = if (dir.endsWith(ClusteredSuffix)) "_clu" else ""
-    val path = graft.sources.StoreFs.workPath(
-      s"target/annmp_store$flavor" + s"_$tag/idx")
+    // clustered twin, another corpus dir, lands in its own store
+    // directory
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "annmp_store") + "/idx"
     vAnnStoreMpOn(spark, dir, corpus(spark, dir), path)
   }
 
@@ -4030,10 +4000,8 @@ object Knn {
     * probed partition filter).
     */
   def vAnnStoreRecall(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val flavor = if (dir.endsWith(ClusteredSuffix)) "_clu" else ""
-    val path = graft.sources.StoreFs.workPath(
-      s"target/annmp_store$flavor" + s"_$tag/idx") // same store vAnnStoreMp serves
+    // the same store vAnnStoreMp serves
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "annmp_store") + "/idx"
     val c = sharedCorpus(spark, dir) // one corpus build: exact leg + store write
     val exact = knnBaseOn(c, DefaultK).select(col("query_id"), col("neighbor_id"))
     val ann = vAnnStoreMpOn(spark, dir, c, path)
@@ -4056,8 +4024,7 @@ object Knn {
     * callers beyond the same query projection.
     */
   def vOpqStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/opq_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "opq_store") + "/idx"
     val rotated = withHadamard(corpus(spark, dir).select(col("vec_id"), col("v")), "v", "vr")
       .select(col("vec_id"), col("vr").as("v"))
       .transform(graft.Materialize.forceCached)
@@ -4083,8 +4050,7 @@ object Knn {
     * in-session search, so the oracle is shared.
     */
   def vOpqLearnedStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/opql_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "opql_store") + "/idx"
     val perm = opqLearnedPerm(spark, dir)
     // spread before the permute materialization (the §10 fix applied
     // to the standalone encodes it missed): the single-file scan is
@@ -4124,8 +4090,7 @@ object Knn {
     * (the store-side twin of the reference's per-class lookup).
     */
   def vFilteredStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val path = graft.sources.StoreFs.workPath(s"target/filt_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "filt_store") + "/idx"
     val emb = Tables.embeddings(spark, dir)
     graft.sources.IndexStore.write(emb, "vec_id", "embedding", path,
       dim = 64, metaCols = Seq("label"))
@@ -4336,9 +4301,7 @@ object Knn {
     * simulation's.
     */
   def vIvfDriftStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/drift_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "drift_store") + "/idx"
     if (!graft.sources.StoreFs.exists(path)) {
       graft.sources.IvfIndexStore.write(
         Tables.embeddings(spark, dir), "vec_id", "embedding", path,
@@ -4380,9 +4343,7 @@ object Knn {
     * both).
     */
   def vIvfRetrainStore(spark: SparkSession, dir: String): DataFrame = {
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode) // dir-keyed: see qPurgeStore
-    val path = graft.sources.StoreFs.workPath(s"target/retrain_store_$tag/idx")
+    val path = graft.sources.StoreFs.gatePath(spark, dir, "retrain_store") + "/idx"
     if (!graft.sources.StoreFs.exists(path)) {
       graft.sources.IvfIndexStore.write(
         Tables.embeddings(spark, dir), "vec_id", "embedding", path,

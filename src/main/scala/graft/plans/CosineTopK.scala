@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, GraftShim => Shim}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, GraftShim => Shim}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
   Attribute, AttributeReference, AttributeSet, BoundReference, Cast, EvalMode,
@@ -12,7 +12,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.functions.{col, round}
 import org.apache.spark.sql.types._
+import graft.functions.{VectorFns => V}
 
 /** The engine's one top-k operator for driver-resident query sets: a
   * scan scored against a handful of queries (or their probe rows) and
@@ -79,27 +81,40 @@ case class CosineTopK(
     copy(child = c)
 }
 
-/** How a scanned row scores against a probe, and which end ranks first. */
+/** How a scanned row scores against a probe, and which end ranks first
+  * — the one ranking rule of the operator and of the stores' window
+  * tail: the score best first, then the neighbor id ASC.
+  */
 sealed trait TopKScore extends Serializable {
   /** The score column's name. */
   def name: String
   /** Scan columns the score reads after the id. */
   def width: Int
+  /** Whether the highest score ranks first (DESC NULLS LAST) rather
+    * than the lowest (ASC NULLS FIRST).
+    */
+  def descending: Boolean
+  /** The score as a column over joined candidate rows (the window
+    * formulation's input).
+    */
+  def column: Column
 }
 
 object TopKScore {
-  /** Round-6 cosine over scan rows (id, v, nrm, …), ranked sim DESC. */
+  /** Round-6 cosine over (qv, qn) × (v, nrm), ranked sim DESC. */
   case object Cosine extends TopKScore {
     def name: String = "sim"
     def width: Int = 2
+    def descending: Boolean = true
+    def column: Column = round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6)
   }
 
-  /** Round-6 ADC distance over scan rows (id, codes, …), ranked
-    * adc_dist ASC.
-    */
+  /** Round-6 ADC distance over (qdt) × (codes), ranked adc_dist ASC. */
   case object Adc extends TopKScore {
     def name: String = "adc_dist"
     def width: Int = 1
+    def descending: Boolean = false
+    def column: Column = graft.operators.Knn.adcDistCol
   }
 }
 
@@ -107,7 +122,8 @@ object TopKScore {
   * it ranks for, the partition key it probes (keyed searches), the
   * values its `q_<match>` columns carry, and the score's query side —
   * the query vector and its norm (cosine) or the lookup table (ADC).
-  * A NULL query id, key or match value matches no scanned row.
+  * A NULL query id, key or match value matches no scanned row; a NULL
+  * vector or table scores NULL against every row.
   */
 final case class TopKProbe(
     queryId: Any,
@@ -281,7 +297,7 @@ private[plans] final class TopKFold(
   private val matchAt = keyAt + (if (keyed) 1 else 0)
   private val idType = in.head.dataType
   private val matchTypes = in.slice(matchAt, matchAt + nMatch).map(_.dataType).toArray
-  private val desc = score == TopKScore.Cosine
+  private val desc = score.descending
   private val codeType = in(1).dataType match {
     case ArrayType(t, _) => t
     case t => t
@@ -341,10 +357,12 @@ private[plans] final class TopKFold(
     CosineTopKExec.round6(s / den)
   }
 
-  /** Σ_m qdt(m)(codes(m)) folded from 0.0 in ascending m, then sqrt. */
+  /** Σ_m qdt(m)(codes(m)) folded from 0.0 in ascending m, then sqrt; a
+    * NULL table (a NULL query vector) or NULL codes score NULL.
+    */
   private def adc(p: ScanProbe, codes: ArrayData): java.lang.Double = {
-    if (codes == null) return null
     val t = p.table
+    if (codes == null || t == null) return null
     var s = 0.0
     var m = 0
     while (m < t.length) {

@@ -743,10 +743,6 @@ object Bm25Store {
 /** Driver-gate queries for the BM25 store. */
 object Bm25StoreQueries {
 
-  private def tag(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode)
-
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(col("doc_id"), col("text"))
 
@@ -764,8 +760,7 @@ object Bm25StoreQueries {
     * oracle gate, not just the exchange-budget spec.
     */
   def vBm25Store(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25_store") + "/idx"
     if (!StoreFs.exists(path)) {
       val d = docs(spark, dir)
       Bm25Store.write(d.filter(col("doc_id") % 2 === 0), path,
@@ -787,8 +782,7 @@ object Bm25StoreQueries {
     * stats delta that was off by one token would shift every score).
     */
   def vBm25Purge(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25purge_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25purge_store") + "/idx"
     if (!StoreFs.exists(path)) {
       Bm25Store.write(docs(spark, dir), path)
       Bm25Store.purge(spark, path, Seq(3L, 4L))
@@ -811,8 +805,7 @@ object Bm25StoreQueries {
     * table-state travel the vector stores got in r14.
     */
   def qSnapshotBm25(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25snap_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25snap_store") + "/idx"
     if (!StoreFs.exists(path)) {
       val d = docs(spark, dir)
       Bm25Store.write(d.filter(col("doc_id") % 2 === 0), path)
@@ -834,8 +827,7 @@ object Bm25StoreQueries {
     * is exactly why the filter is PER QUERY, not a global predicate.
     */
   def vBm25Filtered(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25filt_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25filt_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(
         Tables.documents(spark, dir).select(col("doc_id"), col("text"), col("lang")),
@@ -857,8 +849,7 @@ object Bm25StoreQueries {
     * hash-proven — a tf-only store cannot answer this query class.
     */
   def vBm25Phrase(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25phrase_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25phrase_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     val queries = docs(spark, dir).filter(col("doc_id") < 3)
@@ -883,8 +874,7 @@ object Bm25StoreQueries {
   val NearSlop = 3
 
   def vBm25Near(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25near_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25near_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     val queries = docs(spark, dir).filter(col("doc_id") < 3)
@@ -913,8 +903,7 @@ object Bm25StoreQueries {
   val Near3Slop = 2
 
   def vBm25Near3(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bm25near_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bm25near_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     // ≥3-token query docs only, so every gate query exercises the
@@ -940,8 +929,7 @@ object Bm25StoreQueries {
     * proximity class cannot drift.
     */
   def vSqlStoreNear(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/sqlnear_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "sqlnear_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     graft.GraftSession.sqlStore(spark, path, "bm25near")
@@ -988,8 +976,7 @@ object Bm25StoreQueries {
     * SQL and engine surfaces of the positional tier cannot drift.
     */
   def vSqlStorePhrase(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/sqlphrase_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "sqlphrase_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     graft.GraftSession.sqlStore(spark, path, "bm25pos")
@@ -1033,8 +1020,7 @@ object Bm25StoreQueries {
     * engine leg, so the two surfaces cannot drift.
     */
   def vSqlStoreBm25(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/sqlbm25_store_${tag(spark, dir)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "sqlbm25_store") + "/idx"
     if (!StoreFs.exists(path))
       Bm25Store.write(docs(spark, dir), path)
     graft.GraftSession.sqlStore(spark, path, "bm25")

@@ -268,9 +268,6 @@ object RateStore {
   */
 object CurationStoreQueries {
 
-  private def tag(spark: SparkSession): String =
-    spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Land a cached wave-keyed shard frame as write + 2 appends (the
     * gate's 3-wave protocol, unchanged on disk: each landed frame is
     * exactly the shards the per-wave builder produced — the wave key
@@ -293,8 +290,7 @@ object CurationStoreQueries {
     * distinct counts (q_bitmap_distinct's oracle).
     */
   def qBitmapStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/bitmap_store_${tag(spark)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "bitmap_store") + "/idx"
     val ev = Tables.events(spark, dir).select(col("event_type"), col("user_id"))
     landWaves(Relational.bitmapShardsByWave(ev, col("user_id") % 3),
       (shards, mode) => BitmapStore.writeShards(shards, mode, path))
@@ -307,8 +303,7 @@ object CurationStoreQueries {
     * the ESTIMATE deterministic, not just its error bound).
     */
   def qKmvStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/kmv_store_${tag(spark)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "kmv_store") + "/idx"
     val ev = Tables.events(spark, dir).select(col("event_type"), col("user_id"))
     landWaves(KmvStore.sketchRowsByWave(ev, col("user_id") % 3),
       (rows, mode) => KmvStore.writeSketch(rows, mode, path))
@@ -323,8 +318,7 @@ object CurationStoreQueries {
     * the checkpointed stream source that maintains this store.
     */
   def qRateStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = StoreFs.workPath(
-      s"target/rate_store_${tag(spark)}/idx")
+    val path = StoreFs.gatePath(spark, dir, "rate_store") + "/idx"
     val ev = Tables.events(spark, dir)
       .select(col("ts"), col("event_type"), col("event_id"))
     landWaves(Relational.rateRowsByWave(ev, col("event_id") % 3),

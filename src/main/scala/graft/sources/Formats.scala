@@ -39,29 +39,20 @@ object Formats {
         max(col("c_custkey")).as("max_key"))
       .orderBy("c_mktsegment")
 
-  /** Session-unique suffix so concurrent sessions sharing a working
-    * dir / warehouse never clobber each other's round-trip data.
-    */
-  private def runTag(spark: SparkSession): String =
-    spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-
-  private def tmpDir(spark: SparkSession, fmt: String): String =
-    StoreFs.workPath(s"target/roundtrip_${fmt}_${runTag(spark)}")
-
   def srcCsv(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpDir(spark, "csv")
+    val out = StoreFs.gatePath(spark, dir, "roundtrip_csv")
     base(spark, dir).write.mode("overwrite").option("header", "true").csv(out)
     fidelityAgg(spark.read.schema(customerSchema).option("header", "true").csv(out))
   }
 
   def srcJson(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpDir(spark, "json")
+    val out = StoreFs.gatePath(spark, dir, "roundtrip_json")
     base(spark, dir).write.mode("overwrite").json(out)
     fidelityAgg(spark.read.schema(customerSchema).json(out))
   }
 
   def srcOrc(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpDir(spark, "orc")
+    val out = StoreFs.gatePath(spark, dir, "roundtrip_orc")
     base(spark, dir).write.mode("overwrite").orc(out)
     fidelityAgg(spark.read.orc(out))
   }
@@ -98,8 +89,7 @@ object Formats {
     // loses the rename race — never a partially-written directory.
     // Still through the FS seam: a cluster session writes the fixture
     // to fs.defaultFS, where binaryFile's executors can read it.
-    val rootPath = StoreFs.qualified(
-      s"target/binsrc_${runTag(spark)}_d${Integer.toHexString(dir.hashCode)}")
+    val rootPath = StoreFs.qualified(StoreFs.gatePath(spark, dir, "binsrc"))
     val fs = StoreFs.fsOf(rootPath)
     val files = new org.apache.hadoop.fs.Path(rootPath, "files")
     if (!StoreFs.isDir(fs, files)) {
@@ -141,7 +131,7 @@ object Formats {
     * fact table and scanning the 12 partitions a dim filter selects.
     */
   def srcPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpDir(spark, "part")
+    val out = StoreFs.gatePath(spark, dir, "roundtrip_part")
     Tables.orders(spark, dir)
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       // hash-cluster by the partition column across the cluster width
@@ -201,7 +191,7 @@ object Formats {
     * (pruning actually bites).
     */
   private[graft] def zorderRect(spark: SparkSession, dir: String): (DataFrame, Int, Int) = {
-    val out = tmpDir(spark, "zord")
+    val out = StoreFs.gatePath(spark, dir, "roundtrip_zord")
     val ev = Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     val r = ev.agg(min(col("user_id")), max(col("user_id")),
@@ -252,7 +242,7 @@ object Formats {
     * one-time layout cost at write time.
     */
   def srcBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = runTag(spark)
+    val tag = StoreFs.gateTag(spark, dir)
     val ordersT = s"graft_orders_bkt_$tag"
     val lineitemT = s"graft_lineitem_bkt_$tag"
     // the in-memory catalog is per-session but the warehouse directory

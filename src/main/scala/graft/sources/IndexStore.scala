@@ -186,11 +186,10 @@ object IndexStore {
 
   /** A small query set's probe rows, planned on the driver: one row per
     * (query, probed partition key), laid out (query_id, qv, qn,
-    * q_<match>…, key). `queries` counts the query rows the probe was
-    * built from.
+    * q_<match>…, key).
     */
   private[sources] final case class LocalProbe(spark: SparkSession, schema: StructType,
-                                               rows: Array[Row], queries: Int) {
+                                               rows: Array[Row]) {
     /** The distinct probed keys — the static partition IN list (a null
       * key, from a null query vector, probes nothing).
       */
@@ -232,26 +231,7 @@ object IndexStore {
       r.getSeq[Any](n).map(k => Row.fromSeq(head :+ k))
     }
     val schema = StructType(probe.schema.take(n)).add(probe.schema(n).name, IntegerType)
-    LocalProbe(probe.sparkSession, schema, rows, collected.length)
-  }
-
-  /** Shared serving tail of the distributed exact-rescoring routes (the
-    * IVF store's large query sets, the filtered exact route, searchAnn):
-    * exact round-6 cosine from joined (query_id, qv, qn, <idCol>, v,
-    * nrm) candidate rows, then the k-bounded window — the same ranking
-    * contract (round-6 sim, neighbor_id ASC tiebreak) as the
-    * driver-resident [[graft.plans.CosineTopK]]. A filtered search's
-    * `matchCols` ride through to the output.
-    */
-  private[sources] def rescoreTopK(cands: DataFrame, k: Int, idCol: String = "id",
-                                   matchCols: Seq[String] = Nil): DataFrame = {
-    val sims = cands.select(col("query_id") +: matchCols.map(col)
-      :+ col(idCol).as("neighbor_id")
-      :+ round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"): _*)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("rnk") :+ col("neighbor_id") :+ col("sim"): _*)
+    LocalProbe(probe.sparkSession, schema, rows)
   }
 
   /** Exact top-k against a loaded index — IndexFlatIP.search over the
@@ -302,18 +282,9 @@ object IndexStore {
     * job ([[graft.plans.CosineTopK]]).
     */
   def searchAnnProbed(spark: SparkSession, path: String, queries: DataFrame,
-                      idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
-    // collected once: the probe-bucket IN list and the probe rows both
-    // come from the same driver-side rows
-    val q = localProbe(bandedQueries(queries, idCol, vecCol, dim)
-      .select(col("query_id"), col("qv"), col("qn"), array(
-        col("qb0") +: (0 until BandBits).map(r => col("qb0").bitwiseXOR(lit(1 << r))): _*)
-        .as("pb")))
-    val index = read(spark, path)
-      .where(col("band0").isin(q.keys: _*)) // static file-level pruning
-    CosineTopK.search(q.probes(), k, TopKScore.Cosine, keyed = true, q.query,
-      index.select("id", "v", "nrm", "band0"))
-  }
+                      idCol: String, vecCol: String, k: Int, dim: Int): DataFrame =
+    bucketTopK(read(spark, path), queries, idCol, vecCol, k, dim,
+      qb0 => qb0 +: (0 until BandBits).map(r => qb0.bitwiseXOR(lit(1 << r))))
 
   /** ANN top-k: queries are banded with the same hyperplanes, then the
     * scan is filtered to the probed band0 partitions (file-level
@@ -321,10 +292,23 @@ object IndexStore {
     * blocking — [[searchAnnProbed]] is the higher-recall serving tier.
     */
   def searchAnn(index: DataFrame, queries: DataFrame, idCol: String,
-                vecCol: String, k: Int, dim: Int): DataFrame = {
-    val q = broadcast(bandedQueries(queries, idCol, vecCol, dim))
-    rescoreTopK(
-      index.join(q, col("band0") === col("qb0") && col("id") =!= col("query_id")), k)
+                vecCol: String, k: Int, dim: Int): DataFrame =
+    bucketTopK(index, queries, idCol, vecCol, k, dim, qb0 => Seq(qb0))
+
+  /** The LSH searches' one body: each query probes the band0 buckets
+    * `buckets(qb0)` of its own bucket, the scan keeps only the probed
+    * buckets (a static `band0 IN (...)` filter) and the driver-resident
+    * top-k scores each row against the probes of its bucket.
+    */
+  private def bucketTopK(index: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+                         k: Int, dim: Int, buckets: Column => Seq[Column]): DataFrame = {
+    // collected once: the probe-bucket IN list and the probe rows both
+    // come from the same driver-side rows
+    val q = localProbe(bandedQueries(queries, idCol, vecCol, dim)
+      .select(col("query_id"), col("qv"), col("qn"), array(buckets(col("qb0")): _*).as("pb")))
+    CosineTopK.search(q.probes(), k, TopKScore.Cosine, keyed = true, q.query,
+      index.where(col("band0").isin(q.keys: _*)) // static file-level pruning
+        .select("id", "v", "nrm", "band0"))
   }
 
   /** (query_id, qv, qn, qb0) query rows banded with the store's hyperplanes. */
@@ -1727,13 +1711,6 @@ object IvfIndexStore {
     IndexStore.localProbe(
       probeInput(q, extraCols).withColumn("pcid", probedCids(centroids, nprobe)))
 
-  /** The probe join: the candidate's list is a probed one, it is not
-    * the query itself, and every match column equals the query's.
-    */
-  private[sources] def probeJoin(matchCols: Seq[String]): Column =
-    matchCols.map(c => col(c) === col(s"q_$c"))
-      .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
-
   /** Filtered-search query rows: (vec_id, v, q_<match>…, nrm). */
   private[sources] def matchQueries(queries: DataFrame, idCol: Column, vecCol: String,
                                     matchCols: Seq[String]): DataFrame =
@@ -1752,36 +1729,19 @@ object IvfIndexStore {
       .where(col("cid").isin(p.keys: _*)) // static file-level pruning
       .select((("vec_id" +: payload :+ "cid") ++ matchCols).map(col): _*)
 
-  /** Above this many query rows, search() hands off to the
-    * distributed-probe DPP path: collecting a big query set's probe
-    * rows to the driver is a driver-memory liability, while below it
-    * the driver-resident top-k ([[graft.plans.CosineTopK]]) over the
-    * static IN scan is one Spark job. The size check is the row count
-    * of the probe collect itself, which reads at most threshold + 1
-    * query rows, so it stays O(threshold) even when the query set is
-    * itself a 100 TB-side table.
-    */
-  val SearchBatchThreshold = 64
-
-  /** nprobe-pruned exact-cosine top-k against the persisted lists.
-    * Small query sets (the uploaded-image flow) are collected with
-    * their probed list ids; the ids prune the scan as a static IN
-    * filter, so the parquet source reads only the probed cid=NN
-    * directories, and the driver-resident top-k ranks each query's
-    * lists in one Spark job. Query sets above SearchBatchThreshold
-    * rows route through searchBatch automatically (same results — the
-    * paths differ only in how the scan prunes and ranks).
+  /** nprobe-pruned exact-cosine top-k against the persisted lists: the
+    * query set is collected with its probed list ids, the ids prune the
+    * scan as a static IN filter, so the parquet source reads only the
+    * probed cid=NN directories, and the driver-resident top-k
+    * ([[graft.plans.CosineTopK]]) ranks each query's lists in one Spark
+    * job; see [[searchFiltered]]. A query set that is itself a table
+    * (bulk re-ranking) belongs in [[searchBatch]], which never collects
+    * it.
     */
   def search(spark: SparkSession, path: String, queries: DataFrame,
              idCol: String, vecCol: String, k: Int,
-             nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val p = localProbeOf(prepared(queries, idCol, vecCol).limit(SearchBatchThreshold + 1),
-      readCentroids(spark, path), nprobe)
-    if (p.queries > SearchBatchThreshold)
-      return searchBatch(spark, path, queries, idCol, vecCol, k, nprobe)
-    CosineTopK.search(p.probes(), k, TopKScore.Cosine, keyed = true, p.query,
-      probedScan(spark, path, p, Seq("v", "nrm"), Nil))
-  }
+             nprobe: Int = Knn.IvfNprobe): DataFrame =
+    searchFiltered(spark, path, queries, idCol, vecCol, k, Nil, nprobe)
 
   /** Attribute-filtered search on the persisted IVF index — the
     * "search with filter" contract composed with coarse pruning: the
@@ -1820,13 +1780,13 @@ object IvfIndexStore {
     *
     *  - ultra-selective predicate (≤ `exactThreshold` survivors):
     *    EXACT scan of the survivors only (filter pushed to parquet,
-    *    broadcast query join, top-k). Cheaper than IVF's
+    *    then [[IndexStore.searchFiltered]]'s top-k). Cheaper than IVF's
     *    corpus·nprobe/nlist read and exact by construction — the
     *    post-filter IVF path could even return FEWER than k hits when
     *    the survivors hide outside the probed lists;
-    *  - broad predicate: the standard [[searchFiltered]] probe-join
-    *    path (coarse pruning does the heavy lifting, the filter rides
-    *    the probe join).
+    *  - broad predicate: the standard [[searchFiltered]] path (coarse
+    *    pruning does the heavy lifting, the filter is checked before
+    *    scoring).
     */
   def searchFilteredRouted(spark: SparkSession, path: String, queries: DataFrame,
                            idCol: String, vecCol: String, k: Int,
@@ -1844,34 +1804,22 @@ object IvfIndexStore {
                                     idCol: String, vecCol: String, k: Int,
                                     matchCols: Seq[String], nprobe: Int,
                                     exactThreshold: Int): (String, DataFrame) = {
-    val q = matchQueries(queries, col(idCol), vecCol, matchCols)
     // query sets are small by the search() contract (the uploaded-
     // image flow) — their distinct filter values collect for the
-    // pushed-down survivor probe and the scan predicate
-    val vals = q.select(matchCols.map(c => col(s"q_$c")): _*).distinct().collect()
-    if (vals.isEmpty)
-      // no queries → no filter values → the empty result in the
-      // searchFiltered column shape (reducing an empty predicate
-      // list would throw)
-      return ("exact", q.limit(0)
-        .select(col("vec_id").as("query_id") +: matchCols.map(c => col(s"q_$c").as(c))
-          :+ lit(1L).as("rnk") :+ col("vec_id").as("neighbor_id")
-          :+ lit(0.0).as("sim"): _*))
+    // pushed-down survivor probe and the scan predicate; no queries
+    // give a predicate no row passes, so the exact route's empty result
+    val vals = queries.select(matchCols.map(col): _*).collect().distinct
     val pred = vals.map(r => matchCols.indices
         .map(i => col(matchCols(i)) === lit(r.get(i))).reduce(_ && _))
-      .reduce(_ || _)
+      .reduceOption(_ || _).getOrElse(lit(false))
     val survivors = StoreFs.openParquet(spark, path).where(pred)
     val small = survivors.select(col(matchCols.head))
       .limit(exactThreshold + 1).count() <= exactThreshold
     if (!small)
       return ("ivf", searchFiltered(spark, path, queries, idCol, vecCol,
         k, matchCols, nprobe))
-    val qb = broadcast(q.select(col("vec_id").as("query_id")
-        +: col("v").as("qv") +: col("nrm").as("qn")
-        +: matchCols.map(c => col(s"q_$c")): _*))
-    val cond = matchCols.map(c => col(c) === col(s"q_$c"))
-      .foldLeft(col("vec_id") =!= col("query_id"))(_ && _)
-    ("exact", IndexStore.rescoreTopK(survivors.join(qb, cond), k, "vec_id", matchCols))
+    ("exact", IndexStore.searchFiltered(survivors.withColumnRenamed("vec_id", "id"),
+      queries, idCol, vecCol, k, matchCols))
   }
 
   /** Batch-serving variant: the probe set stays DISTRIBUTED — no
@@ -1885,10 +1833,28 @@ object IvfIndexStore {
     */
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
-                  nprobe: Int = Knn.IvfNprobe): DataFrame = {
-    val probe = probeOf(prepared(queries, idCol, vecCol), readCentroids(spark, path), nprobe)
-    IndexStore.rescoreTopK(StoreFs.openParquet(spark, path).join(broadcast(probe),
-      probeJoin(Nil)), k, "vec_id")
+                  nprobe: Int = Knn.IvfNprobe): DataFrame =
+    batchTopK(spark, path,
+      probeOf(prepared(queries, idCol, vecCol), readCentroids(spark, path), nprobe),
+      k, TopKScore.Cosine)
+
+  /** The batch searches' ranking tail (IVF and IVF-PQ): the store's rows
+    * joined to the DISTRIBUTED probe rows (query_id, pcid, the score's
+    * query side) on the probed list and never to the query itself — a
+    * broadcast join on the cid partition column, so dynamic partition
+    * pruning reads only the probed lists — scored by `score` and cut to
+    * k per query by the window, best score first, then neighbor id ASC:
+    * the ranking of [[graft.plans.CosineTopK]].
+    */
+  private[sources] def batchTopK(spark: SparkSession, path: String, probe: DataFrame,
+                                 k: Int, score: TopKScore): DataFrame = {
+    val cands = StoreFs.openParquet(spark, path).join(broadcast(probe),
+      col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
+    val best = if (score.descending) col(score.name).desc else col(score.name).asc
+    val w = Window.partitionBy("query_id").orderBy(best, col("neighbor_id").asc)
+    cands.select(col("query_id"), col("vec_id").as("neighbor_id"), score.column.as(score.name))
+      .withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+      .select("query_id", "rnk", "neighbor_id", score.name)
   }
 }
 
@@ -1982,27 +1948,12 @@ object PqIndexStore {
     val probes = queries
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .collect().toSeq
-      .map(r => TopKProbe(r.getLong(0),
-        table = Knn.pqQueryTable(r.getSeq[Double](1).toArray, books)))
+      .map(r => TopKProbe(r.get(0),
+        // a NULL query vector has no table: it scores NULL
+        table = Option(IndexStore.vecOf(r, 1)).map(Knn.pqQueryTable(_, books)).orNull))
     CosineTopK.search(probes, k, TopKScore.Adc, keyed = false,
       StructType(Seq(StructField("query_id", LongType, nullable = false))),
       StoreFs.openParquet(spark, s"$path.codes").select("vec_id", "codes"))
-  }
-
-  /** Serving tail of the distributed ADC route (IVF-PQ searchBatch):
-    * the ADC distance of joined (query_id, qdt, vec_id, codes)
-    * candidates, then the k-bounded window (adc_dist ASC, vec_id ASC)
-    * — the driver-resident top-k's ADC ranking; a filtered search's
-    * `matchCols` ride through to the output.
-    */
-  private[sources] def adcTopK(cands: DataFrame, k: Int,
-                               matchCols: Seq[String] = Nil): DataFrame = {
-    val scored = cands.select(col("query_id") +: matchCols.map(col)
-      :+ col("vec_id") :+ Knn.adcDistCol.as("adc_dist"): _*)
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select(col("query_id") +: matchCols.map(col)
-        :+ col("rnk") :+ col("vec_id").as("neighbor_id") :+ col("adc_dist"): _*)
   }
 }
 
@@ -2146,12 +2097,12 @@ object IvfPqIndexStore {
         // (query, probed list) — the query residual is taken against
         // THAT list's centroid
         val cents = m.coarse.toMap
-        (p.probes(r => Knn.pqResQueryTable(r.getSeq[Double](1).toArray,
-          cents(r.getInt(r.length - 1)), m.codebooks)),
+        (p.probes(r => Option(IndexStore.vecOf(r, 1))
+          .map(Knn.pqResQueryTable(_, cents(r.getInt(r.length - 1)), m.codebooks)).orNull),
           StructType(Seq(StructField("query_id", LongType, nullable = false))))
       } else {
-        val tables = p.rows.map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-          .map { case (qid, qv) => qid -> Knn.pqQueryTable(qv.toArray, m.codebooks) }
+        val tables = p.rows.map(r => r.getLong(0) -> IndexStore.vecOf(r, 1)).toMap
+          .map { case (qid, qv) => qid -> Option(qv).map(Knn.pqQueryTable(_, m.codebooks)).orNull }
         (p.probes(r => tables(r.getLong(0))), p.query)
       }
     CosineTopK.search(probes, k, TopKScore.Adc, keyed = true, query,
@@ -2222,15 +2173,14 @@ object IvfPqIndexStore {
           lit(0.0), (acc, x) => acc + x)
       }: _*)
     }: _*)
-    val probes = enc.select(col("query_id"), col("pcid"), qdtCol.as("qdt"))
-    PqIndexStore.adcTopK(StoreFs.openParquet(spark, path).join(broadcast(probes),
-      IvfIndexStore.probeJoin(Nil)), k)
+    IvfIndexStore.batchTopK(spark, path,
+      enc.select(col("query_id"), col("pcid"), qdtCol.as("qdt")), k, TopKScore.Adc)
   }
 
   /** Attribute-filtered search on the COMPRESSED persisted tier (the
     * faiss IDSelector-on-IndexIVFPQ combination): the scan still reads
     * only the probed cid=NN directories (static IN), and INSIDE them
-    * the per-query metadata equality rides the probe join — so the
+    * the per-query metadata equality is checked before scoring — so the
     * filter applies before any candidate reaches the ADC top-k heap,
     * on 8 B code rows, never floats. Requires the store written with
     * the match columns inline (`write(..., metaCols)`) — the

@@ -124,6 +124,20 @@ private[graft] object StoreFs {
     */
   def workPath(path: String): String = qualified(path).toString
 
+  /** The key of a gate's scratch data: the application id, so sessions
+    * sharing a working dir never clobber each other's stores, PLUS the
+    * corpus dir, so the existence guard of a build-once gate never
+    * serves one corpus's store to another in a session that touches
+    * several scale factors (SweepBench).
+    */
+  def gateTag(spark: SparkSession, dir: String): String =
+    spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
+      "_d" + Integer.toHexString(dir.hashCode)
+
+  /** A gate's scratch root, `target/<name>_<gateTag>`, as a [[workPath]]. */
+  def gatePath(spark: SparkSession, dir: String, name: String): String =
+    workPath(s"target/${name}_${gateTag(spark, dir)}")
+
   /** mkdirs by path string (harness out-dirs). */
   def mkdirs(path: String): Boolean = {
     val p = qualified(path)

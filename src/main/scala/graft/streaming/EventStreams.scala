@@ -1422,7 +1422,7 @@ object EventStreams {
     * closing the one F-section API row that predated the gate itself.
     */
   def sWindowStream(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"swindowstream_${gateTag(spark, dir)}"
+    val name = s"swindowstream_${graft.sources.StoreFs.gateTag(spark, dir)}"
     if (!spark.catalog.tableExists(name))
       runToMemory(spark, dir, name).stop()
     spark.table(name)
@@ -1471,8 +1471,7 @@ object EventStreams {
     */
   def sIvfPqIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sivfpq_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sivfpq_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.ModelFile.exists(store)) {
@@ -1508,7 +1507,7 @@ object EventStreams {
   def sEmbedIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
     import spark.implicits._
-    val root = graft.sources.StoreFs.workPath(s"target/sembed_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sembed_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.StoreFs.exists(s"$store.codes")) {
@@ -1551,8 +1550,7 @@ object EventStreams {
     */
   def sMihIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/smih_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "smih_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1577,8 +1575,7 @@ object EventStreams {
     */
   def sMaxsimIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/smaxsim_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "smaxsim_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1598,8 +1595,7 @@ object EventStreams {
     * by the hash, not a spec). Idempotent across invocations.
     */
   def sSpanIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sspan_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sspan_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/spans")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1658,8 +1654,7 @@ object EventStreams {
     * invocations.
     */
   def sBm25Ingest(spark: SparkSession, dir: String): DataFrame = {
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sbm25_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sbm25_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1690,8 +1685,7 @@ object EventStreams {
     * has real margin on both sides.
     */
   def sBm25Drift(spark: SparkSession, dir: String): DataFrame = {
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sbm25drift_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sbm25drift_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1729,8 +1723,7 @@ object EventStreams {
     * is spec-pinned over four direct-driven waves.
     */
   def sBm25DriftAuto(spark: SparkSession, dir: String): DataFrame = {
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sbm25auto_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sbm25auto_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val remap = translate(col("text"), "aeiou", "01234").as("text")
@@ -1774,8 +1767,7 @@ object EventStreams {
     * agree on the query set drawn from the snapshot corpus).
     */
   def qSnapshotSBm25(spark: SparkSession, dir: String): DataFrame = {
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/snapsbm25_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "snapsbm25_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1840,8 +1832,7 @@ object EventStreams {
     */
   def sDriftMonitor(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sdrift_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sdrift_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     val emb = Tables.embeddings(spark, dir)
     if (!graft.sources.ModelFile.exists(store)) {
@@ -1882,8 +1873,7 @@ object EventStreams {
     */
   def sRetrainAuto(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sretrain_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sretrain_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/idx")
     if (!graft.sources.ModelFile.exists(store)) {
       graft.sources.IvfIndexStore.write(
@@ -1916,8 +1906,7 @@ object EventStreams {
     * appends proven by the hash. Idempotent across invocations.
     */
   def sBitmapIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tag = gateTag(spark, dir)
-    val root = graft.sources.StoreFs.workPath(s"target/sbitmap_store_$tag")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sbitmap_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/shards")
     val ev = Tables.events(spark, dir)
     if (!graft.sources.StoreFs.exists(store)) {
@@ -1947,15 +1936,6 @@ object EventStreams {
     }
     store
   }
-
-  /** Store tag for the existence-guarded gates: app id PLUS the corpus
-    * dir, so a session touching several scale factors (SweepBench)
-    * builds one store per corpus instead of silently serving the first
-    * SF's store to the second.
-    */
-  private def gateTag(spark: SparkSession, dir: String): String =
-    spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(dir.hashCode)
 
   /** Two TIME-SPLIT event waves (events up to the midpoint of the time
     * range, then the rest) — the wave layout for WATERMARKED gates. A
@@ -1993,7 +1973,7 @@ object EventStreams {
     */
   def sSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = graft.sources.StoreFs.workPath(s"target/ssess_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "ssess_store")
     val (src, ckpt, out) = (s"$root/in", s"$root/ckpt", s"$root/out")
     if (!graft.sources.StoreFs.exists(out)) {
       val mx = twoTimeWaves(spark, dir, src)(
@@ -2023,7 +2003,7 @@ object EventStreams {
     * re-emits, which is why the serving read is a distinct.)
     */
   def sDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/sdedup_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sdedup_store")
     val (src, ckpt, out) = (s"$root/in", s"$root/ckpt", s"$root/out")
     if (!graft.sources.StoreFs.exists(out))
       twoTimeWaves(spark, dir, src)(() => runDedupIngest(spark, src, ckpt, out))
@@ -2041,7 +2021,7 @@ object EventStreams {
     * reproduce the batch table exactly. Idempotent across invocations.
     */
   def sUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/supsert_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "supsert_store")
     val store = twoEventWaves(spark, dir, root, "event_id")(
       runUpsertIncremental(spark, _, _, _))
     resolveUpserts(spark, store).orderBy("event_type")
@@ -2056,7 +2036,7 @@ object EventStreams {
     * the row level.
     */
   def sIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/sincr_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sincr_store")
     val store = twoEventWaves(spark, dir, root, "event_id")(
       runIncremental(spark, _, _, _))
     spark.read.parquet(store)
@@ -2073,7 +2053,7 @@ object EventStreams {
     * The accumulated sink hash-matches s_interval_join's batch oracle.
     */
   def sStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/sjoin_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sjoin_store")
     val (src, ckpt, out) = (s"$root/in", s"$root/ckpt", s"$root/out")
     if (!graft.sources.StoreFs.exists(out))
       twoTimeWaves(spark, dir, src)(() => runStreamJoinIngest(spark, src, ckpt, out))
@@ -2092,7 +2072,7 @@ object EventStreams {
     */
   def sKnnServe(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Knn
-    val root = graft.sources.StoreFs.workPath(s"target/sknn_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sknn_store")
     val (qsrc, ckpt, store, out) =
       (s"$root/q", s"$root/ckpt", s"$root/idx", s"$root/out")
     val emb = Tables.embeddings(spark, dir)
@@ -2123,7 +2103,7 @@ object EventStreams {
   def sPhashIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{ImageDecode, ImagePipeline}
     import spark.implicits._
-    val root = graft.sources.StoreFs.workPath(s"target/sphash_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sphash_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/mih")
     val payloads = Tables.documents(spark, dir)
       .select(col("doc_id")).filter(col("doc_id") < 8)
@@ -2154,7 +2134,7 @@ object EventStreams {
     * anomaly ranking from the store hash-matches q_anomaly's oracle.
     */
   def sRateIngest(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/srate_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "srate_store")
     val store = twoEventWaves(spark, dir, root, "event_id")(
       runRateIngest(spark, _, _, _))
     graft.sources.RateStore.report(spark, store)
@@ -2171,8 +2151,7 @@ object EventStreams {
     * z-scores, not just from a row count.
     */
   def qSnapshotRate(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(
-      s"target/snaprate_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "snaprate_store")
     val store = twoEventWaves(spark, dir, root, "event_id")(
       runRateIngest(spark, _, _, _))
     val vs = graft.sources.StoreMaintenance.versions(store)
@@ -2187,7 +2166,7 @@ object EventStreams {
     * deterministic-estimate oracle.
     */
   def sKmvIngest(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/skmv_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "skmv_store")
     val store = twoEventWaves(spark, dir, root, "event_id")(
       runKmvIngest(spark, _, _, _))
     graft.sources.KmvStore.report(spark, store)
@@ -2200,7 +2179,7 @@ object EventStreams {
     * shape): sketch drift after a streamed merge breaks the hash.
     */
   def sHllIngest(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.StoreFs.workPath(s"target/shll_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "shll_store")
     val store = twoEventWaves(spark, dir, root, "event_id")(
       runHllIngest(spark, _, _, _))
     val est = hllDistinctReport(spark, store)
@@ -2223,7 +2202,7 @@ object EventStreams {
     */
   def sBloomIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val root = graft.sources.StoreFs.workPath(s"target/sbloom_store_${gateTag(spark, dir)}")
+    val root = graft.sources.StoreFs.gatePath(spark, dir, "sbloom_store")
     val (src, ckpt, store) = (s"$root/in", s"$root/ckpt", s"$root/store")
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val ins = docs.filter(col("doc_id") % 5 =!= 0)

@@ -226,9 +226,7 @@ class Round16Spec extends SparkSpec {
     // force the build-once pair + sidecar, then read the artifact the
     // serving op reads
     Knn.vHybridWeightedStore(spark, sf).collect()
-    val tag = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
-      "_d" + Integer.toHexString(sf.hashCode)
-    val sidecar = graft.sources.StoreFs.workPath(s"target/hybrid_store_$tag/alpha")
+    val sidecar = graft.sources.StoreFs.gatePath(spark, sf, "hybrid_store") + "/alpha"
     assert(graft.sources.StoreFs.exists(sidecar), "alpha sidecar missing")
     val r = spark.read.parquet(sidecar).head()
     val (alpha, tmax) = (r.getDouble(0), r.getDouble(1))

@@ -6,7 +6,7 @@ import graft.sources.{IndexStore, IvfIndexStore, StoreMaintenance}
 
 /** Round-7 invariants: bounded-sample IVF training, the SQ8
   * codes-array plan shape, real image decode, store compaction, and
-  * size-aware persisted-index search routing.
+  * the two pruning forms of the persisted IVF index's searches.
   */
 class Round7Spec extends SparkSpec {
 
@@ -118,32 +118,60 @@ class Round7Spec extends SparkSpec {
       "compaction must not change search results")
   }
 
-  test("IvfIndexStore.search: large query sets auto-route to the DPP batch path") {
+  test("trainIvf / trainPqBooks: ids they cannot sample fail on the driver, asking for a model") {
+    val emb = Tables.embeddings(spark, sf)
+    val base = java.nio.file.Files.createTempDirectory("train_ids").toString
+    def refused(what: String)(write: => Unit): String = {
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage.contains("pass a trained model") && e.getMessage.contains("model ="),
+        s"$what: ${e.getMessage}")
+      e.getMessage
+    }
+    // string ids: refused from the schema, before any Spark job
+    val str = emb.withColumn("vec_id", concat(lit("v"), col("vec_id")))
+    for ((what, write) <- Seq[(String, () => Unit)](
+        "ivf" -> (() => IvfIndexStore.write(str, "vec_id", "embedding", s"$base/ivf_str")),
+        "pq" -> (() => graft.sources.PqIndexStore.write(str, "vec_id", "embedding", s"$base/pq_str")))) {
+      var msg = ""
+      assert(countJobs { msg = refused(s"$what string ids")(write()) } == 0)
+      assert(msg.contains("string"), msg)
+    }
+    // ids from 1000 on: an empty seed (the IVF write used to fail in
+    // analysis, the PQ one with an index out of bounds)
+    val shifted = emb.withColumn("vec_id", col("vec_id") + 1000)
+    refused("ivf shifted")(IvfIndexStore.write(shifted, "vec_id", "embedding", s"$base/ivf_sh"))
+    refused("pq shifted")(
+      graft.sources.PqIndexStore.write(shifted, "vec_id", "embedding", s"$base/pq_sh"))
+    // ids from 5 on: PQ seeds 11 of its 16 codes
+    val short = emb.withColumn("vec_id", col("vec_id") + 5)
+    assert(refused("pq short seed")(graft.sources.PqIndexStore.write(
+      short, "vec_id", "embedding", s"$base/pq_short")).contains("found 11 of the 16"))
+  }
+
+  test("IvfIndexStore: searchBatch prunes with DPP, search with a static IN list") {
     val emb = Tables.embeddings(spark, sf)
     val path = java.nio.file.Files.createTempDirectory("ivf_route").toString + "/idx"
     IvfIndexStore.write(emb, "vec_id", "embedding", path,
       model = Some(Knn.trainIvf(
         emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", sqrt(aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x))))))
-    // a query TABLE (200 rows — above SearchBatchThreshold; a filter
-    // on the probe side is what makes DPP worthwhile AND what Spark's
-    // PartitionPruning rule requires to insert the pruning subquery)
+    // a query TABLE (200 rows; a filter on the probe side is what
+    // makes DPP worthwhile AND what Spark's PartitionPruning rule
+    // requires to insert the pruning subquery)
     val bulk = emb.filter(col("vec_id") < 200).select(col("vec_id"), col("embedding"))
-    val routed = IvfIndexStore.search(spark, path, bulk, "vec_id", "embedding", k = 3)
-    assertLiveDpp(routed, "IvfIndexStore.search (bulk route)")
-    // and a small set still takes the static-IN path: the scan's
-    // partition filters carry the literal probed-cid IN list (Spark
-    // may stack a DPP expression on top — harmless, both prune)
-    val tiny = emb.filter(col("vec_id") < 3).select(col("vec_id"), col("embedding"))
-    val static = IvfIndexStore.search(spark, path, tiny, "vec_id", "embedding", k = 3)
+    val batch = IvfIndexStore.searchBatch(spark, path, bulk, "vec_id", "embedding", k = 3)
+    assertLiveDpp(batch, "IvfIndexStore.searchBatch (bulk query table)")
+    // search collects the same set: the scan's partition filters carry
+    // the literal probed-cid IN list (Spark may stack a DPP expression
+    // on top — harmless, both prune)
+    val static = IvfIndexStore.search(spark, path, bulk, "vec_id", "embedding", k = 3)
     val staticPlan = static.queryExecution.executedPlan.toString.toLowerCase
     assert("cid#\\d+ in \\(".r.findFirstIn(staticPlan).isDefined,
-      s"small query sets must keep the literal static IN partition filter; plan:\n$staticPlan")
-    // the two paths agree where they overlap
-    val a = routed.filter(col("query_id") < 3).orderBy("query_id", "rnk")
-      .collect().map(_.toString)
+      s"search must keep the literal static IN partition filter; plan:\n$staticPlan")
+    // the two paths agree on every query
+    val a = batch.orderBy("query_id", "rnk").collect().map(_.toString)
     val b = static.orderBy("query_id", "rnk").collect().map(_.toString)
-    assert(a.sameElements(b))
+    assert(a.length == 600 && a.sameElements(b))
   }
 
   test("src_zorder: zone-map file skipping prunes files without losing rows") {

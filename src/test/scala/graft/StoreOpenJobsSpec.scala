@@ -74,6 +74,7 @@ class StoreOpenJobsSpec extends SparkSpec {
     val searches = Seq[(String, () => DataFrame)](
       "flat" -> (() => IndexStore.search(IndexStore.read(spark, flat), q, "id", "v", 5)),
       "lsh" -> (() => IndexStore.searchAnnProbed(spark, flat, q, "id", "v", 5, 64)),
+      "lsh_band0" -> (() => IndexStore.searchAnn(IndexStore.read(spark, flat), q, "id", "v", 5, 64)),
       "ivf" -> (() => IvfIndexStore.search(spark, ivf, q, "id", "v", 5)),
       "ivfpq" -> (() => IvfPqIndexStore.search(spark, ivfpq, q, "id", "v", 5)),
       "pq" -> (() => PqIndexStore.search(spark, pq, q, "id", "v", 5)),
@@ -97,6 +98,24 @@ class StoreOpenJobsSpec extends SparkSpec {
       tier -> countJobs(search().orderBy("query_id", "rnk").collect())
     }.toMap
     assert(ordered.values.forall(_ == 1), s"jobs per ordered one-query search: $ordered")
+  }
+
+  test("a routed filtered search on its exact route: the survivor count and the top-k") {
+    built
+    val q = query
+    val label = Seq("label")
+    val (route, _) = IvfIndexStore.routedFiltered(spark, ivfMeta, q, "id", "v", 5, label,
+      graft.operators.Knn.IvfNprobe, IvfIndexStore.ExactRouteThreshold)
+    assert(route == "exact")
+    var n = 0
+    val jobs = countJobs {
+      n = IvfIndexStore.searchFilteredRouted(spark, ivfMeta, q, "id", "v", 5, label)
+        .orderBy("query_id", "rnk").collect().length
+    }
+    assert(n == 5)
+    // the limit-bounded survivor count (a shuffle stage and its result)
+    // and the top-k
+    assert(jobs == 3, s"a one-query routed exact search scheduled $jobs jobs")
   }
 
   test("a session built without GraftSession.builder plans a store search") {

@@ -3,7 +3,7 @@ package graft.sources
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,17 +11,24 @@ import graft.{SparkSpec, Tables}
 import graft.functions.{VectorFns => V}
 import graft.operators.Knn
 
-/** Every small-query store search ranked by the driver-resident top-k
-  * (CosineTopK) returns exactly what its previous broadcast-join +
-  * window formulation returns: same rows, same schema, or the same
-  * error. The previous formulations are kept below verbatim as
-  * references and run side by side on the sf0.001 embeddings and on
-  * edge corpora built to hit every case the operator reasons about.
+/** Every store search that collects its queries and ranks them with
+  * the driver-resident top-k (CosineTopK) returns exactly what its
+  * previous broadcast-join + window formulation returns: same rows,
+  * same schema, or the same error — except where the window
+  * formulation threw on a NULL query vector in the PQ family, where the
+  * operator ranks NULL distances by id. The previous formulations are
+  * kept below verbatim as references and run side by side on the
+  * sf0.001 embeddings and on edge corpora built to hit every case the
+  * operator reasons about.
   */
 class StoreSearchEquivalenceSpec extends SparkSpec {
-  import IvfIndexStore.{localProbeOf, matchQueries, prepared, probeJoin}
+  import IvfIndexStore.{localProbeOf, matchQueries, prepared}
 
   // ---- the previous formulations ----
+
+  private def probeJoin(matchCols: Seq[String]): Column =
+    matchCols.map(c => col(c) === col(s"q_$c"))
+      .foldLeft(col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))(_ && _)
 
   private def refRescoreTopK(cands: DataFrame, k: Int, idCol: String = "id",
                              matchCols: Seq[String] = Nil): DataFrame = {
@@ -56,6 +63,13 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
     refRescoreTopK(index.join(q, cond), k, matchCols = matchCols)
   }
 
+  private def refSearchAnn(index: DataFrame, queries: DataFrame, idCol: String,
+                           vecCol: String, k: Int, dim: Int): DataFrame = {
+    val q = broadcast(IndexStore.bandedQueries(queries, idCol, vecCol, dim))
+    refRescoreTopK(
+      index.join(q, col("band0") === col("qb0") && col("id") =!= col("query_id")), k)
+  }
+
   private def refLsh(spark: SparkSession, path: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
     val q = IndexStore.localProbe(IndexStore.bandedQueries(queries, idCol, vecCol, dim)
@@ -70,10 +84,8 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
 
   private def refIvf(spark: SparkSession, path: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val p = localProbeOf(prepared(queries, idCol, vecCol).limit(64 + 1),
+    val p = localProbeOf(prepared(queries, idCol, vecCol),
       IvfIndexStore.readCentroids(spark, path), Knn.IvfNprobe)
-    if (p.queries > 64)
-      return IvfIndexStore.searchBatch(spark, path, queries, idCol, vecCol, k)
     val index = StoreFs.openParquet(spark, path)
       .where(col("cid").isin(p.keys: _*))
     refRescoreTopK(index.join(broadcast(p.frame), probeJoin(Nil)), k, "vec_id")
@@ -87,6 +99,29 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
     val index = StoreFs.openParquet(spark, path).where(col("cid").isin(p.keys: _*))
     refRescoreTopK(index.join(broadcast(p.frame), probeJoin(matchCols)), k,
       "vec_id", matchCols)
+  }
+
+  /** The routed filtered search's exact route, as the route ran it. */
+  private def refRoutedExact(spark: SparkSession, path: String, queries: DataFrame,
+                             idCol: String, vecCol: String, k: Int,
+                             matchCols: Seq[String]): DataFrame = {
+    val q = matchQueries(queries, col(idCol), vecCol, matchCols)
+    val vals = q.select(matchCols.map(c => col(s"q_$c")): _*).distinct().collect()
+    if (vals.isEmpty)
+      return q.limit(0)
+        .select(col("vec_id").as("query_id") +: matchCols.map(c => col(s"q_$c").as(c))
+          :+ lit(1L).as("rnk") :+ col("vec_id").as("neighbor_id")
+          :+ lit(0.0).as("sim"): _*)
+    val pred = vals.map(r => matchCols.indices
+        .map(i => col(matchCols(i)) === lit(r.get(i))).reduce(_ && _))
+      .reduce(_ || _)
+    val survivors = StoreFs.openParquet(spark, path).where(pred)
+    val qb = broadcast(q.select(col("vec_id").as("query_id")
+        +: col("v").as("qv") +: col("nrm").as("qn")
+        +: matchCols.map(c => col(s"q_$c")): _*))
+    val cond = matchCols.map(c => col(c) === col(s"q_$c"))
+      .foldLeft(col("vec_id") =!= col("query_id"))(_ && _)
+    refRescoreTopK(survivors.join(qb, cond), k, "vec_id", matchCols)
   }
 
   private def refPq(spark: SparkSession, path: String, queries: DataFrame,
@@ -261,12 +296,22 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
     "lsh" -> assertSame(s"$label lsh")(
       IndexStore.searchAnnProbed(spark, st.flat, q, "id", "v", k, Dim),
       refLsh(spark, st.flat, q, "id", "v", k, Dim)),
+    "lsh band0" -> assertSame(s"$label lsh band0")(
+      IndexStore.searchAnn(IndexStore.read(spark, st.flat), q, "id", "v", k, Dim),
+      refSearchAnn(IndexStore.read(spark, st.flat), q, "id", "v", k, Dim)),
     "ivf" -> assertSame(s"$label ivf")(
       IvfIndexStore.search(spark, st.ivf, q, "id", "v", k),
       refIvf(spark, st.ivf, q, "id", "v", k)),
     "ivf filtered" -> assertSame(s"$label ivf filtered")(
       IvfIndexStore.searchFiltered(spark, st.ivf, q, "id", "v", k, lab),
-      refIvfFiltered(spark, st.ivf, q, "id", "v", k, lab)))
+      refIvfFiltered(spark, st.ivf, q, "id", "v", k, lab)),
+    "ivf routed exact" -> assertSame(s"$label ivf routed exact")({
+        val (route, d) = IvfIndexStore.routedFiltered(spark, st.ivf, q, "id", "v", k, lab,
+          Knn.IvfNprobe, exactThreshold = Int.MaxValue - 1)
+        assert(route == "exact")
+        d
+      },
+      refRoutedExact(spark, st.ivf, q, "id", "v", k, lab)))
     if (st.pq == null) return exact
     exact ++ Map("pq" -> assertSame(s"$label pq")(
       PqIndexStore.search(spark, st.pq, q, "id", "v", k),
@@ -331,20 +376,51 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
       assertRows(s"$tag few", few)
       assert(few("flat filtered").toOption.get.length == 6, "3 label-7 rows per query")
       assertRows(s"$tag no match", assertAllSearches(s"$tag no match", st, qs((5003L, v(30L), 99))),
-        empty = Set("flat filtered", "ivf filtered", "ivfpq filtered"))
+        empty = Set("flat filtered", "ivf filtered", "ivf routed exact", "ivfpq filtered"))
       assertRows(s"$tag k > lists",
         assertAllSearches(s"$tag k > lists", st, qs((5004L, v(40L), 0)), k = 400))
-      // 64 queries sharing lists run in the operator; 65 take the batch
-      // route
+      // query sets around the 64 rows where the IVF search once handed
+      // off to its batch route: every set runs in the operator
       for (n <- Seq(64, 65))
         assertRows(s"$tag $n queries", assertAllSearches(s"$tag $n queries", st,
           qs((0 until n).map(i => (6000L + i, v((i * 4).toLong), i % 5)): _*)))
-      // a null query vector ranks NULL sims by id (the PQ family throws
-      // on it in both formulations)
-      val nul = assertAllSearches(s"$tag null vector", st, qs((5005L, null, 1), (5006L, v(8L), 1)))
+      // a null query vector ranks NULL sims by id
+      val nulQ = qs((5005L, null, 1), (5006L, v(8L), 1))
+      val nul = assertAllSearches(s"$tag null vector", st.copy(pq = null), nulQ)
       assertRows(s"$tag null vector", nul.filter(_._1.startsWith("flat")))
       assert(nul("flat").toOption.get.count(_.isNullAt(3)) == 5)
-      assert(nul("pq") == Left("java.lang.NullPointerException"))
+      assertNullVectorAdc(tag, st, nulQ, qs((5006L, v(8L), 1)))
+    }
+  }
+
+  /** The PQ family on `q`, a null-vector query 5005 and query 5006: the
+    * null vector ranks k NULL distances by id (its window formulation
+    * throws on it), and 5006 ranks as its window formulation ranks it
+    * alone (`only5006`).
+    */
+  private def assertNullVectorAdc(tag: String, st: Stores, q: DataFrame,
+                                  only5006: DataFrame): Unit = {
+    val lab = Seq("label")
+    val searches = Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)](
+      ("pq", PqIndexStore.search(spark, st.pq, _, "id", "v", 5),
+        refPq(spark, st.pq, _, "id", "v", 5)),
+      ("ivfpq", IvfPqIndexStore.search(spark, st.ivfpq, _, "id", "v", 5),
+        refIvfPq(spark, st.ivfpq, _, "id", "v", 5, Nil)),
+      ("ivfpq filtered", IvfPqIndexStore.searchFiltered(spark, st.ivfpq, _, "id", "v", 5, lab),
+        refIvfPq(spark, st.ivfpq, _, "id", "v", 5, lab)),
+      ("ivfpq residual", IvfPqIndexStore.search(spark, st.ivfpqRes, _, "id", "v", 5),
+        refIvfPq(spark, st.ivfpqRes, _, "id", "v", 5, Nil)))
+    for ((name, search, ref) <- searches) {
+      val rows = search(q).orderBy("query_id", "rnk").collect().toSeq
+      val (nul, other) = rows.partition(_.getLong(0) == 5005L)
+      val dist = nul.last.fieldIndex("adc_dist")
+      assert(nul.length == 5 && nul.forall(_.isNullAt(dist)), s"$tag $name null vector: $nul")
+      val ids = nul.map(_.getAs[Any]("neighbor_id").toString.toLong)
+      assert(ids == ids.sorted && ids.distinct == ids, s"$tag $name null vector ids: $ids")
+      if (name == "pq") assert(ids == Seq(0L, 1L, 2L, 3L, 4L))
+      assert(outcome(ref(q)) == Left("java.lang.NullPointerException"))
+      val want = ref(only5006).orderBy("query_id", "rnk").collect().toSeq
+      assert(want.nonEmpty && other == want, s"$tag $name query 5006\n got  $other\n want $want")
     }
   }
 
