@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{
-  BitwiseCount, BitwiseXor, Cast, Divide, Expression, ExpressionInfo,
+  BitwiseCount, BitwiseXor, Cast, Divide, EvalMode, Expression, ExpressionInfo,
   Multiply, Sqrt}
 
 import org.apache.spark.sql.types.LongType
@@ -35,11 +35,11 @@ object GraftFunctions {
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot" -> ((es: Seq[Expression]) => dotE(es(0), es(1))),
-    // dot/(|a|·|b|) — the same expression shape VectorFns.cosine
-    // builds, so SQL results are bit-identical to the Scala API's
+    // dot/(|a|·|b|) as a TRY division — the same expression VectorFns.cosine
+    // builds, so SQL results (NULL for a zero norm) are the Scala API's
     "graft_norm" -> ((es: Seq[Expression]) => normE(es.head)),
     "graft_cosine" -> ((es: Seq[Expression]) =>
-      Divide(dotE(es(0), es(1)), Multiply(normE(es(0)), normE(es(1))))),
+      Divide(dotE(es(0), es(1)), Multiply(normE(es(0)), normE(es(1))), EvalMode.TRY)),
     // popcount(a XOR b) over sign-code words (the BQ tier's rescore
     // primitive); long output so SQL sums don't overflow
     "graft_hamming" -> ((es: Seq[Expression]) =>

@@ -33,13 +33,15 @@ object VectorFns {
     * list_dot_product formula so both sides evaluate the same doubles.
     */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm2(a) * norm2(b))
+    cosinePre(dot(a, b), norm2(a), norm2(b))
 
   /** Cosine given precomputed norms (avoids re-deriving |a| per pair in
     * a k-NN join — the norms are computed once per row before the join).
+    * A zero-norm vector scores NULL in any ANSI mode (a TRY division),
+    * so one zero vector never fails a whole search.
     */
   def cosinePre(dotAB: Column, normA: Column, normB: Column): Column =
-    dotAB / (normA * normB)
+    try_divide(dotAB, normA * normB)
 
   /** L2-normalized copy of the vector (FAISS normalize_L2). */
   def l2Normalize(v: Column): Column = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.NumericType
 import graft.Tables
 import graft.functions.{HashFns, VectorFns => V}
+import graft.plans.{Ranking, TopKScore}
 
 /** Vector search — the reference's core capability re-expressed
   * Spark-first.
@@ -15,10 +16,13 @@ import graft.functions.{HashFns, VectorFns => V}
   * results joined to a metadata side table (app.py:148-160).
   *
   * Spark shape: the query set is small and broadcast; the corpus is the
-  * big side and is never shuffled for exact search — per-query top-k is
-  * a windowed row_number that prunes before any global movement. ANN
+  * big side and is never shuffled for exact search — every per-query
+  * top-k is [[graft.plans.Ranking]]'s window, whose WindowGroupLimit
+  * prunes each partition to k rows before any global movement. ANN
   * scale paths (LSH buckets, IVF) turn the cross product into an
   * equi-join on bucket/centroid keys, which is what survives 100 TB.
+  * The recall gates build their corpus once ([[sharedCorpus]]) and pass
+  * it to each leg as `shared`, in place of the leg's own preparation.
   */
 object Knn {
 
@@ -137,29 +141,23 @@ object Knn {
     graft.operators.Dedup.spread(corpus(spark, dir))
       .transform(graft.Materialize.forceCached)
 
-  /** Exact top-k neighbors for each query vector: broadcast nested-loop
-    * against the corpus + windowed top-k (IndexFlatIP.search semantics).
+  /** Exact top-k neighbors for each query vector of a corpus frame
+    * (vec_id, v, nrm): broadcast nested-loop + the scored window top-k
+    * (IndexFlatIP.search semantics).
     */
-  private def knnBase(spark: SparkSession, dir: String, k: Int): DataFrame =
-    knnBaseOn(corpus(spark, dir), k)
-
-  /** [[knnBase]] over a caller-prepared corpus frame (shared-leg gates
-    * pass the one materialized [[sharedCorpus]]).
-    */
-  private def knnBaseOn(e: DataFrame, k: Int): DataFrame = {
+  private def knnBase(e: DataFrame, k: Int): DataFrame = {
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sims = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    Ranking.scored(e.join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, k)
   }
 
+  /** Round-6 cosine `sim` of (qv, qn) × (v, nrm) — [[TopKScore.Cosine]]. */
+  private def cosineSim: Column = TopKScore.Cosine.column.as("sim")
+
   def vKnnExact(spark: SparkSession, dir: String): DataFrame =
-    knnBase(spark, dir, DefaultK)
-      .select("query_id", "rnk", "neighbor_id", "sim")
-      .orderBy("query_id", "rnk")
+    knnBase(corpus(spark, dir), DefaultK).orderBy("query_id", "rnk")
 
   /** k-NN + metadata join (app.py:148-160: metadata_list[idx] lookup →
     * class name / paths). The k-NN result is tiny; the metadata join is
@@ -169,7 +167,7 @@ object Knn {
     val meta = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("source")),
         col("vec_id") === col("doc_id"), "left")
-    val knn = knnBase(spark, dir, DefaultK)
+    val knn = knnBase(corpus(spark, dir), DefaultK)
     knn.join(meta, knn("neighbor_id") === meta("vec_id"))
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("sim"),
         col("label"), col("lang"), col("source"))
@@ -181,13 +179,12 @@ object Knn {
     * Ties break to the smallest label.
     */
   def vKnnClassify(spark: SparkSession, dir: String): DataFrame = {
-    val knn = knnBase(spark, dir, DefaultK)
+    val knn = knnBase(corpus(spark, dir), DefaultK)
     val labeled = knn.join(
       broadcast(Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))),
       col("neighbor_id") === col("vec_id"))
     val votes = labeled.groupBy("query_id", "label").agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy("query_id").orderBy(col("votes").desc, col("label").asc)
-    votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    Ranking.topK(votes, Seq("query_id"), Seq(col("votes").desc, col("label").asc), 1)
       .select(col("query_id"), col("label").as("pred_label"), col("votes"))
       .orderBy("query_id")
   }
@@ -349,8 +346,8 @@ object Knn {
         greatest(col("id1"), col("id2")).as("id2"),
         round(V.cosinePre(V.dot(col("v1"), col("v2")), col("n1"), col("n2")), 6).as("sim"),
         col("ga"), col("gb"))
-    val w = Window.partitionBy("ga", "gb").orderBy(col("sim").desc, col("id1").asc, col("id2").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 100)
+    Ranking.topK(scored, Seq("ga", "gb"),
+        Seq(col("sim").desc, col("id1").asc, col("id2").asc), 100)
       .select("id1", "id2", "sim")
       .orderBy(col("sim").desc, col("id1").asc, col("id2").asc)
       .limit(100)
@@ -388,8 +385,7 @@ object Knn {
     val ips = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(V.dot(col("qv"), col("v")), 6).as("ip"))
-    val w = Window.partitionBy("query_id").orderBy(col("ip").desc, col("neighbor_id").asc)
-    ips.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
+    Ranking.topK(ips, Seq("query_id"), Seq(col("ip").desc, col("neighbor_id").asc), DefaultK)
       .select("query_id", "rnk", "neighbor_id", "ip")
       .orderBy("query_id", "rnk")
   }
@@ -404,8 +400,7 @@ object Knn {
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim)
       .filter(col("sim") >= 0.2)
       .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
   }
@@ -414,11 +409,8 @@ object Knn {
     * dist² = |a|²+|b|²−2a·b reuses the precomputed norms + codegen dot
     * (clamped at 0 against FP negativity for near-identical vectors).
     */
-  def vKnnL2(spark: SparkSession, dir: String): DataFrame =
-    vKnnL2On(corpus(spark, dir))
-
-  /** [[vKnnL2]] over a caller-prepared corpus frame. */
-  private def vKnnL2On(e: DataFrame): DataFrame = {
+  def vKnnL2(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame = {
+    val e = shared.getOrElse(corpus(spark, dir))
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val dists = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -427,8 +419,7 @@ object Knn {
           col("qn") * col("qn") + col("nrm") * col("nrm")
             - lit(2.0) * V.dot(col("qv"), col("v")),
           lit(0.0))), 6).as("dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("dist").asc, col("neighbor_id").asc)
-    dists.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
+    Ranking.topK(dists, Seq("query_id"), Seq(col("dist").asc, col("neighbor_id").asc), DefaultK)
       .select("query_id", "rnk", "neighbor_id", "dist")
       .orderBy("query_id", "rnk")
   }
@@ -462,17 +453,13 @@ object Knn {
     * corpus ever needed).
     */
   def vAnnLsh(spark: SparkSession, dir: String): DataFrame =
-    annLshRanked(spark, dir, NumQueries, 3)
+    annLshRanked(corpus(spark, dir), NumQueries, 3)
 
-  /** The LSH ANN leg with explicit query-prefix and k — vAnnLsh's body
-    * parameterized so the hybrid fusion gate can draw a deeper leg.
+  /** The LSH ANN leg over a corpus frame with explicit query-prefix and
+    * k — vAnnLsh's body parameterized so the hybrid fusion gate can
+    * draw a deeper leg and the recall gate can share its corpus.
     */
-  private[graft] def annLshRanked(spark: SparkSession, dir: String,
-                                  nq: Int, k: Int): DataFrame =
-    annLshRankedOn(corpus(spark, dir), nq, k)
-
-  /** [[annLshRanked]] over a caller-prepared corpus frame. */
-  private def annLshRankedOn(c: DataFrame, nq: Int, k: Int): DataFrame = {
+  private def annLshRanked(c: DataFrame, nq: Int, k: Int): DataFrame = {
     val dim = 64
     val e = withBands(c.withColumn("vq", V.quantize(col("v"))), dim)
       .select("vec_id", "v", "nrm", "band0", "band1")
@@ -486,12 +473,9 @@ object Knn {
     val cands1 = e.join(broadcast(q),
       col("vec_id") =!= col("query_id") && col("band1") === col("qb1") &&
       col("band0") =!= col("qb0"))
-    val cands = cands0.union(cands1)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    cands.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "sim")
+    Ranking.scored(cands0.union(cands1)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, k)
       .orderBy("query_id", "rnk")
   }
 
@@ -546,16 +530,21 @@ object Knn {
     */
   def vRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = knnBaseOn(c, 3).select(col("query_id"), col("neighbor_id"))
-    val lsh = annLshRankedOn(c, NumQueries, 3)
-      .select(col("query_id").as("lq"), col("neighbor_id").as("ln"))
-    exact.join(lsh,
-        col("query_id") === col("lq") && col("neighbor_id") === col("ln"), "left")
-      .groupBy("query_id")
-      .agg(count(col("ln")).as("hits"),
-        round(count(col("ln")) / lit(3.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(knnBase(c, 3), annLshRanked(c, NumQueries, 3), 3)
   }
+
+  /** recall@k per query: the share of `exact`'s (query_id, neighbor_id)
+    * rows that `approx` returns too — (query_id, hits, recall) ordered
+    * by query_id, then any `extra` aggregates over the joined rows.
+    */
+  private def recallAt(exact: DataFrame, approx: DataFrame, k: Int,
+                       extra: Column*): DataFrame =
+    exact.join(approx.select(col("query_id").as("aq"), col("neighbor_id").as("an")),
+        col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
+      .groupBy("query_id")
+      .agg(count(col("an")).as("hits"),
+        round(count(col("an")) / lit(k.toDouble), 6).as("recall") +: extra: _*)
+      .orderBy("query_id")
 
   /** v_ivf_recall: recall@5 of the IVF index against exact cosine
     * top-5 — the driver-visible quality gate for the k-means path.
@@ -565,15 +554,8 @@ object Knn {
     */
   def vIvfRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = knnBaseOn(c, DefaultK).select(col("query_id"), col("neighbor_id"))
-    val ivf = vIvfOn(spark, dir, c.select(col("vec_id"), col("v"), col("nrm")))
-      .select(col("query_id").as("iq"), col("neighbor_id").as("inb"))
-    exact.join(ivf,
-        col("query_id") === col("iq") && col("neighbor_id") === col("inb"), "left")
-      .groupBy("query_id")
-      .agg(count(col("inb")).as("hits"),
-        round(count(col("inb")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(knnBase(c, DefaultK),
+      vIvf(spark, dir, Some(c.select("vec_id", "v", "nrm"))), DefaultK)
   }
 
   /** v_pq_recall: recall@5 of PQ/ADC search against exact L2 top-5 —
@@ -582,14 +564,8 @@ object Knn {
     */
   def vPqRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = vKnnL2On(c).select(col("query_id"), col("neighbor_id"))
-    val pq = vPqOn(spark, dir, c.select(col("vec_id"), col("v")))
-      .select(col("query_id").as("pq"), col("neighbor_id").as("pn"))
-    exact.join(pq, col("query_id") === col("pq") && col("neighbor_id") === col("pn"), "left")
-      .groupBy("query_id")
-      .agg(count(col("pn")).as("hits"),
-        round(count(col("pn")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(vKnnL2(spark, dir, Some(c)), vPq(spark, dir, Some(c.select("vec_id", "v"))),
+      DefaultK)
   }
 
   /** v_ivf_pq_recall: recall@5 of the two-stage IVF-PQ search against
@@ -598,14 +574,8 @@ object Knn {
     */
   def vIvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = vKnnL2On(c).select(col("query_id"), col("neighbor_id"))
-    val ipq = vIvfPqOn(spark, dir, c.select(col("vec_id"), col("v"), col("nrm")))
-      .select(col("query_id").as("pq"), col("neighbor_id").as("pn"))
-    exact.join(ipq, col("query_id") === col("pq") && col("neighbor_id") === col("pn"), "left")
-      .groupBy("query_id")
-      .agg(count(col("pn")).as("hits"),
-        round(count(col("pn")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(vKnnL2(spark, dir, Some(c)),
+      vIvfPq(spark, dir, Some(c.select("vec_id", "v", "nrm"))), DefaultK)
   }
 
   // ---- IVF (k-means coarse quantizer) ------------------------------
@@ -700,7 +670,7 @@ object Knn {
   private[graft] def trainIvf(e: DataFrame): Array[(Int, Array[Double])] = {
     val sample = e.filter(col("vec_id") < IvfTrainSample)
     var centroids: Array[(Int, Array[Double])] =
-      trainingSeed(sample, IvfClusters, 1, "IVF")
+      trainingSeed(sample, IvfClusters, IvfClusters, "IVF")
         .zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
 
@@ -792,24 +762,18 @@ object Knn {
     * by nearest centroid, queries probe the `nprobe` nearest lists.
     * The model comes from the session cache (trained on first use).
     */
-  def vIvf(spark: SparkSession, dir: String): DataFrame =
+  def vIvf(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame = {
     // eager + lineage-truncating so the iterative passes and both join
     // sides read materialized blocks (see Dedup.forceCached)
-    vIvfOn(spark, dir, Dedup.spread(
+    val e = shared.getOrElse(Dedup.spread(
         corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
       .transform(graft.Materialize.forceCached))
-
-  /** [[vIvf]] over a caller-prepared (vec_id, v, nrm) corpus frame. */
-  private def vIvfOn(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
     val (inv, centroids) = ivfModel(spark, dir, e)
     val qProbe = ivfProbe(inv, centroids)
-    val cands = inv.join(broadcast(qProbe),
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    cands.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select("query_id", "rnk", "neighbor_id", "sim")
+    Ranking.scored(inv.join(broadcast(qProbe),
+          col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, DefaultK)
       .orderBy("query_id", "rnk")
   }
 
@@ -876,12 +840,14 @@ object Knn {
   }
 
   /** PQ codebooks for a corpus dir, from the session cache (trained on
-    * first use — see the registry scaladoc). Shared by v_pq, v_ivf_pq,
-    * and the recall gates.
+    * `e` on first use — see the registry scaladoc), under the corpus key
+    * plus `space` (the transformed spaces' books differ from the raw
+    * ones). Shared by the PQ-family gates, v_ivf_pq, the OPQ stores and
+    * the recall gates.
     */
-  private def pqBooksCached(spark: SparkSession, dir: String,
-                            e: DataFrame): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent(modelKey(spark, dir), _ => trainPqBooks(e))
+  private def pqBooksCached(spark: SparkSession, dir: String, e: DataFrame,
+                            space: String = ""): Array[Array[Array[Double]]] =
+    pqCache.computeIfAbsent(modelKey(spark, dir) + space, _ => trainPqBooks(e))
 
   /** All M codes as ONE array column in a single map-side projection —
     * no explode, no per-subspace rows. Each element is the same
@@ -978,14 +944,19 @@ object Knn {
     books
   }
 
-  def vPq(spark: SparkSession, dir: String): DataFrame =
-    vPqOn(spark, dir, Dedup.spread(
+  def vPq(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame =
+    pqTier(spark, dir, "", shared.getOrElse(Dedup.spread(
       corpus(spark, dir).select(col("vec_id"), col("v")))
-      .transform(graft.Materialize.forceCached))
+      .transform(graft.Materialize.forceCached)))
 
-  /** [[vPq]] over a caller-prepared (vec_id, v) corpus frame. */
-  private def vPqOn(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
-    val books = pqBooksCached(spark, dir, e)
+  /** The PQ-family gate body (v_pq, v_opq, v_opq_learned): codebooks
+    * for the (vec_id, v) frame `e`, already in the tier's vector space,
+    * cached under `space`; the corpus encoded once; map-side ADC against
+    * broadcast per-query tables; the scored top-5.
+    */
+  private def pqTier(spark: SparkSession, dir: String, space: String,
+                     e: DataFrame): DataFrame = {
+    val books = pqBooksCached(spark, dir, e, space)
     // encode is ONE map-side pass over the corpus (no exploded code
     // rows, no (m, code) join, no groupBy re-merge), materialized so
     // the query join's fan-out reads 8-byte codes instead of
@@ -998,11 +969,9 @@ object Knn {
       e.filter(col("vec_id") < NumQueries).orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)),
       books)
-    val scored = coded.join(qdt, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcDistCol.as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+    Ranking.scored(coded.join(qdt, col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), adcDistCol.as("adc_dist")),
+      TopKScore.Adc, DefaultK)
       .orderBy("query_id", "rnk")
   }
 
@@ -1071,31 +1040,16 @@ object Knn {
     * to v_pq: the rotation adds one projection to the encode pass and
     * nothing to search.
     */
-  def vOpq(spark: SparkSession, dir: String): DataFrame =
-    vOpqOn(spark, dir, Dedup.spread(corpus(spark, dir)))
+  def vOpq(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame =
+    pqTier(spark, dir, "#opq", rotated(shared.getOrElse(Dedup.spread(corpus(spark, dir)))))
 
-  /** [[vOpq]] over a caller-prepared corpus frame (the rotated frame is
-    * still materialized internally — it feeds three consumers).
+  /** (vec_id, v) of a corpus frame in the Hadamard-rotated space,
+    * materialized — it feeds training, the encode and the query tables.
     */
-  private def vOpqOn(spark: SparkSession, dir: String, c: DataFrame): DataFrame = {
-    val e = withHadamard(c.select(col("vec_id"), col("v")), "v", "vr")
+  private def rotated(c: DataFrame): DataFrame =
+    withHadamard(c.select(col("vec_id"), col("v")), "v", "vr")
       .select(col("vec_id"), col("vr").as("v"))
       .transform(graft.Materialize.forceCached)
-    val books = pqCache.computeIfAbsent(modelKey(spark, dir) + "#opq",
-      _ => trainPqBooks(e))
-    val coded = e.select(col("vec_id"), pqCodesCol(books).as("codes"))
-      .transform(graft.Materialize.forceCached)
-    val qdt = pqQueryTables(spark,
-      e.filter(col("vec_id") < NumQueries).orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)),
-      books)
-    val scored = coded.join(qdt, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcDistCol.as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "rnk")
-  }
 
   /** v_opq_recall: recall@5 of rotated-PQ ADC against exact L2 top-5 —
     * the quality gate that shows what the Hadamard pre-rotation buys
@@ -1104,14 +1058,7 @@ object Knn {
     */
   def vOpqRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = vKnnL2On(c).select(col("query_id"), col("neighbor_id"))
-    val opq = vOpqOn(spark, dir, c)
-      .select(col("query_id").as("oq"), col("neighbor_id").as("on_"))
-    exact.join(opq, col("query_id") === col("oq") && col("neighbor_id") === col("on_"), "left")
-      .groupBy("query_id")
-      .agg(count(col("on_")).as("hits"),
-        round(count(col("on_")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(vKnnL2(spark, dir, Some(c)), vOpq(spark, dir, Some(c)), DefaultK)
   }
 
   /** LEARNED orthogonal transform for OPQ, oracle-replayable: the
@@ -1164,30 +1111,18 @@ object Knn {
     * variance ranking, snake assignment, permutation, and the whole
     * PQ pipeline.
     */
-  def vOpqLearned(spark: SparkSession, dir: String): DataFrame =
-    vOpqLearnedOn(spark, dir, Dedup.spread(corpus(spark, dir)))
+  def vOpqLearned(spark: SparkSession, dir: String,
+                  shared: Option[DataFrame] = None): DataFrame =
+    pqTier(spark, dir, "#opql",
+      permuted(spark, dir, shared.getOrElse(Dedup.spread(corpus(spark, dir)))))
 
-  /** [[vOpqLearned]] over a caller-prepared corpus frame. */
-  private def vOpqLearnedOn(spark: SparkSession, dir: String, c: DataFrame): DataFrame = {
+  /** (vec_id, v) of a corpus frame under the learned permutation,
+    * materialized — it feeds training, the encode and the query tables.
+    */
+  private def permuted(spark: SparkSession, dir: String, c: DataFrame): DataFrame = {
     val perm = opqLearnedPerm(spark, dir)
-    val e = c
-      .select(col("vec_id"),
-        array(perm.map(s => element_at(col("v"), s + 1)): _*).as("v"))
+    c.select(col("vec_id"), array(perm.map(s => element_at(col("v"), s + 1)): _*).as("v"))
       .transform(graft.Materialize.forceCached)
-    val books = pqCache.computeIfAbsent(modelKey(spark, dir) + "#opql",
-      _ => trainPqBooks(e))
-    val coded = e.select(col("vec_id"), pqCodesCol(books).as("codes"))
-      .transform(graft.Materialize.forceCached)
-    val qdt = pqQueryTables(spark,
-      e.filter(col("vec_id") < NumQueries).orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)),
-      books)
-    val scored = coded.join(qdt, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcDistCol.as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "rnk")
   }
 
   /** v_opq_learned_recall: recall@5 of the learned-allocation OPQ
@@ -1197,14 +1132,7 @@ object Knn {
     */
   def vOpqLearnedRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = vKnnL2On(c).select(col("query_id"), col("neighbor_id"))
-    val opq = vOpqLearnedOn(spark, dir, c)
-      .select(col("query_id").as("oq"), col("neighbor_id").as("on_"))
-    exact.join(opq, col("query_id") === col("oq") && col("neighbor_id") === col("on_"), "left")
-      .groupBy("query_id")
-      .agg(count(col("on_")).as("hits"),
-        round(count(col("on_")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(vKnnL2(spark, dir, Some(c)), vOpqLearned(spark, dir, Some(c)), DefaultK)
   }
 
   /** v_matryoshka: Matryoshka (MRL) prefix search + full-dim rerank —
@@ -1226,11 +1154,9 @@ object Knn {
     * serving contract: each nesting level is L2-normalized at its own
     * length), so coarse scores are true cosines in the 16-dim space.
     */
-  def vMatryoshka(spark: SparkSession, dir: String): DataFrame =
-    vMatryoshkaOn(corpus(spark, dir))
-
-  /** [[vMatryoshka]] over a caller-prepared corpus frame. */
-  private def vMatryoshkaOn(e: DataFrame): DataFrame = {
+  def vMatryoshka(spark: SparkSession, dir: String,
+                  shared: Option[DataFrame] = None): DataFrame = {
+    val e = shared.getOrElse(corpus(spark, dir))
     val prefixDim = 16
     val rerankR = 20
     val pre = e.select(col("vec_id"), slice(col("v"), 1, prefixDim).as("vp"))
@@ -1240,19 +1166,15 @@ object Knn {
     val coarse = pre.join(broadcast(qp), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(V.cosinePre(V.dot(col("qvp"), col("vp")), col("qnp"), col("np")), 6).as("psim"))
-    val wC = Window.partitionBy("query_id").orderBy(col("psim").desc, col("neighbor_id").asc)
-    val cand = coarse.withColumn("crnk", row_number().over(wC))
-      .filter(col("crnk") <= rerankR)
+    val cand = Ranking.topK(coarse, Seq("query_id"),
+        Seq(col("psim").desc, col("neighbor_id").asc), rerankR, "crnk")
       .select("query_id", "neighbor_id", "psim")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val reranked = e.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
       .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("neighbor_id"), col("psim"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wS = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    reranked.withColumn("rnk", row_number().over(wS).cast("long"))
-      .filter(col("rnk") <= DefaultK)
+      .select(col("query_id"), col("neighbor_id"), col("psim"), cosineSim)
+    Ranking.topK(reranked, Seq("query_id"), Seq(col("sim").desc, col("neighbor_id").asc), DefaultK)
       .select("query_id", "rnk", "neighbor_id", "psim", "sim")
       .orderBy("query_id", "rnk")
   }
@@ -1264,14 +1186,7 @@ object Knn {
     */
   def vMatryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = knnBaseOn(c, DefaultK).select(col("query_id"), col("neighbor_id"))
-    val mrl = vMatryoshkaOn(c)
-      .select(col("query_id").as("mq"), col("neighbor_id").as("mn"))
-    exact.join(mrl, col("query_id") === col("mq") && col("neighbor_id") === col("mn"), "left")
-      .groupBy("query_id")
-      .agg(count(col("mn")).as("hits"),
-        round(count(col("mn")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(knnBase(c, DefaultK), vMatryoshka(spark, dir, Some(c)), DefaultK)
   }
 
   /** Powers of two for one 32-dim half of a binary-quantized vector.
@@ -1345,11 +1260,8 @@ object Knn {
     * Ties (equal hamming) break on neighbor_id, so the candidate set
     * is deterministic and the DuckDB oracle replays it bit-for-bit.
     */
-  def vBq(spark: SparkSession, dir: String): DataFrame =
-    vBqOn(corpus(spark, dir))
-
-  /** [[vBq]] over a caller-prepared corpus frame. */
-  private def vBqOn(e: DataFrame): DataFrame = {
+  def vBq(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame = {
+    val e = shared.getOrElse(corpus(spark, dir))
     val rerankR = 20
     val codes = e.select(col("vec_id"),
       bqWords(col("v"), 0).as("code_lo"), bqWords(col("v"), 32).as("code_hi"))
@@ -1360,20 +1272,15 @@ object Knn {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (bit_count(col("code_lo").bitwiseXOR(col("qlo"))) +
           bit_count(col("code_hi").bitwiseXOR(col("qhi")))).cast("long").as("hamming"))
-    val wH = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = ham.withColumn("hrnk", row_number().over(wH))
-      .filter(col("hrnk") <= rerankR)
+    val cand = Ranking.topK(ham, Seq("query_id"),
+        Seq(col("hamming").asc, col("neighbor_id").asc), rerankR, "hrnk")
       .select("query_id", "neighbor_id", "hamming")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val reranked = e.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
       .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wS = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    reranked.withColumn("rnk", row_number().over(wS).cast("long"))
-      .filter(col("rnk") <= DefaultK)
+      .select(col("query_id"), col("neighbor_id"), col("hamming"), cosineSim)
+    Ranking.topK(reranked, Seq("query_id"), Seq(col("sim").desc, col("neighbor_id").asc), DefaultK)
       .select("query_id", "rnk", "neighbor_id", "hamming", "sim")
       .orderBy("query_id", "rnk")
   }
@@ -1391,12 +1298,9 @@ object Knn {
     * duplicate-free by construction. Same trained model as every
     * other IVF consumer (session registry — no second training pass).
     */
-  def vIvfBq(spark: SparkSession, dir: String): DataFrame =
-    vIvfBqOn(spark, dir, corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
+  def vIvfBq(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame = {
+    val e = shared.getOrElse(corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
       .transform(graft.Materialize.forceCached))
-
-  /** [[vIvfBq]] over a caller-prepared (vec_id, v, nrm) corpus frame. */
-  private def vIvfBqOn(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
     val rerankR = 20
     val (inv, centroids) = ivfModel(spark, dir, e)
     val qProbe = ivfProbe(inv, centroids)
@@ -1413,20 +1317,15 @@ object Knn {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (bit_count(col("code_lo").bitwiseXOR(col("qlo"))) +
           bit_count(col("code_hi").bitwiseXOR(col("qhi")))).cast("long").as("hamming"))
-    val wH = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = ham.withColumn("hrnk", row_number().over(wH))
-      .filter(col("hrnk") <= rerankR)
+    val cand = Ranking.topK(ham, Seq("query_id"),
+        Seq(col("hamming").asc, col("neighbor_id").asc), rerankR, "hrnk")
       .select("query_id", "neighbor_id", "hamming")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("rq"), col("v").as("qv"), col("nrm").as("qn"))
     val reranked = e.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
       .join(broadcast(q), col("query_id") === col("rq"))
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wS = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    reranked.withColumn("rnk", row_number().over(wS).cast("long"))
-      .filter(col("rnk") <= DefaultK)
+      .select(col("query_id"), col("neighbor_id"), col("hamming"), cosineSim)
+    Ranking.topK(reranked, Seq("query_id"), Seq(col("sim").desc, col("neighbor_id").asc), DefaultK)
       .select("query_id", "rnk", "neighbor_id", "hamming", "sim")
       .orderBy("query_id", "rnk")
   }
@@ -1480,14 +1379,8 @@ object Knn {
     */
   def vIvfBqRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = knnBaseOn(c, DefaultK).select(col("query_id"), col("neighbor_id"))
-    val ib = vIvfBqOn(spark, dir, c.select(col("vec_id"), col("v"), col("nrm")))
-      .select(col("query_id").as("bq"), col("neighbor_id").as("bn"))
-    exact.join(ib, col("query_id") === col("bq") && col("neighbor_id") === col("bn"), "left")
-      .groupBy("query_id")
-      .agg(count(col("bn")).as("hits"),
-        round(count(col("bn")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(knnBase(c, DefaultK),
+      vIvfBq(spark, dir, Some(c.select("vec_id", "v", "nrm"))), DefaultK)
   }
 
   /** v_bq_recall: recall@5 of the Hamming+rerank path against exact
@@ -1497,14 +1390,7 @@ object Knn {
     */
   def vBqRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for both legs
-    val exact = knnBaseOn(c, DefaultK).select(col("query_id"), col("neighbor_id"))
-    val bq = vBqOn(c)
-      .select(col("query_id").as("bq"), col("neighbor_id").as("bn"))
-    exact.join(bq, col("query_id") === col("bq") && col("neighbor_id") === col("bn"), "left")
-      .groupBy("query_id")
-      .agg(count(col("bn")).as("hits"),
-        round(count(col("bn")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(knnBase(c, DefaultK), vBq(spark, dir, Some(c)), DefaultK)
   }
 
   /** v_bq_range: radius-bounded Hamming search over the binary codes
@@ -1558,13 +1444,10 @@ object Knn {
     * check); the spec asserts candidates ⊆ probed lists and recall
     * overlap with exact search.
     */
-  def vIvfPq(spark: SparkSession, dir: String): DataFrame =
-    vIvfPqOn(spark, dir, Dedup.spread(
+  def vIvfPq(spark: SparkSession, dir: String, shared: Option[DataFrame] = None): DataFrame = {
+    val e = shared.getOrElse(Dedup.spread(
         corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
       .transform(graft.Materialize.forceCached))
-
-  /** [[vIvfPq]] over a caller-prepared (vec_id, v, nrm) corpus frame. */
-  private def vIvfPqOn(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
     val (inv, centroids) = ivfModel(spark, dir, e)
     val qProbe = ivfProbe(inv, centroids)
     val books = pqBooksCached(spark, dir, e.select(col("vec_id"), col("v")))
@@ -1579,12 +1462,10 @@ object Knn {
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)),
       books)
     val probes = qProbe.select("query_id", "pcid").join(qdt, "query_id")
-    val scored = coded.join(broadcast(probes),
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcDistCol.as("adc_dist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+    Ranking.scored(coded.join(broadcast(probes),
+          col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), adcDistCol.as("adc_dist")),
+      TopKScore.Adc, DefaultK)
       .orderBy("query_id", "rnk")
   }
 
@@ -1671,13 +1552,11 @@ object Knn {
                                      books: Array[Array[Array[Double]]]): Array[Array[Double]] =
     pqQueryTable(Array.tabulate(qv.length)(i => qv(i) - cv(i)), books)
 
-  def vIvfPqRes(spark: SparkSession, dir: String): DataFrame =
-    vIvfPqResOn(spark, dir, Dedup.spread(
+  def vIvfPqRes(spark: SparkSession, dir: String,
+                shared: Option[DataFrame] = None): DataFrame = {
+    val e = shared.getOrElse(Dedup.spread(
         corpus(spark, dir).select(col("vec_id"), col("v"), col("nrm")))
       .transform(graft.Materialize.forceCached))
-
-  /** [[vIvfPqRes]] over a caller-prepared (vec_id, v, nrm) corpus frame. */
-  private def vIvfPqResOn(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
     val (inv, centroids) = ivfModel(spark, dir, e)
     val books = pqResBooksFor(spark, dir, Some((inv, centroids)))
     val resid = residualFrame(inv, centroids)
@@ -1691,12 +1570,10 @@ object Knn {
       ivfProbe(inv, centroids).select("query_id", "pcid", "qv").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray)),
       centroids.toMap, books)
-    val scored = coded.join(qdt,
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcDistCol.as("adc_dist"))
-    val w2 = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w2).cast("long")).filter(col("rnk") <= DefaultK)
-      .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("adc_dist"))
+    Ranking.scored(coded.join(qdt,
+          col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), adcDistCol.as("adc_dist")),
+      TopKScore.Adc, DefaultK)
       .orderBy("query_id", "rnk")
   }
 
@@ -1762,22 +1639,13 @@ object Knn {
     */
   def vIvfPqResRecall(spark: SparkSession, dir: String): DataFrame = {
     val c = sharedCorpus(spark, dir) // one corpus build for all three legs
-    val cv = c.select(col("vec_id"), col("v"), col("nrm"))
-    val exact = vKnnL2On(c).select(col("query_id"), col("neighbor_id"))
-    val res = vIvfPqResOn(spark, dir, cv)
-      .select(col("query_id").as("rq"), col("neighbor_id").as("rn"))
-    val raw = vIvfPqOn(spark, dir, cv)
+    val cv = Some(c.select("vec_id", "v", "nrm"))
+    val raw = vIvfPq(spark, dir, cv)
       .select(col("query_id").as("pq"), col("neighbor_id").as("pn"))
-    exact
-      .join(broadcast(res),
-        col("query_id") === col("rq") && col("neighbor_id") === col("rn"), "left")
-      .join(broadcast(raw),
-        col("query_id") === col("pq") && col("neighbor_id") === col("pn"), "left")
-      .groupBy("query_id")
-      .agg(count(col("rn")).as("hits"),
-        round(count(col("rn")) / lit(5.0), 6).as("recall"),
-        count(col("pn")).as("raw_hits"))
-      .orderBy("query_id")
+    val exact = vKnnL2(spark, dir, Some(c)).join(broadcast(raw),
+      col("query_id") === col("pq") && col("neighbor_id") === col("pn"), "left")
+    recallAt(exact, broadcast(vIvfPqRes(spark, dir, cv)), DefaultK,
+      count(col("pn")).as("raw_hits"))
   }
 
   /** v_filtered_knn: metadata-filtered search — top-3 neighbors drawn
@@ -1794,10 +1662,8 @@ object Knn {
         col("v").as("qv"), col("nrm").as("qn"))
     val sims = e.join(broadcast(q),
         col("vec_id") =!= col("query_id") && col("label") === col("qlabel"))
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= 3)
+      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"), cosineSim)
+    Ranking.topK(sims, Seq("query_id"), Seq(col("sim").desc, col("neighbor_id").asc), 3)
       .select("query_id", "label", "rnk", "neighbor_id", "sim")
       .orderBy("query_id", "rnk")
   }
@@ -1812,11 +1678,9 @@ object Knn {
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val sims = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id", "label")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"), cosineSim)
+    Ranking.topK(sims, Seq("query_id", "label"),
+        Seq(col("sim").desc, col("neighbor_id").asc), 1)
       .select("query_id", "label", "neighbor_id", "sim")
       .orderBy("query_id", "label")
   }
@@ -1838,13 +1702,10 @@ object Knn {
         explode(array(
           col("band0") +: (0 until LshBandBits).map(r =>
             col("band0").bitwiseXOR(lit(1 << r))): _*)).as("probe"))
-    val cands = e.join(broadcast(q),
-        col("vec_id") =!= col("query_id") && col("band0") === col("probe"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    cands.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= 3)
-      .select("query_id", "rnk", "neighbor_id", "sim")
+    Ranking.scored(e.join(broadcast(q),
+          col("vec_id") =!= col("query_id") && col("band0") === col("probe"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, 3)
       .orderBy("query_id", "rnk")
   }
 
@@ -1935,8 +1796,7 @@ object Knn {
       }), lit(0L), (acc, x) => acc + x)
     val dists = coded.join(qdf, col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), distCol.as("qdist"))
-    val w = Window.partitionBy("query_id").orderBy(col("qdist").asc, col("vec_id").asc)
-    dists.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
+    Ranking.topK(dists, Seq("query_id"), Seq(col("qdist").asc, col("vec_id").asc), DefaultK)
       .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("qdist"))
       .orderBy("query_id", "rnk")
   }
@@ -2083,8 +1943,7 @@ object Knn {
         .reduce(_ + _))
     val mx = pr.groupBy("q_id", "doc_id", "qh").agg(max(col("dot")).as("m"))
     val sc = mx.groupBy("q_id", "doc_id").agg(sum(col("m")).as("score"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id").asc)
-    sc.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    Ranking.topK(sc, Seq("q_id"), Seq(col("score").desc, col("doc_id").asc), k)
       .select(col("q_id").as("query_id"), col("rnk"), col("doc_id"), col("score"))
       .orderBy("query_id", "rnk")
   }
@@ -2141,12 +2000,11 @@ object Knn {
     val qpack = sampled.filter(col("doc_id") < 3)
       .groupBy(col("doc_id").as("q_id"))
       .agg(collect_list(vecArr).as("qvs"))
-    val wx = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id").asc)
-    val exact = dpack.crossJoin(broadcast(qpack))
-      .filter(col("doc_id") =!= col("q_id"))
-      .select(col("q_id"), col("doc_id"),
-        graft.expressions.VectorExprs.maxsimScoreD(col("qvs"), col("dvs")).as("score"))
-      .withColumn("rnk", row_number().over(wx)).filter(col("rnk") <= DefaultK)
+    val exact = Ranking.topK(dpack.crossJoin(broadcast(qpack))
+        .filter(col("doc_id") =!= col("q_id"))
+        .select(col("q_id"), col("doc_id"),
+          graft.expressions.VectorExprs.maxsimScoreD(col("qvs"), col("dvs")).as("score")),
+        Seq("q_id"), Seq(col("score").desc, col("doc_id").asc), DefaultK)
       .select(col("q_id").as("query_id"), col("doc_id"))
     val hits = exact.join(blocked, Seq("query_id", "doc_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("hits"))
@@ -2172,6 +2030,30 @@ object Knn {
       .search(spark, path, docs.filter(col("doc_id") < 3), DefaultK)
   }
 
+  /** The top-5 fusion of a vector leg (vq, vc, …) and a lexical leg
+    * (lq, lc, …) per query: a FULL OUTER join on (query, doc), scored
+    * by `fused` over both legs' columns, ranked fused DESC, doc_id ASC —
+    * (query_id, rnk, doc_id, fused).
+    */
+  private def fusedTop(vec: DataFrame, lex: DataFrame, fused: Column): DataFrame =
+    Ranking.topK(vec.join(lex, col("vq") === col("lq") && col("vc") === col("lc"), "full_outer")
+        .select(coalesce(col("vq"), col("lq")).as("query_id"),
+          coalesce(col("vc"), col("lc")).as("doc_id"), fused.as("fused")),
+        Seq("query_id"), Seq(col("fused").desc, col("doc_id").asc), DefaultK)
+      .select("query_id", "rnk", "doc_id", "fused")
+
+  /** Reciprocal-rank fusion over the legs' ranks vrnk and lrnk: the
+    * fixed-order two-term sum of 1/(60+rank), 0.0 for a missing leg.
+    */
+  private def rrfScore: Column =
+    round(
+      when(col("vrnk").isNotNull, lit(1.0) / (lit(60) + col("vrnk"))).otherwise(lit(0.0)) +
+      when(col("lrnk").isNotNull, lit(1.0) / (lit(60) + col("lrnk"))).otherwise(lit(0.0)), 6)
+
+  /** The convex fusion α·nv + (1−α)·nl of the legs' min-max scores. */
+  private def weightedScore(a: Double): Column =
+    round(lit(a) * coalesce(col("nv"), lit(0.0)) + lit(1.0 - a) * coalesce(col("nl"), lit(0.0)), 6)
+
   /** v_hybrid_bm25: PRODUCTION-shape hybrid search — reciprocal-rank
     * fusion of the exact cosine ranking with the Okapi BM25 ranking
     * (v_rrf_fusion's lexical leg is raw shingle overlap; this one is
@@ -2185,24 +2067,12 @@ object Knn {
     */
   def vHybridBm25(spark: SparkSession, dir: String): DataFrame = {
     val (nq, legK) = (3, 10)
-    val vec = knnBase(spark, dir, legK).filter(col("query_id") < nq)
+    val vec = knnBase(corpus(spark, dir), legK).filter(col("query_id") < nq)
       .select(col("query_id").as("vq"), col("neighbor_id").as("vc"),
         col("rnk").as("vrnk"))
     val lex = TextAnalysis.bm25Ranked(spark, dir, nq, legK)
       .select(col("q_id").as("lq"), col("doc_id").as("lc"), col("rnk").as("lrnk"))
-    val fused = vec.join(lex,
-        col("vq") === col("lq") && col("vc") === col("lc"), "full_outer")
-      .select(coalesce(col("vq"), col("lq")).as("query_id"),
-        coalesce(col("vc"), col("lc")).as("doc_id"),
-        round(
-          when(col("vrnk").isNotNull, lit(1.0) / (lit(60) + col("vrnk")))
-            .otherwise(lit(0.0)) +
-          when(col("lrnk").isNotNull, lit(1.0) / (lit(60) + col("lrnk")))
-            .otherwise(lit(0.0)), 6).as("fused"))
-    val w = Window.partitionBy("query_id").orderBy(col("fused").desc, col("doc_id").asc)
-    fused.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select("query_id", "rnk", "doc_id", "fused")
-      .orderBy("query_id", "rnk")
+    fusedTop(vec, lex, rrfScore).orderBy("query_id", "rnk")
   }
 
   /** v_hybrid_store: hybrid search served from the PERSISTED tiers —
@@ -2275,11 +2145,11 @@ object Knn {
     val done = s"$root/_legs_done"
     if (!graft.sources.StoreFs.exists(done)) {
       val cdir = dir + ClusteredSuffix
-      annLshRanked(spark, cdir, nq, legK)
+      annLshRanked(corpus(spark, cdir), nq, legK)
         .coalesce(1).write.mode("overwrite").parquet(vp)
       TextAnalysis.bm25RankedDocs(nearDupDocs(spark, dir), nq, legK)
         .coalesce(1).write.mode("overwrite").parquet(lp)
-      knnBase(spark, cdir, DefaultK).filter(col("query_id") < nq)
+      knnBase(corpus(spark, cdir), DefaultK).filter(col("query_id") < nq)
         .select("query_id", "neighbor_id")
         .coalesce(1).write.mode("overwrite").parquet(ep)
       val dp = graft.sources.StoreFs.qualified(done)
@@ -2330,19 +2200,7 @@ object Knn {
         docs.filter(col("doc_id") < nq).select(col("doc_id").as("q_id"), col("text")),
         legK)
       .select(col("q_id").as("lq"), col("doc_id").as("lc"), col("rnk").as("lrnk"))
-    val fused = vec.join(lex,
-        col("vq") === col("lq") && col("vc") === col("lc"), "full_outer")
-      .select(coalesce(col("vq"), col("lq")).as("query_id"),
-        coalesce(col("vc"), col("lc")).as("doc_id"),
-        round(
-          when(col("vrnk").isNotNull, lit(1.0) / (lit(60) + col("vrnk")))
-            .otherwise(lit(0.0)) +
-          when(col("lrnk").isNotNull, lit(1.0) / (lit(60) + col("lrnk")))
-            .otherwise(lit(0.0)), 6).as("fused"))
-    val w = Window.partitionBy("query_id").orderBy(col("fused").desc, col("doc_id").asc)
-    fused.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select("query_id", "rnk", "doc_id", "fused")
-      .orderBy("query_id", "rnk")
+    fusedTop(vec, lex, rrfScore).orderBy("query_id", "rnk")
   }
 
   /** v_hybrid_weighted_store: the SCORE-AWARE fusion as a SERVING op
@@ -2379,16 +2237,7 @@ object Knn {
         .withColumnRenamed("q_id", "query_id"), "score")
       .select(col("query_id").as("lq"), col("doc_id").as("lc"),
         col("nrm_s").as("nl"))
-    val fused = vec.join(lex,
-        col("vq") === col("lq") && col("vc") === col("lc"), "full_outer")
-      .select(coalesce(col("vq"), col("lq")).as("query_id"),
-        coalesce(col("vc"), col("lc")).as("doc_id"),
-        round(lit(a) * coalesce(col("nv"), lit(0.0)) +
-          lit(1.0 - a) * coalesce(col("nl"), lit(0.0)), 6).as("fused"))
-    val w = Window.partitionBy("query_id").orderBy(col("fused").desc, col("doc_id").asc)
-    fused.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= DefaultK)
-      .select("query_id", "rnk", "doc_id", "fused")
-      .orderBy("query_id", "rnk")
+    fusedTop(vec, lex, weightedScore(a)).orderBy("query_id", "rnk")
   }
 
   /** vc_hybrid_recall: the hybrid-fusion QUALITY gate — v_hybrid_bm25
@@ -2422,24 +2271,7 @@ object Knn {
       .transform(graft.Materialize.forceCached)
     val exact = exactLeg
       .transform(graft.Materialize.forceCached)
-    val fused = vec.join(lex,
-        col("vq") === col("lq") && col("vc") === col("lc"), "full_outer")
-      .select(coalesce(col("vq"), col("lq")).as("query_id"),
-        coalesce(col("vc"), col("lc")).as("doc_id"),
-        round(
-          when(col("vrnk").isNotNull, lit(1.0) / (lit(60) + col("vrnk")))
-            .otherwise(lit(0.0)) +
-          when(col("lrnk").isNotNull, lit(1.0) / (lit(60) + col("lrnk")))
-            .otherwise(lit(0.0)), 6).as("fused"))
-    val w = Window.partitionBy("query_id").orderBy(col("fused").desc, col("doc_id").asc)
-    val ftop = fused.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= DefaultK).select("query_id", "doc_id")
-    def recallOf(leg: DataFrame, tag: String): DataFrame =
-      exact.join(
-          broadcast(leg.select(col("query_id").as("aq"), col("doc_id").as("an"))),
-          col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-        .groupBy("query_id")
-        .agg(round(count(col("an")) / lit(DefaultK.toDouble), 6).as(s"recall_$tag"))
+    val ftop = fusedTop(vec, lex, rrfScore).select("query_id", "doc_id")
     def famOf(leg: DataFrame, tag: String): DataFrame =
       leg.groupBy("query_id")
         .agg(round(
@@ -2449,18 +2281,33 @@ object Knn {
       .select(col("vq").as("query_id"), col("vc").as("doc_id"))
     val ltop = lex.filter(col("lrnk") <= DefaultK)
       .select(col("lq").as("query_id"), col("lc").as("doc_id"))
-    val legs = Seq(
-      recallOf(vtop, "vec"), recallOf(ltop, "lex"), recallOf(ftop, "fused"),
-      famOf(vtop, "vec"), famOf(ltop, "lex"), famOf(ftop, "fused"))
-    legs.zipWithIndex.map { case (d, i) =>
+    legReport(exact, Seq(vtop -> "vec", ltop -> "lex", ftop -> "fused"),
+        Seq(famOf(vtop, "vec"), famOf(ltop, "lex"), famOf(ftop, "fused")))
+      .select("query_id", "recall_vec", "recall_lex", "recall_fused",
+        "fam_vec", "fam_lex", "fam_fused")
+      .orderBy("query_id")
+  }
+
+  /** The hybrid evaluation report: recall@5 per query of each tagged
+    * (query_id, doc_id) leg against `exact` (query_id, neighbor_id) as
+    * `recall_<tag>`, then the `more` per-query frames, side by side on
+    * query_id (every frame after the first broadcast).
+    */
+  private def legReport(exact: DataFrame, legs: Seq[(DataFrame, String)],
+                        more: Seq[DataFrame] = Nil): DataFrame = {
+    val recalls = legs.map { case (leg, tag) =>
+      exact.join(
+          broadcast(leg.select(col("query_id").as("aq"), col("doc_id").as("an"))),
+          col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
+        .groupBy("query_id")
+        .agg(round(count(col("an")) / lit(DefaultK.toDouble), 6).as(s"recall_$tag"))
+    }
+    (recalls ++ more).zipWithIndex.map { case (d, i) =>
       if (i == 0) d else d.withColumnRenamed("query_id", s"q$i")
     }.reduceLeft { (acc, d) =>
       val qc = d.columns.find(_.startsWith("q")).get
       acc.join(broadcast(d), col("query_id") === col(qc)).drop(qc)
     }
-      .select("query_id", "recall_vec", "recall_lex", "recall_fused",
-        "fam_vec", "fam_lex", "fam_fused")
-      .orderBy("query_id")
   }
 
   /** The production fusion knob's FALLBACK value (r15's compiled-in
@@ -2561,34 +2408,13 @@ object Knn {
       .transform(graft.Materialize.forceCached)
     val exact = exactLeg
       .transform(graft.Materialize.forceCached)
-    val fused = vec.join(lex,
-        col("vq") === col("lq") && col("vc") === col("lc"), "full_outer")
-      .select(coalesce(col("vq"), col("lq")).as("query_id"),
-        coalesce(col("vc"), col("lc")).as("doc_id"),
-        round(lit(a) * coalesce(col("nv"), lit(0.0)) +
-          lit(1.0 - a) * coalesce(col("nl"), lit(0.0)), 6).as("fused"))
-    val w = Window.partitionBy("query_id").orderBy(col("fused").desc, col("doc_id").asc)
-    val ftop = fused.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= DefaultK).select("query_id", "doc_id")
-    def recallOf(leg: DataFrame, tag: String): DataFrame =
-      exact.join(
-          broadcast(leg.select(col("query_id").as("aq"), col("doc_id").as("an"))),
-          col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-        .groupBy("query_id")
-        .agg(round(count(col("an")) / lit(DefaultK.toDouble), 6).as(s"recall_$tag"))
+    val ftop = fusedTop(vec, lex, weightedScore(a)).select("query_id", "doc_id")
     // leg top-5 by each leg's own rank (vc_hybrid_recall's contract)
     val vtop5 = vec.filter(col("vrnk") <= DefaultK)
       .select(col("vq").as("query_id"), col("vc").as("doc_id"))
     val ltop5 = lex.filter(col("lrnk") <= DefaultK)
       .select(col("lq").as("query_id"), col("lc").as("doc_id"))
-    val legs = Seq(
-      recallOf(vtop5, "vec"), recallOf(ltop5, "lex"), recallOf(ftop, "fused"))
-    legs.zipWithIndex.map { case (d, i) =>
-      if (i == 0) d else d.withColumnRenamed("query_id", s"q$i")
-    }.reduceLeft { (acc, d) =>
-      val qc = d.columns.find(_.startsWith("q")).get
-      acc.join(broadcast(d), col("query_id") === col(qc)).drop(qc)
-    }
+    legReport(exact, Seq(vtop5 -> "vec", ltop5 -> "lex", ftop -> "fused"))
       .select("query_id", "recall_vec", "recall_lex", "recall_fused")
       .orderBy("query_id")
   }
@@ -2635,10 +2461,9 @@ object Knn {
       .select(col("alpha"), col("query_id"), col("doc_id"),
         round(col("alpha") * col("nv")
           + (lit(1.0) - col("alpha")) * col("nl"), 6).as("f"))
-    val w = Window.partitionBy("alpha", "query_id")
-      .orderBy(col("f").desc, col("doc_id").asc)
-    val ftop = fused.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= DefaultK).select("alpha", "query_id", "doc_id")
+    val ftop = Ranking.topK(fused, Seq("alpha", "query_id"),
+        Seq(col("f").desc, col("doc_id").asc), DefaultK)
+      .select("alpha", "query_id", "doc_id")
     grid.crossJoin(broadcast(exact.select(
         col("query_id").as("eq"), col("neighbor_id").as("en"))))
       .join(broadcast(ftop.withColumnRenamed("alpha", "fa")),
@@ -2733,37 +2558,18 @@ object Knn {
         coalesce(col("vc"), col("lc")).as("doc_id"),
         col("nv"), col("nl"), col("vrnk"), col("lrnk"))
       .transform(graft.Materialize.forceCached)
-    val w = Window.partitionBy("query_id").orderBy(col("f").desc, col("doc_id").asc)
-    val ftop = pairs
-      .select(col("query_id"), col("doc_id"),
-        round(lit(a) * coalesce(col("nv"), lit(0.0)) +
-          lit(1.0 - a) * coalesce(col("nl"), lit(0.0)), 6).as("f"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= DefaultK).select("query_id", "doc_id")
-    val rtop = pairs
-      .select(col("query_id"), col("doc_id"),
-        round(coalesce(lit(1.0) / (lit(60) + col("vrnk")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("lrnk")), lit(0.0)), 6).as("f"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= DefaultK).select("query_id", "doc_id")
-    def recallOf(leg: DataFrame, tag: String): DataFrame =
-      exact.join(
-          broadcast(leg.select(col("query_id").as("aq"), col("doc_id").as("an"))),
-          col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-        .groupBy("query_id")
-        .agg(round(count(col("an")) / lit(DefaultK.toDouble), 6).as(s"recall_$tag"))
+    def top(f: Column): DataFrame =
+      Ranking.topK(pairs.select(col("query_id"), col("doc_id"), f.as("f")), Seq("query_id"),
+          Seq(col("f").desc, col("doc_id").asc), DefaultK)
+        .select("query_id", "doc_id")
+    val ftop = top(weightedScore(a))
+    val rtop = top(round(coalesce(lit(1.0) / (lit(60) + col("vrnk")), lit(0.0)) +
+      coalesce(lit(1.0) / (lit(60) + col("lrnk")), lit(0.0)), 6))
     val vtop5 = vec.filter(col("vrnk") <= DefaultK)
       .select(col("vq").as("query_id"), col("vc").as("doc_id"))
     val ltop5 = lex.filter(col("lrnk") <= DefaultK)
       .select(col("lq").as("query_id"), col("lc").as("doc_id"))
-    val legs = Seq(recallOf(vtop5, "vec"), recallOf(ltop5, "lex"),
-      recallOf(ftop, "fused"), recallOf(rtop, "rrf"))
-    legs.zipWithIndex.map { case (d, i) =>
-      if (i == 0) d else d.withColumnRenamed("query_id", s"q$i")
-    }.reduceLeft { (acc, d) =>
-      val qc = d.columns.find(_.startsWith("q")).get
-      acc.join(broadcast(d), col("query_id") === col(qc)).drop(qc)
-    }
+    legReport(exact, Seq(vtop5 -> "vec", ltop5 -> "lex", ftop -> "fused", rtop -> "rrf"))
       .select(col("query_id"), round(lit(a), 6).as("alpha"),
         col("recall_vec"), col("recall_lex"), col("recall_fused"),
         col("recall_rrf"))
@@ -2791,10 +2597,8 @@ object Knn {
     val q = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val sims = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wv = Window.partitionBy("query_id").orderBy(col("sim").desc, col("cand").asc)
-    val vr = sims.withColumn("rv", row_number().over(wv)).filter(col("rv") <= fuseK)
+      .select(col("query_id"), col("vec_id").as("cand"), cosineSim)
+    val vr = Ranking.topK(sims, Seq("query_id"), Seq(col("sim").desc, col("cand").asc), fuseK, "rv")
       .select(col("query_id").as("vq"), col("cand").as("vc"), col("rv"))
     // lexical ranking: distinct-shingle overlap with the query doc's
     // text, via the inverted-index join (corpus shingles exploded,
@@ -2812,8 +2616,8 @@ object Knn {
     val ov = sh.join(broadcast(qsh),
         col("h") === col("qh") && col("doc_id") =!= col("query_id"))
       .groupBy("query_id", "doc_id").agg(count(lit(1)).as("overlap"))
-    val wt = Window.partitionBy("query_id").orderBy(col("overlap").desc, col("doc_id").asc)
-    val tr = ov.withColumn("rt", row_number().over(wt)).filter(col("rt") <= fuseK)
+    val tr = Ranking.topK(ov, Seq("query_id"),
+        Seq(col("overlap").desc, col("doc_id").asc), fuseK, "rt")
       .select(col("query_id").as("tq"), col("doc_id").as("tc"), col("rt"))
     // fuse: a candidate scores from every ranking it appears in
     val fused = vr.join(tr, col("vq") === col("tq") && col("vc") === col("tc"), "full_outer")
@@ -2821,8 +2625,7 @@ object Knn {
         coalesce(col("vc"), col("tc")).as("cand"),
         round(coalesce(lit(1.0) / (lit(60) + col("rv")), lit(0.0))
           + coalesce(lit(1.0) / (lit(60) + col("rt")), lit(0.0)), 6).as("rrf"))
-    val wf = Window.partitionBy("query_id").orderBy(col("rrf").desc, col("cand").asc)
-    fused.withColumn("rnk", row_number().over(wf).cast("long")).filter(col("rnk") <= DefaultK)
+    Ranking.topK(fused, Seq("query_id"), Seq(col("rrf").desc, col("cand").asc), DefaultK)
       .select(col("query_id"), col("rnk"), col("cand").as("doc_id"), col("rrf"))
       .orderBy("query_id", "rnk")
   }
@@ -2855,14 +2658,11 @@ object Knn {
         col("v"), col("nrm"),
         aggregate(zip_with(col("qvq"), col("vq"), (a, b) => a * b),
           lit(0L), (acc, x) => acc + x).as("qdot"))
-    val wr = Window.partitionBy("query_id").orderBy(col("qdot").desc, col("vec_id").asc)
-    val recall = sketch.withColumn("rr", row_number().over(wr)).filter(col("rr") <= refineK)
+    val recall = Ranking.topK(sketch, Seq("query_id"),
+      Seq(col("qdot").desc, col("vec_id").asc), refineK, "rr")
     // precision tier: exact cosine over the 20 survivors only
-    val exact = recall.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wf = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    exact.withColumn("rnk", row_number().over(wf).cast("long")).filter(col("rnk") <= 3)
-      .select("query_id", "rnk", "neighbor_id", "sim")
+    Ranking.scored(recall.select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+        TopKScore.Cosine, 3)
       .orderBy("query_id", "rnk")
   }
 
@@ -2907,11 +2707,8 @@ object Knn {
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val sims = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wc = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    val cands = sims.withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= MmrCandidates)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim)
+    val cands = Ranking.scored(sims, TopKScore.Cosine, MmrCandidates)
       .select("query_id", "neighbor_id", "sim")
       .transform(graft.Materialize.forceCached)
     mmrRerank(e, cands)
@@ -3570,6 +3367,27 @@ object Knn {
       WHERE rnk <= $DefaultK ORDER BY query_id, rnk""")
   }
 
+  /** Writes the learned-OPQ store at `path`: the permuted corpus as a
+    * stock PQ store (registry books) plus the permutation as its `_perm`
+    * sidecar, (dst, src) rows. Shared by v_opq_learned_store and
+    * v_sql_store_opql.
+    */
+  private def writeOpqlStore(spark: SparkSession, dir: String, path: String): Unit = {
+    // spread before the permute materialization (the §10 fix applied
+    // to the standalone encodes it missed): the single-file scan is
+    // one partition, so the 64-element permute projection — and every
+    // job the cached frame feeds (PQ training's sample pass, the codes
+    // encode) — ran on one core. Values unchanged: per-row projection;
+    // every consumer breaks ranking ties explicitly.
+    val e = permuted(spark, dir, Dedup.spread(corpus(spark, dir)))
+    graft.sources.PqIndexStore.write(e, "vec_id", "v", path,
+      model = Some(pqBooksCached(spark, dir, e, "#opql")))
+    import spark.implicits._
+    opqLearnedPerm(spark, dir).zipWithIndex.map { case (src, dst) => (dst, src) }.toSeq
+      .toDF("dst", "src")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/_perm")
+  }
+
   /** v_sql_store_opql: the LEARNED-transform persisted tier for a
     * SQL-only user — the sixth SQL serving leg. The OPQ-learned store
     * is a stock PQ code table over PERMUTED vectors whose learned
@@ -3584,27 +3402,7 @@ object Knn {
     */
   def vSqlStoreOpql(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.StoreFs.gatePath(spark, dir, "sqlopql_store") + "/idx"
-    val perm = opqLearnedPerm(spark, dir)
-    // spread before the permute materialization (the §10 fix applied
-    // to the standalone encodes it missed): the single-file scan is
-    // one partition, so the 64-element permute projection — and every
-    // job the cached frame feeds (PQ training's sample pass, the codes
-    // encode) — ran on one core. Values unchanged: per-row projection;
-    // every consumer breaks ranking ties explicitly.
-    val permuted = Dedup.spread(corpus(spark, dir))
-      .select(col("vec_id"),
-        array(perm.map(s => element_at(col("v"), s + 1)): _*).as("v"))
-      .transform(graft.Materialize.forceCached)
-    val books = pqCache.computeIfAbsent(modelKey(spark, dir) + "#opql",
-      _ => trainPqBooks(permuted))
-    graft.sources.PqIndexStore.write(permuted, "vec_id", "v", path,
-      model = Some(books))
-    locally {
-      import spark.implicits._
-      perm.zipWithIndex.map { case (src, dst) => (dst, src) }.toSeq
-        .toDF("dst", "src")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/_perm")
-    }
+    writeOpqlStore(spark, dir, path)
     graft.GraftSession.sqlStore(spark, s"$path.codes", "opql_codes")
     graft.GraftSession.sqlModel(spark, path, "books" -> "graft_store_opql_bookpack")
     graft.GraftSession.sqlStore(spark, s"$path/_perm", "opql_perm")
@@ -3877,13 +3675,9 @@ object Knn {
       .select(col("id"), col("v"), col("nrm"))
     val q = corpus(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    snap.join(broadcast(q), col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= DefaultK)
-      .select("query_id", "rnk", "neighbor_id", "sim")
+    Ranking.scored(snap.join(broadcast(q), col("id") =!= col("query_id"))
+        .select(col("query_id"), col("id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, DefaultK)
       .orderBy("query_id", "rnk")
   }
 
@@ -3971,19 +3765,15 @@ object Knn {
     * (candidates within Hamming ≤ 1 of the query's band0) that the
     * left-side probe fan-out reaches through pure equi-joins.
     */
-  def vAnnStoreMp(spark: SparkSession, dir: String): DataFrame = {
+  def vAnnStoreMp(spark: SparkSession, dir: String,
+                  shared: Option[DataFrame] = None): DataFrame = {
     // corpus-aware (the #clustered routing): the store write sources
     // the same double frame corpus() serves — identical values to the
     // former raw-float write (float→double widening is exact), and the
     // clustered twin, another corpus dir, lands in its own store
     // directory
     val path = graft.sources.StoreFs.gatePath(spark, dir, "annmp_store") + "/idx"
-    vAnnStoreMpOn(spark, dir, corpus(spark, dir), path)
-  }
-
-  /** [[vAnnStoreMp]] over a caller-prepared corpus frame and store path. */
-  private def vAnnStoreMpOn(spark: SparkSession, dir: String, e: DataFrame,
-                            path: String): DataFrame = {
+    val e = shared.getOrElse(corpus(spark, dir))
     graft.sources.IndexStore.write(e, "vec_id", "v", path, dim = 64)
     val queries = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id"), col("v"))
@@ -4000,18 +3790,8 @@ object Knn {
     * probed partition filter).
     */
   def vAnnStoreRecall(spark: SparkSession, dir: String): DataFrame = {
-    // the same store vAnnStoreMp serves
-    val path = graft.sources.StoreFs.gatePath(spark, dir, "annmp_store") + "/idx"
     val c = sharedCorpus(spark, dir) // one corpus build: exact leg + store write
-    val exact = knnBaseOn(c, DefaultK).select(col("query_id"), col("neighbor_id"))
-    val ann = vAnnStoreMpOn(spark, dir, c, path)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-    exact.join(ann,
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-      .groupBy("query_id")
-      .agg(count(col("an")).as("hits"),
-        round(count(col("an")) / lit(DefaultK.toDouble), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(knnBase(c, DefaultK), vAnnStoreMp(spark, dir, Some(c)), DefaultK)
   }
 
   /** v_opq_store: the persisted rotated-PQ path — the Hadamard
@@ -4025,14 +3805,10 @@ object Knn {
     */
   def vOpqStore(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.StoreFs.gatePath(spark, dir, "opq_store") + "/idx"
-    val rotated = withHadamard(corpus(spark, dir).select(col("vec_id"), col("v")), "v", "vr")
-      .select(col("vec_id"), col("vr").as("v"))
-      .transform(graft.Materialize.forceCached)
-    val books = pqCache.computeIfAbsent(modelKey(spark, dir) + "#opq",
-      _ => trainPqBooks(rotated))
-    graft.sources.PqIndexStore.write(rotated, "vec_id", "v", path,
-      model = Some(books))
-    val queries = rotated.filter(col("vec_id") < NumQueries)
+    val e = rotated(corpus(spark, dir))
+    graft.sources.PqIndexStore.write(e, "vec_id", "v", path,
+      model = Some(pqBooksCached(spark, dir, e, "#opq")))
+    val queries = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id"), col("v"))
     graft.sources.PqIndexStore
       .search(spark, path, queries, "vec_id", "v", DefaultK)
@@ -4051,27 +3827,7 @@ object Knn {
     */
   def vOpqLearnedStore(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.sources.StoreFs.gatePath(spark, dir, "opql_store") + "/idx"
-    val perm = opqLearnedPerm(spark, dir)
-    // spread before the permute materialization (the §10 fix applied
-    // to the standalone encodes it missed): the single-file scan is
-    // one partition, so the 64-element permute projection — and every
-    // job the cached frame feeds (PQ training's sample pass, the codes
-    // encode) — ran on one core. Values unchanged: per-row projection;
-    // every consumer breaks ranking ties explicitly.
-    val permuted = Dedup.spread(corpus(spark, dir))
-      .select(col("vec_id"),
-        array(perm.map(s => element_at(col("v"), s + 1)): _*).as("v"))
-      .transform(graft.Materialize.forceCached)
-    val books = pqCache.computeIfAbsent(modelKey(spark, dir) + "#opql",
-      _ => trainPqBooks(permuted))
-    graft.sources.PqIndexStore.write(permuted, "vec_id", "v", path,
-      model = Some(books))
-    locally {
-      import spark.implicits._
-      perm.zipWithIndex.map { case (src, dst) => (dst, src) }.toSeq
-        .toDF("dst", "src")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/_perm")
-    }
+    writeOpqlStore(spark, dir, path)
     // serve from the store alone: sidecar permutation applied to the
     // raw queries, then the standard persisted-ADC search
     val permRead = spark.read.parquet(s"$path/_perm").collect()
@@ -4235,36 +3991,18 @@ object Knn {
   }
 
   private def driftSearch(comb: DataFrame, cents: Array[(Int, Array[Double])],
-                          queries: DataFrame, nprobe: Int): DataFrame = {
-    val asg = withCid(comb, cents)
-    val probes = driftProbes(queries, cents, nprobe)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    asg.join(broadcast(probes),
-        col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= DefaultK)
-  }
+                          queries: DataFrame, nprobe: Int): DataFrame =
+    Ranking.scored(withCid(comb, cents).join(broadcast(driftProbes(queries, cents, nprobe)),
+          col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, DefaultK)
 
   /** Exact cosine top-5 over `comb` for an explicit query frame. */
-  private def driftExact(comb: DataFrame, queries: DataFrame): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    comb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= DefaultK)
+  private def driftExact(comb: DataFrame, queries: DataFrame): DataFrame =
+    Ranking.scored(comb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim),
+      TopKScore.Cosine, DefaultK)
       .select("query_id", "neighbor_id")
-  }
-
-  private def driftRecall(exact: DataFrame, ann: DataFrame, tag: String): DataFrame =
-    exact.join(
-        broadcast(ann.select(col("query_id").as("aq"), col("neighbor_id").as("an"))),
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-      .groupBy("query_id")
-      .agg(count(col("an")).as(s"hits_$tag"),
-        round(count(col("an")) / lit(5.0), 6).as(s"recall_$tag"))
 
   /** v_ivf_drift_recall: recall@5 on the APPENDED cohort's queries,
     * frozen quantizer vs retrained, side by side — the number that
@@ -4277,10 +4015,11 @@ object Knn {
       .filter(col("vec_id") < DriftOffset + NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val exact = driftExact(comb, q).transform(graft.Materialize.forceCached)
-    val fz = driftRecall(exact,
-      driftSearch(comb, ivfCentroids(spark, dir), q, DriftNprobe), "frozen")
-    val rt = driftRecall(exact,
-      driftSearch(comb, driftRetrainedCentroids(spark, dir), q, DriftNprobe), "retrained")
+    def leg(cents: Array[(Int, Array[Double])], tag: String): DataFrame =
+      recallAt(exact, broadcast(driftSearch(comb, cents, q, DriftNprobe)), DefaultK)
+        .select(col("query_id"), col("hits").as(s"hits_$tag"), col("recall").as(s"recall_$tag"))
+    val fz = leg(ivfCentroids(spark, dir), "frozen")
+    val rt = leg(driftRetrainedCentroids(spark, dir), "retrained")
     fz.join(broadcast(rt.withColumnRenamed("query_id", "rq")),
         col("query_id") === col("rq"))
       .select("query_id", "hits_frozen", "recall_frozen",
@@ -4309,22 +4048,7 @@ object Knn {
       graft.sources.IvfIndexStore.append(
         driftFrame(spark, dir).select("vec_id", "v"), "vec_id", "v", path)
     }
-    val queries = driftFrame(spark, dir)
-      .filter(col("vec_id") < DriftOffset + NumQueries)
-    val ann = graft.sources.IvfIndexStore.search(spark, path,
-        queries.select("vec_id", "v"), "vec_id", "v", DefaultK,
-        nprobe = DriftNprobe)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-    val comb = driftCombined(spark, dir).transform(graft.Materialize.forceCached)
-    val exact = driftExact(comb,
-      queries.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn")))
-    exact.join(broadcast(ann),
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-      .groupBy("query_id")
-      .agg(count(col("an")).as("hits"),
-        round(count(col("an")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    driftRecallReport(spark, dir, path)
   }
 
   /** v_ivf_retrain_store: the REMEDIATION the drift gates close over —
@@ -4368,19 +4092,12 @@ object Knn {
     val queries = driftFrame(spark, dir)
       .filter(col("vec_id") < DriftOffset + NumQueries)
     val ann = graft.sources.IvfIndexStore.search(spark, path,
-        queries.select("vec_id", "v"), "vec_id", "v", DefaultK,
-        nprobe = DriftNprobe)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
+      queries.select("vec_id", "v"), "vec_id", "v", DefaultK, nprobe = DriftNprobe)
     val comb = driftCombined(spark, dir).transform(graft.Materialize.forceCached)
     val exact = driftExact(comb,
       queries.select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn")))
-    exact.join(broadcast(ann),
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-      .groupBy("query_id")
-      .agg(count(col("an")).as("hits"),
-        round(count(col("an")) / lit(5.0), 6).as("recall"))
-      .orderBy("query_id")
+    recallAt(exact, broadcast(ann), DefaultK)
   }
 
   /** v_ivf_drift_report: the retrain advisor — per-list assignment-
@@ -4399,11 +4116,10 @@ object Knn {
       .withColumn("cohort", lit("train"))
     val app = driftFrame(spark, dir).select("vec_id", "v", "nrm")
       .withColumn("cohort", lit("appended"))
-    val w = Window.partitionBy("cohort", "cid")
-    withCidSim(train.union(app), cents)
-      .withColumn("rn", row_number().over(
-        w.orderBy(col("asim").asc, col("vec_id").asc)))
-      .withColumn("n", count(lit(1)).over(w))
+    // every row ranked (no cut), then each list's size
+    Ranking.topK(withCidSim(train.union(app), cents), Seq("cohort", "cid"),
+        Seq(col("asim").asc, col("vec_id").asc), Int.MaxValue, "rn")
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("cohort", "cid")))
       .groupBy("cohort", "cid")
       .agg(max(col("n")).as("n"),
         max(when(col("rn") === ceil(col("n") * 0.25), col("asim"))).as("q25"),
@@ -4444,16 +4160,13 @@ object Knn {
         posexplode(transform(ranked, s => s.getField("cid"))).as(Seq("pos", "pcid")))
     val cand = inv.join(broadcast(probes),
         col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"),
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosineSim,
         (col("pos") + 1).as("prank"))
       .transform(graft.Materialize.forceCached)
-    val exact = knnBaseOn(c, DefaultK).select("query_id", "neighbor_id")
+    val exact = knnBase(c, DefaultK).select("query_id", "neighbor_id")
       .transform(graft.Materialize.forceCached)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
     CurveProbes.map { p =>
-      val top = cand.filter(col("prank") <= p)
-        .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= DefaultK)
+      val top = Ranking.scored(cand.filter(col("prank") <= p), TopKScore.Cosine, DefaultK)
         .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
       exact.join(broadcast(top),
           col("query_id") === col("aq") && col("neighbor_id") === col("an"), "left")

@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.functions.{col, round}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, round, row_number}
 import org.apache.spark.sql.types._
 import graft.functions.{VectorFns => V}
 
@@ -52,16 +53,15 @@ import graft.functions.{VectorFns => V}
   *  - [[TopKScore.Adc]]: round(sqrt(Σ_m qdt(m)(codes(m))), 6), ranked
   *    adc_dist ASC NULLS FIRST, neighbor id ASC — the PQ searches'
   *    asymmetric distance, with per-query or per-(query, list) tables.
-  * Arithmetic follows Spark's: a NULL vector or norm scores NULL; a
-  * zero divisor throws DIVIDE_BY_ZERO when the scan's session has ANSI
-  * mode on and scores NULL without it; `round` passes NaN and ±Inf
-  * through; NaN ranks above every number and -0.0 ties 0.0.
+  * Arithmetic follows [[graft.functions.VectorFns.cosinePre]]: a NULL
+  * vector or norm, or a zero norm product, scores NULL in any ANSI
+  * mode; `round` passes NaN and ±Inf through; NaN ranks above every
+  * number and -0.0 ties 0.0.
   */
 case class CosineTopK(
     probes: Seq[ScanProbe],
     k: Int,
     score: TopKScore,
-    ansi: Boolean,
     keyed: Boolean,
     child: LogicalPlan,
     // in the constructor, NOT a val: tree transforms re-copy the node
@@ -82,8 +82,8 @@ case class CosineTopK(
 }
 
 /** How a scanned row scores against a probe, and which end ranks first
-  * — the one ranking rule of the operator and of the stores' window
-  * tail: the score best first, then the neighbor id ASC.
+  * — the one ranking rule of the operator and of [[Ranking.scored]]:
+  * the score best first, then the neighbor id ASC.
   */
 sealed trait TopKScore extends Serializable {
   /** The score column's name. */
@@ -115,6 +115,39 @@ object TopKScore {
     def width: Int = 1
     def descending: Boolean = false
     def column: Column = graft.operators.Knn.adcDistCol
+  }
+}
+
+/** The engine's window top-k: the one place a ranking is spelled as
+  * `row_number` over a window, for every ranking that is not a
+  * [[CosineTopK]] scan (distributed query sets, candidate pairs that
+  * are already joined, reranks, fusions). For k up to Spark's window
+  * group-limit threshold (1000), Catalyst turns the `rank <= k` filter
+  * into a WindowGroupLimit below the window's exchange, so each
+  * partition keeps at most k rows per group before the shuffle.
+  */
+object Ranking {
+  /** `df` with `rank` = row_number() (long, 1..) over `partitionBy`
+    * ordered by `orderBy`, cut to the rows ranked k or better. The
+    * ordering must end in a unique tiebreak for the cut to be
+    * deterministic. `k = Int.MaxValue` ranks every row.
+    */
+  def topK(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[Column], k: Int,
+           rank: String = "rnk"): DataFrame = {
+    val w = Window.partitionBy(partitionBy.map(col): _*).orderBy(orderBy: _*)
+    df.withColumn(rank, row_number().over(w).cast("long")).filter(col(rank) <= k)
+  }
+
+  /** The top k of scored candidate pairs (query_id, neighbor_id, the
+    * score column) per query, ranked as [[CosineTopK]] ranks: the score
+    * best first ([[TopKScore.descending]]: DESC NULLS LAST, else ASC
+    * NULLS FIRST), then neighbor_id ASC. Output: query_id, rnk (long),
+    * neighbor_id and the score.
+    */
+  def scored(cands: DataFrame, score: TopKScore, k: Int): DataFrame = {
+    val best = if (score.descending) col(score.name).desc else col(score.name).asc
+    topK(cands, Seq("query_id"), Seq(best, col("neighbor_id").asc), k)
+      .select("query_id", "rnk", "neighbor_id", score.name)
   }
 }
 
@@ -158,7 +191,7 @@ object CosineTopK {
     * Output: the query id (`query`'s first field), the match columns
     * as scanned, `rnk` (long, 1..k), `neighbor_id` (the scan id's type)
     * and the score column; one partition, so a caller's `orderBy` adds
-    * no exchange. Division follows the ANSI mode of `scan`'s session.
+    * no exchange.
     */
   def search(probes: Seq[TopKProbe], k: Int, score: TopKScore, keyed: Boolean,
              query: StructType, scan: DataFrame): DataFrame = {
@@ -200,7 +233,7 @@ object CosineTopK {
       AttributeReference("rnk", LongType, nullable = false)() :+
       AttributeReference("neighbor_id", in.head.dataType, in.head.nullable)() :+
       AttributeReference(score.name, DoubleType, nullable = true)()
-    Shim.ofRows(spark, CosineTopK(resolved, k, score, conf.ansiEnabled, keyed, child, output))
+    Shim.ofRows(spark, CosineTopK(resolved, k, score, keyed, child, output))
   }
 
   /** `l`'s value as the `to` value that equals it: its TRY cast, when
@@ -225,8 +258,7 @@ object CosineTopK {
 object CosineTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: CosineTopK =>
-      CosineTopKExec(p.probes, p.k, p.score, p.ansi, p.keyed, p.output,
-        planLater(p.child)) :: Nil
+      CosineTopKExec(p.probes, p.k, p.score, p.keyed, p.output, planLater(p.child)) :: Nil
     case _ => Nil
   }
 
@@ -253,7 +285,6 @@ case class CosineTopKExec(
     probes: Seq[ScanProbe],
     k: Int,
     score: TopKScore,
-    ansi: Boolean,
     keyed: Boolean,
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
@@ -262,7 +293,7 @@ case class CosineTopKExec(
   override protected def stringArgs: Iterator[Any] = CosineTopK.args(probes, k, score, keyed)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val fold = new TopKFold(probes.toArray, k, score, ansi, keyed, child.output, output)
+    val fold = new TopKFold(probes.toArray, k, score, keyed, child.output, output)
     val scanned = child.execute()
     // the partial heaps cross a REAL shuffle boundary: a narrow
     // coalesce would pull every scan partition into the single merge
@@ -289,7 +320,7 @@ private[plans] final case class TopKHit(slot: Int, score: Double, none: Boolean,
   * window's PARTITION BY query_id does.
   */
 private[plans] final class TopKFold(
-    probes: Array[ScanProbe], k: Int, score: TopKScore, ansi: Boolean, keyed: Boolean,
+    probes: Array[ScanProbe], k: Int, score: TopKScore, keyed: Boolean,
     in: Seq[Attribute], out: Seq[Attribute]) extends Serializable {
 
   private val nMatch = out.length - 4
@@ -341,15 +372,13 @@ private[plans] final class TopKFold(
   private def heaps(): Array[mutable.ArrayBuffer[TopKHit]] =
     Array.fill(queryIds.length)(new mutable.ArrayBuffer[TopKHit](k + 1))
 
-  /** Spark's Divide over doubles: a NULL or (without ANSI) zero divisor
-    * is NULL, a NULL dividend is NULL, and a zero divisor throws.
+  /** [[graft.functions.VectorFns.cosinePre]]: a NULL vector or norm,
+    * or a zero norm product, is NULL.
     */
   private def cosine(p: ScanProbe, v: Array[Double], r: InternalRow): java.lang.Double = {
-    if (p.norm == null || r.isNullAt(2)) return null
+    if (p.norm == null || r.isNullAt(2) || p.vec == null || v == null) return null
     val den = p.norm.doubleValue * r.getDouble(2)
-    if (den == 0 && !ansi) return null
-    if (p.vec == null || v == null) return null
-    if (den == 0) throw Shim.divideByZero()
+    if (den == 0) return null
     var s = 0.0
     val n = math.min(p.vec.length, v.length)
     var j = 0

@@ -2,10 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.{HashFns => H, VectorFns => V}
-import graft.plans.{CosineTopK, TopKProbe, TopKScore}
+import graft.plans.{CosineTopK, Ranking, TopKProbe, TopKScore}
 
 /** Persistent vector index — the Spark-native re-expression of the
   * reference's index lifecycle (faiss.write_index / read_index +
@@ -1813,8 +1812,11 @@ object IvfIndexStore {
         .map(i => col(matchCols(i)) === lit(r.get(i))).reduce(_ && _))
       .reduceOption(_ || _).getOrElse(lit(false))
     val survivors = StoreFs.openParquet(spark, path).where(pred)
-    val small = survivors.select(col(matchCols.head))
-      .limit(exactThreshold + 1).count() <= exactThreshold
+    // one job: each scan partition counts at most exactThreshold + 1
+    // survivors, so the sum passes the threshold iff the count does
+    val small = survivors.select(col(matchCols.head)).queryExecution.toRdd
+      .mapPartitions(rows => Iterator(rows.take(exactThreshold + 1).length))
+      .collect().sum <= exactThreshold
     if (!small)
       return ("ivf", searchFiltered(spark, path, queries, idCol, vecCol,
         k, matchCols, nprobe))
@@ -1843,18 +1845,16 @@ object IvfIndexStore {
     * query side) on the probed list and never to the query itself — a
     * broadcast join on the cid partition column, so dynamic partition
     * pruning reads only the probed lists — scored by `score` and cut to
-    * k per query by the window, best score first, then neighbor id ASC:
-    * the ranking of [[graft.plans.CosineTopK]].
+    * k per query by [[Ranking.scored]], the ranking of
+    * [[graft.plans.CosineTopK]].
     */
   private[sources] def batchTopK(spark: SparkSession, path: String, probe: DataFrame,
                                  k: Int, score: TopKScore): DataFrame = {
     val cands = StoreFs.openParquet(spark, path).join(broadcast(probe),
       col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-    val best = if (score.descending) col(score.name).desc else col(score.name).asc
-    val w = Window.partitionBy("query_id").orderBy(best, col("neighbor_id").asc)
-    cands.select(col("query_id"), col("vec_id").as("neighbor_id"), score.column.as(score.name))
-      .withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", score.name)
+    Ranking.scored(
+      cands.select(col("query_id"), col("vec_id").as("neighbor_id"), score.column.as(score.name)),
+      score, k)
   }
 }
 
@@ -2371,10 +2371,8 @@ object BqIndexStore {
   private[sources] def rerankTopK(ham: DataFrame, source: DataFrame, idCol: String,
                                   vecCol: String, qv: DataFrame, k: Int,
                                   rerank: Int): DataFrame = {
-    val wH = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = ham.withColumn("hrnk", row_number().over(wH))
-      .filter(col("hrnk") <= rerank)
+    val cand = Ranking.topK(ham, Seq("query_id"),
+        Seq(col("hamming").asc, col("neighbor_id").asc), rerank, "hrnk")
       .select("query_id", "neighbor_id", "hamming")
     val src = source
       .select(col(idCol).as("sid"), col(vecCol).cast("array<double>").as("v"))
@@ -2383,9 +2381,7 @@ object BqIndexStore {
       .join(broadcast(qv), col("query_id") === col("rq"))
       .select(col("query_id"), col("neighbor_id"), col("hamming"),
         round(V.cosinePre(V.dot(col("qv"), col("v")), col("qn"), col("nrm")), 6).as("sim"))
-    val wS = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
-    rr.withColumn("rnk", row_number().over(wS).cast("long"))
-      .filter(col("rnk") <= k)
+    Ranking.topK(rr, Seq("query_id"), Seq(col("sim").desc, col("neighbor_id").asc), k)
       .select("query_id", "rnk", "neighbor_id", "hamming", "sim")
   }
 }

@@ -10,10 +10,6 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Spark's DIVIDE_BY_ZERO error, as ANSI-mode division raises it. */
-  def divideByZero(): ArithmeticException =
-    errors.QueryExecutionErrors.divideByZeroError(null)
-
   /** DataFrame from a hand-built LogicalPlan (custom operators). */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

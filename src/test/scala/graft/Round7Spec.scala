@@ -142,10 +142,12 @@ class Round7Spec extends SparkSpec {
     refused("ivf shifted")(IvfIndexStore.write(shifted, "vec_id", "embedding", s"$base/ivf_sh"))
     refused("pq shifted")(
       graft.sources.PqIndexStore.write(shifted, "vec_id", "embedding", s"$base/pq_sh"))
-    // ids from 5 on: PQ seeds 11 of its 16 codes
+    // ids from 5 on: PQ seeds 11 of its 16 codes, IVF 3 of its 8 lists
     val short = emb.withColumn("vec_id", col("vec_id") + 5)
     assert(refused("pq short seed")(graft.sources.PqIndexStore.write(
       short, "vec_id", "embedding", s"$base/pq_short")).contains("found 11 of the 16"))
+    assert(refused("ivf short seed")(IvfIndexStore.write(
+      short, "vec_id", "embedding", s"$base/ivf_short")).contains("found 3 of the 8"))
   }
 
   test("IvfIndexStore: searchBatch prunes with DPP, search with a static IN list") {

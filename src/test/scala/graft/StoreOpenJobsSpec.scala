@@ -113,9 +113,8 @@ class StoreOpenJobsSpec extends SparkSpec {
         .orderBy("query_id", "rnk").collect().length
     }
     assert(n == 5)
-    // the limit-bounded survivor count (a shuffle stage and its result)
-    // and the top-k
-    assert(jobs == 3, s"a one-query routed exact search scheduled $jobs jobs")
+    // the bounded survivor count (one job over the scan) and the top-k
+    assert(jobs == 2, s"a one-query routed exact search scheduled $jobs jobs")
   }
 
   test("a session built without GraftSession.builder plans a store search") {

@@ -425,8 +425,7 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
   }
 
   test("a zero or NaN vector: the searches match Spark with and without ANSI") {
-    // written without ANSI: the IVF assignment divides by the zero
-    // norm and the LSH bands cast NaN to long
+    // written without ANSI: the LSH bands cast NaN to long
     val st = withAnsi(false)(
       build("degenerate", corpus(intIds = false, degenerate = true), "vid", "vec"))
     val v = vecs(st.src, "vid", "vec")
@@ -439,30 +438,15 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
       assertAllSearches(s"ansi=$ansi zero query", st, queries(false, Seq((7001L, zero, 0))))
       assertAllSearches(s"ansi=$ansi nan query", st, queries(false, Seq((7002L, nanQ, 0))))
     }
-    // the cosine searches over the zero row throw DIVIDE_BY_ZERO under
-    // ANSI, as the window does; without ANSI they rank a NULL sim last
+    // the cosine searches rank the zero row's NULL sim last in both
+    // modes, the NaN row first
     val q = queries(false, Seq((7000L, v(20L), 0)))
-    val flat = () => IndexStore.search(IndexStore.read(spark, st.flat), q, "id", "v", 400)
-    withAnsi(true) {
-      assert(outcome(flat()) == Left("DIVIDE_BY_ZERO"))
+    for (ansi <- Seq(true, false)) withAnsi(ansi) {
+      val rows = IndexStore.search(IndexStore.read(spark, st.flat), q, "id", "v", 400)
+        .orderBy("rnk").collect()
+      assert(rows.head.getLong(2) == 601L && rows.head.getDouble(3).isNaN, s"ansi=$ansi")
+      assert(rows.last.getLong(2) == 600L && rows.last.isNullAt(3), s"ansi=$ansi")
     }
-    withAnsi(false) {
-      val rows = flat().orderBy("rnk").collect()
-      assert(rows.head.getLong(2) == 601L && rows.head.getDouble(3).isNaN)
-      assert(rows.last.getLong(2) == 600L && rows.last.isNullAt(3))
-    }
-    // the ANSI mode is the scan's session's, not the active one's
-    val other = spark.newSession()
-    other.conf.set("spark.sql.ansi.enabled", "false")
-    withAnsi(true) {
-      SparkSession.setActiveSession(spark)
-      val oq = other.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
-      val got = assertSame("ansi off in the scan's session")(
-        IndexStore.search(IndexStore.read(other, st.flat), oq, "id", "v", 400),
-        refFlat(IndexStore.read(other, st.flat), oq, "id", "v", 400, Nil))
-      assert(got.toOption.exists(_.last.isNullAt(3)), s"the zero row scores NULL: $got")
-    }
-    SparkSession.setActiveSession(spark)
   }
 
   test("string ids and mixed-type ids and match columns equal their window formulations") {
@@ -512,10 +496,9 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
       .write.parquet(s"$dir/embeddings.parquet")
     for (ansi <- Seq(true, false)) withAnsi(ansi) {
       val rows = assertSame(s"v_knn_custom ansi=$ansi")(
-        Knn.vKnnCustom(spark, dir), Knn.vKnnExact(spark, dir))
-      if (ansi) assert(rows == Left("DIVIDE_BY_ZERO"))
-      else assert(rows.toOption.get.exists(_.isNullAt(3)) &&
-        rows.toOption.get.exists(r => !r.isNullAt(3) && r.getDouble(3).isNaN))
+        Knn.vKnnCustom(spark, dir), Knn.vKnnExact(spark, dir)).toOption.get
+      assert(rows.exists(_.isNullAt(3)) && rows.exists(r => !r.isNullAt(3) && r.getDouble(3).isNaN),
+        s"ansi=$ansi: $rows")
     }
   }
 }
