@@ -55,9 +55,11 @@ object VectorFns {
   /** Element-wise quantization round(x·1000) as long — used for every
     * LSH sign decision so bucket bits come from exact integer sums
     * (associative, engine-order-independent) rather than float dots.
+    * A NaN component quantizes to 0 in any ANSI mode (the ANSI cast of
+    * NaN to long throws).
     */
   def quantize(v: Column, scale: Int = 1000): Column =
-    transform(v, x => round(x * scale, 0).cast("long"))
+    transform(v, x => nanvl(round(x * scale, 0), lit(0.0)).cast("long"))
 
   /** Signed integer dot of a quantized vector with the ±1 hyperplane
     * `signs` (length = vector dim): zip_with against a literal sign

@@ -1,11 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{HashFns => H}
+import graft.plans.Ranking
 
 /** Persisted lexical ranking tier — the postings-list store behind
   * Okapi BM25 (t_bm25's in-session twin made durable).
@@ -523,8 +523,7 @@ object Bm25Store {
       .agg(round(aggregate(
         array_sort(collect_list(struct(col("tok"), col("c")))),
         lit(0.0), (acc, s) => acc + s.getField("c")), 6).as("score"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    Ranking.topK(scored, Seq("q_id"), Seq(col("score").desc, col("doc_id").asc), k)
       .select("q_id", "rnk", "doc_id", "score")
   }
 
@@ -635,26 +634,10 @@ object Bm25Store {
       .agg(round(aggregate(
         array_sort(collect_list(struct(col("tok"), col("c")))),
         lit(0.0), (acc, s) => acc + s.getField("c")), 6).as("score"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    Ranking.topK(scored, Seq("q_id"), Seq(col("score").desc, col("doc_id").asc), k)
       .select("q_id", "rnk", "doc_id", "score")
   }
 
-  /** Exact-phrase top-k over the positional postings for a
-    * (q_id, phrase) query frame — the query class a tf-only layout
-    * cannot serve at all. A document matches when the phrase's terms
-    * occur at CONSECUTIVE positions: candidates are the postings of
-    * every phrase term (the same bucket-pruned single store read as
-    * [[search]], position lists riding along), a doc survives only
-    * when it holds ALL n terms, and its phrase frequency is the
-    * position-fold |{p ∈ pos(t₀) : ∀i>0, p+i ∈ pos(tᵢ)}| — one
-    * map-side HOF per (query, doc), no extra shuffle beyond the
-    * grouping the tf path already does. Duplicate phrase terms keep
-    * their distinct offsets (the qt join is per term INDEX, not per
-    * token), so "the the" intersects correctly. Results are docs with
-    * phrase_tf ≥ 1, top-k by (phrase_tf DESC, doc_id ASC). Same
-    * self-exclusion contract as [[search]].
-    */
   /** Ordered-proximity top-k ("near" queries) over the positional
     * postings: a document matches when the query's terms occur IN
     * ORDER within a window of (n−1)+slop positions — the sloppy-phrase
@@ -703,12 +686,25 @@ object Bm25Store {
     val m = grouped
       .select(col("q_id"), col("doc_id"), nearTf.cast("long").as("near_tf"))
       .filter(col("near_tf") > 0)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("near_tf").desc, col("doc_id").asc)
-    m.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    Ranking.topK(m, Seq("q_id"), Seq(col("near_tf").desc, col("doc_id").asc), k)
       .select("q_id", "rnk", "doc_id", "near_tf")
   }
 
+  /** Exact-phrase top-k over the positional postings for a
+    * (q_id, phrase) query frame — the query class a tf-only layout
+    * cannot serve at all. A document matches when the phrase's terms
+    * occur at CONSECUTIVE positions: candidates are the postings of
+    * every phrase term (the same bucket-pruned single store read as
+    * [[search]], position lists riding along), a doc survives only
+    * when it holds ALL n terms, and its phrase frequency is the
+    * position-fold |{p ∈ pos(t₀) : ∀i>0, p+i ∈ pos(tᵢ)}| — one
+    * map-side HOF per (query, doc), no extra shuffle beyond the
+    * grouping the tf path already does. Duplicate phrase terms keep
+    * their distinct offsets (the qt join is per term INDEX, not per
+    * token), so "the the" intersects correctly. Results are docs with
+    * phrase_tf ≥ 1, top-k by (phrase_tf DESC, doc_id ASC). Same
+    * self-exclusion contract as [[search]].
+    */
   def phraseSearch(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int, excludeSelf: Boolean = true): DataFrame = {
     val qt = queries
@@ -733,9 +729,7 @@ object Bm25Store {
     val m = grouped
       .select(col("q_id"), col("doc_id"), phraseTf.cast("long").as("phrase_tf"))
       .filter(col("phrase_tf") > 0)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("phrase_tf").desc, col("doc_id").asc)
-    m.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    Ranking.topK(m, Seq("q_id"), Seq(col("phrase_tf").desc, col("doc_id").asc), k)
       .select("q_id", "rnk", "doc_id", "phrase_tf")
   }
 }

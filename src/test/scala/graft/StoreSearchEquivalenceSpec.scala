@@ -425,9 +425,16 @@ class StoreSearchEquivalenceSpec extends SparkSpec {
   }
 
   test("a zero or NaN vector: the searches match Spark with and without ANSI") {
-    // written without ANSI: the LSH bands cast NaN to long
-    val st = withAnsi(false)(
-      build("degenerate", corpus(intIds = false, degenerate = true), "vid", "vec"))
+    val st = build("degenerate", corpus(intIds = false, degenerate = true), "vid", "vec")
+    // the NaN component quantizes to 0 in both modes: the same LSH bands
+    val bands = for (ansi <- Seq(true, false)) yield withAnsi(ansi) {
+      val path = java.nio.file.Files.createTempDirectory(s"search_eq_bands_$ansi").toString
+      IndexStore.write(st.src, "vid", "vec", path, dim = Dim)
+      IndexStore.read(spark, path).select(col("id").cast("long"), col("band0").cast("int"))
+        .collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    }
+    assert(bands(0).size == st.src.count() && bands(0) == bands(1))
     val v = vecs(st.src, "vid", "vec")
     val zero = Seq.fill(Dim)(0.0)
     val nanQ = v(20L).updated(5, Double.NaN)

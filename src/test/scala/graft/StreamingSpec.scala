@@ -56,19 +56,37 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("foreachBatch upsert target resolves to the batch counts") {
-    val target = new java.io.File("target/upsert_test").getAbsolutePath
-    val dir = new java.io.File(target)
-    if (dir.isDirectory) { dir.listFiles().foreach(_.delete()); dir.delete() }
-    val q = EventStreams.runForeachBatchUpsert(spark, sf, target)
-    try {
-      val resolved = EventStreams.resolveUpserts(spark, target).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      val batch = Tables.events(spark, sf).groupBy("event_type").count().collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(resolved == batch)
-      assert(resolved.nonEmpty)
-    } finally q.stop()
+  test("checkpointed upsert target resolves to the batch counts") {
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val (src, ckpt, target) = (s"$base/src", s"$base/ckpt", s"$base/target")
+    Tables.events(spark, sf).write.parquet(src)
+    EventStreams.runUpsertIncremental(spark, src, ckpt, target)
+    val resolved = EventStreams.resolveUpserts(spark, target).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val batch = Tables.events(spark, sf).groupBy("event_type").count().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(resolved == batch)
+    assert(resolved.nonEmpty)
+  }
+
+  test("a batch that throws fails the run, and the next run replays it") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.sources.RateStore
+    val base = java.nio.file.Files.createTempDirectory("graft_fail").toString
+    val (src, ckpt, store) = (s"$base/in", s"$base/ckpt", s"$base/rate")
+    Tables.events(spark, sf).write.parquet(src)
+    // a regular file where the store directory goes: batch 0's shard
+    // write cannot create its directory
+    val blocker = new java.io.File(store)
+    assert(blocker.createNewFile())
+    intercept[StreamingQueryException](EventStreams.runRateIngest(spark, src, ckpt, store))
+    assert(spark.streams.active.isEmpty, "a failed run must leave no active query")
+    assert(blocker.delete())
+    // the failed batch is uncommitted: the re-run replays it in full
+    EventStreams.runRateIngest(spark, src, ckpt, store)
+    EventStreams.runRateIngest(spark, src, s"$base/ckpt1", s"$base/one")
+    def rows(path: String) = RateStore.report(spark, path).collect().map(_.toString).sorted.toSeq
+    assert(rows(store).nonEmpty && rows(store) == rows(s"$base/one"))
   }
 
   test("event-time timeout closes idle sessions the plain sessionizer leaves open") {
