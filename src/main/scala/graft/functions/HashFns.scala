@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic, oracle-replicable hash primitives.
@@ -70,4 +70,36 @@ object HashFns {
     */
   def hyperplaneSign(j: Int, d: Int): Int =
     if (Character.digit(md5Hex(s"hp_${j}_${d}").charAt(0), 16) < 8) 1 else -1
+
+  /** LSH signature width: 8 hyperplanes, read as 2 bands of 4 bits, so
+    * candidates share a half-signature.
+    */
+  val LshBits = 8
+  val LshBandBits = 4
+
+  private val signsByDim =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Int]]]()
+
+  /** The LshBits × dim hyperplane sign matrix, row j = hyperplaneSign(j,
+    * 1..dim): derived from md5 once per dim, since every LSH build and
+    * query banding reads it.
+    */
+  def hyperplaneSigns(dim: Int): Array[Array[Int]] =
+    signsByDim.computeIfAbsent(dim, _ =>
+      Array.tabulate(LshBits)(j => Array.tabulate(dim)(d => hyperplaneSign(j, d + 1))))
+
+  /** `df` plus its vector column `v` quantized (`vq`, VectorFns.quantize)
+    * and the integer LSH band keys band0/band1 of `vq` over `dim`
+    * components. Bits come from exact integer dots (associative, so
+    * identical across engines, unlike float sign tests); band b packs
+    * bits b·LshBandBits until (b+1)·LshBandBits.
+    */
+  def withBands(df: DataFrame, dim: Int): DataFrame = {
+    val s = hyperplaneSigns(dim)
+    def bit(j: Int): Column = when(VectorFns.signedIntDot(col("vq"), s(j)) > 0, 1).otherwise(0)
+    def band(b: Int): Column =
+      (0 until LshBandBits).map(r => bit(b * LshBandBits + r) * lit(1 << r)).reduce(_ + _)
+    df.withColumn("vq", VectorFns.quantize(col("v")))
+      .withColumn("band0", band(0)).withColumn("band1", band(1))
+  }
 }

@@ -619,17 +619,10 @@ object Dedup {
   private def embedBanded(spark: SparkSession, dir: String,
                           maxId: Option[Int]): DataFrame = {
     val dim = 64
-    val signs = Array.tabulate(Knn.LshBits)(j =>
-      Array.tabulate(dim)(d => H.hyperplaneSign(j, d + 1)))
-    def bit(j: Int): Column = when(V.signedIntDot(col("vq"), signs(j)) > 0, 1).otherwise(0)
-    def band(b: Int): Column =
-      (0 until Knn.LshBandBits).map(r => bit(b * Knn.LshBandBits + r) * lit(1 << r)).reduce(_ + _)
-    forceCached(spread(embSrc(spark, dir))
+    forceCached(H.withBands(spread(embSrc(spark, dir))
       .filter(maxId.map(m => col("vec_id") < m).getOrElse(lit(true)))
       .select(col("vec_id"), V.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", V.norm2(col("v")))
-      .withColumn("vq", V.quantize(col("v")))
-      .withColumn("band0", band(0)).withColumn("band1", band(1))
+      .withColumn("nrm", V.norm2(col("v"))), dim)
       .drop("vq"))
   }
 
@@ -664,7 +657,7 @@ object Dedup {
                                    maxId: Option[Int] = None): DataFrame = {
     val e = embedBanded(spark, dir, maxId)
     def probes(c: Column): Column =
-      array(c +: (0 until Knn.LshBandBits).map(r => c.bitwiseXOR(lit(1 << r))): _*)
+      array(c +: (0 until H.LshBandBits).map(r => c.bitwiseXOR(lit(1 << r))): _*)
     def left(bandCol: String, probe: String) =
       e.select(col("vec_id").as("id1"), col("v").as("v1"), col("nrm").as("n1"),
           col("band0").as("a0"), col("band1").as("a1"))

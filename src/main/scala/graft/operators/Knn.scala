@@ -324,8 +324,7 @@ object Knn {
     // spreads first: one parquet file is one input partition, and the
     // interpreted sign-fold banding is the CPU-heavy stage (the
     // d_embed_near lesson)
-    val e = withBands(Dedup.spread(corpus(spark, dir))
-        .withColumn("vq", V.quantize(col("v"))), dim)
+    val e = HashFns.withBands(Dedup.spread(corpus(spark, dir)), dim)
       .withColumn("grp", pmod(col("band0"), lit(g)).cast("int"))
       .select("vec_id", "v", "nrm", "grp")
       .persist()
@@ -426,27 +425,6 @@ object Knn {
 
   // ---- LSH (random hyperplane) -------------------------------------
 
-  val LshBits = 8
-  val LshBandBits = 4 // 2 bands of 4 bits → candidates share a half-signature
-
-  /** Hyperplane sign matrix, derived from md5 so the SQL oracle can
-    * rebuild it (HashFns.hyperplaneSign). dims are 1-based.
-    */
-  private def signs(dim: Int): Array[Array[Int]] =
-    Array.tabulate(LshBits)(j => Array.tabulate(dim)(d => HashFns.hyperplaneSign(j, d + 1)))
-
-  /** Adds integer LSH band keys band0/band1 to a frame with quantized
-    * vector column `vq`. Bits come from exact integer dots (associative
-    * → identical across engines, unlike float sign tests).
-    */
-  private def withBands(df: DataFrame, dim: Int): DataFrame = {
-    val s = signs(dim)
-    def bit(j: Int): Column = when(V.signedIntDot(col("vq"), s(j)) > 0, 1).otherwise(0)
-    def band(b: Int): Column =
-      (0 until LshBandBits).map(r => bit(b * LshBandBits + r) * lit(1 << r)).reduce(_ + _)
-    df.withColumn("band0", band(0)).withColumn("band1", band(1))
-  }
-
   /** v_ann_lsh: approximate top-3 — candidates must share an LSH band
     * with the query (equi-join on band key prunes the cross product; at
     * scale this is the shuffle-on-bucket path, no broadcast of the
@@ -461,7 +439,7 @@ object Knn {
     */
   private def annLshRanked(c: DataFrame, nq: Int, k: Int): DataFrame = {
     val dim = 64
-    val e = withBands(c.withColumn("vq", V.quantize(col("v"))), dim)
+    val e = HashFns.withBands(c, dim)
       .select("vec_id", "v", "nrm", "band0", "band1")
     val q = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
@@ -1694,13 +1672,12 @@ object Knn {
     */
   def vMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val dim = 64
-    val e = withBands(
-      corpus(spark, dir).withColumn("vq", V.quantize(col("v"))), dim)
+    val e = HashFns.withBands(corpus(spark, dir), dim)
       .select("vec_id", "v", "nrm", "band0")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
         explode(array(
-          col("band0") +: (0 until LshBandBits).map(r =>
+          col("band0") +: (0 until HashFns.LshBandBits).map(r =>
             col("band0").bitwiseXOR(lit(1 << r))): _*)).as("probe"))
     Ranking.scored(e.join(broadcast(q),
           col("vec_id") =!= col("query_id") && col("band0") === col("probe"))
@@ -1717,8 +1694,7 @@ object Knn {
     */
   def vIndexStats(spark: SparkSession, dir: String): DataFrame = {
     val dim = 64
-    val e = withBands(
-      corpus(spark, dir).withColumn("vq", V.quantize(col("v"))), dim)
+    val e = HashFns.withBands(corpus(spark, dir), dim)
       .select("vec_id", "label", "band0", "band1")
     val long = e.select(lit(0L).as("band_id"), col("band0").cast("long").as("band_val"),
         col("label"))
@@ -2640,8 +2616,7 @@ object Knn {
   def vRefine(spark: SparkSession, dir: String): DataFrame = {
     val dim = 64
     val refineK = 20
-    val e = withBands(
-      corpus(spark, dir).withColumn("vq", V.quantize(col("v"))), dim)
+    val e = HashFns.withBands(corpus(spark, dir), dim)
       .select("vec_id", "v", "nrm", "vq", "band0", "band1")
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
@@ -3155,7 +3130,7 @@ object Knn {
                    ROW_NUMBER() OVER (PARTITION BY query_id
                      ORDER BY hamming ASC, neighbor_id ASC) AS hrnk
                  FROM ham) t WHERE hrnk <= 20),
-      rr AS (SELECT /*+ BROADCAST(cand, q) */ c.query_id, c.neighbor_id, c.hamming,
+      rr AS (SELECT /*+ BROADCAST(q) */ c.query_id, c.neighbor_id, c.hamming,
                ROUND(graft_dot(q.qv, CAST(n.embedding AS ARRAY<DOUBLE>))
                  / (graft_norm(q.qv)
                     * graft_norm(CAST(n.embedding AS ARRAY<DOUBLE>))), 6) AS sim
@@ -3469,7 +3444,7 @@ object Knn {
                FROM coarse) t WHERE crnk <= 20),
       q AS (SELECT id AS query_id, v AS qv, nrm AS qn
             FROM graft_store_mrl WHERE id < $NumQueries),
-      rr AS (SELECT /*+ BROADCAST(cand, q) */ c.query_id, c.neighbor_id, c.psim,
+      rr AS (SELECT /*+ BROADCAST(c, q) */ c.query_id, c.neighbor_id, c.psim,
                ROUND(graft_dot(q.qv, e.v) / (q.qn * e.nrm), 6) AS sim
              FROM graft_store_mrl e
              JOIN cand c ON e.id = c.neighbor_id

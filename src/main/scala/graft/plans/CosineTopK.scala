@@ -13,8 +13,9 @@ import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartiti
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, round, row_number}
+import org.apache.spark.sql.functions.{col, posexplode, round, row_number}
 import org.apache.spark.sql.types._
+import graft.expressions.ScoredTopKAgg
 import graft.functions.{VectorFns => V}
 
 /** The engine's one top-k operator for driver-resident query sets: a
@@ -118,19 +119,20 @@ object TopKScore {
   }
 }
 
-/** The engine's window top-k: the one place a ranking is spelled as
-  * `row_number` over a window, for every ranking that is not a
-  * [[CosineTopK]] scan (distributed query sets, candidate pairs that
-  * are already joined, reranks, fusions). For k up to Spark's window
-  * group-limit threshold (1000), Catalyst turns the `rank <= k` filter
-  * into a WindowGroupLimit below the window's exchange, so each
-  * partition keeps at most k rows per group before the shuffle.
+/** The engine's rankings of rows that are already scored or joined —
+  * every ranking that is not a [[CosineTopK]] scan: distributed query
+  * sets, candidate pairs that are already joined, reranks, fusions.
   */
 object Ranking {
   /** `df` with `rank` = row_number() (long, 1..) over `partitionBy`
-    * ordered by `orderBy`, cut to the rows ranked k or better. The
+    * ordered by `orderBy`, cut to the rows ranked k or better: the one
+    * place a ranking is spelled as `row_number` over a window. The
     * ordering must end in a unique tiebreak for the cut to be
-    * deterministic. `k = Int.MaxValue` ranks every row.
+    * deterministic. `k = Int.MaxValue` ranks every row. For k up to
+    * Spark's window group-limit threshold (1000), Catalyst turns the
+    * `rank <= k` filter into a WindowGroupLimit below the window's
+    * exchange, so each partition keeps at most k rows per group before
+    * the shuffle.
     */
   def topK(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[Column], k: Int,
            rank: String = "rnk"): DataFrame = {
@@ -138,17 +140,30 @@ object Ranking {
     df.withColumn(rank, row_number().over(w).cast("long")).filter(col(rank) <= k)
   }
 
-  /** The top k of scored candidate pairs (query_id, neighbor_id, the
-    * score column) per query, ranked as [[CosineTopK]] ranks: the score
-    * best first ([[TopKScore.descending]]: DESC NULLS LAST, else ASC
-    * NULLS FIRST), then neighbor_id ASC. Output: query_id, rnk (long),
-    * neighbor_id and the score.
+  /** The top k (k ≥ 1) of scored candidate pairs (query_id, neighbor_id,
+    * the double score column) per query, ranked as [[CosineTopK]] ranks
+    * ([[TopKFold.before]]): the score best first
+    * ([[TopKScore.descending]]: DESC NULLS LAST, else ASC NULLS FIRST),
+    * then neighbor_id ASC NULLS FIRST. Output: query_id, rnk (long, 1..),
+    * neighbor_id and the score, with the input's types and nullability —
+    * the rows of ROW_NUMBER() over that window, cut to k.
+    *
+    * Physically a k-bounded heap per query, not a sort:
+    * [[graft.expressions.ScoredTopKAgg]] grouped by query_id. Partial
+    * aggregation keeps at most k candidates per query per task, the one
+    * hash exchange on query_id carries at most k rows per query per
+    * task, and `posexplode` numbers the merged heap. On a 100-query IVF
+    * batch (~250k candidates for 500 rows kept) this replaced a sort of
+    * every candidate + WindowGroupLimit + Window (ROADMAP item 4 has the
+    * numbers).
     */
-  def scored(cands: DataFrame, score: TopKScore, k: Int): DataFrame = {
-    val best = if (score.descending) col(score.name).desc else col(score.name).asc
-    topK(cands, Seq("query_id"), Seq(best, col("neighbor_id").asc), k)
-      .select("query_id", "rnk", "neighbor_id", score.name)
-  }
+  def scored(cands: DataFrame, score: TopKScore, k: Int): DataFrame =
+    cands.groupBy("query_id")
+      .agg(ScoredTopKAgg.topK(col(score.name), col("neighbor_id"), k, score.descending)
+        .as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "hit")))
+      .select(col("query_id"), (col("pos").cast("long") + 1).as("rnk"),
+        col("hit.id").as("neighbor_id"), col("hit.score").as(score.name))
 }
 
 /** One driver-resident probe row, in external (Row) values: the query
@@ -345,24 +360,12 @@ private[plans] final class TopKFold(
     if (!keyed) Map.empty
     else live.groupBy(i => probes(i).key.asInstanceOf[Int])
 
-  /** Whether (s1, n1, id1) ranks before (s2, n2, id2): DESC NULLS LAST
-    * for cosine, ASC NULLS FIRST for ADC, then id ASC.
-    */
-  private def before(idOrd: Ordering[Any], s1: Double, n1: Boolean, id1: Any,
-                     s2: Double, n2: Boolean, id2: Any): Boolean = {
-    val c =
-      if (n1 || n2) { if (n1 == n2) 0 else if (n1 == desc) 1 else -1 }
-      else if (desc) SQLOrderingUtil.compareDoubles(s2, s1)
-      else SQLOrderingUtil.compareDoubles(s1, s2)
-    c < 0 || (c == 0 && idOrd.lt(id1, id2))
-  }
-
   private def insert(idOrd: Ordering[Any], heap: mutable.ArrayBuffer[TopKHit],
                      h: TopKHit): Unit = {
     // kept sorted best-first; a linear walk, since k is small
     var i = heap.length
-    while (i > 0 && before(idOrd, h.score, h.none, h.nid, heap(i - 1).score, heap(i - 1).none,
-        heap(i - 1).nid)) i -= 1
+    while (i > 0 && TopKFold.before(desc, idOrd, h.score, h.none, h.nid, heap(i - 1).score,
+        heap(i - 1).none, heap(i - 1).nid)) i -= 1
     if (i < k) {
       heap.insert(i, h)
       if (heap.length > k) heap.remove(k)
@@ -444,7 +447,8 @@ private[plans] final class TopKFold(
             val slot = slotOf(ps(i))
             val heap = hs(slot)
             if (heap.length < k ||
-                before(idOrd, sv, none, nid, heap.last.score, heap.last.none, heap.last.nid)) {
+                TopKFold.before(desc, idOrd, sv, none, nid, heap.last.score, heap.last.none,
+                  heap.last.nid)) {
               // the id is taken from the copy: a string id read off the
               // scan row points into a buffer the scan reuses
               val row = payload(r).copy()
@@ -475,5 +479,22 @@ private[plans] final class TopKFold(
         proj(row).copy(): InternalRow
       }
     }
+  }
+}
+
+private[graft] object TopKFold {
+  /** Whether (s1, n1, id1) ranks before (s2, n2, id2) — the one ranking
+    * rule of [[CosineTopK]] and [[Ranking.scored]]: the score best first
+    * (`desc`: DESC NULLS LAST, else ASC NULLS FIRST; `n` marks a NULL
+    * score, NaN ranks above every number and -0.0 ties 0.0), then the id
+    * ASC NULLS FIRST under `idOrd`.
+    */
+  def before(desc: Boolean, idOrd: Ordering[Any], s1: Double, n1: Boolean, id1: Any,
+             s2: Double, n2: Boolean, id2: Any): Boolean = {
+    val c =
+      if (n1 || n2) { if (n1 == n2) 0 else if (n1 == desc) 1 else -1 }
+      else if (desc) SQLOrderingUtil.compareDoubles(s2, s1)
+      else SQLOrderingUtil.compareDoubles(s1, s2)
+    c < 0 || (c == 0 && id2 != null && (id1 == null || idOrd.lt(id1, id2)))
   }
 }

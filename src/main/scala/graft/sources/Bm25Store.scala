@@ -939,10 +939,10 @@ object Bm25StoreQueries {
                CAST(conv(substring(md5(concat('bm25tb_', element_at(arr, 2))), 1, 8), 16, 10)
                  AS BIGINT) % ${Bm25Store.Buckets} AS tb2
              FROM dt WHERE doc_id < 3),
-      a AS (SELECT /*+ BROADCAST(qk) */ q.q_id, p.doc_id, p.pos
+      a AS (SELECT /*+ BROADCAST(q) */ q.q_id, p.doc_id, p.pos
             FROM graft_store_bm25near p
             JOIN qk q ON p.tok = q.w1 AND p.tb = q.tb1 AND p.doc_id <> q.q_id),
-      b AS (SELECT /*+ BROADCAST(qk) */ q.q_id AS bq, p.doc_id AS bdoc,
+      b AS (SELECT /*+ BROADCAST(q) */ q.q_id AS bq, p.doc_id AS bdoc,
                p.pos AS bpos
             FROM graft_store_bm25near p
             JOIN qk q ON p.tok = q.w2 AND p.tb = q.tb2),
@@ -986,10 +986,10 @@ object Bm25StoreQueries {
                CAST(conv(substring(md5(concat('bm25tb_', element_at(arr, 2))), 1, 8), 16, 10)
                  AS BIGINT) % ${Bm25Store.Buckets} AS tb2
              FROM dt WHERE doc_id < 3),
-      a AS (SELECT /*+ BROADCAST(qk) */ q.q_id, p.doc_id, p.pos
+      a AS (SELECT /*+ BROADCAST(q) */ q.q_id, p.doc_id, p.pos
             FROM graft_store_bm25pos p
             JOIN qk q ON p.tok = q.w1 AND p.tb = q.tb1 AND p.doc_id <> q.q_id),
-      b AS (SELECT /*+ BROADCAST(qk) */ q.q_id AS bq, p.doc_id AS bdoc,
+      b AS (SELECT /*+ BROADCAST(q) */ q.q_id AS bq, p.doc_id AS bdoc,
                p.pos AS bpos
             FROM graft_store_bm25pos p
             JOIN qk q ON p.tok = q.w2 AND p.tb = q.tb2),
@@ -1037,7 +1037,7 @@ object Bm25StoreQueries {
       dfv AS (SELECT tok, COUNT(*) AS df FROM cand0 GROUP BY tok),
       st AS (SELECT SUM(n_docs) AS n_docs, SUM(sum_dl) AS sum_dl
              FROM graft_store_bm25_stats),
-      contrib AS (SELECT /*+ BROADCAST(qt, st) */ q.q_id, c.doc_id, c.tok,
+      contrib AS (SELECT /*+ BROADCAST(q, st) */ q.q_id, c.doc_id, c.tok,
                ln((st.n_docs - f.df + 0.5D) / (f.df + 0.5D) + 1.0D) *
                  (c.tf * ${Bm25Store.K1 + 1}D) /
                  (c.tf + ${Bm25Store.K1}D * (${1.0 - Bm25Store.B}D +

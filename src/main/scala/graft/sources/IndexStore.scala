@@ -116,21 +116,7 @@ private[graft] object StoreLayout {
 
 object IndexStore {
 
-  val LshBits = 8
-  val BandBits = 4
-
-  private def signs(dim: Int): Array[Array[Int]] =
-    Array.tabulate(LshBits)(j => Array.tabulate(dim)(d => H.hyperplaneSign(j, d + 1)))
-
-  private def withBands(df: DataFrame, dim: Int): DataFrame = {
-    val s = signs(dim)
-    def bit(j: Int): Column = when(V.signedIntDot(col("vq"), s(j)) > 0, 1).otherwise(0)
-    def band(b: Int): Column =
-      (0 until BandBits).map(r => bit(b * BandBits + r) * lit(1 << r)).reduce(_ + _)
-    df.withColumn("vq", V.quantize(col("v")))
-      .withColumn("band0", band(0)).withColumn("band1", band(1))
-      .drop("vq")
-  }
+  val BandBits = H.LshBandBits
 
   /** Build + persist the index from any frame with an id and a vector
     * column (array<float> or array<double>). `metaCols` are payload
@@ -148,11 +134,11 @@ object IndexStore {
   private def banded(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                      metaCols: Seq[String]): DataFrame =
     StoreLayout.clustered(
-      withBands(
+      H.withBands(
         StoreLayout.widened(
           df.select(col(idCol).as("id") +: col(vecCol).cast("array<double>").as("v")
               +: metaCols.map(col): _*))
-          .withColumn("nrm", V.norm2(col("v"))), dim), "band0")
+          .withColumn("nrm", V.norm2(col("v"))), dim).drop("vq"), "band0")
 
   /** Metadata sidecar (the metadata.pkl analog) — a sibling dataset:
     * nesting it under the index path would collide with parquet
@@ -313,7 +299,7 @@ object IndexStore {
   /** (query_id, qv, qn, qb0) query rows banded with the store's hyperplanes. */
   private[sources] def bandedQueries(queries: DataFrame, idCol: String, vecCol: String,
                                      dim: Int): DataFrame =
-    withBands(
+    H.withBands(
       queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v"))
         .withColumn("nrm", V.norm2(col("v"))), dim)
       .select(col("query_id"), col("v").as("qv"), col("nrm").as("qn"), col("band0").as("qb0"))
@@ -1831,7 +1817,10 @@ object IvfIndexStore {
     * parquet scan (asserted in Round6Spec), which evaluates the probe
     * side at runtime and reads only the probed list directories. Use
     * this when the query set is itself a table (bulk re-ranking,
-    * index-to-index joins) rather than a handful of uploads.
+    * index-to-index joins) rather than a handful of uploads. The
+    * candidates rank through [[batchTopK]]: a k-bounded heap per query
+    * in the scan tasks, then one exchange on query_id — three jobs per
+    * call (the probe broadcast, the scan, the merge).
     */
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
@@ -1846,7 +1835,10 @@ object IvfIndexStore {
     * broadcast join on the cid partition column, so dynamic partition
     * pruning reads only the probed lists — scored by `score` and cut to
     * k per query by [[Ranking.scored]], the ranking of
-    * [[graft.plans.CosineTopK]].
+    * [[graft.plans.CosineTopK]]. Each scan task folds its candidates
+    * into k-bounded per-query heaps as it scores them, so the exchange
+    * carries at most k rows per query per task and no candidate row is
+    * sorted.
     */
   private[sources] def batchTopK(spark: SparkSession, path: String, probe: DataFrame,
                                  k: Int, score: TopKScore): DataFrame = {
